@@ -1647,8 +1647,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_semantic_dedup() -> str:
-    s, h, p = _d(simfns.PORTABLE_SCALE), _d(0.5), _d(0.05)
-    dim, C, t2 = 64, 16, 950 * 950
+    p = _d(0.05)
+    dim, t2 = 64, 950 * 950
     return f"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
       corpus AS (
@@ -1661,28 +1661,11 @@ def sql_semantic_dedup() -> str:
                               i -> CASE WHEN i = 1 THEN ev[1] + {p} ELSE ev[i] END) AS ev
         FROM base WHERE vec_id % 17 = 0
       ),
-      q AS (
-        SELECT vec_id,
-               list_transform(ev, x -> CAST(floor(x * {s} + {h}) AS BIGINT)) AS qv
-        FROM corpus
-      ),
-      pos AS (SELECT vec_id, qv, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM q),
-      cents AS (SELECT pos AS cid, qv AS cent FROM pos WHERE pos < {C}),
-      celld AS (
-        SELECT v.vec_id, c.cid,
-          CAST(list_aggregate(list_transform(range(1, {dim + 1}), i ->
-            (v.qv[i] - c.cent[i]) * (v.qv[i] - c.cent[i])), 'sum') AS BIGINT) AS d
-        FROM q v CROSS JOIN cents c
-      ),
-      cells AS (
-        SELECT vec_id, cid AS cell FROM (
-          SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM celld) WHERE rn = 1
-      ),
+      {_sql_int_cells(16, src="corpus", vec="ev")},
       enc AS (
         SELECT v.vec_id, s.cell, v.qv,
           CAST(list_aggregate(list_transform(v.qv, x -> x * x), 'sum') AS BIGINT) AS n2
-        FROM q v JOIN cells s USING (vec_id)
+        FROM quant v JOIN cells s USING (vec_id)
       ),
       pairs AS (
         SELECT a.vec_id AS keep_id, b.vec_id AS dup_id, a.cell,
@@ -2259,21 +2242,33 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("qid", "vec_id", F.col("rank").cast("int").alias("rank"))
 
 
-def sql_cosine_topk() -> str:
-    return """
-      WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 16),
+def _sql_cosine_scored(n_queries: int) -> str:
+    """CTEs ``q``, ``c``, ``scored``: the float cosine of similarity.cosine_topk
+    (rounded to 6 places) between the first ``n_queries`` ids and every
+    other corpus vector."""
+    return f"""
+      q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < {n_queries}),
       c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings),
       scored AS (
         SELECT q.qid, c.vec_id,
           round(list_dot_product(q.qv, c.cv)
             / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS sim
         FROM q CROSS JOIN c WHERE q.qid <> c.vec_id
-      )
+      )"""
+
+
+def _sql_cosine_topk(n_queries: int, k: int) -> str:
+    return f"""
+      WITH {_sql_cosine_scored(n_queries)}
       SELECT qid, vec_id, rank::INTEGER AS rank FROM (
         SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rank
         FROM scored
-      ) WHERE rank <= 3
+      ) WHERE rank <= {k}
     """
+
+
+def sql_cosine_topk() -> str:
+    return _sql_cosine_topk(16, 3)
 
 
 def q_retrieval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2466,20 +2461,6 @@ def sql_pq_topk() -> str:
     """
 
 
-def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ (FAISS IVFADC shape) at FULL probe: coarse quantizer, cell
-    equi-join, PQ-code ADC ranking all execute, and full probe makes the
-    candidate set provably the whole corpus — so the pure PQ-ADC SQL
-    mirror is an exact value oracle for the composed pipeline (the
-    sampled-k-means internals cancel out, same trick as ann_ivf_topk)."""
-    emb, books = _pq_books(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    out = simfns.ivf_pq_topk(queries, emb, books, k=3, n_centroids=16, nprobe=16)
-    return out.select("qid", "vec_id", F.col("rank").cast("int").alias("rank"))
-
-
 def q_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC with RESIDUAL encoding at a PRUNED probe (nprobe=4 of 16
     cells — the regime VERDICT r4 flagged as driver-invisible): corpus
@@ -2488,8 +2469,8 @@ def q_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jégou et al. 2011 §IV).  The deterministic integer coarse quantizer
     (positional first-16 rows) makes assignment, residuals, codebooks,
     codes, per-cell tables, ADC sums and ranking integer-exact across
-    engines — so unlike the sampled-k-means paths this pruned regime has a
-    FULL value oracle, not a full-probe degenerate one."""
+    engines — so this pruned regime has a FULL value oracle, not a
+    full-probe degenerate one."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 32).select(
         F.col("vec_id").alias("qid"), "embedding"
@@ -2500,39 +2481,63 @@ def q_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("qid", "vec_id", F.col("rank").cast("int").alias("rank"))
 
 
+def _sql_int_cells(
+    n_cells: int,
+    nprobe: int | None = None,
+    src: str = "embeddings",
+    vec: str = "embedding::DOUBLE[]",
+) -> str:
+    """CTEs mirroring the integer coarse quantizer (similarity.
+    det_coarse_centroids / with_ivf_cells) over ``src``'s ``vec_id`` and
+    ``vec`` columns: ``quant`` (floor(v*1000+0.5) vectors), ``pos``
+    (id-order position), ``cents`` (the first ``n_cells`` positions),
+    ``celld`` (exact squared L2 to every cell), ``cells`` (each vector's
+    nearest cell) and, with ``nprobe``, ``qprobe`` (the first 32 ids'
+    ``nprobe`` nearest cells) — both in (distance, cell id) order."""
+    s, h = _d(simfns.PORTABLE_SCALE), _d(0.5)
+    ctes = f"""
+      quant AS (
+        SELECT vec_id,
+          list_transform({vec}, x -> CAST(floor(x * {s} + {h}) AS BIGINT)) AS qv
+        FROM {src}
+      ),
+      pos AS (SELECT vec_id, qv, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM quant),
+      cents AS (SELECT pos AS cid, qv AS cent FROM pos WHERE pos < {n_cells}),
+      celld AS (
+        SELECT v.vec_id, c.cid,
+          CAST(list_aggregate(list_transform(range(1, len(v.qv) + 1), i ->
+            (v.qv[i] - c.cent[i]) * (v.qv[i] - c.cent[i])), 'sum') AS BIGINT) AS d
+        FROM quant v CROSS JOIN cents c
+      ),
+      cells AS (
+        SELECT vec_id, cid AS cell FROM (
+          SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+          FROM celld) WHERE rn = 1
+      )"""
+    if nprobe is None:
+        return ctes
+    return ctes + f""",
+      qprobe AS (
+        SELECT vec_id AS qid, cid AS cell FROM (
+          SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+          FROM celld WHERE vec_id < 32) WHERE rn <= {nprobe}
+      )"""
+
+
 def sql_ivf_pq_residual_topk() -> str:
     """Full SQL mirror of residual IVFADC at nprobe=4: positional integer
     coarse centroids, (distance, cell-id) assignment order, residual
     vectors, positional residual codebooks, argmin encode, per-(query,
     probed-cell) residual ADC tables, lookup-sum distance, (dist, id)
     rank — every stage integer arithmetic DuckDB computes bit-identically."""
-    s, h = _d(simfns.PORTABLE_SCALE), _d(0.5)
     m, kcb, sub = _PQ_M, _PQ_K, _PQ_SUB
-    dim, C, nprobe = m * sub, 16, 4
+    dim = m * sub
     return f"""
-      WITH q AS (
-        SELECT vec_id,
-          list_transform(embedding::DOUBLE[],
-                         x -> CAST(floor(x * {s} + {h}) AS BIGINT)) AS qv
-        FROM embeddings
-      ),
-      pos AS (SELECT vec_id, qv, row_number() OVER (ORDER BY vec_id) - 1 AS pos FROM q),
-      cents AS (SELECT pos AS cid, qv AS cent FROM pos WHERE pos < {C}),
-      celld AS (
-        SELECT v.vec_id, c.cid,
-          CAST(list_aggregate(list_transform(range(1, {dim + 1}), i ->
-            (v.qv[i] - c.cent[i]) * (v.qv[i] - c.cent[i])), 'sum') AS BIGINT) AS d
-        FROM q v CROSS JOIN cents c
-      ),
-      cells AS (
-        SELECT vec_id, cid AS cell FROM (
-          SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM celld) WHERE rn = 1
-      ),
+      WITH {_sql_int_cells(16, 4)},
       resid AS (
         SELECT v.vec_id, s.cell,
                list_transform(range(1, {dim + 1}), i -> v.qv[i] - c.cent[i]) AS rv
-        FROM q v JOIN cells s USING (vec_id) JOIN cents c ON c.cid = s.cell
+        FROM quant v JOIN cells s USING (vec_id) JOIN cents c ON c.cid = s.cell
       ),
       bsrc AS (SELECT p.pos, r.rv FROM pos p JOIN resid r USING (vec_id) WHERE p.pos < {m * kcb}),
       books AS (
@@ -2553,15 +2558,10 @@ def sql_ivf_pq_residual_topk() -> str:
           SELECT vec_id, j, c, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
           FROM cdist) WHERE rn = 1
       ),
-      qprobe AS (
-        SELECT vec_id AS qid, cid AS cell FROM (
-          SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM celld WHERE vec_id < 32) WHERE rn <= {nprobe}
-      ),
       qresid AS (
         SELECT p.qid, p.cell,
                list_transform(range(1, {dim + 1}), i -> v.qv[i] - c.cent[i]) AS rq
-        FROM qprobe p JOIN q v ON v.vec_id = p.qid JOIN cents c ON c.cid = p.cell
+        FROM qprobe p JOIN quant v ON v.vec_id = p.qid JOIN cents c ON c.cid = p.cell
       ),
       qtab AS (
         SELECT r.qid, r.cell, bk.j, bk.c,
@@ -5291,7 +5291,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell assignment, probe join and exact re-rank all execute, and full
     probe makes the candidate union provably the whole corpus — so the
     DuckDB brute-force top-k is an exact value oracle for the entire IVF
-    pipeline (the sampled-k-means internals cancel out by construction)."""
+    pipeline, independent of the quantizer."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 32).select(F.col("vec_id").alias("qid"), "embedding")
     out = simfns.ivf_topk(queries, emb, k=3, n_centroids=16, nprobe=16)
@@ -5301,27 +5301,14 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_ann_ivf_topk() -> str:
     """Full-probe IVF == brute force (every corpus vector is probed exactly
     once), so the oracle is the brute-force cosine top-3."""
-    return """
-      WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 32),
-      c AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings),
-      scored AS (
-        SELECT q.qid, c.vec_id,
-          round(list_dot_product(q.qv, c.cv)
-            / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv))), 6) AS sim
-        FROM q CROSS JOIN c WHERE q.qid <> c.vec_id
-      )
-      SELECT qid, vec_id, rank::INTEGER AS rank FROM (
-        SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rank
-        FROM scored
-      ) WHERE rank <= 3
-    """
+    return _sql_cosine_topk(32, 3)
 
 
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-ANN with nprobe < n_centroids reported as recall@1 against brute
-    force (rows-only: the sampled-k-means quantizer's candidate PRUNING is
-    not SQL-expressible; the full-probe path above is the value-oracled
-    query, and pytest pins full-probe == brute force)."""
+    """IVF-ANN at a PRUNED probe (nprobe=4 of 16 cells) reported as
+    recall@1 against brute force.  Cells come from the integer coarse
+    quantizer, so the pruning is integer-exact and the query has a full
+    value oracle (sql_ann_ivf_recall)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 32).select(F.col("vec_id").alias("qid"), "embedding")
     exact = simfns.cosine_topk(queries, emb, k=1, query_id="qid")
@@ -5332,6 +5319,33 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.agg(
         F.count("*").alias("n_queries"), F.sum("hit").alias("recall_at_1_hits")
     )
+
+
+def sql_ann_ivf_recall() -> str:
+    """Brute-force and probed-cell top-1 over the same cosine scores: the
+    probed top-1 keeps only candidates whose integer cell is among the
+    query's 4 nearest, both in (distance, cell id) order."""
+    return f"""
+      WITH {_sql_cosine_scored(32)},
+      {_sql_int_cells(16, 4)},
+      exact AS (
+        SELECT qid, vec_id FROM (
+          SELECT qid, vec_id,
+            row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rn
+          FROM scored) WHERE rn = 1
+      ),
+      approx AS (
+        SELECT qid, vec_id FROM (
+          SELECT s.qid, s.vec_id,
+            row_number() OVER (PARTITION BY s.qid ORDER BY s.sim DESC, s.vec_id ASC) AS rn
+          FROM scored s
+          JOIN cells cl ON cl.vec_id = s.vec_id
+          JOIN qprobe p ON p.qid = s.qid AND p.cell = cl.cell) WHERE rn = 1
+      )
+      SELECT count(*) AS n_queries,
+             CAST(sum(CAST(e.vec_id = a.vec_id AS INTEGER)) AS BIGINT) AS recall_at_1_hits
+      FROM exact e LEFT JOIN approx a USING (qid)
+    """
 
 
 #: portable-LSH parameters shared by the Spark query and its SQL oracle
@@ -5349,7 +5363,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 32).select(F.col("vec_id").alias("qid"), "embedding")
     out = simfns.lsh_topk(
         queries, emb, k=3, dim=_ANN_LSH_DIM,
-        num_bits=_ANN_LSH_BITS, bands=_ANN_LSH_BANDS, portable=True,
+        num_bits=_ANN_LSH_BITS, bands=_ANN_LSH_BANDS,
     )
     return out.select("qid", "vec_id", F.col("rank").cast("int").alias("rank"))
 
@@ -6108,7 +6122,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_topk": q_ann_ivf_topk,
         "pq_topk": q_pq_topk,
         "pq_codes": q_pq_codes,
-        "ivf_pq_topk": q_ivf_pq_topk,
         "neighbors_mt4_buffered": q_neighbors_mt4_buffered,
         "events_topk_window": q_events_topk_window,
         "children": q_children,
@@ -6234,7 +6247,6 @@ def oracle_sql() -> dict[str, str]:
         "embedding_dups": sql_embedding_dups(),
         "pq_topk": sql_pq_topk(),
         "pq_codes": sql_pq_codes(),
-        "ivf_pq_topk": sql_pq_topk(),  # full probe == pure PQ-ADC, provably
         "ivf_pq_residual_topk": sql_ivf_pq_residual_topk(),
         "ann_modes": sql_ann_modes(),
         "phash_near_dup": sql_phash_near_dup(),
@@ -6266,8 +6278,5 @@ def oracle_sql() -> dict[str, str]:
         "ann_lsh_topk": sql_ann_lsh_topk(),
         "ann_ivf_topk": sql_ann_ivf_topk(),
         "zorder_scan": sql_zorder_scan(),
-        # ann_ivf_recall: deliberately no oracle — the sampled-k-means
-        # quantizer's candidate PRUNING at nprobe < n_centroids is not
-        # SQL-expressible; the full-probe path (ann_ivf_topk) is the
-        # value-oracled query and pytest pins full-probe == brute force.
+        "ann_ivf_recall": sql_ann_ivf_recall(),
     }

@@ -1,4 +1,4 @@
-"""spark-submit entry: checkpointed, resumable IVF-PQ ANN index build +
+"""spark-submit entry: checkpointed, resumable IVFADC ANN index build +
 batch probe over an embeddings table — the billion-vector similarity-search
 chain as committed table artifacts.
 
@@ -10,17 +10,21 @@ chain as committed table artifacts.
 
 Stages (each committed atomically with row-count/latency lineage; rerunning
 resumes at the first uncommitted stage — a crashed index build never
-retrains or re-encodes committed work):
-  1. centroids — IVF coarse quantizer (sampled spherical k-means), persisted
-                 as rows so every later stage — and every later probe job —
-                 reads the SAME quantizer instead of retraining
-  2. codebooks — deterministic PQ codebooks (id-derived, integer-exact)
-  3. index     — one row per corpus vector: (vec_id, _cell, codes) — m-byte
-                 codes instead of raw vectors (the 32x compression pass);
-                 at cluster scale this is the only full-corpus job, and it
-                 is a single narrow projection + two Arrow matmul kernels
+recomputes or re-encodes committed work):
+  1. centroids — deterministic INTEGER coarse quantizer: the quantized
+                 (floor(v*1000+0.5)) vectors of the first --n-centroids
+                 ids, persisted as ``cell int, centroid array<long>`` rows
+                 so every later stage — and every later probe or append
+                 job — reads the SAME quantizer
+  2. codebooks — residual PQ codebooks (id-derived, integer-exact)
+  3. index     — one row per corpus vector: (vec_id, _cell, codes) with
+                 codes = PQ code of the residual vs its cell centroid —
+                 m-byte codes instead of raw vectors (the 32x compression
+                 pass); at cluster scale this is the only full-corpus job,
+                 and it is a single narrow projection + one Arrow kernel
   4. topk      — batch probe of the COMMITTED index for the first
-                 --n-queries ids: nprobe cells per query, ADC ranking
+                 --n-queries ids: nprobe cells per query, per-(query, cell)
+                 residual ADC ranking
 
 Prints one JSON line of per-stage metrics.
 
@@ -41,42 +45,23 @@ from tilematrix_spark.io import StageJob
 
 
 def run(spark: SparkSession, args) -> dict:
-    """Build (or resume) the index pipeline; importable for in-process tests
-    — ``args`` is any namespace with the CLI fields.
-
-    ``--residual`` builds the IVFADC layout (Jégou et al. 2011 §IV):
-    deterministic INTEGER coarse centroids, codebooks trained on residuals,
-    index codes = residual PQ codes, probe = per-(query, cell) residual ADC
-    tables.  The flag is recorded in every stage's lineage config, so
-    ``annstore.append_batch`` (and the streaming sink through it) picks the
-    matching encoder automatically — a raw append into a residual index
-    would silently corrupt distances."""
+    """Build (or resume) the IVFADC index pipeline (Jégou et al. 2011 §IV);
+    importable for in-process tests — ``args`` is any namespace with the
+    CLI fields."""
     emb = spark.read.parquet(args.input)
-    residual = bool(getattr(args, "residual", False))
 
     def build_centroids(s, read_stage):
-        if residual:
-            cq = sim.det_coarse_centroids(
-                emb, args.n_centroids, id_col=args.id_col, vec_col=args.vec_col
-            )
-            rows = [(i, [int(x) for x in cq[i]]) for i in range(len(cq))]
-            return s.createDataFrame(rows, "cell int, centroid array<long>")
-        cents = sim.ivf_train_centroids(
+        cq = sim.det_coarse_centroids(
             emb, args.n_centroids, id_col=args.id_col, vec_col=args.vec_col
         )
-        rows = [(i, [float(x) for x in cents[i]]) for i in range(len(cents))]
-        return s.createDataFrame(rows, "cell int, centroid array<double>")
+        rows = [(i, [int(x) for x in cq[i]]) for i in range(len(cq))]
+        return s.createDataFrame(rows, "cell int, centroid array<long>")
 
     def build_codebooks(s, read_stage):
-        if residual:
-            books = sim.pq_residual_codebooks(
-                emb, sim.int_centroids_from_rows(read_stage("centroids")),
-                m=args.m, k=args.k, id_col=args.id_col, vec_col=args.vec_col,
-            )
-        else:
-            books = sim.pq_codebooks(
-                emb, m=args.m, k=args.k, id_col=args.id_col, vec_col=args.vec_col
-            )
+        books = sim.pq_residual_codebooks(
+            emb, sim.int_centroids_from_rows(read_stage("centroids")),
+            m=args.m, k=args.k, id_col=args.id_col, vec_col=args.vec_col,
+        )
         rows = [
             (j, c, [int(x) for x in books[j][c]])
             for j in range(args.m)
@@ -86,34 +71,18 @@ def run(spark: SparkSession, args) -> dict:
 
     def build_index(s, read_stage):
         books = sim.codebooks_from_rows(read_stage("codebooks"))
+        cq = sim.int_centroids_from_rows(read_stage("centroids"))
         slim = emb.select(F.col(args.id_col), F.col(args.vec_col).alias("_cv"))
-        if residual:
-            cq = sim.int_centroids_from_rows(read_stage("centroids"))
-            return sim.with_ivf_pq_residual(slim, books, cq, "_cv")
-        cents = sim.centroids_from_rows(read_stage("centroids"))
-        cb = sim.with_ivf_cells(slim, cents, 1, "_cv").select(
-            args.id_col, "_cv", F.element_at("_cells", 1).alias("_cell")
-        )
-        return sim.with_pq_codes(cb, books, "_cv").select(
-            args.id_col, "_cell", "codes"
-        )
+        return sim.with_ivf_pq_residual(slim, books, cq, "_cv")
 
     def build_topk(s, read_stage):
         books = sim.codebooks_from_rows(read_stage("codebooks"))
-        index = read_stage("index")
+        cq = sim.int_centroids_from_rows(read_stage("centroids"))
         queries = emb.filter(F.col(args.id_col) < args.n_queries).select(
             F.col(args.id_col).alias("qid"), F.col(args.vec_col)
         )
-        if residual:
-            cq = sim.int_centroids_from_rows(read_stage("centroids"))
-            return sim.ivf_pq_residual_probe(
-                queries, index, books, cq,
-                k=args.topk, nprobe=args.nprobe,
-                query_id="qid", corpus_id=args.id_col, q_vec=args.vec_col,
-            )
-        cents = sim.centroids_from_rows(read_stage("centroids"))
-        return sim.ivf_pq_probe(
-            queries, index, books, cents,
+        return sim.ivf_pq_residual_probe(
+            queries, read_stage("index"), books, cq,
             k=args.topk, nprobe=args.nprobe,
             query_id="qid", corpus_id=args.id_col, q_vec=args.vec_col,
         )
@@ -131,7 +100,6 @@ def run(spark: SparkSession, args) -> dict:
         config={
             "m": args.m, "k": args.k,
             "n_centroids": args.n_centroids, "nprobe": args.nprobe,
-            "residual": residual,
         },
     )
     executed = job.run()
@@ -150,8 +118,6 @@ def main() -> None:
     p.add_argument("--nprobe", type=int, default=2)
     p.add_argument("--topk", type=int, default=3)
     p.add_argument("--n-queries", type=int, default=32)
-    p.add_argument("--residual", action="store_true",
-                   help="IVFADC layout: integer coarse quantizer + residual codes")
     args = p.parse_args()
 
     spark = SparkSession.builder.appName("tmx_ann_index_job").getOrCreate()

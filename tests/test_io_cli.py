@@ -5,6 +5,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from tilematrix_spark.io import PyramidJob, TableIO
@@ -267,13 +268,12 @@ def test_ann_update_job_incremental_append(spark, tmp_path):
 
     # merged index == full re-encode of the union corpus, same quantizers
     io = TableIO(spark)
-    cents = sim.centroids_from_rows(io.read(_os.path.join(out, "stage=centroids")))
+    cq = sim.int_centroids_from_rows(io.read(_os.path.join(out, "stage=centroids")))
     books = sim.codebooks_from_rows(io.read(_os.path.join(out, "stage=codebooks")))
-    cb = sim.with_ivf_cells(
+    full = sim.with_ivf_pq_residual(
         base.unionByName(upd).select("vec_id", F.col("embedding").alias("_cv")),
-        cents, 1, "_cv",
-    ).select("vec_id", "_cv", F.element_at("_cells", 1).alias("_cell"))
-    full = sim.with_pq_codes(cb, books, "_cv").select("vec_id", "_cell", "codes")
+        books, cq, "_cv",
+    )
     key = lambda r: (r["vec_id"], r["_cell"], tuple(r["codes"]))  # noqa: E731
     expect = sorted(map(key, full.collect()))
     assert sorted(map(key, merged.collect())) == expect
@@ -349,12 +349,11 @@ def test_ann_compact_concurrent_append_exactly_once(spark, tmp_path, monkeypatch
 
 
 def test_ann_residual_index_build_and_append(spark, tmp_path):
-    """--residual index lifecycle (IVFADC layout): the build job records
-    the layout in lineage, the probe stage runs against residual codes,
-    and append_batch AUTO-DETECTS the layout — the merged index is
-    row-identical to a full residual re-encode of the union corpus with
-    the frozen integer quantizer (a raw-code append would corrupt every
-    ADC distance; the config flag prevents that class of bug)."""
+    """IVFADC index lifecycle: the build job commits the integer quantizer
+    (array<long> centroids), the probe stage runs against residual codes,
+    and append_batch encodes residuals against the frozen quantizer — the
+    merged index is row-identical to a full residual re-encode of the union
+    corpus (a raw-code append would corrupt every ADC distance)."""
     import argparse
     import os as _os
     import sys as _sys
@@ -375,20 +374,20 @@ def test_ann_residual_index_build_and_append(spark, tmp_path):
     args = argparse.Namespace(
         input=basep, output=out, id_col="vec_id", vec_col="embedding",
         m=8, k=16, n_centroids=4, nprobe=2, topk=3, n_queries=8,
-        residual=True,
     )
     r = ann_index_job.run(spark, args)
     assert r["executed"] == ["centroids", "codebooks", "index", "topk"]
-    assert r["metrics"]["stage=centroids"]["config"]["residual"] is True
+    io = TableIO(spark)
+    cents = io.read(_os.path.join(out, "stage=centroids"))
+    assert cents.schema["centroid"].dataType.simpleString() == "array<bigint>"
     # probe stage produced k rows per query against residual codes
-    topk = TableIO(spark).read(_os.path.join(out, "stage=topk"))
+    topk = io.read(_os.path.join(out, "stage=topk"))
     assert topk.count() == 8 * 3
 
     m1 = annstore.append_batch(spark, out, upd, batch_id=1)
     assert not m1["skipped"] and m1["rows"] == 100
 
-    io = TableIO(spark)
-    cq = sim.int_centroids_from_rows(io.read(_os.path.join(out, "stage=centroids")))
+    cq = sim.int_centroids_from_rows(cents)
     books = sim.codebooks_from_rows(io.read(_os.path.join(out, "stage=codebooks")))
     full = sim.with_ivf_pq_residual(
         base.unionByName(upd).select("vec_id", F.col("embedding").alias("_cv")),
@@ -398,6 +397,23 @@ def test_ann_residual_index_build_and_append(spark, tmp_path):
     assert sorted(map(key, annstore.read_index(spark, out).collect())) == sorted(
         map(key, full.collect())
     )
+
+
+def test_ann_append_rejects_float_centroid_index(spark, tmp_path):
+    """An index whose committed centroids are floats (the retired raw-code
+    layout) must fail loudly on append: truncating unit-norm floats to the
+    integer quantizer would encode every row against zero centroids."""
+    import os as _os
+
+    from tilematrix_spark import annstore
+
+    out = str(tmp_path / "annidx_float")
+    spark.createDataFrame(
+        [(0, [0.6, 0.8]), (1, [0.8, 0.6])], "cell int, centroid array<double>"
+    ).write.parquet(_os.path.join(out, "stage=centroids"))
+    upd = spark.createDataFrame([(0, [0.6, 0.8])], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="array<long>"):
+        annstore.append_batch(spark, out, upd, batch_id=1)
 
 
 def test_ann_gc_and_drift_monitor(spark, tmp_path):
@@ -567,6 +583,6 @@ def test_driver_gate_window_holds_kernel_queries():
     # rides the in-window unions)
     missing = kernel_bearing - window
     assert not missing, f"kernel queries outside the 50-gate window: {missing}"
-    # every query has an oracle except the documented rows-only entry
+    # every query has an oracle
     o = m.oracle_sql()
-    assert [n for n in q if n not in o] == ["ann_ivf_recall"]
+    assert [n for n in q if n not in o] == []

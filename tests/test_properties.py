@@ -273,7 +273,7 @@ def test_portable_lsh_buckets_partitioning_invariant(spark):
     )
 
     def buckets(frame):
-        out = similarity.with_lsh_buckets(frame, dim=16, num_bits=16, bands=4, portable=True)
+        out = similarity.with_lsh_buckets(frame, dim=16, num_bits=16, bands=4)
         return {
             r["vec_id"]: tuple(r[f"bucket_{b}"] for b in range(4))
             for r in out.collect()

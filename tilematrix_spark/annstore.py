@@ -1,6 +1,7 @@
-"""Committed IVF-PQ index store: lineage-gated reads + incremental appends.
+"""Committed IVFADC index store: lineage-gated reads + incremental appends.
 
-The index layout is what ``jobs/ann_index_job.py`` builds — committed
+The index layout is what ``jobs/ann_index_job.py`` builds — integer coarse
+centroids, residual PQ codebooks and residual codes, committed as
 ``stage=centroids`` / ``stage=codebooks`` / ``stage=index`` tables under one
 root — plus any number of ``delta=<namespace>_<id>`` directories appended
 here.  The ANN mirror of incremental pyramid maintenance (incremental.py):
@@ -173,11 +174,10 @@ def gc(spark: SparkSession, index_path: str, grace_s: float = 3600.0) -> dict:
 def _mean_centroid_sim(
     spark: SparkSession, df: DataFrame, cents, vec_col: str
 ) -> float:
-    """Mean cosine similarity of vectors to their ASSIGNED (nearest)
-    centroid — the quantizer-fit statistic.  One Arrow kernel + one
-    aggregate over Θ(|df|) rows.  Both sides unit-normalized so the value
-    is a true cosine for float (already unit-norm) AND integer (residual
-    layout) quantizers alike."""
+    """Mean cosine similarity of vectors to their best-matching centroid
+    — the quantizer-fit statistic.  One Arrow kernel + one aggregate over
+    Θ(|df|) rows.  Both sides unit-normalized, so the value is a true
+    cosine although the centroids are integer-quantized."""
     cq = np.asarray(cents, dtype=np.float64)
     cq = cq / np.maximum(np.linalg.norm(cq, axis=1, keepdims=True), 1e-12)
 
@@ -221,35 +221,29 @@ def append_batch(
     if unit in done:
         return {"unit": unit, "rows": done[unit]["rows"], "skipped": True}
     io = TableIO(spark)
-    # the build job records its layout in every stage marker: a residual
-    # (IVFADC) index MUST be appended with the residual encoder — raw codes
-    # mixed into residual cells would silently corrupt every ADC distance
-    residual = bool(
-        done.get("stage=centroids", {}).get("config", {}).get("residual", False)
-    )
     cents_df = io.read(os.path.join(index_path, "stage=centroids"))
+    cent_type = cents_df.schema["centroid"].dataType
+    if not (isinstance(cent_type, T.ArrayType)
+            and isinstance(cent_type.elementType, T.LongType)):
+        # a float-centroid (raw-code) index: truncating its unit-norm
+        # centroids to integers would encode every new row against zeros
+        raise ValueError(
+            f"{index_path}: stage=centroids is {cent_type.simpleString()}, "
+            "expected array<long> (integer IVFADC quantizer); rebuild the "
+            "index with jobs/ann_index_job.py"
+        )
+    cents_q = sim.int_centroids_from_rows(cents_df)
     books = sim.codebooks_from_rows(io.read(os.path.join(index_path, "stage=codebooks")))
     t0 = time.time()
     slim = updates.select(F.col(id_col), F.col(vec_col).alias("_cv"))
-    if residual:
-        cents_q = sim.int_centroids_from_rows(cents_df)
-        cents = cents_q.astype("float64")
-    else:
-        cents = sim.centroids_from_rows(cents_df)
-    mean_sim = round(_mean_centroid_sim(spark, slim, cents, "_cv"), 6)
+    mean_sim = round(_mean_centroid_sim(spark, slim, cents_q, "_cv"), 6)
     baseline = mean_sim
     for rec in sorted(done.values(), key=lambda r: r["committed_at"]):
         drift = rec["config"].get("drift")
         if drift:
             baseline = drift["baseline_sim"]
             break
-    if residual:
-        encoded = sim.with_ivf_pq_residual(slim, books, cents_q, "_cv")
-    else:
-        cb = sim.with_ivf_cells(slim, cents, 1, "_cv").select(
-            id_col, "_cv", F.element_at("_cells", 1).alias("_cell")
-        )
-        encoded = sim.with_pq_codes(cb, books, "_cv").select(id_col, "_cell", "codes")
+    encoded = sim.with_ivf_pq_residual(slim, books, cents_q, "_cv")
     rows = io.write_counted(
         encoded, os.path.join(index_path, unit), partition_by=["_cell"]
     )

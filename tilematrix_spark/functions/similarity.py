@@ -1,26 +1,26 @@
 """Similarity search over embedding columns (``array<float>``).
 
+Every approximate stack runs on integer-quantized vectors
+(``floor(v*1000 + 0.5)``), so each one has a bit-exact SQL mirror:
+
 * ``cosine_topk``: brute-force exact top-k — broadcast the (small) query set,
   native ``zip_with``/``aggregate`` dot products (JVM codegen, no Python),
   windowed rank.  The correctness baseline.
-* ``lsh_topk``: random-hyperplane LSH buckets (deterministic hyperplanes from
-  a seeded PCG64, computed vectorized in a pandas UDF as one matmul per
-  Arrow batch) → candidates share ≥1 band bucket → exact re-rank within
-  candidates.  The scale path: the self-join is on short band keys instead
-  of a full cross join.
-* ``ivf_topk``: inverted-file ANN (FAISS-IVF shape) — spherical-k-means
-  coarse quantizer trained on a deterministic sample, one cell per corpus
-  vector, ``nprobe`` cells per query, exact re-rank inside the probed
-  cells.  The second scale path; recall/cost tuned by (n_centroids, nprobe).
-* ``pq_codebooks`` / ``with_pq_codes`` / ``pq_topk``: product quantization
-  (Jégou et al. 2011) — m-byte codes instead of raw vectors, asymmetric
-  distance (ADC) top-k over a broadcast query table.  The third ANN scale
-  path; deterministic integer-exact codebooks make the whole pipeline
-  SQL-oracle-able.
-* ``ivf_pq_topk``: IVF cells × PQ codes — the canonical billion-vector
-  FAISS IVFADC shape; full probe reduces to ``pq_topk`` exactly, which is
-  how the gate value-oracles it.
-* ``cosine_dup_pairs``: embedding near-dup pairs above a cosine threshold.
+* ``lsh_topk``: sign-LSH buckets over md5-derived ±1 planes (one Arrow
+  matmul per batch) → candidates share ≥1 band bucket → exact re-rank
+  within candidates.  The self-join is on short band keys instead of a
+  full cross join.
+* ``ivf_topk``: inverted-file ANN (IVF-flat) — one deterministic integer
+  coarse cell per corpus vector (``det_coarse_centroids``), ``nprobe``
+  cells per query, exact cosine re-rank inside the probed cells.
+* ``pq_codebooks`` / ``with_pq_codes`` / ``pq_topk``: exhaustive product
+  quantization (Jégou et al. 2011) — m-byte codes instead of raw vectors,
+  asymmetric distance (ADC) top-k over a broadcast query table.
+* ``ivf_pq_residual_topk``: IVFADC — IVF cells on the same integer coarse
+  quantizer plus PQ codes of the residuals (Jégou et al. 2011 §IV); the
+  committed index layout of ``annstore`` and ``jobs/ann_index_job.py``.
+* ``cosine_dup_pairs`` / ``semantic_dedup``: embedding near-dup pairs.
+* ``with_unit_quant`` / ``retrieval_recall``: bit-exact retrieval evaluation.
 """
 
 from __future__ import annotations
@@ -82,12 +82,7 @@ def cosine_topk(
     )
 
 
-def _hyperplanes(dim: int, num_bits: int, seed: int = 1234) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal((dim, num_bits))
-
-
-#: quantization scale for the portable (oracle-mirrorable) LSH variant
+#: integer quantization scale shared by every ANN kernel and its SQL mirror
 PORTABLE_SCALE = 1000.0
 
 
@@ -113,19 +108,17 @@ def with_lsh_buckets(
     num_bits: int = 16,
     bands: int = 4,
     vec_col: str = "embedding",
-    seed: int = 1234,
-    portable: bool = False,
     keep_bands_array: bool = False,
 ) -> DataFrame:
     """Add ``bucket_0..bucket_{bands-1}`` sign-LSH band keys — one Arrow
     matmul + one reshape-matmul per batch (fully vectorized; no per-row
     Python).
 
-    ``portable=True`` swaps the Gaussian hyperplanes for md5-derived ±1
-    planes over integer-quantized vectors (``floor(v*1000 + 0.5)``) so a SQL
-    oracle can mirror bucket assignment exactly: every projection is a sum
-    of ≤2^26-magnitude integers, exact in IEEE double regardless of
-    summation order.
+    The planes are the md5-derived ±1 planes of ``portable_sign_planes``
+    over integer-quantized vectors (``floor(v*1000 + 0.5)``), so a SQL
+    oracle mirrors bucket assignment exactly: every projection is a sum of
+    ≤2^26-magnitude integers, exact in IEEE double regardless of summation
+    order.
 
     ``keep_bands_array=True`` returns the raw ``_bands`` array column
     instead of the per-band ``bucket_b`` columns — the input to the
@@ -136,18 +129,13 @@ def with_lsh_buckets(
     if num_bits % bands:
         raise ValueError("num_bits must be divisible by bands")
     bits_per_band = num_bits // bands
-    planes = (
-        portable_sign_planes(dim, num_bits).astype(np.float64)
-        if portable
-        else _hyperplanes(dim, num_bits, seed)
-    )
+    planes = portable_sign_planes(dim, num_bits).astype(np.float64)
     weights = (1 << np.arange(bits_per_band)).astype(np.int64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def band_keys(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        if portable:
-            mat = np.floor(mat * PORTABLE_SCALE + 0.5)
+        mat = np.floor(mat * PORTABLE_SCALE + 0.5)
         signs = (mat @ planes) > 0  # (n, num_bits)
         keys = signs.reshape(-1, bands, bits_per_band).astype(np.int64) @ weights
         return pd.Series(keys.astype(np.int32).tolist())
@@ -174,13 +162,11 @@ def lsh_topk(
     c_vec: str = "embedding",
     num_bits: int = 16,
     bands: int = 4,
-    seed: int = 1234,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share ≥1 LSH band bucket, then
     exact re-rank.  Recall grows with bands; verify against cosine_topk.
-    ``portable=True`` uses the md5-derived integer-exact planes (see
-    with_lsh_buckets) so a SQL oracle can mirror the whole pipeline.
+    Bucketing is integer-exact (see with_lsh_buckets), so a SQL oracle
+    mirrors the whole pipeline.
 
     Blocking is explode-once: each side hashes ONCE, posexplodes its band
     keys, and candidates come from a single equi-join on (band index,
@@ -189,11 +175,11 @@ def lsh_topk(
     bands=8 vs 2 now)."""
     qb = with_lsh_buckets(
         queries.select(F.col(query_id).alias("_qid"), F.col(q_vec).alias("_qv")),
-        dim, num_bits, bands, "_qv", seed, portable, keep_bands_array=True,
+        dim, num_bits, bands, "_qv", keep_bands_array=True,
     )
     cb = with_lsh_buckets(
         corpus.select(F.col(corpus_id), F.col(c_vec).alias("_cv")),
-        dim, num_bits, bands, "_cv", seed, portable, keep_bands_array=True,
+        dim, num_bits, bands, "_cv", keep_bands_array=True,
     )
     qe = qb.select("_qid", "_qv", F.posexplode("_bands").alias("_bi", "_bk"))
     ce = cb.select(F.col(corpus_id), "_cv", F.posexplode("_bands").alias("_bi", "_bk"))
@@ -214,55 +200,62 @@ def lsh_topk(
     )
 
 
-def ivf_train_centroids(
+def det_coarse_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
-    iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_size: int = 4096,
 ) -> np.ndarray:
-    """Spherical k-means coarse quantizer, FAISS-IVF style: train on a
-    deterministic driver-side sample (smallest ids — at 10^12 rows the
-    quantizer is always trained on a sample; the cluster never iterates
-    over the full table), Lloyd iterations in numpy, unit-norm centroids.
-    Returns (n_centroids, dim) float64."""
-    rows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
-    )
+    """The coarse quantizer of every IVF stack here: the quantized
+    (``floor(v*1000+0.5)``) vectors of the first ``n_centroids`` corpus
+    rows in id order — positional like ``pq_codebooks``, no RNG, no
+    k-means, so a SQL oracle reproduces cell assignment bit-for-bit and
+    the PRUNED (nprobe < n_centroids) regime is value-gateable.  (A
+    Lloyd-trained quantizer plugs into the same encode/probe paths —
+    quantize its centroids with the same floor rule — at the cost of the
+    oracle.)  Returns int64 (n_centroids, dim)."""
+    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
+    if len(rows) < n_centroids:
+        raise ValueError(f"corpus must have >= {n_centroids} vectors")
     x = np.asarray([r[1] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    cents = x[:n_centroids].copy()  # deterministic init: first ids
-    for _ in range(iters):
-        assign = np.argmax(x @ cents.T, axis=1)
-        for c in range(n_centroids):
-            m = assign == c
-            if m.any():
-                v = x[m].mean(axis=0)
-                cents[c] = v / max(np.linalg.norm(v), 1e-12)
-    return cents
+    return np.floor(x * PORTABLE_SCALE + 0.5).astype(np.int64)
+
+
+def _int_cell_dists(q: np.ndarray, cents_q: np.ndarray) -> np.ndarray:
+    """(n, C) exact int64 squared L2 distances of quantized rows to the
+    integer coarse centroids — one integer matmul (|v| ≤ ~2·10³ quantized,
+    dim ≤ 10³ ⇒ every term ≪ 2⁶³, exact in int64)."""
+    return (
+        (q * q).sum(axis=1, keepdims=True)
+        - 2 * (q @ cents_q.T)
+        + (cents_q * cents_q).sum(axis=1)[None, :]
+    )
+
+
+def _nearest_cells(q: np.ndarray, cents_q: np.ndarray, nprobe: int) -> np.ndarray:
+    """(n, nprobe) nearest integer cells in (distance, cell id) order — the
+    stable sort is the SQL mirror's ``ORDER BY d, cid``."""
+    return np.argsort(_int_cell_dists(q, cents_q), axis=1, kind="stable")[:, :nprobe]
 
 
 def with_ivf_cells(
     df: DataFrame,
-    centroids: np.ndarray,
+    cents_q: np.ndarray,
     nprobe: int = 1,
     vec_col: str = "embedding",
     out_col: str = "_cells",
 ) -> DataFrame:
-    """Add the ``nprobe`` nearest-centroid cell ids (by cosine) as an array
-    column — one matmul + argpartition per Arrow batch, no per-row Python."""
-    cents = centroids
+    """Add the ``nprobe`` nearest integer coarse cells (exact squared L2
+    over ``floor(v*1000+0.5)`` vectors, ties → smaller cell id) as an
+    array column — one integer matmul + stable sort per Arrow batch, no
+    per-row Python."""
+    cq = cents_q
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def cells(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        sims = mat @ cents.T  # (n, n_centroids)
-        if nprobe == 1:
-            top = np.argmax(sims, axis=1)[:, None]
-        else:
-            top = np.argpartition(-sims, nprobe - 1, axis=1)[:, :nprobe]
+        q = np.floor(mat * PORTABLE_SCALE + 0.5).astype(np.int64)
+        top = _nearest_cells(q, cq, nprobe)
         # rows of the int32 matrix go to Arrow as-is — no per-element loop
         return pd.Series(list(top.astype(np.int32)))
 
@@ -284,23 +277,21 @@ def ivf_topk(
     c_vec: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 2,
-    iters: int = 5,
 ) -> DataFrame:
-    """Approximate cosine top-k via an IVF index — the second scale path
-    next to ``lsh_topk``: corpus vectors live in exactly one coarse cell,
-    queries probe their ``nprobe`` nearest cells, exact re-rank inside.
+    """Approximate cosine top-k via an IVF-flat index: corpus vectors live
+    in exactly one integer coarse cell (``det_coarse_centroids``), queries
+    probe their ``nprobe`` nearest cells, exact cosine re-rank inside.
     Candidate volume ≈ |corpus| · nprobe / n_centroids per query (tunable
-    recall/cost), versus the O(|Q|·|P|) brute-force cross join."""
-    cents = ivf_train_centroids(
-        corpus, n_centroids, iters, corpus_id, c_vec
-    )
+    recall/cost), versus the O(|Q|·|P|) brute-force cross join.  Cell
+    assignment is integer-exact, so the pruned regime has a SQL mirror."""
+    cents_q = det_coarse_centroids(corpus, n_centroids, corpus_id, c_vec)
     cb = with_ivf_cells(
         corpus.select(F.col(corpus_id), F.col(c_vec).alias("_cv")),
-        cents, 1, "_cv",
+        cents_q, 1, "_cv",
     ).select(corpus_id, "_cv", F.element_at("_cells", 1).alias("_cell"))
     qb = with_ivf_cells(
         queries.select(F.col(query_id).alias("_qid"), F.col(q_vec).alias("_qv")),
-        cents, nprobe, "_qv",
+        cents_q, nprobe, "_qv",
     ).select("_qid", "_qv", F.explode("_cells").alias("_cell"))
     cands = (
         F.broadcast(qb)
@@ -319,13 +310,13 @@ def ivf_topk(
     )
 
 
-def centroids_from_rows(df: DataFrame) -> np.ndarray:
-    """Rebuild the IVF coarse-quantizer array from its committed table form
-    (``cell int, centroid array<double>`` — the ``centroids`` stage of
+def int_centroids_from_rows(df: DataFrame) -> np.ndarray:
+    """Rebuild the integer coarse quantizer from its committed table form
+    (``cell int, centroid array<long>`` — the ``centroids`` stage of
     jobs/ann_index_job.py).  Index/update/probe jobs all read the SAME
-    frozen quantizer through this instead of retraining."""
+    frozen quantizer through this instead of recomputing it."""
     rows = sorted((r["cell"], r["centroid"]) for r in df.collect())
-    return np.asarray([v for _, v in rows], dtype=np.float64)
+    return np.asarray([v for _, v in rows], dtype=np.int64)
 
 
 def codebooks_from_rows(df: DataFrame) -> np.ndarray:
@@ -355,8 +346,7 @@ def pq_codebooks(
     id-derived, no RNG, no k-means, so a SQL oracle reproduces them
     bit-exactly and every PQ distance downstream is integer-exact across
     engines.  (A Lloyd-refined codebook plugs into the same encode/ADC
-    path — `ivf_train_centroids` shows the sampled-k-means shape — at the
-    cost of the value oracle.)  Returns int64 (m, k, dim//m)."""
+    path at the cost of the value oracle.)  Returns int64 (m, k, dim//m)."""
     rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(m * k).collect()
     if len(rows) < m * k:
         raise ValueError(f"corpus must have >= {m * k} vectors")
@@ -438,11 +428,11 @@ def pq_topk(
     """PQ asymmetric-distance top-k (ADC): each query precomputes an m×k
     table of exact squared distances to every centroid, a candidate's
     approximate distance is m table lookups on its code — no raw corpus
-    vector is ever read after encoding.  The third ANN scale path next to
-    sign-LSH and IVF: the corpus-side scan is over m-byte codes
-    (compression ∝ 4·dim/m), per-candidate cost is m integer adds, and at
-    cluster scale the probe composes with IVF cells (encode residuals per
-    cell) exactly as in the IVF-ADC literature.  The per-query m×k table
+    vector is ever read after encoding.  The exhaustive PQ path: the
+    corpus-side scan is over m-byte codes (compression ∝ 4·dim/m),
+    per-candidate cost is m integer adds; at cluster scale the probe
+    composes with IVF cells over residual codes (``ivf_pq_residual_topk``).
+    The per-query m×k table
     is one integer matmul per subspace (Arrow kernel) and rides a
     localCheckpoint barrier — inlined, Catalyst's projection collapse
     would re-evaluate the table kernel once per CANDIDATE instead of once
@@ -503,102 +493,6 @@ def _adc_topk(cands: DataFrame, m: int, k: int, query_id: str, corpus_id: str) -
         .withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(F.col("_qid").alias(query_id), F.col(corpus_id), "rank")
-    )
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    books: np.ndarray,
-    k: int = 3,
-    query_id: str = "qid",
-    corpus_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_vec: str = "embedding",
-    n_centroids: int = 16,
-    nprobe: int = 2,
-    iters: int = 5,
-) -> DataFrame:
-    """IVF-PQ: the canonical billion-vector ANN shape (FAISS IVFADC,
-    Jégou et al. 2011) — corpus vectors live in one coarse IVF cell and
-    carry only their m-byte PQ code; queries probe ``nprobe`` cells and
-    rank candidates by asymmetric PQ distance.  Composition of the two
-    existing paths: candidate volume ∝ |corpus|·nprobe/n_centroids (IVF)
-    AND the per-candidate scan touches codes, never raw vectors (PQ) — at
-    10^12 rows the inner scan reads m bytes + does m integer adds per
-    candidate, the only full-vector work is one matmul per query.
-
-    With ``nprobe == n_centroids`` every cell is probed, so the result is
-    EXACTLY ``pq_topk`` — which is how the driver gate value-oracles this
-    pipeline end to end (the sampled-k-means quantizer cancels out by
-    construction, the same trick as ``ann_ivf_topk``).  Returns
-    (query_id, corpus_id, rank); ties → smaller corpus id."""
-    cents = ivf_train_centroids(corpus, n_centroids, iters, corpus_id, c_vec)
-    cb = with_ivf_cells(
-        corpus.select(F.col(corpus_id), F.col(c_vec).alias("_cv")), cents, 1, "_cv"
-    ).select(corpus_id, "_cv", F.element_at("_cells", 1).alias("_cell"))
-    cb = with_pq_codes(cb, books, "_cv").select(corpus_id, "_cell", "codes")
-    return ivf_pq_probe(queries, cb, books, cents, k, nprobe, query_id, corpus_id, q_vec)
-
-
-def ivf_pq_probe(
-    queries: DataFrame,
-    index: DataFrame,
-    books: np.ndarray,
-    centroids: np.ndarray,
-    k: int = 3,
-    nprobe: int = 2,
-    query_id: str = "qid",
-    corpus_id: str = "vec_id",
-    q_vec: str = "embedding",
-) -> DataFrame:
-    """Probe a PREBUILT IVF-PQ index (columns ``corpus_id, _cell, codes`` —
-    e.g. the committed output of ``jobs/ann_index_job.py``): queries get
-    their nprobe cells + ADC table, join the index on the cell key, rank
-    by asymmetric distance.  The serve-side half of the pipeline — the
-    index is built once, probes touch only matching cell partitions.
-    No dedup needed: each corpus vector lives in exactly one cell and a
-    query's probe list is distinct, so a pair joins at most once."""
-    qt = pq_query_tables(queries, books, query_id, q_vec)
-    qc = with_ivf_cells(
-        queries.select(F.col(query_id).alias("_qid"), F.col(q_vec).alias("_qv")),
-        centroids, nprobe, "_qv",
-    ).select("_qid", F.explode("_cells").alias("_cell"))
-    qd = qt.join(qc, "_qid").localCheckpoint(eager=False)
-    cands = F.broadcast(qd).join(index, "_cell").drop("_cell")
-    return _adc_topk(cands, books.shape[0], k, query_id, corpus_id)
-
-
-def det_coarse_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Deterministic INTEGER coarse quantizer for the value-oracled
-    residual pipeline: the quantized (``floor(v*1000+0.5)``) vectors of the
-    first ``n_centroids`` corpus rows in id order — positional like
-    ``pq_codebooks``, no RNG, no k-means, so a SQL oracle reproduces cell
-    assignment bit-for-bit and the PRUNED (nprobe < n_centroids) regime is
-    value-gateable, which the sampled-k-means quantizer never is.  (A
-    Lloyd-trained quantizer plugs into the same residual encode/probe path
-    — quantize its centroids with the same floor rule — at the cost of the
-    oracle.)  Returns int64 (n_centroids, dim)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-    if len(rows) < n_centroids:
-        raise ValueError(f"corpus must have >= {n_centroids} vectors")
-    x = np.asarray([r[1] for r in rows], dtype=np.float64)
-    return np.floor(x * PORTABLE_SCALE + 0.5).astype(np.int64)
-
-
-def _int_cell_dists(q: np.ndarray, cents_q: np.ndarray) -> np.ndarray:
-    """(n, C) exact int64 squared L2 distances of quantized rows to the
-    integer coarse centroids — one integer matmul (|v| ≤ ~2·10³ quantized,
-    dim ≤ 10³ ⇒ every term ≪ 2⁶³, exact in int64)."""
-    return (
-        (q * q).sum(axis=1, keepdims=True)
-        - 2 * (q @ cents_q.T)
-        + (cents_q * cents_q).sum(axis=1)[None, :]
     )
 
 
@@ -716,8 +610,7 @@ def pq_residual_query_tables(
     def tables_udf(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         q = np.floor(mat * PORTABLE_SCALE + 0.5).astype(np.int64)
-        d = _int_cell_dists(q, cq)
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]  # tie→small id
+        order = _nearest_cells(q, cq, nprobe)
         out = []
         for i in range(len(q)):
             per_cell = []
@@ -752,11 +645,10 @@ def ivf_pq_residual_topk(
     """IVFADC with RESIDUAL encoding (Jégou et al. 2011 §IV — the canonical
     FAISS IVF-PQ shape): corpus vectors carry (cell, residual PQ code);
     queries probe ``nprobe`` cells, each probe using the ADC table of the
-    query's residual vs THAT cell, rank by table-lookup distance.  The
-    refinement ``ivf_pq_topk`` lacks: encoding x − centroid(cell) instead
-    of x lets the same m-byte code budget quantize the small-variance
-    residual, so recall at nprobe < n_centroids is strictly better than
-    raw-vector codes (pytest-pinned).
+    query's residual vs THAT cell, rank by table-lookup distance.
+    Encoding x − centroid(cell) instead of x lets the same m-byte code
+    budget quantize the small-variance residual, so recall on clustered
+    vectors beats raw-vector codes (pytest-pinned against ``pq_topk``).
 
     With the deterministic integer coarse quantizer
     (``det_coarse_centroids``) the ENTIRE pipeline — assignment,
@@ -788,23 +680,17 @@ def ivf_pq_residual_probe(
     q_vec: str = "embedding",
 ) -> DataFrame:
     """Probe a PREBUILT residual IVFADC index (columns ``corpus_id, _cell,
-    codes`` — e.g. the committed output of ``jobs/ann_index_job.py
-    --residual``, plus any ``annstore`` deltas): per probed cell the query
-    carries the ADC table of ITS residual vs that cell, so the join on the
-    cell key delivers table/candidate pairs that are residual-consistent
-    by construction.  The serve-side half — mirror of ``ivf_pq_probe`` for
-    the residual layout."""
+    codes`` — e.g. the committed output of ``jobs/ann_index_job.py``,
+    plus any ``annstore`` deltas): per probed cell the query carries the
+    ADC table of ITS residual vs that cell, so the join on the cell key
+    delivers table/candidate pairs that are residual-consistent by
+    construction.  The serve-side half of the pipeline — the index is
+    built once, probes touch only matching cell partitions.  No dedup
+    needed: each corpus vector lives in exactly one cell and a query's
+    probe list is distinct, so a pair joins at most once."""
     qd = pq_residual_query_tables(queries, books, cents_q, nprobe, query_id, q_vec)
     cands = F.broadcast(qd).join(index, "_cell").drop("_cell")
     return _adc_topk(cands, books.shape[0], k, query_id, corpus_id)
-
-
-def int_centroids_from_rows(df: DataFrame) -> np.ndarray:
-    """Rebuild the INTEGER coarse quantizer from its committed table form
-    (``cell int, centroid array<long>`` — the ``centroids`` stage of a
-    ``--residual`` index build)."""
-    rows = sorted((r["cell"], r["centroid"]) for r in df.collect())
-    return np.asarray([v for _, v in rows], dtype=np.int64)
 
 
 def cosine_dup_pairs(
