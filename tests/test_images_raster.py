@@ -1,6 +1,7 @@
 """Synthetic images table + raster verification tests."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tilematrix_spark import images, raster
@@ -1151,6 +1152,28 @@ def test_label_components_matches_global_bfs(spark):
     assert mirror[(4 << 32) | 2] == (1, 4, 2, 4, 2, 1, 4)  # no diagonal merge
 
 
+def test_label_components_rejects_id_overflow(spark):
+    """The component id packs gy*2^32 + gx: a tile whose pixels reach
+    gx >= 2^32 raises instead of aliasing ids; an in-range tile labels."""
+    import pandas as pd
+
+    a = np.zeros((256, 256), np.uint8)
+    a[0, 0] = 255
+
+    def tiles(col):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                [{"row": 0, "col": col, "tile_w": 256, "tile_h": 256,
+                  "bytes": a.tobytes()}]
+            )
+        )
+
+    with pytest.raises(Exception, match="component id packing"):
+        raster.label_components(tiles(2**24)).collect()
+    got = raster.label_components(tiles(2**24 - 1)).collect()
+    assert [(r["component"], r["area"]) for r in got] == [((2**24 - 1) * 256, 1)]
+
+
 def test_zonal_class_counts_marginalizes_to_zonal_stats(spark, geodetic):
     """The class histogram must marginalize exactly to the moment stats on
     the same canvases/zones/band: Σ_class n = n_px, Σ class·n = sum_val,
@@ -1277,6 +1300,21 @@ def test_zonal_poly_stats_matches_pixel_mirror(spark, geodetic):
     assert got[1]["n_px"] < 0.6 * bbox_px
 
 
+def test_zonal_poly_stats_rejects_clockwise_ring(spark, geodetic):
+    """A clockwise ring fails loudly instead of reading as "no pixels"."""
+    tiles = spark.createDataFrame(
+        [(2, 4, 256, 256, bytearray(256 * 256))],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    # the CCW triangle of the pixel-mirror test, vertex order reversed
+    cw = ([-156.9, -155.9, -156.9][::-1], [74.0, 74.0, 75.0][::-1])
+    zones = spark.createDataFrame(
+        [(1, *cw)], "zone_id long, poly_x array<double>, poly_y array<double>"
+    )
+    with pytest.raises(Exception, match="not counter-clockwise"):
+        raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
+
+
 def test_zonal_majority_two_class_and_tie(spark, geodetic):
     """Majority semantics on a controlled canvas: the dominant class wins
     inside the zone window; an exact tie picks the SMALLEST class code;
@@ -1304,7 +1342,9 @@ def test_zonal_majority_two_class_and_tie(spark, geodetic):
     }
     assert out[1]["majority_class"] == 9 and out[1]["frac"] == 1.0
     assert out[2]["majority_class"] == 9
-    assert out[2]["n_px"] + out[2]["n_zone_px"] - out[2]["n_px"] == out[2]["n_zone_px"]
+    # zone 2 spans all 256 columns, 156 of them class 9
+    assert out[2]["n_px"] * 256 == out[2]["n_zone_px"] * 156
+    assert out[2]["frac"] == out[2]["n_px"] / out[2]["n_zone_px"]
     # exact tie: 128/128 columns -> smaller class (3) must win
     b = np.full((256, 256), 9, np.uint8)
     b[:, :128] = 3

@@ -830,7 +830,9 @@ def zonal_poly_stats(
     needs NO tolerance even though the zones are rotated geometry.
 
     Input ``zones``: (zone_id, poly_x array<double>, poly_y array<double>)
-    — CCW convex ring, no repeated closing vertex.  Output and scale shape
+    — CCW convex ring, no repeated closing vertex; the kernel raises
+    ``ValueError`` on a ring whose signed area is ≤ 0 (clockwise or
+    degenerate) instead of reading it as "no pixels".  Output and scale shape
     are identical to zonal_stats: the zone bbox is derived natively from
     the ring, covers onto tiles via ``raster_tile_windows``, the
     (zone, tile, window, ring) table BROADCASTS onto the canvas scan —
@@ -937,6 +939,11 @@ def zonal_poly_stats(
                 ) * pys
                 rx = np.asarray(pdf["_px_ring"].iat[i], dtype=np.float64)
                 ry = np.asarray(pdf["_py_ring"].iat[i], dtype=np.float64)
+                if np.dot(rx, np.roll(ry, -1)) - np.dot(np.roll(rx, -1), ry) <= 0.0:
+                    raise ValueError(
+                        f"zone {pdf['_zid'].iat[i]}: ring is not counter-"
+                        "clockwise (signed area <= 0)"
+                    )
                 mask = np.ones((rh, cw), dtype=bool)
                 for e in range(len(rx)):
                     x1, y1 = rx[e], ry[e]
@@ -2214,7 +2221,8 @@ def label_components(
     min_gy, min_gx, max_gy, max_gx, n_tiles, perimeter)`` where
     ``component`` is the row-major-minimal member pixel encoded
     ``gy·2³² + gx`` (engine-portable identity: any labeling that agrees on
-    membership agrees on it), ``comp_gy/comp_gx`` its decoded coordinates,
+    membership agrees on it; a foreground pixel with gx ≥ 2³² or gy ≥ 2³¹
+    raises ``ValueError``), ``comp_gy/comp_gx`` its decoded coordinates,
     ``area`` the pixel count, the bbox in global pixel coordinates, and
     ``perimeter`` the exposed-edge count ``4·area − 2·adjacent_pairs``
     (within-tile pairs counted in the kernel; cross-tile pairs are exactly
@@ -2289,6 +2297,12 @@ def label_components(
                 lv = lab[ys, xs]
                 gy = r * th + ys.astype(np.int64)
                 gx = c * tw + xs.astype(np.int64)
+                if gx.max() >= 1 << 32 or gy.max() >= 1 << 31:
+                    raise ValueError(
+                        f"tile ({r}, {c}) at {th}x{tw} px puts a pixel past "
+                        "the component id packing gy*2^32 + gx "
+                        "(needs gx < 2^32, gy < 2^31)"
+                    )
                 code = (gy << np.int64(32)) | gx
                 u, inv = np.unique(lv, return_inverse=True)
                 k = len(u)
