@@ -1174,6 +1174,34 @@ def test_label_components_rejects_id_overflow(spark):
     assert [(r["component"], r["area"]) for r in got] == [((2**24 - 1) * 256, 1)]
 
 
+def test_label_components_is_grid_flat_at_antimeridian(spark, geodetic):
+    """Columns do not wrap: on geodetic z1 (4 columns), foreground touching
+    the west edge of col 0 and the east edge of the last col — one region
+    across the antimeridian — keeps two labels."""
+    import pandas as pd
+
+    ts = 8
+    last = geodetic.matrix_width(1) - 1
+    a = np.zeros((ts, ts), np.uint8)
+    b = np.zeros((ts, ts), np.uint8)
+    a[3, :3] = 255  # gx 0..2, touching the west grid edge
+    b[3, ts - 3:] = 255  # the last 3 px, touching the east grid edge
+    tiles = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {"row": 0, "col": c, "tile_w": ts, "tile_h": ts, "bytes": v.tobytes()}
+                for c, v in ((0, a), (last, b))
+            ]
+        )
+    )
+    got = sorted(
+        (r["component"], r["area"], r["n_tiles"])
+        for r in raster.label_components(tiles).collect()
+    )
+    gx_east = last * ts + ts - 3
+    assert got == [((3 << 32) | 0, 3, 1), ((3 << 32) | gx_east, 3, 1)]
+
+
 def test_zonal_class_counts_marginalizes_to_zonal_stats(spark, geodetic):
     """The class histogram must marginalize exactly to the moment stats on
     the same canvases/zones/band: Σ_class n = n_px, Σ class·n = sum_val,
@@ -1312,6 +1340,22 @@ def test_zonal_poly_stats_rejects_clockwise_ring(spark, geodetic):
         [(1, *cw)], "zone_id long, poly_x array<double>, poly_y array<double>"
     )
     with pytest.raises(Exception, match="not counter-clockwise"):
+        raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
+
+
+def test_zonal_poly_stats_rejects_nonconvex_ring(spark, geodetic):
+    """A CCW ring with a reflex vertex fails loudly instead of masking
+    only the intersection of its edge half-planes."""
+    tiles = spark.createDataFrame(
+        [(2, 4, 256, 256, bytearray(256 * 256))],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    # an arrowhead: CCW, positive area, notch at (-156.4, 74.4)
+    arrow = ([-156.9, -155.9, -156.4, -156.9], [74.0, 74.0, 74.4, 75.0])
+    zones = spark.createDataFrame(
+        [(1, *arrow)], "zone_id long, poly_x array<double>, poly_y array<double>"
+    )
+    with pytest.raises(Exception, match="not convex"):
         raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
 
 

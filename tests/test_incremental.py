@@ -85,6 +85,18 @@ def test_delta_is_small(pyramids, geodetic):
     assert all(b <= a for a, b in zip(sizes, sizes[1:]))
 
 
+def test_incremental_compose_keys_are_dirty_tiles(pyramids, geodetic):
+    """The base delta's keys (the dirty set incremental_compose tags out of
+    its one windows pass) are exactly the public ``dirty_tiles`` set."""
+    _, _, deltas, upd = pyramids
+    got = {(r["row"], r["col"]) for r in deltas[BASE_Z].select("row", "col").collect()}
+    want = {
+        (r["row"], r["col"])
+        for r in incremental.dirty_tiles(upd, geodetic, BASE_Z).collect()
+    }
+    assert got == want and want
+
+
 def test_dirty_tile_stats_match_windows(pyramids, spark, geodetic):
     """n_new/n_total agree with a direct windows aggregation over the
     corpus, and stats rows are exactly the dirty keys."""

@@ -192,6 +192,54 @@ def test_incremental_compose_broadcast_semi_join(spark, geodetic):
     assert "SortMergeJoin LeftSemi" not in plan, plan
 
 
+def test_raster_tile_windows_binds_tile_geometry_once(spark, geodetic):
+    """The tile left/top/width/height are bound columns the window math
+    reads: the antimeridian when-chain must not inline a copy of the
+    tile_shape rounding per use (20 ``bround(`` before binding)."""
+    from tilematrix_spark import raster
+
+    win = raster.raster_tile_windows(images.images_df(spark, 64, partitions=4), geodetic, 4)
+    assert _plan(win).count("bround(") <= 2
+
+
+def test_compose_counts_branch_scans_footprints_only(spark, geodetic, tmp_path):
+    """The per-tile counts derive from the same windows DataFrame as the
+    canvases, and column pruning still keeps that branch's parquet scan to
+    the four footprint columns — no image bytes."""
+    from tilematrix_spark import raster
+
+    images.images_df(spark, 64, partitions=4).write.parquet(str(tmp_path / "images"))
+    imgs = spark.read.parquet(str(tmp_path / "images"))
+    plan = _plan(raster.compose_tiles(imgs, geodetic, 4))
+    schemas = [line.strip() for line in plan.splitlines() if "ReadSchema" in line]
+    slim = "ReadSchema: struct<fp_left:double,fp_bottom:double,fp_right:double,fp_top:double>"
+    assert slim in schemas, schemas
+
+
+def test_compose_builds_one_windows_pass(spark, geodetic, monkeypatch):
+    """compose_tiles and incremental_compose each build the windows pass
+    exactly once: counts, dirty keys and canvases all derive from it."""
+    from tilematrix_spark import incremental, raster
+
+    calls = []
+    build = raster._windows
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(raster, "_windows", counting)
+    imgs = images.images_df(spark, 64, partitions=4)
+    raster.compose_tiles(imgs, geodetic, 4)
+    assert len(calls) == 1
+    split = "img%012d" % 48
+    incremental.incremental_compose(
+        imgs.filter(F.col("image_id") < split), imgs.filter(F.col("image_id") >= split),
+        geodetic, 4,
+    )
+    assert len(calls) == 2
+
+
 def test_spatial_split_is_pure_projection(spark, geodetic):
     """Fold assignment must be a shuffle-free native projection — at corpus
     scale it runs inside the scan stage (no Exchange, no Python)."""

@@ -10,9 +10,9 @@ the update; these operators make maintenance cost ∝ |updates|:
   (new vs total contributors); the planner surface, fully SQL-expressible
   and value-oracled by the ``incremental_dirty`` driver query.
 - :func:`incremental_compose` — new canvases for ONLY the dirty tiles,
-  composed from the full corpus (old ∪ updates) via ``compose_tiles``'s
-  broadcast ``tiles_filter`` semi-join: contributor bytes shuffle only for
-  dirty tiles.
+  composed from the full corpus (old ∪ updates) in one windows pass whose
+  update-tagged rows give the dirty keys of a broadcast semi-join:
+  contributor bytes shuffle only for dirty tiles.
 - :func:`propagate_level` / :func:`incremental_update` — one overview step
   restricted to the dirty parents (clean siblings read from the committed
   level, fresh canvases from the delta), chained base→min zoom.  Each
@@ -112,16 +112,21 @@ def incremental_compose(
     **compose_kwargs,
 ) -> DataFrame:
     """New canvases for ONLY the tiles the update batch dirties, composed
-    from the full corpus (old ∪ updates).  The dirty key set rides a
-    broadcast semi-join inside ``compose_tiles`` (``tiles_filter``), so the
+    from the full corpus (old ∪ updates).  One windows pass over the
+    corpus, tagged with a literal ``_upd`` flag per side, yields the dirty
+    key set (the ``_upd`` rows' non-empty windows — ``dirty_tiles``
+    semantics; the flag filter prunes the old side, so that branch scans
+    only the update batch), the per-tile counts and the canvases.  The
+    dirty keys ride a broadcast semi-join inside the compose, so the
     corpus' contributor bytes shuffle only where a dirty tile needs them —
-    the slim cover pass over the old corpus stays, but it reads 4 doubles
-    per row, not pixels."""
-    dirty = dirty_tiles(
-        updates, tp, zoom, max_cover_tiles=compose_kwargs.get("max_cover_tiles")
+    the counts branch reads 4 footprint doubles per row, not pixels."""
+    corpus = old_images.withColumn("_upd", F.lit(False)).unionByName(
+        updates.withColumn("_upd", F.lit(True))
     )
-    corpus = old_images.unionByName(updates)
-    return raster.compose_tiles(corpus, tp, zoom, tiles_filter=dirty, **compose_kwargs)
+    cover_cap = compose_kwargs.pop("max_cover_tiles", None)
+    win = raster._nonempty(raster._windows(corpus, tp, zoom, max_cover_tiles=cover_cap))
+    dirty = win.filter(F.col("_upd")).select("row", "col")
+    return raster._compose_windows(win, tp, zoom, tiles_filter=dirty, **compose_kwargs)
 
 
 _CANVAS_COLS = ["row", "col", "tile_w", "tile_h", "bytes"]

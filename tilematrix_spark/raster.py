@@ -49,16 +49,53 @@ def raster_tile_windows(
     tile shape.  Windows are in the tile's pixel grid; callers slice decoded
     arrays with them.
     """
+    return _windows(
+        df, tp, zoom, fp_left, fp_bottom, fp_right, fp_top, pixelbuffer, max_cover_tiles
+    ).drop(*_TILE_COLS)
+
+
+#: the bound per-tile scalars ``_windows`` keeps: (buffered) tile left/top
+#: and int pixel width/height
+_TILE_COLS = ["_tl", "_tt", "_tw", "_th"]
+
+
+def _windows(
+    df: DataFrame,
+    tp: PyramidConfig,
+    zoom: exprs.ZoomLike,
+    fp_left: str = "fp_left",
+    fp_bottom: str = "fp_bottom",
+    fp_right: str = "fp_right",
+    fp_top: str = "fp_top",
+    pixelbuffer: int = 0,
+    max_cover_tiles: Optional[int] = None,
+) -> DataFrame:
+    """``raster_tile_windows`` plus the bound ``_TILE_COLS`` its windows
+    are derived from.
+
+    The tile geometry is projected ONCE as bound columns right after the
+    cover explode, and every window expression reads those attributes: the
+    antimeridian when-chain references the tile left/width a dozen times,
+    and CollapseProject keeps a non-cheap expression that is used more than
+    once in its own projection instead of inlining a copy per use."""
     out = cover_ops.tiles_from_bounds(
         df, tp, zoom, left=fp_left, bottom=fp_bottom, right=fp_right, top=fp_top,
         max_cover_tiles=max_cover_tiles,
     )
     b = exprs.tile_bounds(tp, zoom, "row", "col", pixelbuffer)
     s = exprs.tile_shape(tp, zoom, "row", "col", pixelbuffer)
+    out = out.select(
+        "*",
+        b["left"].alias("_tl"),
+        b["top"].alias("_tt"),
+        s["width"].alias("_tw"),
+        s["height"].alias("_th"),
+    )
+    t_left, t_top = F.col("_tl"), F.col("_tt")
+    w_px, h_px = F.col("_tw").cast("long"), F.col("_th").cast("long")
     px = exprs.pixel_x_size(tp, zoom)
     py = exprs.pixel_y_size(tp, zoom)
-    w_px = s["width"].cast("long")
-    h_px = s["height"].cast("long")
+    zero = F.lit(0).cast("long")
 
     # x-axis: a footprint straddling the antimeridian meets wrapped tiles —
     # evaluate the window at footprint shifts {0, ±span} and keep the one
@@ -66,10 +103,9 @@ def raster_tile_windows(
     def x_window(shift: float):
         fl = F.col(fp_left) + F.lit(shift)
         fr = F.col(fp_right) + F.lit(shift)
-        off = F.greatest(exprs.trunc_long(F.floor((fl - b["left"]) / px)), F.lit(0).cast("long"))
-        end = F.least(exprs.trunc_long(F.ceil((fr - b["left"]) / px)), w_px)
-        width = F.greatest(end - off, F.lit(0).cast("long"))
-        return off, width
+        off = F.greatest(exprs.trunc_long(F.floor((fl - t_left) / px)), zero)
+        end = F.least(exprs.trunc_long(F.ceil((fr - t_left) / px)), w_px)
+        return off, F.greatest(end - off, zero)
 
     shifts = [0.0]
     if tp.is_global:
@@ -81,16 +117,17 @@ def raster_tile_windows(
         better = width > best_width
         best_off = F.when(better, off).otherwise(best_off)
         best_width = F.when(better, width).otherwise(best_width)
-    # keep offset within the tile even for zero-width windows
-    best_off = F.least(best_off, w_px)
 
-    row_off = F.greatest(exprs.trunc_long(F.floor((b["top"] - F.col(fp_top)) / py)), F.lit(0).cast("long"))
-    row_end = F.least(exprs.trunc_long(F.ceil((b["top"] - F.col(fp_bottom)) / py)), h_px)
-    return (
-        out.withColumn("win_col_off", best_off)
-        .withColumn("win_row_off", F.least(row_off, h_px))
-        .withColumn("win_width", best_width)
-        .withColumn("win_height", F.greatest(row_end - row_off, F.lit(0).cast("long")))
+    row_off = F.greatest(exprs.trunc_long(F.floor((t_top - F.col(fp_top)) / py)), zero)
+    row_end = F.least(exprs.trunc_long(F.ceil((t_top - F.col(fp_bottom)) / py)), h_px)
+    return out.withColumns(
+        {
+            # keep offset within the tile even for zero-width windows
+            "win_col_off": F.least(best_off, w_px),
+            "win_row_off": F.least(row_off, h_px),
+            "win_width": best_width,
+            "win_height": F.greatest(row_end - row_off, zero),
+        }
     )
 
 
@@ -200,8 +237,10 @@ def compose_tiles(
     tiles: a popular tile or any low-zoom compose previously concentrated
     EVERY contributor's bytes in one task):
 
-    1. contributor counts per tile come from a slim no-bytes recompute of
-       the cover/window math (column-pruned parquet scan, native exprs);
+    1. ONE windows pass (cover explode + window math, native exprs) feeds
+       both branches: contributor counts per tile are a groupBy over it
+       that reads only row/col, so column pruning keeps that branch's
+       parquet scan to the four footprint columns (no bytes);
     2. cold tiles (count ≤ ``hot_threshold``) join the counts and compose in
        one ``applyInPandas`` pass — the join shuffle doubles as the groupBy
        shuffle, so contributor bytes still move exactly once;
@@ -231,25 +270,30 @@ def compose_tiles(
     a silent runaway.  Default ``None`` = exact blend of everything (and
     the output schema is unchanged).
     """
-    keys = None
+    win = _nonempty(_windows(df, tp, zoom, max_cover_tiles=max_cover_tiles))
+    return _compose_windows(
+        win, tp, zoom, hot_threshold, salt_buckets, tiles_filter, max_contributors_per_tile
+    )
+
+
+def _nonempty(win: DataFrame) -> DataFrame:
+    return win.filter((F.col("win_width") > 0) & (F.col("win_height") > 0))
+
+
+def _compose_windows(
+    win: DataFrame,
+    tp: PyramidConfig,
+    zoom: int,
+    hot_threshold: int = 64,
+    salt_buckets: int = 16,
+    tiles_filter: Optional[DataFrame] = None,
+    max_contributors_per_tile: Optional[int] = None,
+) -> DataFrame:
+    """``compose_tiles`` from its non-empty ``_windows`` rows."""
     if tiles_filter is not None:
         keys = F.broadcast(tiles_filter.select("row", "col").distinct())
-    slim = df.drop("bytes", "caption") if "caption" in df.columns else df.drop("bytes")
-    counts = raster_tile_windows(slim, tp, zoom, max_cover_tiles=max_cover_tiles).filter(
-        (F.col("win_width") > 0) & (F.col("win_height") > 0)
-    )
-    if keys is not None:
-        counts = counts.join(keys, ["row", "col"], "left_semi")
-    counts = counts.groupBy("row", "col").agg(F.count(F.lit(1)).alias("_tile_n"))
-
-    win = raster_tile_windows(df, tp, zoom, max_cover_tiles=max_cover_tiles)
-    win = win.filter((F.col("win_width") > 0) & (F.col("win_height") > 0))
-    if keys is not None:
         win = win.join(keys, ["row", "col"], "left_semi")
-    s = exprs.tile_shape(tp, zoom, "row", "col")
-    b = exprs.tile_bounds(tp, zoom, "row", "col")
-    px = exprs.pixel_x_size(tp, zoom)
-    py = exprs.pixel_y_size(tp, zoom)
+    counts = win.groupBy("row", "col").agg(F.count(F.lit(1)).alias("_tile_n"))
     # hot-path salt: MUST include a per-row unique column (image_id) —
     # exact-duplicate contributors (the same image re-ingested, a canonical
     # hot-tile cause) share footprint/dims/fmt and would otherwise collapse
@@ -262,13 +306,10 @@ def compose_tiles(
     salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
     proj = [
         *_WIN_COLS,
+        *_TILE_COLS,
         salt.alias("_salt"),
-        s["width"].cast("int").alias("_tw"),
-        s["height"].cast("int").alias("_th"),
-        b["left"].alias("_tl"),
-        b["top"].alias("_tt"),
-        px.alias("_px"),
-        py.alias("_py"),
+        exprs.pixel_x_size(tp, zoom).alias("_px"),
+        exprs.pixel_y_size(tp, zoom).alias("_py"),
     ]
     if max_contributors_per_tile is not None:
         # uniform-in-[0,1) per contributor, seeded apart from the salt hash
@@ -832,9 +873,11 @@ def zonal_poly_stats(
     Input ``zones``: (zone_id, poly_x array<double>, poly_y array<double>)
     — CCW convex ring, no repeated closing vertex; the kernel raises
     ``ValueError`` on a ring whose signed area is ≤ 0 (clockwise or
-    degenerate) instead of reading it as "no pixels".  Output and scale shape
-    are identical to zonal_stats: the zone bbox is derived natively from
-    the ring, covers onto tiles via ``raster_tile_windows``, the
+    degenerate) instead of reading it as "no pixels", and on a non-convex
+    ring (a reflex vertex) instead of masking only the intersection of its
+    edge half-planes.  Output and scale shape are identical to
+    zonal_stats: the zone bbox is derived natively from the ring, covers
+    onto tiles via ``raster_tile_windows``, the
     (zone, tile, window, ring) table BROADCASTS onto the canvas scan —
     tile bytes never shuffle — and the kernel reduces each window's
     masked pixels to 5-int partials; one final groupBy on zone_id.  The
@@ -943,6 +986,15 @@ def zonal_poly_stats(
                     raise ValueError(
                         f"zone {pdf['_zid'].iat[i]}: ring is not counter-"
                         "clockwise (signed area <= 0)"
+                    )
+                # a CCW convex ring turns left at every vertex: a negative
+                # consecutive-edge cross product is a reflex vertex, where
+                # the half-plane test would silently drop pixels
+                ex, ey = np.roll(rx, -1) - rx, np.roll(ry, -1) - ry
+                if np.any(ex * np.roll(ey, -1) - ey * np.roll(ex, -1) < 0.0):
+                    raise ValueError(
+                        f"zone {pdf['_zid'].iat[i]}: ring is not convex "
+                        "(a consecutive-edge cross product is negative)"
                     )
                 mask = np.ones((rh, cw), dtype=bool)
                 for e in range(len(rx)):
@@ -2227,6 +2279,11 @@ def label_components(
     ``perimeter`` the exposed-edge count ``4·area − 2·adjacent_pairs``
     (within-tile pairs counted in the kernel; cross-tile pairs are exactly
     the border-strip join matches).  All columns exact integers.
+
+    Adjacency is GRID-FLAT: a tile's right edge pairs only with tile
+    ``col + 1``, so columns do not wrap at the antimeridian — on a global
+    grid a region crossing it keeps one label per side (the operator sees
+    tiles only, not the pyramid's matrix width).
 
     Scale shape — the halo-free stencil: each canvas is labeled LOCALLY in
     one Arrow kernel pass (vectorized run labeling + union-find over the
