@@ -938,6 +938,41 @@ def test_diff_tiles_matches_numpy_mirror(spark):
     assert got.loc[(0, 1), "n_diff"] == 0 and got.loc[(0, 1), "sum_abs"] == 0
 
 
+@pytest.mark.parametrize("case", ["band_-1", "short_canvas"])
+@pytest.mark.parametrize(
+    "op",
+    ["focal_stats", "global_histogram", "diff_tiles", "label_components",
+     "zonal_stats"],
+)
+def test_band_decode_rejects_bad_band_or_canvas(spark, op, case):
+    """Every band reader decodes through one check: band -1 on a 3-band
+    canvas (which used to read the last band) and a canvas one byte short
+    of h*w*B both raise instead of returning values."""
+    from tilematrix_spark.grid import PyramidConfig
+
+    tp = PyramidConfig.create("geodetic", tile_size=8)
+    n = 8 * 8 * 3 - (1 if case == "short_canvas" else 0)
+    band = -1 if case == "band_-1" else 0
+    tiles = spark.createDataFrame(
+        [(0, 0, 8, 8, bytearray(n))],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    zones = spark.createDataFrame(
+        [(1, -170.0, 10.0, -100.0, 80.0)],
+        "zone_id long, left double, bottom double, right double, top double",
+    )
+    run = {
+        "focal_stats": lambda: raster.focal_stats(tiles, tp, 1, band=band),
+        "global_histogram": lambda: raster.global_histogram(tiles, band=band),
+        "diff_tiles": lambda: raster.diff_tiles(tiles, tiles, band=band),
+        "label_components": lambda: raster.label_components(tiles, band=band),
+        "zonal_stats": lambda: raster.zonal_stats(tiles, zones, tp, 1, band=band),
+    }[op]
+    bad = r"ValueError: canvas of \d+ bytes is not 8x8xB"
+    with pytest.raises(Exception, match=bad):
+        run().collect()
+
+
 def test_pyramid_audit_flags_exactly_the_stale_parents(spark):
     """The audit composition (diff_tiles(parents, overview_level(children),
     band=None)) reports ok=1 for precisely the planted-correct parents and

@@ -22,19 +22,16 @@ polygon_area / tile_area; pick zoom so the average polygon covers 4-64
 tiles.  Skew (a polygon covering a hot tile with millions of points) is
 bounded by the tile granularity itself; AQE skew-split is the backstop.
 
-``broadcast_index=True`` (the default) requires the polygon side to fit on
-the driver (same constraint the broadcast join itself imposes).  For huge
-polygon tables pass ``broadcast_index=False``: the index is shuffled and
-each candidate row carries the geometry string to the refine kernel
-(per-batch parse cache instead of the driver broadcast).
+Both paths (the default broadcast join and ``fused=True``) require the
+polygon side to fit on the driver — the same constraint the broadcast join
+itself imposes.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -347,13 +344,12 @@ def pip_join(
     x: str = "lon",
     y: str = "lat",
     geom: str = "geometry",
-    broadcast_index: bool = True,
     fused: bool = False,
     max_cover_tiles: Optional[int] = None,
 ) -> DataFrame:
     """(point_id, poly_id) pairs where the point falls inside the polygon."""
-    if broadcast_index and fused:
-        # 3c. fused map-side join: the (tile -> polys) index AND the prepared
+    if fused:
+        # 3b. fused map-side join: the (tile -> polys) index AND the prepared
         # geometries ride one broadcast; a single Arrow pass over the POINTS
         # does tile-index + lookup + refine.  No candidate materialization:
         # the 1.5-3x candidate amplification never exists as rows (at 10^12
@@ -459,12 +455,10 @@ def pip_join(
         return slim.mapInArrow(lookup_refine, schema=out_schema)
 
     # 1. polygon -> covering tiles (filter-refine; exact candidate superset).
-    # The broadcast-path polygon side is small by assumption: coalesce it so
-    # the cover doesn't fan into one near-empty Arrow task per core (measured
-    # 2-4x slower index builds at local[32] from tiny-task overhead).
-    poly_side = polygons.select(poly_id, geom)
-    if broadcast_index:
-        poly_side = poly_side.coalesce(8)
+    # The polygon side is small by assumption: coalesce it so the cover
+    # doesn't fan into one near-empty Arrow task per core (measured 2-4x
+    # slower index builds at local[32] from tiny-task overhead).
+    poly_side = polygons.select(poly_id, geom).coalesce(8)
     # oversize='drop' matches the FUSED path's driver-side cover, which
     # drops oversized polygon covers (the cap there guards driver memory —
     # row-band splitting doesn't apply to a python-enumerated index): the
@@ -479,81 +473,50 @@ def pip_join(
         points.select(point_id, x, y), tp, zoom, x, y, out_tile_id=None
     )
 
-    if broadcast_index:
-        # 3a. slim broadcast join: only ids + coordinates flow per candidate
-        idx = F.broadcast(idx.select(poly_id, "row", "col"))
-        # sort by polygon within partitions (no shuffle): Arrow batches then
-        # hold long single-polygon runs, so the refine kernel sees large
-        # groups (one prepared-geometry setup per ~batch, L2-friendly loops)
-        cand = (
-            pts.join(idx, ["row", "col"], "inner")
-            .select(point_id, poly_id, x, y)
-            .sortWithinPartitions(poly_id)
-        )
-
-        # 4a. prepared geometries: parse once on the driver, broadcast
-        prepared = {
-            r[0]: _prepare_parts_grid(geomkernels.parse_geometry(r[1]))
-            for r in polygons.select(poly_id, geom).collect()
-        }
-        bc = points.sparkSession.sparkContext.broadcast(prepared)
-        schema = cand.schema
-        pid_i = schema.names.index(poly_id)
-        x_i, y_i = schema.names.index(x), schema.names.index(y)
-
-        def refine(batches):
-            # Arrow-native: zero-copy column views, numpy argsort run-grouping
-            # (no pandas groupby machinery), C++ mask filter — the per-row
-            # conversion overhead, not the ray-cast, was the measured
-            # bottleneck at scale
-            import pyarrow as pa
-
-            prep = bc.value
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                pids = batch.column(pid_i).to_numpy(zero_copy_only=False)
-                xs = batch.column(x_i).to_numpy(zero_copy_only=False)
-                ys = batch.column(y_i).to_numpy(zero_copy_only=False)
-                keep = np.zeros(n, dtype=bool)
-                order = np.argsort(pids, kind="stable")
-                sp = pids[order]
-                starts = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
-                ends = np.r_[starts[1:], n]
-                for s0, e0 in zip(starts, ends):
-                    ii = order[s0:e0]
-                    keep[ii] = _points_in_prepared_grid(prep[sp[s0]], xs[ii], ys[ii])
-                yield batch.filter(pa.array(keep))
-
-        return cand.mapInArrow(refine, schema=schema).select(point_id, poly_id)
-
-    # 3b/4b. shuffled index path (huge polygon tables): geometry string rides
-    # along, parsed via a per-batch cache inside the kernel
-    cand = pts.join(idx.select(poly_id, geom, "row", "col"), ["row", "col"], "inner").select(
-        point_id, poly_id, x, y, geom
+    # 3a. slim broadcast join: only ids + coordinates flow per candidate
+    idx = F.broadcast(idx.select(poly_id, "row", "col"))
+    # sort by polygon within partitions (no shuffle): Arrow batches then
+    # hold long single-polygon runs, so the refine kernel sees large
+    # groups (one prepared-geometry setup per ~batch, L2-friendly loops)
+    cand = (
+        pts.join(idx, ["row", "col"], "inner")
+        .select(point_id, poly_id, x, y)
+        .sortWithinPartitions(poly_id)
     )
+
+    # 4. prepared geometries: parse once on the driver, broadcast
+    prepared = {
+        r[0]: _prepare_parts_grid(geomkernels.parse_geometry(r[1]))
+        for r in polygons.select(poly_id, geom).collect()
+    }
+    bc = points.sparkSession.sparkContext.broadcast(prepared)
     schema = cand.schema
+    pid_i = schema.names.index(poly_id)
+    x_i, y_i = schema.names.index(x), schema.names.index(y)
 
-    def refine_carry(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
+    def refine(batches):
+        # Arrow-native: zero-copy column views, numpy argsort run-grouping
+        # (no pandas groupby machinery), C++ mask filter — the per-row
+        # conversion overhead, not the ray-cast, was the measured
+        # bottleneck at scale
+        import pyarrow as pa
+
+        prep = bc.value
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            xs = pdf[x].to_numpy(dtype=np.float64)
-            ys = pdf[y].to_numpy(dtype=np.float64)
-            for g_str, idx_pos in pd.Series(range(len(pdf))).groupby(
-                pdf[geom].values, sort=False
-            ):
-                parts = cache.get(g_str)
-                if parts is None:
-                    parts = _prepare_parts_grid(geomkernels.parse_geometry(g_str))
-                    if len(cache) > 64:
-                        cache.clear()
-                    cache[g_str] = parts
-                ii = idx_pos.to_numpy()
-                keep[ii] = _points_in_prepared_grid(parts, xs[ii], ys[ii])
-            yield pdf[keep]
+            pids = batch.column(pid_i).to_numpy(zero_copy_only=False)
+            xs = batch.column(x_i).to_numpy(zero_copy_only=False)
+            ys = batch.column(y_i).to_numpy(zero_copy_only=False)
+            keep = np.zeros(n, dtype=bool)
+            order = np.argsort(pids, kind="stable")
+            sp = pids[order]
+            starts = np.flatnonzero(np.r_[True, sp[1:] != sp[:-1]])
+            ends = np.r_[starts[1:], n]
+            for s0, e0 in zip(starts, ends):
+                ii = order[s0:e0]
+                keep[ii] = _points_in_prepared_grid(prep[sp[s0]], xs[ii], ys[ii])
+            yield batch.filter(pa.array(keep))
 
-    return cand.mapInPandas(refine_carry, schema=schema).select(point_id, poly_id)
+    return cand.mapInArrow(refine, schema=schema).select(point_id, poly_id)

@@ -703,6 +703,21 @@ def rasterize_points(
     return grouped.mapInPandas(burn, schema=_RASTERIZE_SCHEMA)
 
 
+def _band_plane(buf: bytes, h: int, w: int, band: Optional[int]) -> np.ndarray:
+    """Decode one ``h x w x B`` uint8 canvas (band count ``B`` inferred from
+    ``len(buf)``): the ``(h, w)`` plane of ``band``, or the whole
+    ``(h, w, B)`` array for ``band=None``.  A ragged buffer or a band
+    outside ``[0, B)`` raises ``ValueError`` instead of reading other bytes."""
+    h, w = int(h), int(w)
+    nb = len(buf) // (h * w)
+    if nb * h * w != len(buf) or (band is not None and not 0 <= band < nb):
+        raise ValueError(
+            f"canvas of {len(buf)} bytes is not {h}x{w}xB with band {band} present"
+        )
+    a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)
+    return a if band is None else a[:, :, band]
+
+
 def zonal_stats(
     tiles: DataFrame,
     zones: DataFrame,
@@ -802,16 +817,8 @@ def zonal_stats(
             mn = np.empty(m, dtype=np.int64)
             mx = np.empty(m, dtype=np.int64)
             for i in range(m):
-                buf = pdf["bytes"].iat[i]
-                h, w = int(th[i]), int(tw[i])
-                nb = len(buf) // (h * w)
-                if nb * h * w != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                        f"with band {band_i} present"
-                    )
-                v = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i], band_i
+                v = _band_plane(pdf["bytes"].iat[i], th[i], tw[i], band_i)[
+                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i]
                 ]
                 n_px[i] = v.size
                 s[i] = int(v.sum(dtype=np.int64))
@@ -957,20 +964,13 @@ def zonal_poly_stats(
                 continue
             keep, n_px, s, mn, mx = [], [], [], [], []
             for i in range(m):
-                buf = pdf["bytes"].iat[i]
-                h, w = int(pdf["tile_h"].iat[i]), int(pdf["tile_w"].iat[i])
-                nb = len(buf) // (h * w)
-                if nb * h * w != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                        f"with band {band_i} present"
-                    )
                 r0 = int(pdf["win_row_off"].iat[i])
                 c0 = int(pdf["win_col_off"].iat[i])
                 rh = int(pdf["win_height"].iat[i])
                 cw = int(pdf["win_width"].iat[i])
-                v = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                    r0 : r0 + rh, c0 : c0 + cw, band_i
+                h, w = pdf["tile_h"].iat[i], pdf["tile_w"].iat[i]
+                v = _band_plane(pdf["bytes"].iat[i], h, w, band_i)[
+                    r0 : r0 + rh, c0 : c0 + cw
                 ]
                 # pixel centers in world coords — the EXACT expression the
                 # oracle mirrors: t_left + (pj + 0.5)*px, t_top - (pi + 0.5)*py
@@ -1125,16 +1125,8 @@ def zonal_class_counts(
             cw = pdf["win_width"].to_numpy()
             rh = pdf["win_height"].to_numpy()
             for i in range(m):
-                buf = pdf["bytes"].iat[i]
-                h, w = int(th[i]), int(tw[i])
-                nb = len(buf) // (h * w)
-                if nb * h * w != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                        f"with band {band_i} present"
-                    )
-                v = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i], band_i
+                v = _band_plane(pdf["bytes"].iat[i], th[i], tw[i], band_i)[
+                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i]
                 ]
                 bc = np.bincount(v.ravel(), minlength=256)
                 nz = np.nonzero(bc)[0]
@@ -1196,7 +1188,7 @@ def zonal_majority(
     )
 
 
-_FOCAL_CANVAS_SCHEMA = T.StructType(
+_CANVAS_SCHEMA = T.StructType(
     [
         T.StructField("row", T.LongType()),
         T.StructField("col", T.LongType()),
@@ -1228,8 +1220,9 @@ def _halo_grouped(
     emits its band plane plus 8 border strips of width ``r`` addressed to
     its grid neighbors (column wrap, row clamp — reference ``_tile.py:
     256-263``), then ONE groupBy(row, col) collects the <= 9 bounded parts
-    per output tile.  ``focal_stats`` and ``focal_gradient`` share this
-    exchange and differ only in the assemble kernel."""
+    per output tile.  ``focal_stats``, ``upsample_children``,
+    ``focal_gradient`` and ``hillshade`` share this exchange (via
+    :func:`_stencil`) and differ only in the per-tile kernel."""
     part_schema = T.StructType(
         [
             T.StructField("row", T.LongType()),
@@ -1259,15 +1252,7 @@ def _halo_grouped(
                     raise ValueError(
                         f"{op} expects uniform {ts}x{ts} tiles, got {h}x{w}"
                     )
-                nb = len(buf) // (h * w)
-                if nb * h * w != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                        f"with band {band_i} present"
-                    )
-                a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                    :, :, band_i
-                ]
+                a = _band_plane(buf, h, w, band_i)
                 tr, tc = int(rows[i]), int(cols[i])
                 o_row.append(tr)
                 o_col.append(tc)
@@ -1337,6 +1322,125 @@ def _halo_planes(pdf: pd.DataFrame, ts: int, r: int):
         yield int(pdf["row"].iat[gi]), int(pdf["col"].iat[gi]), P, M
 
 
+def _check_emit(emit: str, sample_mod: int, sample_off: int) -> tuple:
+    """Validate the shared ``emit``/sampling arguments; returns (mod, off)."""
+    if emit not in ("canvas", "pixels"):
+        raise ValueError("emit must be 'canvas' or 'pixels'")
+    mod, off = int(sample_mod), int(sample_off)
+    if emit == "pixels" and not 0 <= off < mod:
+        raise ValueError("sample_off must be in [0, sample_mod)")
+    return mod, off
+
+
+_NP_DTYPES = {
+    T.LongType(): np.int64,
+    T.IntegerType(): np.int32,
+    T.DoubleType(): np.float64,
+    T.BinaryType(): object,
+}
+
+
+def _emit_tiles(
+    df: DataFrame,
+    kernel,
+    emit: str,
+    sample_mod: int,
+    sample_off: int,
+    pixel_schema: T.StructType,
+) -> DataFrame:
+    """The one output path of the per-tile raster kernels: ``mapInPandas``
+    over ``df`` where ``kernel(pdf)`` yields ``(row, col, canvas, planes,
+    keep)`` per output tile — a uint8 ``(h, w)`` canvas, a dict of
+    ``(h, w)`` planes named after ``pixel_schema``'s value fields, and an
+    optional boolean ``(h, w)`` mask of the pixels to keep (None = all).
+    ``emit='canvas'`` writes one (row, col, tile_w, tile_h, bytes) row per
+    tile; ``emit='pixels'`` writes (row, col, py, px, *planes) for every
+    kept pixel whose linear index ``py*w + px`` is ``sample_off`` mod
+    ``sample_mod``.  Columns are cast to the output schema's types."""
+    mod, off = _check_emit(emit, sample_mod, sample_off)
+    schema = _CANVAS_SCHEMA if emit == "canvas" else pixel_schema
+    dtypes = [(f.name, _NP_DTYPES[f.dataType]) for f in schema.fields]
+    # one scalar per tile (canvas) vs one sampled array per tile (pixels)
+    stack = np.asarray if emit == "canvas" else np.concatenate
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols: dict = {name: [] for name, _ in dtypes}
+            for row, col, canvas, planes, keep in kernel(pdf):
+                h, w = canvas.shape
+                if emit == "canvas":
+                    vals = {"row": row, "col": col, "tile_w": w, "tile_h": h,
+                            "bytes": canvas.tobytes()}
+                else:
+                    lin = np.arange(off, h * w, mod, dtype=np.int64)
+                    if keep is not None:
+                        lin = lin[keep.ravel()[lin]]
+                    vals = {"row": np.full(len(lin), row), "py": lin // w,
+                            "col": np.full(len(lin), col), "px": lin % w}
+                    vals.update((k, v.ravel()[lin]) for k, v in planes.items())
+                for name, _ in dtypes:
+                    cols[name].append(vals[name])
+            if cols["row"]:
+                yield pd.DataFrame(
+                    {name: stack(cols[name], dtype=dt) for name, dt in dtypes}
+                )
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _stencil(
+    tiles: DataFrame,
+    tp: PyramidConfig,
+    zoom: int,
+    r: int,
+    band: int,
+    op: str,
+    tile_kernel,
+    emit: str,
+    sample_mod: int,
+    sample_off: int,
+    pixel_schema: T.StructType,
+) -> DataFrame:
+    """Halo-exchange stencil: :func:`_halo_grouped` + :func:`_halo_planes` +
+    :func:`_emit_tiles`.  ``tile_kernel(row, col, P, M)`` maps one padded
+    ``(ts+2r)^2`` plane and its availability mask to the ``_emit_tiles``
+    tuples of that tile's outputs."""
+    ts = int(tp.tile_size) * int(tp.metatiling)
+    grouped = _halo_grouped(
+        tiles, ts, r, int(band), tp.matrix_width(zoom), tp.matrix_height(zoom), op
+    )
+
+    def kernel(pdf: pd.DataFrame):
+        for row, col, P, M in _halo_planes(pdf, ts, r):
+            yield from tile_kernel(row, col, P, M)
+
+    return _emit_tiles(grouped, kernel, emit, sample_mod, sample_off, pixel_schema)
+
+
+def _box_sum(A: np.ndarray, win: int) -> np.ndarray:
+    """Exact int64 sum of every ``win x win`` window of ``A`` (valid mode:
+    ``win - 1`` smaller per axis) from one summed-area table — O(A.size),
+    no per-window Python."""
+    S = np.zeros((A.shape[0] + 1, A.shape[1] + 1), dtype=np.int64)
+    S[1:, 1:] = A.astype(np.int64).cumsum(0).cumsum(1)
+    return S[win:, win:] - S[:-win, win:] - S[win:, :-win] + S[:-win, :-win]
+
+
+def _sobel(P: np.ndarray, M: np.ndarray) -> tuple:
+    """Integer Sobel/Horn numerators (gx, gy) of a 1-px-halo plane, plus
+    the mask of pixels whose 3x3 window is fully materialized."""
+    A = P.astype(np.int64)
+    gx = (
+        A[:-2, 2:] + 2 * A[1:-1, 2:] + A[2:, 2:]
+        - A[:-2, :-2] - 2 * A[1:-1, :-2] - A[2:, :-2]
+    )
+    gy = (
+        A[2:, :-2] + 2 * A[2:, 1:-1] + A[2:, 2:]
+        - A[:-2, :-2] - 2 * A[:-2, 1:-1] - A[:-2, 2:]
+    )
+    return gx, gy, _box_sum(M, 3) == 9
+
+
 def focal_stats(
     tiles: DataFrame,
     tp: PyramidConfig,
@@ -1382,107 +1486,43 @@ def focal_stats(
     On a bucketed tile store (bucketBy(row, col)) the center canvas leg
     of the exchange co-locates and only the strips move.
     """
-    if emit not in ("canvas", "pixels"):
-        raise ValueError("emit must be 'canvas' or 'pixels'")
     ts = int(tp.tile_size) * int(tp.metatiling)
     r = int(radius)
     if not 0 < r < ts:
         raise ValueError(f"radius must be in [1, {ts - 1}]")
-    mw = tp.matrix_width(zoom)
-    mh = tp.matrix_height(zoom)
-    band_i = int(band)
-    mod = int(sample_mod)
-    off = int(sample_off)
-    if emit == "pixels" and not 0 <= off < mod:
-        raise ValueError("sample_off must be in [0, sample_mod)")
-
-    grouped = _halo_grouped(tiles, ts, r, band_i, mw, mh, "focal_stats")
-
-    n = ts + 2 * r
     win = 2 * r + 1
-    out_schema = _FOCAL_CANVAS_SCHEMA if emit == "canvas" else _FOCAL_PIXEL_SCHEMA
 
     def win_extreme(plane: np.ndarray, op) -> np.ndarray:
         # separable sliding min/max: reduce rows then columns — 2*(2r+1)
         # full-SIMD uint8 slice ops vs (2r+1)^2 strided reads per output
         # element for sliding_window_view.amin (measured ~2.8 ms/tile there,
         # the whole per-tile budget)
-        rows = plane[0 : 0 + ts + 2 * r, :]  # (n, n)
         acc = plane[0:ts, :].copy()
         for dy in range(1, win):
-            op(acc, rows[dy : dy + ts, :], out=acc)
+            op(acc, plane[dy : dy + ts, :], out=acc)
         out = acc[:, 0:ts].copy()
         for dx in range(1, win):
             op(out, acc[:, dx : dx + ts], out=out)
         return out
 
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if emit == "pixels":
-            lin = np.arange(off, ts * ts, mod, dtype=np.int64)
-            pys = (lin // ts).astype(np.int32)
-            pxs = (lin % ts).astype(np.int32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            recs = []
-            for trow, tcol, P, M in _halo_planes(pdf, ts, r):
-                # summed-area tables: exact int64 window sums / counts
-                V = (P.astype(np.int64) * M).cumsum(0).cumsum(1)
-                C = M.astype(np.int64).cumsum(0).cumsum(1)
-                Vp = np.zeros((n + 1, n + 1), dtype=np.int64)
-                Cp = np.zeros((n + 1, n + 1), dtype=np.int64)
-                Vp[1:, 1:] = V
-                Cp[1:, 1:] = C
+    def tile_kernel(row, col, P, M):
+        sums = _box_sum(P * M, win)
+        cnts = _box_sum(M, win)
+        means = sums // cnts  # cnts >= 1: center pixel always present
+        planes = {
+            "n_nbr": cnts,
+            "sum_nbr": sums,
+            "min_nbr": win_extreme(np.where(M, P, np.uint8(255)), np.minimum),
+            "max_nbr": win_extreme(np.where(M, P, np.uint8(0)), np.maximum),
+            "mean_nbr": means,
+        }
+        yield row, col, means.astype(np.uint8), planes, None
 
-                def box(S):
-                    return (
-                        S[win:, win:]
-                        - S[:-win, win:]
-                        - S[win:, :-win]
-                        + S[:-win, :-win]
-                    )
+    return _stencil(
+        tiles, tp, zoom, r, band, "focal_stats", tile_kernel,
+        emit, sample_mod, sample_off, _FOCAL_PIXEL_SCHEMA,
+    )
 
-                sums = box(Vp[: n + 1, : n + 1])
-                cnts = box(Cp[: n + 1, : n + 1])
-                Pmin = np.where(M, P, np.uint8(255))
-                Pmax = np.where(M, P, np.uint8(0))
-                mins = win_extreme(Pmin, np.minimum)
-                maxs = win_extreme(Pmax, np.maximum)
-                means = sums // cnts  # cnts >= 1: center pixel always present
-                recs.append((trow, tcol, sums, cnts, mins, maxs, means))
-            if not recs:
-                continue
-            if emit == "canvas":
-                yield pd.DataFrame(
-                    {
-                        "row": [t[0] for t in recs],
-                        "col": [t[1] for t in recs],
-                        "tile_w": np.full(len(recs), ts, dtype=np.int32),
-                        "tile_h": np.full(len(recs), ts, dtype=np.int32),
-                        "bytes": [t[6].astype(np.uint8).tobytes() for t in recs],
-                    }
-                )
-            else:
-                frames = []
-                for trow, tcol, sums, cnts, mins, maxs, means in recs:
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "row": np.full(len(lin), trow, dtype=np.int64),
-                                "col": np.full(len(lin), tcol, dtype=np.int64),
-                                "py": pys,
-                                "px": pxs,
-                                "n_nbr": cnts.ravel()[lin],
-                                "sum_nbr": sums.ravel()[lin],
-                                "min_nbr": mins.ravel()[lin].astype(np.int32),
-                                "max_nbr": maxs.ravel()[lin].astype(np.int32),
-                                "mean_nbr": means.ravel()[lin],
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
-
-    return grouped.mapInPandas(assemble, schema=out_schema)
 
 _DIFF_STATS_SCHEMA = T.StructType(
     [
@@ -1520,25 +1560,6 @@ def diff_tiles(
     children)."""
     band_i = None if band is None else int(band)
 
-    def extract(colname):
-        def get(pdf, k):
-            buf = pdf[colname].iat[k]
-            h = int(pdf["tile_h"].iat[k])
-            w = int(pdf["tile_w"].iat[k])
-            nb = len(buf) // (h * w)
-            if nb * h * w != len(buf) or (band_i is not None and band_i >= nb):
-                raise ValueError(
-                    f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                    f"with band {band_i} present"
-                )
-            a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)
-            return a if band_i is None else a[:, :, band_i]
-
-        return get
-
-    get_a = extract("_ba")
-    get_b = extract("_bb")
-
     def delta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -1548,9 +1569,12 @@ def diff_tiles(
             n_diff = np.empty(n, dtype=np.int64)
             sum_abs = np.empty(n, dtype=np.int64)
             max_abs = np.empty(n, dtype=np.int32)
+            th, tw = pdf["tile_h"].to_numpy(), pdf["tile_w"].to_numpy()
             for k in range(n):
-                a = get_a(pdf, k).astype(np.int16)
-                b = get_b(pdf, k).astype(np.int16)
+                a, b = (
+                    _band_plane(pdf[c].iat[k], th[k], tw[k], band_i).astype(np.int16)
+                    for c in ("_ba", "_bb")
+                )
                 if a.shape != b.shape:
                     raise ValueError(
                         f"epoch canvases disagree on shape: {a.shape} vs "
@@ -1593,27 +1617,16 @@ def global_histogram(tiles: DataFrame, band: int = 0) -> DataFrame:
     numpy bincount and emits at most 256 tiny rows, so the only shuffle
     this op performs moves O(256 x n_partitions) rows no matter how many
     petabytes of canvas bytes were scanned.  Returns (val, n_px) for the
-    values present.  Band layout and uniformity checks mirror
-    ``_halo_grouped`` (per-row inferred band count)."""
+    values present.  Band layout checks are ``_band_plane``'s (per-row
+    inferred band count; a ragged canvas or a band outside [0, B) raises)."""
     band_i = int(band)
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = np.zeros(256, dtype=np.int64)
         seen = False
         for pdf in batches:
-            for k in range(len(pdf)):
-                buf = pdf["bytes"].iat[k]
-                h = int(pdf["tile_h"].iat[k])
-                w = int(pdf["tile_w"].iat[k])
-                nb = len(buf) // (h * w)
-                if nb * h * w != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {h}x{w}xB "
-                        f"with band {band_i} present"
-                    )
-                a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                    :, :, band_i
-                ]
+            for buf, h, w in zip(pdf["bytes"], pdf["tile_h"], pdf["tile_w"]):
+                a = _band_plane(buf, h, w, band_i)
                 acc += np.bincount(a.ravel(), minlength=256)
                 seen = True
         if seen:
@@ -1692,12 +1705,7 @@ def contrast_stretch(
     per tile; ``emit='pixels'`` returns the sampled (v_in, v_out) integer
     surface the driver oracle re-derives — histogram, cut points, and
     remap all in exact integer SQL."""
-    if emit not in ("canvas", "pixels"):
-        raise ValueError("emit must be 'canvas' or 'pixels'")
-    mod = int(sample_mod)
-    off = int(sample_off)
-    if emit == "pixels" and not 0 <= off < mod:
-        raise ValueError("sample_off must be in [0, sample_mod)")
+    _check_emit(emit, sample_mod, sample_off)  # fail before the pass-1 job
     band_i = int(band)
     p_lo, p_hi = stretch_percentiles(tiles, band_i, lo_pct, hi_pct)
     span = p_hi - p_lo
@@ -1708,69 +1716,15 @@ def contrast_stretch(
         lut = np.where(lut >= p_hi, 255, 0).astype(np.int64)
     lut8 = lut.astype(np.uint8)
 
-    out_schema = _FOCAL_CANVAS_SCHEMA if emit == "canvas" else _STRETCH_PIXEL_SCHEMA
+    def kernel(pdf: pd.DataFrame):
+        cols = (pdf[c] for c in ("row", "col", "tile_h", "tile_w", "bytes"))
+        for row, col, h, w, buf in zip(*cols):
+            a = _band_plane(buf, h, w, band_i)
+            yield int(row), int(col), lut8[a], {"v_in": a, "v_out": lut[a]}, None
 
-    def remap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if emit == "canvas":
-                bufs = []
-                for k in range(len(pdf)):
-                    buf = pdf["bytes"].iat[k]
-                    h = int(pdf["tile_h"].iat[k])
-                    w = int(pdf["tile_w"].iat[k])
-                    nb = len(buf) // (h * w)
-                    a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                        :, :, band_i
-                    ]
-                    bufs.append(lut8[a].tobytes())
-                yield pd.DataFrame(
-                    {
-                        "row": pdf["row"].to_numpy(),
-                        "col": pdf["col"].to_numpy(),
-                        "tile_w": pdf["tile_w"].to_numpy().astype(np.int32),
-                        "tile_h": pdf["tile_h"].to_numpy().astype(np.int32),
-                        "bytes": bufs,
-                    }
-                )
-            else:
-                frames = []
-                for k in range(len(pdf)):
-                    buf = pdf["bytes"].iat[k]
-                    h = int(pdf["tile_h"].iat[k])
-                    w = int(pdf["tile_w"].iat[k])
-                    nb = len(buf) // (h * w)
-                    a = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, nb)[
-                        :, :, band_i
-                    ]
-                    lin = np.arange(off, h * w, mod, dtype=np.int64)
-                    vin = a.ravel()[lin]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "row": np.full(
-                                    len(lin),
-                                    int(pdf["row"].iat[k]),
-                                    dtype=np.int64,
-                                ),
-                                "col": np.full(
-                                    len(lin),
-                                    int(pdf["col"].iat[k]),
-                                    dtype=np.int64,
-                                ),
-                                "py": (lin // w).astype(np.int32),
-                                "px": (lin % w).astype(np.int32),
-                                "v_in": vin.astype(np.int32),
-                                "v_out": lut[vin].astype(np.int32),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-    return tiles.select("row", "col", "tile_w", "tile_h", "bytes").mapInPandas(
-        remap, schema=out_schema
+    return _emit_tiles(
+        tiles.select("row", "col", "tile_w", "tile_h", "bytes"),
+        kernel, emit, sample_mod, sample_off, _STRETCH_PIXEL_SCHEMA,
     )
 
 
@@ -1824,104 +1778,39 @@ def upsample_children(
     sampled integer surface (child tile coords, py/px, num, val) for the
     driver gate; ``emit='canvas'`` returns the four uint8 child canvases.
     """
-    if emit not in ("canvas", "pixels"):
-        raise ValueError("emit must be 'canvas' or 'pixels'")
-    ts = int(tp.tile_size) * int(tp.metatiling)
-    mw = tp.matrix_width(zoom)
-    mh = tp.matrix_height(zoom)
-    mod = int(sample_mod)
-    off = int(sample_off)
-    if emit == "pixels" and not 0 <= off < mod:
-        raise ValueError("sample_off must be in [0, sample_mod)")
 
-    grouped = _halo_grouped(tiles, ts, 1, int(band), mw, mh, "upsample_children")
-    out_schema = (
-        _FOCAL_CANVAS_SCHEMA if emit == "canvas" else _UPSAMPLE_PIXEL_SCHEMA
+    def tile_kernel(row, col, P, M):
+        ts = P.shape[0] - 2
+        # separable edge-replicate of missing halo pixels: rows first
+        # (validity propagates from the pixel below/above), then columns —
+        # equals per-axis clamp in global coords
+        Q = P.astype(np.int32)
+        MA = M.copy()
+        topm = M[0] == 0
+        Q[0] = np.where(topm, Q[1], Q[0])
+        MA[0] = np.where(topm, M[1], 1)
+        botm = M[-1] == 0
+        Q[-1] = np.where(botm, Q[-2], Q[-1])
+        MA[-1] = np.where(botm, M[-2], 1)
+        Q[:, 0] = np.where(MA[:, 0] == 0, Q[:, 1], Q[:, 0])
+        Q[:, -1] = np.where(MA[:, -1] == 0, Q[:, -2], Q[:, -1])
+        # separable 2x bilinear: rows then columns, weights (1, 3)
+        R = np.empty((2 * ts, ts + 2), dtype=np.int32)
+        R[0::2] = Q[0:ts] + 3 * Q[1 : ts + 1]
+        R[1::2] = 3 * Q[1 : ts + 1] + Q[2 : ts + 2]
+        O = np.empty((2 * ts, 2 * ts), dtype=np.int32)
+        O[:, 0::2] = R[:, 0:ts] + 3 * R[:, 1 : ts + 1]
+        O[:, 1::2] = 3 * R[:, 1 : ts + 1] + R[:, 2 : ts + 2]
+        V = ((O + 8) >> 4).astype(np.uint8)
+        for dy in (0, 1):
+            for dx in (0, 1):
+                q = np.s_[dy * ts : (dy + 1) * ts, dx * ts : (dx + 1) * ts]
+                yield 2 * row + dy, 2 * col + dx, V[q], {"num": O[q], "val": V[q]}, None
+
+    return _stencil(
+        tiles, tp, zoom, 1, band, "upsample_children", tile_kernel,
+        emit, sample_mod, sample_off, _UPSAMPLE_PIXEL_SCHEMA,
     )
-
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if emit == "pixels":
-            lin = np.arange(off, ts * ts, mod, dtype=np.int64)
-            pys = (lin // ts).astype(np.int32)
-            pxs = (lin % ts).astype(np.int32)
-        n = ts + 2
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            o_row, o_col, o_payload = [], [], []
-            frames = []
-            for trow, tcol, P, M in _halo_planes(pdf, ts, 1):
-                # separable edge-replicate of missing halo pixels: rows
-                # first (validity propagates from the pixel below/above),
-                # then columns — equals per-axis clamp in global coords
-                Q = P.astype(np.int32)
-                MA = M.copy()
-                topm = M[0] == 0
-                Q[0] = np.where(topm, Q[1], Q[0])
-                MA[0] = np.where(topm, M[1], 1)
-                botm = M[-1] == 0
-                Q[-1] = np.where(botm, Q[-2], Q[-1])
-                MA[-1] = np.where(botm, M[-2], 1)
-                Q[:, 0] = np.where(MA[:, 0] == 0, Q[:, 1], Q[:, 0])
-                Q[:, -1] = np.where(MA[:, -1] == 0, Q[:, -2], Q[:, -1])
-                # separable 2x bilinear: rows then columns, weights (1, 3)
-                R = np.empty((2 * ts, n), dtype=np.int32)
-                R[0::2] = Q[0:ts] + 3 * Q[1 : ts + 1]
-                R[1::2] = 3 * Q[1 : ts + 1] + Q[2 : ts + 2]
-                O = np.empty((2 * ts, 2 * ts), dtype=np.int32)
-                O[:, 0::2] = R[:, 0:ts] + 3 * R[:, 1 : ts + 1]
-                O[:, 1::2] = 3 * R[:, 1 : ts + 1] + R[:, 2 : ts + 2]
-                V = ((O + 8) >> 4).astype(np.uint8)
-                for dy in (0, 1):
-                    for dx in (0, 1):
-                        crow = 2 * trow + dy
-                        ccol = 2 * tcol + dx
-                        if emit == "canvas":
-                            o_row.append(crow)
-                            o_col.append(ccol)
-                            o_payload.append(
-                                np.ascontiguousarray(
-                                    V[dy * ts : (dy + 1) * ts,
-                                      dx * ts : (dx + 1) * ts]
-                                ).tobytes()
-                            )
-                        else:
-                            nums = np.ascontiguousarray(
-                                O[dy * ts : (dy + 1) * ts,
-                                  dx * ts : (dx + 1) * ts]
-                            ).ravel()[lin]
-                            frames.append(
-                                pd.DataFrame(
-                                    {
-                                        "row": np.full(
-                                            len(lin), crow, dtype=np.int64
-                                        ),
-                                        "col": np.full(
-                                            len(lin), ccol, dtype=np.int64
-                                        ),
-                                        "py": pys,
-                                        "px": pxs,
-                                        "num": nums.astype(np.int64),
-                                        "val": ((nums + 8) >> 4).astype(
-                                            np.int32
-                                        ),
-                                    }
-                                )
-                            )
-            if emit == "canvas" and o_row:
-                yield pd.DataFrame(
-                    {
-                        "row": np.asarray(o_row, dtype=np.int64),
-                        "col": np.asarray(o_col, dtype=np.int64),
-                        "tile_w": np.full(len(o_row), ts, dtype=np.int32),
-                        "tile_h": np.full(len(o_row), ts, dtype=np.int32),
-                        "bytes": o_payload,
-                    }
-                )
-            elif frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return grouped.mapInPandas(assemble, schema=out_schema)
 
 
 _GRADIENT_PIXEL_SCHEMA = T.StructType(
@@ -1963,92 +1852,18 @@ def focal_gradient(
     (``min((|gx|+2)//4 + (|gy|+2)//4, 255)`` — integer-only, deterministic),
     with window-incomplete border pixels set to 0.
     """
-    if emit not in ("canvas", "pixels"):
-        raise ValueError("emit must be 'canvas' or 'pixels'")
-    ts = int(tp.tile_size) * int(tp.metatiling)
-    mw = tp.matrix_width(zoom)
-    mh = tp.matrix_height(zoom)
-    mod = int(sample_mod)
-    off = int(sample_off)
-    if emit == "pixels" and not 0 <= off < mod:
-        raise ValueError("sample_off must be in [0, sample_mod)")
 
-    grouped = _halo_grouped(tiles, ts, 1, int(band), mw, mh, "focal_gradient")
-    out_schema = (
-        _FOCAL_CANVAS_SCHEMA if emit == "canvas" else _GRADIENT_PIXEL_SCHEMA
+    def tile_kernel(row, col, P, M):
+        gx, gy, full = _sobel(P, M)
+        mag = (np.abs(gx) + 2) // 4 + (np.abs(gy) + 2) // 4
+        canvas = np.where(full, np.minimum(mag, 255), 0).astype(np.uint8)
+        planes = {"gx_num": gx, "gy_num": gy, "mag2": gx * gx + gy * gy}
+        yield row, col, canvas, planes, full
+
+    return _stencil(
+        tiles, tp, zoom, 1, band, "focal_gradient", tile_kernel,
+        emit, sample_mod, sample_off, _GRADIENT_PIXEL_SCHEMA,
     )
-
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if emit == "pixels":
-            lin = np.arange(off, ts * ts, mod, dtype=np.int64)
-            pys = (lin // ts).astype(np.int32)
-            pxs = (lin % ts).astype(np.int32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_rows = []
-            for trow, tcol, P, M in _halo_planes(pdf, ts, 1):
-                A = P.astype(np.int64)
-                gx = (
-                    A[:-2, 2:] + 2 * A[1:-1, 2:] + A[2:, 2:]
-                    - A[:-2, :-2] - 2 * A[1:-1, :-2] - A[2:, :-2]
-                )
-                gy = (
-                    A[2:, :-2] + 2 * A[2:, 1:-1] + A[2:, 2:]
-                    - A[:-2, :-2] - 2 * A[:-2, 1:-1] - A[:-2, 2:]
-                )
-                Mi = M.astype(np.int64)
-                full = (
-                    Mi[:-2, :-2] + Mi[:-2, 1:-1] + Mi[:-2, 2:]
-                    + Mi[1:-1, :-2] + Mi[1:-1, 1:-1] + Mi[1:-1, 2:]
-                    + Mi[2:, :-2] + Mi[2:, 1:-1] + Mi[2:, 2:]
-                ) == 9
-                out_rows.append((trow, tcol, gx, gy, full))
-            if not out_rows:
-                continue
-            if emit == "canvas":
-                bufs = []
-                for trow, tcol, gx, gy, full in out_rows:
-                    mag = (np.abs(gx) + 2) // 4 + (np.abs(gy) + 2) // 4
-                    canvas = np.where(full, np.minimum(mag, 255), 0).astype(
-                        np.uint8
-                    )
-                    bufs.append((trow, tcol, canvas.tobytes()))
-                yield pd.DataFrame(
-                    {
-                        "row": [t[0] for t in bufs],
-                        "col": [t[1] for t in bufs],
-                        "tile_w": np.full(len(bufs), ts, dtype=np.int32),
-                        "tile_h": np.full(len(bufs), ts, dtype=np.int32),
-                        "bytes": [t[2] for t in bufs],
-                    }
-                )
-            else:
-                frames = []
-                for trow, tcol, gx, gy, full in out_rows:
-                    keep = full.ravel()[lin]
-                    if not keep.any():
-                        continue
-                    sel = lin[keep]
-                    gxs = gx.ravel()[sel]
-                    gys = gy.ravel()[sel]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "row": np.full(len(sel), trow, dtype=np.int64),
-                                "col": np.full(len(sel), tcol, dtype=np.int64),
-                                "py": pys[keep],
-                                "px": pxs[keep],
-                                "gx_num": gxs,
-                                "gy_num": gys,
-                                "mag2": gxs * gxs + gys * gys,
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-    return grouped.mapInPandas(assemble, schema=out_schema)
 
 
 _HILLSHADE_PIXEL_SCHEMA = T.StructType(
@@ -2103,8 +1918,6 @@ def hillshade(
     1..255 range — ``1 + floor(254 * max(hs, 0))`` — with 0 reserved for
     window-incomplete border pixels.
     """
-    if emit not in ("canvas", "pixels"):
-        raise ValueError("emit must be 'canvas' or 'pixels'")
     lx, ly, lz = (int(v) for v in light)
     l2 = lx * lx + ly * ly + lz * lz
     if l2 == 0:
@@ -2112,89 +1925,20 @@ def hillshade(
     nzi = int(nz)
     if nzi <= 0:
         raise ValueError("nz must be a positive integer")
-    ts = int(tp.tile_size) * int(tp.metatiling)
-    mw = tp.matrix_width(zoom)
-    mh = tp.matrix_height(zoom)
-    mod = int(sample_mod)
-    off = int(sample_off)
-    if emit == "pixels" and not 0 <= off < mod:
-        raise ValueError("sample_off must be in [0, sample_mod)")
 
-    grouped = _halo_grouped(tiles, ts, 1, int(band), mw, mh, "hillshade")
-    out_schema = (
-        _FOCAL_CANVAS_SCHEMA if emit == "canvas" else _HILLSHADE_PIXEL_SCHEMA
+    def tile_kernel(row, col, P, M):
+        gx, gy, full = _sobel(P, M)
+        dot = -lx * gx - ly * gy + lz * nzi
+        den2 = l2 * (gx * gx + gy * gy + nzi * nzi)
+        hs = dot / np.sqrt(den2.astype(np.float64))
+        shade = (254.0 * np.maximum(hs, 0.0)).astype(np.int64) + 1
+        canvas = np.where(full, shade, 0).astype(np.uint8)
+        yield row, col, canvas, {"dot": dot, "den2": den2, "hs": hs}, full
+
+    return _stencil(
+        tiles, tp, zoom, 1, band, "hillshade", tile_kernel,
+        emit, sample_mod, sample_off, _HILLSHADE_PIXEL_SCHEMA,
     )
-
-    def assemble(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if emit == "pixels":
-            lin = np.arange(off, ts * ts, mod, dtype=np.int64)
-            pys = (lin // ts).astype(np.int32)
-            pxs = (lin % ts).astype(np.int32)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_rows = []
-            for trow, tcol, P, M in _halo_planes(pdf, ts, 1):
-                A = P.astype(np.int64)
-                gx = (
-                    A[:-2, 2:] + 2 * A[1:-1, 2:] + A[2:, 2:]
-                    - A[:-2, :-2] - 2 * A[1:-1, :-2] - A[2:, :-2]
-                )
-                gy = (
-                    A[2:, :-2] + 2 * A[2:, 1:-1] + A[2:, 2:]
-                    - A[:-2, :-2] - 2 * A[:-2, 1:-1] - A[:-2, 2:]
-                )
-                Mi = M.astype(np.int64)
-                full = (
-                    Mi[:-2, :-2] + Mi[:-2, 1:-1] + Mi[:-2, 2:]
-                    + Mi[1:-1, :-2] + Mi[1:-1, 1:-1] + Mi[1:-1, 2:]
-                    + Mi[2:, :-2] + Mi[2:, 1:-1] + Mi[2:, 2:]
-                ) == 9
-                dot = -lx * gx - ly * gy + lz * nzi
-                den2 = l2 * (gx * gx + gy * gy + nzi * nzi)
-                hs = dot / np.sqrt(den2.astype(np.float64))
-                out_rows.append((trow, tcol, dot, den2, hs, full))
-            if not out_rows:
-                continue
-            if emit == "canvas":
-                bufs = []
-                for trow, tcol, dot, den2, hs, full in out_rows:
-                    shade = (254.0 * np.maximum(hs, 0.0)).astype(np.int64) + 1
-                    canvas = np.where(full, shade, 0).astype(np.uint8)
-                    bufs.append((trow, tcol, canvas.tobytes()))
-                yield pd.DataFrame(
-                    {
-                        "row": [t[0] for t in bufs],
-                        "col": [t[1] for t in bufs],
-                        "tile_w": np.full(len(bufs), ts, dtype=np.int32),
-                        "tile_h": np.full(len(bufs), ts, dtype=np.int32),
-                        "bytes": [t[2] for t in bufs],
-                    }
-                )
-            else:
-                frames = []
-                for trow, tcol, dot, den2, hs, full in out_rows:
-                    keep = full.ravel()[lin]
-                    if not keep.any():
-                        continue
-                    sel = lin[keep]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "row": np.full(len(sel), trow, dtype=np.int64),
-                                "col": np.full(len(sel), tcol, dtype=np.int64),
-                                "py": pys[keep],
-                                "px": pxs[keep],
-                                "dot": dot.ravel()[sel],
-                                "den2": den2.ravel()[sel],
-                                "hs": hs.ravel()[sel],
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-    return grouped.mapInPandas(assemble, schema=out_schema)
 
 
 def _ccl4(mask: np.ndarray) -> "tuple[np.ndarray, int]":
@@ -2336,17 +2080,7 @@ def label_components(
                 c = int(pdf["col"].iat[i])
                 tw = int(pdf["tile_w"].iat[i])
                 th = int(pdf["tile_h"].iat[i])
-                buf = pdf["bytes"].iat[i]
-                nb = len(buf) // (th * tw)
-                if nb * th * tw != len(buf) or band_i >= nb:
-                    raise ValueError(
-                        f"canvas of {len(buf)} bytes is not {th}x{tw}xB "
-                        f"with band {band_i} present"
-                    )
-                plane = np.frombuffer(buf, dtype=np.uint8).reshape(th, tw, nb)[
-                    :, :, band_i
-                ]
-                mask = plane >= thr
+                mask = _band_plane(pdf["bytes"].iat[i], th, tw, band_i) >= thr
                 lab, _ = _ccl4(mask)
                 if not mask.any():
                     continue

@@ -43,6 +43,38 @@ def _hadoop_path_exists(spark, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
+def _upsert_buckets(fresh: DataFrame, path: str, n_buckets: int) -> None:
+    """Key-replace the (row, col)-keyed rows of ``fresh`` into the parquet
+    table at ``path``, partitioned by ``pb = pmod(hash(row, col),
+    n_buckets)``: read only the buckets ``fresh`` touches, anti-join its
+    keys out of them, union ``fresh`` back, and dynamically overwrite just
+    those partitions (the whole table when ``path`` does not exist yet)."""
+    spark = fresh.sparkSession
+    pb = F.pmod(F.hash("row", "col"), F.lit(n_buckets))
+    # materialize ONCE: bucket discovery, the anti-join, and the write all
+    # consume this plan — unpinned, upstream Arrow kernels would re-execute
+    # per consumer.
+    fresh = fresh.withColumn("pb", pb).localCheckpoint(eager=True)
+    if _hadoop_path_exists(spark, path):
+        buckets = [r["pb"] for r in fresh.select("pb").distinct().collect()]
+        keep = (
+            spark.read.parquet(path)
+            .filter(F.col("pb").isin(buckets))
+            .join(fresh.select("row", "col"), ["row", "col"], "left_anti")
+        )
+        merged = keep.unionByName(fresh)
+    else:
+        merged = fresh
+    # eager barrier: the write below overwrites partitions this plan reads
+    merged = merged.localCheckpoint(eager=True)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pb")
+        .parquet(path)
+    )
+
+
 def stream_with_tile(
     stream: DataFrame,
     tp: PyramidConfig,
@@ -290,7 +322,6 @@ def incremental_tile_sink(
              .trigger(availableNow=True).start())
     """
     from . import incremental as incr
-    from . import raster
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -306,29 +337,7 @@ def incremental_tile_sink(
         else:
             old = spark.createDataFrame([], batch_df.schema)
         delta = incr.incremental_compose(old, batch_df, tp, zoom, **compose_kwargs)
-        pb = F.pmod(F.hash("row", "col"), F.lit(n_buckets))
-        # materialize the compose ONCE: bucket discovery, the anti-join,
-        # and the final write all consume this plan — unpinned, the Arrow
-        # blend kernels would re-execute per consumer.
-        delta = delta.withColumn("pb", pb).localCheckpoint(eager=True)
-        if _hadoop_path_exists(spark, tiles_path):
-            buckets = [r["pb"] for r in delta.select("pb").distinct().collect()]
-            keep = (
-                spark.read.parquet(tiles_path)
-                .filter(F.col("pb").isin(buckets))
-                .join(delta.select("row", "col"), ["row", "col"], "left_anti")
-            )
-            merged = keep.unionByName(delta)
-        else:
-            merged = delta
-        # eager barrier: the write below overwrites partitions this plan reads
-        merged = merged.localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pb")
-            .parquet(tiles_path)
-        )
+        _upsert_buckets(delta, tiles_path, n_buckets)
         (
             batch_df.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
@@ -425,30 +434,7 @@ def incremental_focal_sink(
         delta = incr.incremental_focal(
             base, batch, tp, zoom, radius=radius, emit="canvas", **focal_kwargs
         )
-        pb = F.pmod(F.hash("row", "col"), F.lit(n_buckets))
-
-        def upsert(fresh: DataFrame, path: str) -> None:
-            fresh = fresh.withColumn("pb", pb).localCheckpoint(eager=True)
-            if _hadoop_path_exists(spark, path):
-                buckets = [r["pb"] for r in fresh.select("pb").distinct().collect()]
-                keep = (
-                    spark.read.parquet(path)
-                    .filter(F.col("pb").isin(buckets))
-                    .join(fresh.select("row", "col"), ["row", "col"], "left_anti")
-                )
-                merged = keep.unionByName(fresh)
-            else:
-                merged = fresh
-            # eager barrier: the write overwrites partitions this plan reads
-            merged = merged.localCheckpoint(eager=True)
-            (
-                merged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("pb")
-                .parquet(path)
-            )
-
-        upsert(delta, focal_path)
-        upsert(batch, tiles_path)
+        _upsert_buckets(delta, focal_path, n_buckets)
+        _upsert_buckets(batch, tiles_path, n_buckets)
 
     return process
