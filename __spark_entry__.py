@@ -3170,32 +3170,40 @@ def q_pip_join_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("poly_id").agg(F.count("*").alias("n"))
 
 
-def _pip_inside_sql(geom: dict) -> str:
-    """Even-odd ray-cast membership as pure SQL: the exact unrolled mirror of
-    operators/pip._points_in_polygon for a literal (Multi)Polygon — per
-    non-horizontal edge, one crossing term (`(y0>lat) != (y1>lat)` and
-    `lon < x0 + (lat-y0)*dx/dy`); part parity = sum(crossings) % 2; parts OR."""
-    polys = (
-        [geom["coordinates"]] if geom["type"] == "Polygon" else geom["coordinates"]
-    )
+def _pip_inside_sql(parts: list, x: str = "lon", y: str = "lat") -> str:
+    """Even-odd ray-cast membership of the point (``x``, ``y``) as pure
+    SQL: the exact unrolled mirror of operators/pip._points_in_prepared —
+    per non-horizontal edge, one crossing term (`(y0>y) != (y1>y)` and
+    `x < x0 + (y-y0)*dx/dy`); part parity = sum(crossings) % 2; parts OR.
+    ``parts``: per polygon part, its rings as lists of (x, y) vertex SQL
+    expressions — literals or columns; an edge whose two y expressions are
+    the same text is horizontal and never crosses, so it is skipped."""
     part_exprs = []
-    for rings in polys:
+    for rings in parts:
         terms = []
         for ring in rings:
             pts = list(ring)
             if pts[0] != pts[-1]:
                 pts.append(pts[0])
             for (x0, y0), (x1, y1) in zip(pts, pts[1:]):
-                x0, y0, x1, y1 = float(x0), float(y0), float(x1), float(y1)
                 if y0 == y1:
-                    continue  # horizontal edge never crosses (cond all-false)
+                    continue
                 terms.append(
-                    f"CASE WHEN (({_d(y0)} > lat) <> ({_d(y1)} > lat))"
-                    f" AND lon < {_d(x0)} + (lat - {_d(y0)}) * {_d(x1 - x0)} / {_d(y1 - y0)}"
-                    f" THEN 1 ELSE 0 END"
+                    f"CASE WHEN ((({y0}) > {y}) <> (({y1}) > {y}))"
+                    f" AND {x} < ({x0}) + ({y} - ({y0})) * (({x1}) - ({x0}))"
+                    f" / (({y1}) - ({y0})) THEN 1 ELSE 0 END"
                 )
         part_exprs.append(f"(({' + '.join(terms)}) % 2 = 1)")
     return "(" + " OR ".join(part_exprs) + ")"
+
+
+def _geom_sql(geom: dict) -> list:
+    """A literal (Multi)Polygon as ``_pip_inside_sql`` parts."""
+    polys = [geom["coordinates"]] if geom["type"] == "Polygon" else geom["coordinates"]
+    return [
+        [[(_d(float(vx)), _d(float(vy))) for vx, vy in ring] for ring in rings]
+        for rings in polys
+    ]
 
 
 def sql_pip_join_regions() -> str:
@@ -3203,7 +3211,7 @@ def sql_pip_join_regions() -> str:
     for pid, geom in _PIP_REGIONS:
         selects.append(
             f"SELECT CAST({pid} AS BIGINT) AS poly_id, count(*) AS n"
-            f" FROM valid WHERE {_pip_inside_sql(geom)}"
+            f" FROM valid WHERE {_pip_inside_sql(_geom_sql(geom))}"
         )
     union = " UNION ALL ".join(selects)
     return f"""
@@ -3539,10 +3547,10 @@ def _zonal_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     zh = F.lit(0.13) + at % F.lit(0.31)
     return ev.select(
         F.col("event_id").alias("zone_id"),
-        zl.alias("zleft"),
-        zb.alias("zbottom"),
-        (zl + zw).alias("zright"),
-        (zb + zh).alias("ztop"),
+        zl.alias("left"),
+        zb.alias("bottom"),
+        (zl + zw).alias("right"),
+        (zb + zh).alias("top"),
     )
 
 
@@ -3710,25 +3718,12 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums: canvases carry an integer formula DuckDB re-derives per pixel."""
     from tilematrix_spark import raster
 
-    return raster.zonal_stats(
-        _zonal_tiles(spark),
-        _zonal_zones(spark, sf_dir),
-        GEODETIC,
-        5,
-        zone_id_col="zone_id",
-        left="zleft",
-        bottom="zbottom",
-        right="zright",
-        top="ztop",
-    )
+    return raster.zonal_stats(_zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5)
 
 
-def sql_zonal_stats() -> str:
-    zoom = 5
-    h = _d(_tile_size(zoom))
-    px = _d(GEODETIC.pixel_x_size(zoom))
-    return f"""
-      WITH pts AS ({_EVENTS_SQL}),
+#: the ``_zonal_zones`` bboxes as CTE ``z(zone_id, zl, zb, zr, zt)``
+_SQL_BBOX_ZONES = f"""
+      pts AS ({_EVENTS_SQL}),
       z0 AS (
         SELECT event_id AS zone_id,
           ({_d(-89.0)} + fmod(abs(lon) * {_d(7.0)} + abs(lat) * {_d(3.0)}, {_d(60.0)})) AS zl,
@@ -3737,16 +3732,30 @@ def sql_zonal_stats() -> str:
           ({_d(0.13)} + fmod(abs(lat), {_d(0.31)})) AS zh
         FROM pts WHERE event_id % 16 = 7
       ),
-      z AS (SELECT zone_id, zl, zb, zl + zw AS zr, zb + zh AS zt FROM z0),
+      z AS (SELECT zone_id, zl, zb, zl + zw AS zr, zb + zh AS zt FROM z0)"""
+
+
+def _sql_zone_pixels(zones_cte: str, carry_cols: tuple = ()) -> str:
+    """The CTE chain every zonal oracle shares, over ``zones_cte``'s
+    (zone_id, zl, zb, zr, zt) bboxes: ``cov``/``p0``/``pairs`` cover each
+    bbox onto z5 tiles (tiles_from_bounds), ``win``/``w2`` are its
+    non-empty pixel windows (the raster_tile_windows floor/ceil rule), and
+    ``pix`` has one row per window pixel (zone_id, ``carry_cols``, trow,
+    tcol, pi, pj)."""
+    zoom = 5
+    h = _d(_tile_size(zoom))
+    px = _d(GEODETIC.pixel_x_size(zoom))
+    c = "".join(f"{col}, " for col in carry_cols)
+    return f"""
       cov AS (
-        SELECT zone_id, zl, zb, zr, zt,
+        SELECT zone_id, {c}zl, zb, zr, zt,
           CAST(trunc(({_d(TOP)} - zt) / {h}) AS BIGINT) AS row_min,
           CAST(trunc(({_d(TOP)} - zb) / {h}) AS BIGINT)
             - CASE WHEN fmod({_d(TOP)} - zb, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS row_max,
           CAST(trunc((zl - {_d(LEFT)}) / {h}) AS BIGINT) AS col_min,
           CAST(trunc((zr - {_d(LEFT)}) / {h}) AS BIGINT)
             - CASE WHEN fmod(zr - {_d(LEFT)}, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS col_max
-        FROM z
+        FROM {zones_cte}
       ),
       p0 AS (
         SELECT *, unnest(generate_series(row_min, row_max)) AS trow FROM cov
@@ -3755,7 +3764,7 @@ def sql_zonal_stats() -> str:
         SELECT *, unnest(generate_series(col_min, col_max)) AS tcol FROM p0
       ),
       win AS (
-        SELECT zone_id, trow, tcol,
+        SELECT zone_id, {c}trow, tcol,
           greatest(CAST(floor((zl - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 0) AS c0,
           least(CAST(ceil((zr - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 256) AS cend,
           greatest(CAST(floor((({_d(TOP)} - trow * {h}) - zt) / {px}) AS BIGINT), 0) AS r0,
@@ -3763,23 +3772,29 @@ def sql_zonal_stats() -> str:
         FROM pairs
       ),
       w2 AS (
-        SELECT zone_id, trow, tcol, c0, r0, cend - c0 AS cw, rend - r0 AS rh
+        SELECT zone_id, {c}trow, tcol, c0, r0, cend - c0 AS cw, rend - r0 AS rh
         FROM win WHERE cend - c0 > 0 AND rend - r0 > 0
       ),
       pix0 AS (
-        SELECT zone_id, trow, tcol, c0, cw,
+        SELECT zone_id, {c}trow, tcol, c0, cw,
                unnest(generate_series(r0, r0 + rh - 1)) AS pi
         FROM w2
       ),
       pix AS (
-        SELECT zone_id, trow, tcol, pi,
+        SELECT zone_id, {c}trow, tcol, pi,
                unnest(generate_series(c0, c0 + cw - 1)) AS pj
         FROM pix0
-      ),
-      vals AS (
-        SELECT zone_id, (3 * pi + 7 * pj + 11 * trow + 13 * tcol) % 251 AS v
-        FROM pix
-      ),
+      )"""
+
+
+#: the ``_zonal_tiles`` canvas value of a ``pix`` row
+_SQL_ZONAL_VAL = "(3 * pi + 7 * pj + 11 * trow + 13 * tcol) % 251"
+
+
+def sql_zonal_stats() -> str:
+    return f"""
+      WITH {_SQL_BBOX_ZONES},{_sql_zone_pixels("z")},
+      vals AS (SELECT zone_id, {_SQL_ZONAL_VAL} AS v FROM pix),
       t AS (SELECT zone_id, count(*) AS n_tiles FROM w2 GROUP BY 1),
       v AS (
         SELECT zone_id, count(*) AS n_px, CAST(sum(v) AS BIGINT) AS sum_val,
@@ -3796,11 +3811,11 @@ def sql_zonal_stats() -> str:
 def q_zonal_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygonal zonal statistics (raster.zonal_poly_stats): diamond
     (rotated-square) zones scattered into the 72-tile canvas region — the
-    pixel mask is the CCW half-plane sign test on pixel CENTERS, a fixed
-    IEEE double expression DuckDB reproduces bit-for-bit, so rotated-
-    geometry zonal sums are value-gated with NO tolerance.  Diamonds
-    exclude ~half their bbox, so this genuinely exercises the polygon
-    path, not the window math already covered by zonal_stats."""
+    pixel mask is pip's even-odd ray-cast on pixel CENTERS, a fixed IEEE
+    double expression DuckDB reproduces bit-for-bit, so rotated-geometry
+    zonal sums are value-gated with NO tolerance.  Diamonds exclude ~half
+    their bbox, so this genuinely exercises the polygon path, not the
+    window math already covered by zonal_stats."""
     from tilematrix_spark import raster
 
     ev = _events(spark, sf_dir).filter(F.col("event_id") % 16 == 5)
@@ -3814,29 +3829,14 @@ def q_zonal_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(cx + w, cx, cx - w, cx).alias("poly_x"),
         F.array(cy, cy + hh, cy, cy - hh).alias("poly_y"),
     )
-    return raster.zonal_poly_stats(
-        _zonal_tiles(spark), zones, GEODETIC, 5, zone_id_col="zone_id"
-    )
+    return raster.zonal_poly_stats(_zonal_tiles(spark), zones, GEODETIC, 5)
 
 
 def sql_zonal_poly() -> str:
     zoom = 5
     h = _d(_tile_size(zoom))
     px = _d(GEODETIC.pixel_x_size(zoom))
-    # CCW diamond V0=(cx+w,cy) V1=(cx,cy+hh) V2=(cx-w,cy) V3=(cx,cy-hh);
-    # edge test written EXACTLY as the kernel computes it — (x2-x1), never
-    # algebraically simplified, so the doubles match bit-for-bit
-    edge = "(({x2}) - ({x1})) * (cyp - ({y1})) - (({y2}) - ({y1})) * (cxp - ({x1})) >= 0"
-    v = {
-        0: ("cx + w", "cy"),
-        1: ("cx", "cy + hh"),
-        2: ("cx - w", "cy"),
-        3: ("cx", "cy - hh"),
-    }
-    tests = " AND ".join(
-        edge.format(x1=v[e][0], y1=v[e][1], x2=v[(e + 1) % 4][0], y2=v[(e + 1) % 4][1])
-        for e in range(4)
-    )
+    diamond = [("cx + w", "cy"), ("cx", "cy + hh"), ("cx - w", "cy"), ("cx", "cy - hh")]
     return f"""
       WITH pts AS ({_EVENTS_SQL}),
       z0 AS (
@@ -3849,54 +3849,17 @@ def sql_zonal_poly() -> str:
       ),
       z AS (SELECT zone_id, cx, cy, w, hh,
                    cx - w AS zl, cy - hh AS zb, cx + w AS zr, cy + hh AS zt
-            FROM z0),
-      cov AS (
-        SELECT zone_id, cx, cy, w, hh, zl, zb, zr, zt,
-          CAST(trunc(({_d(TOP)} - zt) / {h}) AS BIGINT) AS row_min,
-          CAST(trunc(({_d(TOP)} - zb) / {h}) AS BIGINT)
-            - CASE WHEN fmod({_d(TOP)} - zb, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS row_max,
-          CAST(trunc((zl - {_d(LEFT)}) / {h}) AS BIGINT) AS col_min,
-          CAST(trunc((zr - {_d(LEFT)}) / {h}) AS BIGINT)
-            - CASE WHEN fmod(zr - {_d(LEFT)}, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS col_max
-        FROM z
-      ),
-      p0 AS (
-        SELECT *, unnest(generate_series(row_min, row_max)) AS trow FROM cov
-      ),
-      pairs AS (
-        SELECT *, unnest(generate_series(col_min, col_max)) AS tcol FROM p0
-      ),
-      win AS (
-        SELECT zone_id, cx, cy, w, hh, trow, tcol,
-          greatest(CAST(floor((zl - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 0) AS c0,
-          least(CAST(ceil((zr - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 256) AS cend,
-          greatest(CAST(floor((({_d(TOP)} - trow * {h}) - zt) / {px}) AS BIGINT), 0) AS r0,
-          least(CAST(ceil((({_d(TOP)} - trow * {h}) - zb) / {px}) AS BIGINT), 256) AS rend
-        FROM pairs
-      ),
-      w2 AS (
-        SELECT zone_id, cx, cy, w, hh, trow, tcol, c0, r0,
-               cend - c0 AS cw, rend - r0 AS rh
-        FROM win WHERE cend - c0 > 0 AND rend - r0 > 0
-      ),
-      pix0 AS (
-        SELECT zone_id, cx, cy, w, hh, trow, tcol, c0, cw,
-               unnest(generate_series(r0, r0 + rh - 1)) AS pi
-        FROM w2
-      ),
-      pix AS (
-        SELECT zone_id, cx, cy, w, hh, trow, tcol, pi,
-               unnest(generate_series(c0, c0 + cw - 1)) AS pj
-        FROM pix0
-      ),
+            FROM z0),{_sql_zone_pixels("z", ("cx", "cy", "w", "hh"))},
       cand AS (
-        SELECT zone_id, cx, cy, w, hh, trow, tcol,
-          (3 * pi + 7 * pj + 11 * trow + 13 * tcol) % 251 AS v,
+        SELECT zone_id, cx, cy, w, hh, trow, tcol, {_SQL_ZONAL_VAL} AS v,
           ({_d(LEFT)} + tcol * {h}) + (pj + {_d(0.5)}) * {px} AS cxp,
           ({_d(TOP)} - trow * {h}) - (pi + {_d(0.5)}) * {px} AS cyp
         FROM pix
       ),
-      inside AS (SELECT zone_id, trow, tcol, v FROM cand WHERE {tests}),
+      inside AS (
+        SELECT zone_id, trow, tcol, v FROM cand
+        WHERE {_pip_inside_sql([[diamond]], "cxp", "cyp")}
+      ),
       t AS (SELECT zone_id, count(DISTINCT trow * 1000 + tcol) AS n_tiles
             FROM inside GROUP BY 1),
       agg AS (
@@ -3920,75 +3883,14 @@ def q_zonal_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     return raster.zonal_class_counts(
-        _zonal_tiles(spark),
-        _zonal_zones(spark, sf_dir),
-        GEODETIC,
-        5,
-        zone_id_col="zone_id",
-        left="zleft",
-        bottom="zbottom",
-        right="zright",
-        top="ztop",
+        _zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
     )
 
 
 def sql_zonal_classes() -> str:
-    zoom = 5
-    h = _d(_tile_size(zoom))
-    px = _d(GEODETIC.pixel_x_size(zoom))
     return f"""
-      WITH pts AS ({_EVENTS_SQL}),
-      z0 AS (
-        SELECT event_id AS zone_id,
-          ({_d(-89.0)} + fmod(abs(lon) * {_d(7.0)} + abs(lat) * {_d(3.0)}, {_d(60.0)})) AS zl,
-          ({_d(12.0)} + fmod(abs(lat) * {_d(5.0)} + abs(lon) * {_d(2.0)}, {_d(28.0)})) AS zb,
-          ({_d(0.11)} + fmod(abs(lon), {_d(0.37)})) AS zw,
-          ({_d(0.13)} + fmod(abs(lat), {_d(0.31)})) AS zh
-        FROM pts WHERE event_id % 16 = 7
-      ),
-      z AS (SELECT zone_id, zl, zb, zl + zw AS zr, zb + zh AS zt FROM z0),
-      cov AS (
-        SELECT zone_id, zl, zb, zr, zt,
-          CAST(trunc(({_d(TOP)} - zt) / {h}) AS BIGINT) AS row_min,
-          CAST(trunc(({_d(TOP)} - zb) / {h}) AS BIGINT)
-            - CASE WHEN fmod({_d(TOP)} - zb, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS row_max,
-          CAST(trunc((zl - {_d(LEFT)}) / {h}) AS BIGINT) AS col_min,
-          CAST(trunc((zr - {_d(LEFT)}) / {h}) AS BIGINT)
-            - CASE WHEN fmod(zr - {_d(LEFT)}, {h}) = {_d(0.0)} THEN 1 ELSE 0 END AS col_max
-        FROM z
-      ),
-      p0 AS (
-        SELECT *, unnest(generate_series(row_min, row_max)) AS trow FROM cov
-      ),
-      pairs AS (
-        SELECT *, unnest(generate_series(col_min, col_max)) AS tcol FROM p0
-      ),
-      win AS (
-        SELECT zone_id, trow, tcol,
-          greatest(CAST(floor((zl - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 0) AS c0,
-          least(CAST(ceil((zr - ({_d(LEFT)} + tcol * {h})) / {px}) AS BIGINT), 256) AS cend,
-          greatest(CAST(floor((({_d(TOP)} - trow * {h}) - zt) / {px}) AS BIGINT), 0) AS r0,
-          least(CAST(ceil((({_d(TOP)} - trow * {h}) - zb) / {px}) AS BIGINT), 256) AS rend
-        FROM pairs
-      ),
-      w2 AS (
-        SELECT zone_id, trow, tcol, c0, r0, cend - c0 AS cw, rend - r0 AS rh
-        FROM win WHERE cend - c0 > 0 AND rend - r0 > 0
-      ),
-      pix0 AS (
-        SELECT zone_id, trow, tcol, c0, cw,
-               unnest(generate_series(r0, r0 + rh - 1)) AS pi
-        FROM w2
-      ),
-      pix AS (
-        SELECT zone_id, trow, tcol, pi,
-               unnest(generate_series(c0, c0 + cw - 1)) AS pj
-        FROM pix0
-      ),
-      vals AS (
-        SELECT zone_id, (3 * pi + 7 * pj + 11 * trow + 13 * tcol) % 251 AS v
-        FROM pix
-      )
+      WITH {_SQL_BBOX_ZONES},{_sql_zone_pixels("z")},
+      vals AS (SELECT zone_id, {_SQL_ZONAL_VAL} AS v FROM pix)
       SELECT zone_id, CAST(v AS INTEGER) AS class,
              CAST(count(*) AS BIGINT) AS n_px
       FROM vals GROUP BY 1, 2
@@ -4006,15 +3908,7 @@ def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     return raster.zonal_majority(
-        _zonal_tiles(spark),
-        _zonal_zones(spark, sf_dir),
-        GEODETIC,
-        5,
-        zone_id_col="zone_id",
-        left="zleft",
-        bottom="zbottom",
-        right="zright",
-        top="ztop",
+        _zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
     )
 
 

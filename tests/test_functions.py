@@ -480,21 +480,26 @@ def test_connected_components_chain_and_clusters(spark):
     assert kept == [1, 10, 20, 99]
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     """A 40-vertex path graph (diameter 39) converges fast: pointer
     doubling makes label reach grow geometrically, so the worst-case chain
-    needs O(log d) rounds — this exercises multi-round convergence."""
+    needs O(log d) rounds — this exercises multi-round convergence, on the
+    driver-side pass and (size threshold at 0) on the distributed loop."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "id_a long, id_b long"
     )
-    comp = dedup.connected_components(pairs, max_iters=50).collect()
-    assert {r["component"] for r in comp} == {100}
-    assert len(comp) == 41
+    for max_edges in (dedup.DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", max_edges)
+        comp = dedup.connected_components(pairs, max_iters=50).collect()
+        assert {r["component"] for r in comp} == {100}
+        assert len(comp) == 41
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     """Exhausting max_iters with a live frontier must error, not silently
-    return labels that would keep several survivors per cluster."""
+    return labels that would keep several survivors per cluster (the size
+    threshold at 0 sends even this small graph through the loop)."""
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "id_a long, id_b long"
     )

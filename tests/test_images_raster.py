@@ -1117,7 +1117,7 @@ def _cc_mirror(canvases, ts, thr):
     return out
 
 
-def test_label_components_matches_global_bfs(spark):
+def test_label_components_matches_global_bfs(spark, monkeypatch):
     """Cross-tile connected-component labeling vs a brute-force global BFS
     mirror: random foreground over a 3x3 block of 6px tiles (components
     freely crossing tile edges), plus planted shapes on a 2x2 block —
@@ -1125,6 +1125,8 @@ def test_label_components_matches_global_bfs(spark):
     single pixel, an L inside one tile, and a diagonal-only pair that must
     NOT merge (4-connectivity)."""
     import pandas as pd
+
+    from tilematrix_spark.functions import dedup
 
     # planted 2x2 x 8px case
     ts = 8
@@ -1175,8 +1177,9 @@ def test_label_components_matches_global_bfs(spark):
             ]
         )
     )
-    drv = raster.label_components(tiles, threshold=128, merge="driver")
-    dst = raster.label_components(tiles, threshold=128, merge="distributed")
+    drv = raster.label_components(tiles, threshold=128)
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_EDGES", 0)
+    dst = raster.label_components(tiles, threshold=128)
     assert drv.exceptAll(dst).isEmpty() and dst.exceptAll(drv).isEmpty()
     # spot-check the planted shapes in the first corpus (perimeter: 4x4
     # square -> 16; lone pixel -> 4; cross-edge domino -> 6; 3-px L -> 8)
@@ -1363,34 +1366,92 @@ def test_zonal_poly_stats_matches_pixel_mirror(spark, geodetic):
     assert got[1]["n_px"] < 0.6 * bbox_px
 
 
-def test_zonal_poly_stats_rejects_clockwise_ring(spark, geodetic):
-    """A clockwise ring fails loudly instead of reading as "no pixels"."""
+def test_zonal_poly_stats_ring_orientation_free(spark, geodetic):
+    """A clockwise ring masks the same pixels as its counter-clockwise
+    twin: the ray-cast mask has no orientation."""
+    from tilematrix_spark import raster
+
+    a = np.random.default_rng(3).integers(0, 256, size=(256, 256), dtype=np.uint8)
+    tiles = spark.createDataFrame(
+        [(2, 4, 256, 256, bytearray(a.tobytes()))],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    ccw = ([-156.9, -155.9, -156.9], [74.0, 74.0, 75.0])
+    cw = (ccw[0][::-1], ccw[1][::-1])
+    zones = spark.createDataFrame(
+        [(1, *ccw), (2, *cw)], "zone_id long, poly_x array<double>, poly_y array<double>"
+    )
+    got = {
+        r["zone_id"]: r.asDict()
+        for r in raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
+    }
+    assert got[1]["n_px"] > 0
+    assert {**got[2], "zone_id": 1} == got[1]
+
+
+def test_zonal_poly_stats_concave_l_ring(spark, geodetic):
+    """An axis-aligned L (a reflex vertex, straddling two tiles) masks
+    exactly the pixel centres inside its two rectangles.  Every edge sits
+    a quarter pixel off the centres, so the reference needs no boundary
+    rule."""
+    from tilematrix_spark import raster
+
+    rng = np.random.default_rng(13)
+    keys = [(2, 4), (2, 5)]
+    canv = {rc: rng.integers(0, 256, size=(256, 256), dtype=np.uint8) for rc in keys}
+    tiles = spark.createDataFrame(
+        [(r, c, 256, 256, bytearray(canv[(r, c)].tobytes())) for r, c in keys],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    px = geodetic.pixel_x_size(5)
+    tsx = geodetic.tile_x_size(5)
+    tl, tt = geodetic.left + 4 * tsx, geodetic.top - 2 * tsx  # tile (2, 4)
+    x0, x1, x2 = (tl + k * px for k in (200.25, 240.75, 300.25))
+    y0, y1, y2 = (tt - k * px for k in (120.75, 90.25, 40.25))
+    ell = ([x0, x2, x2, x1, x1, x0], [y0, y0, y1, y1, y2, y2])
+    zones = spark.createDataFrame(
+        [(1, *ell)], "zone_id long, poly_x array<double>, poly_y array<double>"
+    )
+    g = raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()[0]
+    vals, ntiles = [], 0
+    for (r, c), a in canv.items():
+        cx = (geodetic.left + c * tsx + (np.arange(256) + 0.5) * px)[None, :]
+        cy = (geodetic.top - r * tsx - (np.arange(256) + 0.5) * px)[:, None]
+        inx = (x0 < cx) & (cx < x2)
+        mask = (inx & (y0 < cy) & (cy < y1)) | ((x0 < cx) & (cx < x1) & (y1 < cy) & (cy < y2))
+        if mask.any():
+            ntiles += 1
+            vals.append(a[mask])
+    vals = np.concatenate(vals)
+    assert ntiles == 2
+    assert g["n_tiles"] == ntiles
+    assert g["n_px"] == len(vals) == 100 * 31 + 41 * 50
+    assert g["sum_val"] == int(vals.sum(dtype=np.int64))
+    assert (g["min_val"], g["max_val"]) == (int(vals.min()), int(vals.max()))
+    assert g["mean_val"] == float(vals.sum(dtype=np.int64)) / len(vals)
+
+
+@pytest.mark.parametrize(
+    "ring,msg",
+    [
+        (([-157.0, -156.0, -157.0, -156.5], [74.0, 74.0, 75.0]), "needs >= 3 vertices"),
+        (([-157.0, -156.0], [74.0, 75.0]), "needs >= 3 vertices"),
+        (([-157.0, -156.5, -156.0], [74.0, 74.5, 75.0]), "has no area"),  # collinear
+    ],
+    ids=["unequal", "two_vertices", "collinear"],
+)
+def test_zonal_poly_stats_rejects_ring_without_area(spark, geodetic, ring, msg):
+    """A ring with no area fails loudly instead of reading as "no pixels"."""
+    from tilematrix_spark import raster
+
     tiles = spark.createDataFrame(
         [(2, 4, 256, 256, bytearray(256 * 256))],
         "row long, col long, tile_w int, tile_h int, bytes binary",
     )
-    # the CCW triangle of the pixel-mirror test, vertex order reversed
-    cw = ([-156.9, -155.9, -156.9][::-1], [74.0, 74.0, 75.0][::-1])
     zones = spark.createDataFrame(
-        [(1, *cw)], "zone_id long, poly_x array<double>, poly_y array<double>"
+        [(1, *ring)], "zone_id long, poly_x array<double>, poly_y array<double>"
     )
-    with pytest.raises(Exception, match="not counter-clockwise"):
-        raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
-
-
-def test_zonal_poly_stats_rejects_nonconvex_ring(spark, geodetic):
-    """A CCW ring with a reflex vertex fails loudly instead of masking
-    only the intersection of its edge half-planes."""
-    tiles = spark.createDataFrame(
-        [(2, 4, 256, 256, bytearray(256 * 256))],
-        "row long, col long, tile_w int, tile_h int, bytes binary",
-    )
-    # an arrowhead: CCW, positive area, notch at (-156.4, 74.4)
-    arrow = ([-156.9, -155.9, -156.4, -156.9], [74.0, 74.0, 74.4, 75.0])
-    zones = spark.createDataFrame(
-        [(1, *arrow)], "zone_id long, poly_x array<double>, poly_y array<double>"
-    )
-    with pytest.raises(Exception, match="not convex"):
+    with pytest.raises(Exception, match=f"ring {msg}"):
         raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
 
 

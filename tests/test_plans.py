@@ -4,6 +4,7 @@ up at 100 TB (asserted, not assumed)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from tilematrix_spark import images
@@ -414,25 +415,30 @@ def test_semantic_dedup_one_exchange_per_side(spark):
     assert plan.count("zip_with(_qa") == 1
 
 
-def test_zonal_stats_broadcasts_windows_single_exchange(spark, geodetic):
-    """zonal_stats: the zone-window table BROADCASTS into the canvas join
-    (tile bytes never cross an exchange — they flow scan -> Arrow kernel);
-    the only Exchange is the final zone_id aggregation."""
+@pytest.mark.parametrize("op", ["zonal_stats", "zonal_poly_stats", "zonal_class_counts"])
+def test_zonal_stats_broadcasts_windows_single_exchange(spark, geodetic, op):
+    """Every zonal op: the zone-window table BROADCASTS into the canvas
+    join (tile bytes never cross an exchange — they flow scan -> Arrow
+    kernel); the only Exchange is the final zone aggregation."""
     from tilematrix_spark import raster
 
     tiles = spark.createDataFrame(
         [(2, 4, 2, 2, bytearray(b"\x01" * 12))],
         "row long, col long, tile_w int, tile_h int, bytes binary",
     )
-    zones = spark.createDataFrame(
-        [(1, -157.0, 74.0, -156.0, 75.0)],
-        "zone_id long, zl double, zb double, zr double, zt double",
-    )
-    plan = _plan(
-        raster.zonal_stats(
-            tiles, zones, geodetic, 5, left="zl", bottom="zb", right="zr", top="zt"
+    if op == "zonal_poly_stats":
+        zones = spark.createDataFrame(
+            [(1, [-157.0, -156.0, -157.0], [74.0, 74.0, 75.0])],
+            "zone_id long, poly_x array<double>, poly_y array<double>",
         )
-    )
+        out = raster.zonal_poly_stats(tiles, zones, geodetic, 5)
+    else:
+        zones = spark.createDataFrame(
+            [(1, -157.0, 74.0, -156.0, 75.0)],
+            "zone_id long, left double, bottom double, right double, top double",
+        )
+        out = getattr(raster, op)(tiles, zones, geodetic, 5)
+    plan = _plan(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     ex = sum(

@@ -20,8 +20,11 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import text as textfns
 
@@ -262,6 +265,31 @@ def minhash_verified_pairs(
     )
 
 
+#: integral-id graphs of at most this many distinct pairs resolve in one
+#: driver-side numpy pass; larger graphs and other id types run the
+#: distributed frontier loop
+DRIVER_CC_MAX_EDGES = 4_000_000
+
+
+def _driver_min_label(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    """Vectorized driver-side min-label resolution of an edge list:
+    repeated edge relaxation (np.minimum.at both directions) + pointer
+    jumping until fixpoint — O(E·log diameter) numpy passes, no python
+    loop over edges.  Node ids are sorted ascending so index order ==
+    id order and the fixpoint label IS the min member id."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a):]
+    lbl = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        prev = lbl.copy()
+        np.minimum.at(lbl, ia, lbl[ib])
+        np.minimum.at(lbl, ib, lbl[ia])
+        lbl = np.minimum(lbl, lbl[lbl])
+        if np.array_equal(lbl, prev):
+            break
+    return pd.DataFrame({"doc_id": nodes, "component": nodes[lbl]})
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -289,16 +317,33 @@ def connected_components(
     shortcut joins the CURRENT full label table).  The edge list is
     checkpointed once and re-used.  Only vertices appearing in ≥1 pair are
     emitted (every other doc is its own singleton component).
+
+    Small graphs skip the loop: an integral-id graph of at most
+    ``DRIVER_CC_MAX_EDGES`` distinct pairs is collected and resolved in one
+    vectorized numpy pass (``_driver_min_label``), which removes the
+    loop's serial per-round job latency (measured: the O(log diameter)
+    eager rounds, not the kernels, floored label_components' 2304-tile
+    wall at ~10s).  Both paths give the same labels (pytest-pinned).
     """
     # ids keep their natural type: the algorithm only needs min/least over
     # an orderable id (long doc ids, uuid strings, ...) — a forced long
     # cast would fail ANSI-mode on string corpora
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    edges = und.unionByName(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    src = edges.schema["src"]
+    if isinstance(src.dataType, T.IntegralType):
+        und = und.distinct()
+        if und.limit(DRIVER_CC_MAX_EDGES + 1).count() <= DRIVER_CC_MAX_EDGES:
+            pdf = und.toPandas()
+            comp = _driver_min_label(
+                pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+            )
+            # the loop's output type and nullability: both columns follow src
+            schema = T.StructType(
+                [T.StructField(c, src.dataType, src.nullable) for c in comp.columns]
+            )
+            return pairs.sparkSession.createDataFrame(comp, schema)
+    edges = edges.distinct().localCheckpoint(eager=True)
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("_nbr"))

@@ -22,11 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import exprs, images
+from . import exprs, geomkernels, images
 from .functions.multimodal import _shape_groups, decode_image, snapshot_decoders
 from .grid import PyramidConfig
 from .operators import assign
 from .operators import cover as cover_ops
+from .operators import pip
 
 
 def raster_tile_windows(
@@ -718,6 +719,155 @@ def _band_plane(buf: bytes, h: int, w: int, band: Optional[int]) -> np.ndarray:
     return a if band is None else a[:, :, band]
 
 
+_MOMENTS = ["n_px", "sum_val", "min_val", "max_val"]
+
+
+def _moments(v: np.ndarray) -> dict:
+    """One window's 5-int partial (the 5th, the window count, is the final
+    groupBy's count): pixel count, sum, min, max."""
+    return {
+        f: np.array([x], np.int64)
+        for f, x in zip(_MOMENTS, (v.size, v.sum(dtype=np.int64), v.min(), v.max()))
+    }
+
+
+def _classes(v: np.ndarray) -> dict:
+    """One window's SPARSE bincount: one row per class value present."""
+    bc = np.bincount(v.ravel(), minlength=256)
+    nz = np.nonzero(bc)[0]
+    return {"class": nz.astype(np.int32), "n_px": bc[nz].astype(np.int64)}
+
+
+def _ring_mask(rx, ry, zid, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
+    """(len(cy), len(cx)) even-odd ray-cast mask of the pixel centres
+    ``cx x cy`` against one ring — ``pip._points_in_prepared``, so any
+    simple ring of either orientation works.  A ring with no area raises."""
+    rx = np.asarray(rx, dtype=np.float64)
+    ry = np.asarray(ry, dtype=np.float64)
+    if len(rx) != len(ry) or len(rx) < 3:
+        raise ValueError(
+            f"zone {zid}: ring needs >= 3 vertices and equal-length "
+            f"poly_x/poly_y (got {len(rx)} and {len(ry)})"
+        )
+    if not abs(np.dot(rx, np.roll(ry, -1)) - np.dot(np.roll(rx, -1), ry)) > 0.0:
+        raise ValueError(f"zone {zid}: ring has no area (signed area is 0 or NaN)")
+    ring = geomkernels._close_ring(np.column_stack([rx, ry]))
+    xs = np.broadcast_to(cx, (len(cy), len(cx))).ravel()
+    ys = np.repeat(cy, len(cx))
+    return pip._points_in_prepared([[ring]], xs, ys).reshape(len(cy), len(cx))
+
+
+def _zonal(
+    tiles: DataFrame,
+    zones: DataFrame,
+    tp: PyramidConfig,
+    zoom: exprs.ZoomLike,
+    zone_id_col: str,
+    bbox: tuple,
+    band: int,
+    max_cover_tiles: Optional[int],
+    ring: tuple = (),
+    classes: bool = False,
+) -> DataFrame:
+    """The zonal engine behind ``zonal_stats``, ``zonal_poly_stats`` and
+    ``zonal_class_counts``: window -> kernel -> aggregate.
+
+    Each zone's ``bbox`` (left, bottom, right, top columns) covers onto
+    tiles through ONE ``_windows`` pass (reference ``tiles_from_bounds``
+    semantics, the compose path's floor/ceil window rule), and the
+    (zone, tile, window) table BROADCASTS into the canvas join, so tile
+    bytes are never shuffled: canvases stream scan -> Arrow kernel exactly
+    once.  Per window, the kernel slices band ``band``, masks it (the whole
+    window, or with ``ring`` = (poly_x, poly_y) columns the pixels whose
+    CENTRE ``_tl + (c0 + j + 0.5)*px``, ``_tt - (r0 + i + 0.5)*py`` the
+    ring ray-casts inside; a window masking no pixel emits nothing) and
+    reduces it to the 5-int moments, or with ``classes`` to its sparse
+    bincount.  The only corpus-wide exchange is the final groupBy on the
+    zone (or (zone, class)) over one partial per covered pair, so a zone
+    overlapping T tiles costs T pair rows, never a canvas copy per
+    zone-pixel.  ``max_cover_tiles`` guards runaway zone bboxes."""
+    win = _nonempty(
+        _windows(
+            zones.select(zone_id_col, *bbox, *ring), tp, zoom, *bbox,
+            max_cover_tiles=max_cover_tiles,
+        )
+    )
+    ring_cols = (
+        [F.col(ring[0]).alias("_rx"), F.col(ring[1]).alias("_ry"), "_tl", "_tt"]
+        if ring else []
+    )
+    win_cols = ["win_col_off", "win_row_off", "win_width", "win_height"]
+    win = win.select(F.col(zone_id_col).alias("_zid"), "row", "col", *win_cols, *ring_cols)
+    joined = (
+        tiles.select("row", "col", "tile_w", "tile_h", "bytes")
+        .join(F.broadcast(win), ["row", "col"])
+        .drop("row", "col")
+    )
+    if classes:
+        reduce, fields = _classes, [("class", T.IntegerType()), ("n_px", T.LongType())]
+    else:
+        reduce, fields = _moments, [(f, T.LongType()) for f in _MOMENTS]
+    part_schema = T.StructType(
+        [T.StructField("_zid", zones.schema[zone_id_col].dataType)]
+        + [T.StructField(f, t) for f, t in fields]
+    )
+    band_i = int(band)
+    if ring:
+        pxs = float(tp.pixel_x_size(int(zoom)))
+        pys = float(tp.pixel_y_size(int(zoom)))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            keep, parts = [], []
+            for i in range(len(pdf)):
+                c0, r0, cw, rh = (int(pdf[c].iat[i]) for c in win_cols)
+                h, w = pdf["tile_h"].iat[i], pdf["tile_w"].iat[i]
+                v = _band_plane(pdf["bytes"].iat[i], h, w, band_i)[r0 : r0 + rh, c0 : c0 + cw]
+                if ring:
+                    # pixel centres in world coords — the EXACT expression
+                    # the oracle mirrors
+                    cx = pdf["_tl"].iat[i] + (c0 + np.arange(cw, dtype=np.float64) + 0.5) * pxs
+                    cy = pdf["_tt"].iat[i] - (r0 + np.arange(rh, dtype=np.float64) + 0.5) * pys
+                    zid = pdf["_zid"].iat[i]
+                    v = v[_ring_mask(pdf["_rx"].iat[i], pdf["_ry"].iat[i], zid, cx, cy)]
+                    if not v.size:
+                        continue
+                part = reduce(v)
+                keep += [i] * len(part["n_px"])
+                parts.append(part)
+            if parts:
+                out = {"_zid": pdf["_zid"].iloc[keep].values}
+                for f, _ in fields:
+                    out[f] = np.concatenate([p[f] for p in parts])
+                yield pd.DataFrame(out)
+
+    part = joined.mapInPandas(kernel, schema=part_schema)
+    if classes:
+        return (
+            part.groupBy("_zid", "class")
+            .agg(F.sum("n_px").alias("n_px"))
+            .select(F.col("_zid").alias(zone_id_col), "class", "n_px")
+        )
+    return (
+        part.groupBy("_zid")
+        .agg(
+            F.count(F.lit(1)).alias("n_tiles"),
+            F.sum("n_px").alias("n_px"),
+            F.sum("sum_val").alias("sum_val"),
+            F.min("min_val").alias("min_val"),
+            F.max("max_val").alias("max_val"),
+        )
+        .select(
+            F.col("_zid").alias(zone_id_col),
+            "n_tiles",
+            *_MOMENTS,
+            (F.col("sum_val").cast("double") / F.col("n_px").cast("double")).alias(
+                "mean_val"
+            ),
+        )
+    )
+
+
 def zonal_stats(
     tiles: DataFrame,
     zones: DataFrame,
@@ -734,127 +884,23 @@ def zonal_stats(
     """Zonal statistics: per-zone pixel aggregates over a tiled raster —
     the raster-analytics counterpart of ``pip_join`` (vector zones x raster
     pyramid instead of vector points x polygons).  Each zone's bbox is
-    covered onto tiles (reference ``tiles_from_bounds`` semantics), the
-    pixel window of the zone inside each tile is the ``raster_tile_windows``
-    affine-inverse mapping, and the stats run over band ``band`` of every
-    pixel whose cell intersects the zone (window semantics — floor/ceil of
-    the edge offsets, the same rule the compose path uses).
+    covered onto tiles, the pixel window of the zone inside each tile is
+    the ``raster_tile_windows`` affine-inverse mapping, and the stats run
+    over band ``band`` of every pixel whose cell intersects the zone
+    (window semantics — floor/ceil of the edge offsets, the same rule the
+    compose path uses).
 
     Input ``tiles``: (row, col, tile_w, tile_h, bytes) canvases
     (``compose_tiles`` output shape; band count inferred per row from
     ``len(bytes) / (tile_w * tile_h)``).  Input ``zones``: one bbox per
     zone.  Output: one row per zone with >= 1 covered pixel —
-    (zone_id, n_tiles, n_px, sum_val, min_val, max_val, mean_val).
-
-    Scale shape: the zone-window table (zones x covering tiles, native
-    Column math only) BROADCASTS into the tile join, so tile bytes are
-    never shuffled — canvases stream scan -> Arrow kernel exactly once,
-    and the kernel emits 5-int partials per (zone, tile) pair; the only
-    corpus-wide exchange is the final groupBy on zone_id (tiny: one
-    partial per covered pair, partial-agg map side).  A zone overlapping
-    T tiles costs T pair rows, never a canvas copy per zone-pixel.
-    ``max_cover_tiles`` guards runaway zone bboxes (two-stage cover
-    explode).  mean_val = sum/count as one exact IEEE double division.
-    """
-    win = raster_tile_windows(
-        zones.select(zone_id_col, left, bottom, right, top),
-        tp,
-        zoom,
-        fp_left=left,
-        fp_bottom=bottom,
-        fp_right=right,
-        fp_top=top,
-        max_cover_tiles=max_cover_tiles,
-    )
-    win = win.filter((F.col("win_width") > 0) & (F.col("win_height") > 0)).select(
-        F.col(zone_id_col).alias("_zid"),
-        "row",
-        "col",
-        "win_col_off",
-        "win_row_off",
-        "win_width",
-        "win_height",
-    )
-    joined = (
-        tiles.select("row", "col", "tile_w", "tile_h", "bytes")
-        .join(F.broadcast(win), ["row", "col"])
-        .select(
-            "_zid",
-            "tile_w",
-            "tile_h",
-            "bytes",
-            "win_col_off",
-            "win_row_off",
-            "win_width",
-            "win_height",
-        )
-    )
-
-    part_schema = T.StructType(
-        [
-            T.StructField("_zid", zones.schema[zone_id_col].dataType),
-            T.StructField("n_px", T.LongType()),
-            T.StructField("sum_val", T.LongType()),
-            T.StructField("min_val", T.LongType()),
-            T.StructField("max_val", T.LongType()),
-        ]
-    )
-    band_i = int(band)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            tw = pdf["tile_w"].to_numpy()
-            th = pdf["tile_h"].to_numpy()
-            c0 = pdf["win_col_off"].to_numpy()
-            r0 = pdf["win_row_off"].to_numpy()
-            cw = pdf["win_width"].to_numpy()
-            rh = pdf["win_height"].to_numpy()
-            n_px = np.empty(m, dtype=np.int64)
-            s = np.empty(m, dtype=np.int64)
-            mn = np.empty(m, dtype=np.int64)
-            mx = np.empty(m, dtype=np.int64)
-            for i in range(m):
-                v = _band_plane(pdf["bytes"].iat[i], th[i], tw[i], band_i)[
-                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i]
-                ]
-                n_px[i] = v.size
-                s[i] = int(v.sum(dtype=np.int64))
-                mn[i] = int(v.min())
-                mx[i] = int(v.max())
-            yield pd.DataFrame(
-                {
-                    "_zid": pdf["_zid"].values,
-                    "n_px": n_px,
-                    "sum_val": s,
-                    "min_val": mn,
-                    "max_val": mx,
-                }
-            )
-
-    part = joined.mapInPandas(stats, schema=part_schema)
-    return (
-        part.groupBy("_zid")
-        .agg(
-            F.count(F.lit(1)).alias("n_tiles"),
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_val").alias("sum_val"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        )
-        .select(
-            F.col("_zid").alias(zone_id_col),
-            "n_tiles",
-            "n_px",
-            "sum_val",
-            "min_val",
-            "max_val",
-            (F.col("sum_val").cast("double") / F.col("n_px").cast("double")).alias(
-                "mean_val"
-            ),
-        )
+    (zone_id, n_tiles, n_px, sum_val, min_val, max_val, mean_val), with
+    mean_val = sum/count as one exact IEEE double division.  Scale shape:
+    :func:`_zonal` (zone windows broadcast onto the canvas scan, 5-int
+    partials per (zone, tile) pair, one groupBy on zone_id)."""
+    return _zonal(
+        tiles, zones, tp, zoom, zone_id_col, (left, bottom, right, top), band,
+        max_cover_tiles,
     )
 
 
@@ -869,27 +915,26 @@ def zonal_poly_stats(
     band: int = 0,
     max_cover_tiles: Optional[int] = None,
 ) -> DataFrame:
-    """Zonal statistics over CONVEX POLYGON zones — the polygon×raster
-    counterpart of :func:`zonal_stats` (which takes bboxes): a pixel
-    belongs to the zone iff its CENTER passes every half-plane sign test
-    of the CCW vertex ring, ``(x2−x1)·(cy−y1) − (y2−y1)·(cx−x1) ≥ 0``
-    (boundary inclusive).  The test is a fixed IEEE double expression, so
-    numpy, Spark and DuckDB produce bit-identical masks — the oracle
-    needs NO tolerance even though the zones are rotated geometry.
+    """Zonal statistics over POLYGON zones — the polygon×raster counterpart
+    of :func:`zonal_stats` (which takes bboxes): a pixel belongs to the
+    zone iff its CENTER is inside the ring by the even-odd ray-cast of
+    ``pip_join`` (``pip._points_in_prepared``: per edge, a crossing when
+    ``(y0 > cy) != (y1 > cy)`` and ``cx < x0 + (cy-y0)*dx/dy``).  The test
+    is a fixed IEEE double expression, so numpy and DuckDB produce
+    bit-identical masks — the oracle needs NO tolerance even though the
+    zones are rotated geometry.  Boundary pixel centres follow ray-cast
+    parity.
 
     Input ``zones``: (zone_id, poly_x array<double>, poly_y array<double>)
-    — CCW convex ring, no repeated closing vertex; the kernel raises
-    ``ValueError`` on a ring whose signed area is ≤ 0 (clockwise or
-    degenerate) instead of reading it as "no pixels", and on a non-convex
-    ring (a reflex vertex) instead of masking only the intersection of its
-    edge half-planes.  Output and scale shape are identical to
-    zonal_stats: the zone bbox is derived natively from the ring, covers
-    onto tiles via ``raster_tile_windows``, the
-    (zone, tile, window, ring) table BROADCASTS onto the canvas scan —
-    tile bytes never shuffle — and the kernel reduces each window's
-    masked pixels to 5-int partials; one final groupBy on zone_id.  The
-    per-window mask costs E·|window| multiply-adds (E = ring length),
-    vectorized, temporaries window-sized (≤ a few KB)."""
+    — any simple ring, concave or convex, of either orientation, with or
+    without a repeated closing vertex.  A ring with no area raises
+    ``ValueError`` in the kernel instead of reading as "no pixels":
+    poly_x/poly_y of unequal length, fewer than 3 vertices, or a signed
+    area that is not > 0 in absolute value (collinear, or NaN).  Output
+    and scale shape are those of zonal_stats: the zone bbox is derived
+    natively from the ring and :func:`_zonal` carries the ring with each
+    broadcast window; ``n_tiles`` counts the windows with >= 1 pixel
+    inside the ring."""
     xs, ys = F.col(poly_x_col), F.col(poly_y_col)
     zb = zones.select(
         zone_id_col,
@@ -900,149 +945,9 @@ def zonal_poly_stats(
         F.array_max(xs).alias("_zr"),
         F.array_max(ys).alias("_zt"),
     )
-    win = raster_tile_windows(
-        zb,
-        tp,
-        zoom,
-        fp_left="_zl",
-        fp_bottom="_zb",
-        fp_right="_zr",
-        fp_top="_zt",
-        max_cover_tiles=max_cover_tiles,
-    )
-    zoom_i = int(zoom)
-    pxs = float(tp.pixel_x_size(zoom_i))
-    pys = float(tp.pixel_y_size(zoom_i))
-    tsx = float(tp.tile_x_size(zoom_i))
-    tsy = float(tp.tile_y_size(zoom_i))
-    win = win.filter((F.col("win_width") > 0) & (F.col("win_height") > 0)).select(
-        F.col(zone_id_col).alias("_zid"),
-        F.col(poly_x_col).alias("_px_ring"),
-        F.col(poly_y_col).alias("_py_ring"),
-        "row",
-        "col",
-        "win_col_off",
-        "win_row_off",
-        "win_width",
-        "win_height",
-        (F.lit(float(tp.left)) + F.col("col") * F.lit(tsx)).alias("_tleft"),
-        (F.lit(float(tp.top)) - F.col("row") * F.lit(tsy)).alias("_ttop"),
-    )
-    joined = (
-        tiles.select("row", "col", "tile_w", "tile_h", "bytes")
-        .join(F.broadcast(win), ["row", "col"])
-        .select(
-            "_zid",
-            "_px_ring",
-            "_py_ring",
-            "_tleft",
-            "_ttop",
-            "tile_w",
-            "tile_h",
-            "bytes",
-            "win_col_off",
-            "win_row_off",
-            "win_width",
-            "win_height",
-        )
-    )
-    part_schema = T.StructType(
-        [
-            T.StructField("_zid", zones.schema[zone_id_col].dataType),
-            T.StructField("n_px", T.LongType()),
-            T.StructField("sum_val", T.LongType()),
-            T.StructField("min_val", T.LongType()),
-            T.StructField("max_val", T.LongType()),
-        ]
-    )
-    band_i = int(band)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            keep, n_px, s, mn, mx = [], [], [], [], []
-            for i in range(m):
-                r0 = int(pdf["win_row_off"].iat[i])
-                c0 = int(pdf["win_col_off"].iat[i])
-                rh = int(pdf["win_height"].iat[i])
-                cw = int(pdf["win_width"].iat[i])
-                h, w = pdf["tile_h"].iat[i], pdf["tile_w"].iat[i]
-                v = _band_plane(pdf["bytes"].iat[i], h, w, band_i)[
-                    r0 : r0 + rh, c0 : c0 + cw
-                ]
-                # pixel centers in world coords — the EXACT expression the
-                # oracle mirrors: t_left + (pj + 0.5)*px, t_top - (pi + 0.5)*py
-                cx = pdf["_tleft"].iat[i] + (
-                    c0 + np.arange(cw, dtype=np.float64) + 0.5
-                ) * pxs
-                cy = pdf["_ttop"].iat[i] - (
-                    r0 + np.arange(rh, dtype=np.float64) + 0.5
-                ) * pys
-                rx = np.asarray(pdf["_px_ring"].iat[i], dtype=np.float64)
-                ry = np.asarray(pdf["_py_ring"].iat[i], dtype=np.float64)
-                if np.dot(rx, np.roll(ry, -1)) - np.dot(np.roll(rx, -1), ry) <= 0.0:
-                    raise ValueError(
-                        f"zone {pdf['_zid'].iat[i]}: ring is not counter-"
-                        "clockwise (signed area <= 0)"
-                    )
-                # a CCW convex ring turns left at every vertex: a negative
-                # consecutive-edge cross product is a reflex vertex, where
-                # the half-plane test would silently drop pixels
-                ex, ey = np.roll(rx, -1) - rx, np.roll(ry, -1) - ry
-                if np.any(ex * np.roll(ey, -1) - ey * np.roll(ex, -1) < 0.0):
-                    raise ValueError(
-                        f"zone {pdf['_zid'].iat[i]}: ring is not convex "
-                        "(a consecutive-edge cross product is negative)"
-                    )
-                mask = np.ones((rh, cw), dtype=bool)
-                for e in range(len(rx)):
-                    x1, y1 = rx[e], ry[e]
-                    x2, y2 = rx[(e + 1) % len(rx)], ry[(e + 1) % len(ry)]
-                    mask &= (x2 - x1) * (cy[:, None] - y1) - (y2 - y1) * (
-                        cx[None, :] - x1
-                    ) >= 0.0
-                vals = v[mask]
-                if not len(vals):
-                    continue
-                keep.append(i)
-                n_px.append(len(vals))
-                s.append(int(vals.sum(dtype=np.int64)))
-                mn.append(int(vals.min()))
-                mx.append(int(vals.max()))
-            if keep:
-                yield pd.DataFrame(
-                    {
-                        "_zid": pdf["_zid"].iloc[keep].values,
-                        "n_px": np.asarray(n_px, np.int64),
-                        "sum_val": np.asarray(s, np.int64),
-                        "min_val": np.asarray(mn, np.int64),
-                        "max_val": np.asarray(mx, np.int64),
-                    }
-                )
-
-    part = joined.mapInPandas(stats, schema=part_schema)
-    return (
-        part.groupBy("_zid")
-        .agg(
-            F.count(F.lit(1)).alias("n_tiles"),
-            F.sum("n_px").alias("n_px"),
-            F.sum("sum_val").alias("sum_val"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        )
-        .select(
-            F.col("_zid").alias(zone_id_col),
-            "n_tiles",
-            "n_px",
-            "sum_val",
-            "min_val",
-            "max_val",
-            (
-                F.col("sum_val").cast("double") / F.col("n_px").cast("double")
-            ).alias("mean_val"),
-        )
+    return _zonal(
+        tiles, zb, tp, zoom, zone_id_col, ("_zl", "_zb", "_zr", "_zt"), band,
+        max_cover_tiles, ring=(poly_x_col, poly_y_col),
     )
 
 
@@ -1063,90 +968,15 @@ def zonal_class_counts(
     the categorical companion of :func:`zonal_stats` (land-cover
     composition inside each zone: how many pixels of each class code).
     Window semantics, inputs, and the scale shape are identical to
-    zonal_stats — zone windows BROADCAST onto the canvas scan, bytes never
-    shuffle — but the kernel reduces each (zone, tile) window to its
+    zonal_stats, but the kernel reduces each (zone, tile) window to its
     SPARSE bincount (≤256 rows per pair, usually far fewer) instead of
     5-int moments, and the final exchange groups on (zone, class).
 
     Output: (zone_id, class, n_px) — one row per class present in the
     zone; all integers, so the cross-engine oracle is hash-exact."""
-    win = raster_tile_windows(
-        zones.select(zone_id_col, left, bottom, right, top),
-        tp,
-        zoom,
-        fp_left=left,
-        fp_bottom=bottom,
-        fp_right=right,
-        fp_top=top,
-        max_cover_tiles=max_cover_tiles,
-    )
-    win = win.filter((F.col("win_width") > 0) & (F.col("win_height") > 0)).select(
-        F.col(zone_id_col).alias("_zid"),
-        "row",
-        "col",
-        "win_col_off",
-        "win_row_off",
-        "win_width",
-        "win_height",
-    )
-    joined = (
-        tiles.select("row", "col", "tile_w", "tile_h", "bytes")
-        .join(F.broadcast(win), ["row", "col"])
-        .select(
-            "_zid",
-            "tile_w",
-            "tile_h",
-            "bytes",
-            "win_col_off",
-            "win_row_off",
-            "win_width",
-            "win_height",
-        )
-    )
-    part_schema = T.StructType(
-        [
-            T.StructField("_zid", zones.schema[zone_id_col].dataType),
-            T.StructField("class", T.IntegerType()),
-            T.StructField("n_px", T.LongType()),
-        ]
-    )
-    band_i = int(band)
-
-    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            zids, clss, cnts = [], [], []
-            tw = pdf["tile_w"].to_numpy()
-            th = pdf["tile_h"].to_numpy()
-            c0 = pdf["win_col_off"].to_numpy()
-            r0 = pdf["win_row_off"].to_numpy()
-            cw = pdf["win_width"].to_numpy()
-            rh = pdf["win_height"].to_numpy()
-            for i in range(m):
-                v = _band_plane(pdf["bytes"].iat[i], th[i], tw[i], band_i)[
-                    r0[i] : r0[i] + rh[i], c0[i] : c0[i] + cw[i]
-                ]
-                bc = np.bincount(v.ravel(), minlength=256)
-                nz = np.nonzero(bc)[0]
-                zids.append(np.full(len(nz), pdf["_zid"].iat[i]))
-                clss.append(nz.astype(np.int32))
-                cnts.append(bc[nz].astype(np.int64))
-            if zids:
-                yield pd.DataFrame(
-                    {
-                        "_zid": np.concatenate(zids),
-                        "class": np.concatenate(clss),
-                        "n_px": np.concatenate(cnts),
-                    }
-                )
-
-    part = joined.mapInPandas(hist, schema=part_schema)
-    return (
-        part.groupBy("_zid", "class")
-        .agg(F.sum("n_px").alias("n_px"))
-        .select(F.col("_zid").alias(zone_id_col), "class", "n_px")
+    return _zonal(
+        tiles, zones, tp, zoom, zone_id_col, (left, bottom, right, top), band,
+        max_cover_tiles, classes=True,
     )
 
 
@@ -1978,34 +1808,11 @@ def _ccl4(mask: np.ndarray) -> "tuple[np.ndarray, int]":
     return lab, n_runs
 
 
-def _driver_min_label(edges_pdf: "pd.DataFrame") -> "pd.DataFrame":
-    """Vectorized driver-side min-label resolution of an edge list:
-    repeated edge relaxation (np.minimum.at both directions) + pointer
-    jumping until fixpoint — O(E·log diameter) numpy passes, no python
-    loop over edges.  Node ids are sorted ascending so index order ==
-    gid order and the fixpoint label IS the min member gid."""
-    a = edges_pdf["gid_a"].to_numpy(np.int64)
-    b = edges_pdf["gid_b"].to_numpy(np.int64)
-    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ia, ib = inv[: len(a)], inv[len(a):]
-    lbl = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        prev = lbl.copy()
-        np.minimum.at(lbl, ia, lbl[ib])
-        np.minimum.at(lbl, ib, lbl[ia])
-        lbl = np.minimum(lbl, lbl[lbl])
-        if np.array_equal(lbl, prev):
-            break
-    return pd.DataFrame({"gid": nodes, "component": nodes[lbl]})
-
-
 def label_components(
     tiles: DataFrame,
     band: int = 0,
     threshold: int = 128,
     max_iters: int = 25,
-    merge: str = "auto",
-    driver_merge_max: int = 4_000_000,
 ) -> DataFrame:
     """Cross-tile connected-component labeling over a tiled raster — the
     raster→vector "patch extraction" operator (contiguous burned area,
@@ -2036,21 +1843,15 @@ def label_components(
     strips, never canvas bytes, exactly the focal-stats discipline).
     Cross-tile equivalences are two equi-joins of opposing border strips
     on (tile key, offset); the global merge runs on the LABEL graph — one
-    node per local patch, not per pixel — via the same frontier-delta +
-    pointer-doubling label propagation the dedup endgame uses
-    (functions/dedup.connected_components, O(log diameter) rounds), so a
-    component snaking across thousands of tiles converges in ~log₂ rounds
-    of label-table-sized joins.  Final stats are one groupBy on the
-    resolved component id over per-label partials.  Canvas bytes are read
-    exactly once and never shuffled.
-
-    ``merge``: "auto" (default) resolves the label graph DRIVER-SIDE in
-    one vectorized numpy pass when it has ≤ ``driver_merge_max`` edges —
-    the graph is one node per local patch, so even a 600M-pixel corpus
-    yields only ~10⁴–10⁵ edges, and collecting it removes the distributed
-    loop's serial per-round job latency — falling back to the distributed
-    propagation above the threshold; "driver"/"distributed" force a path.
-    Both paths produce identical output (min-gid labeling, pytest-pinned)."""
+    node per local patch, not per pixel — via
+    functions/dedup.connected_components: a graph of at most
+    ``DRIVER_CC_MAX_EDGES`` edges (even a 600M-pixel corpus yields only
+    ~10⁴–10⁵) resolves in one vectorized driver-side numpy pass, a larger
+    one by the frontier-delta + pointer-doubling label propagation
+    (O(log diameter) rounds of label-table-sized joins).  Both paths give
+    the same min-gid labeling (pytest-pinned).  Final stats are one
+    groupBy on the resolved component id over per-label partials.  Canvas
+    bytes are read exactly once and never shuffled."""
     from .functions.dedup import connected_components
 
     band_i = int(band)
@@ -2202,30 +2003,9 @@ def label_components(
         .unionByName(bot.join(top, ["row", "col", "off"]).select("gid_a", "gid_b"))
         .localCheckpoint(eager=False)
     )
-    edges = matched.distinct()
-    # Merge strategy: the label graph has one node per LOCAL PATCH — orders
-    # of magnitude smaller than the pixel data — so up to
-    # ``driver_merge_max`` edges it collects to the driver and resolves in
-    # one vectorized numpy pass (edge relaxation + pointer jumping), which
-    # removes the distributed loop's serial per-round job latency (measured:
-    # the O(log diameter) eager rounds, not the kernels, floored the 2304-
-    # tile wall at ~10s).  Above the threshold — true planet-scale patch
-    # graphs — ``merge="auto"`` falls back to the frontier-delta +
-    # pointer-doubling propagation (functions/dedup.connected_components).
-    if merge not in ("auto", "driver", "distributed"):
-        raise ValueError("merge must be auto|driver|distributed")
-    use_driver = merge == "driver" or (
-        merge == "auto" and edges.limit(driver_merge_max + 1).count() <= driver_merge_max
+    comp = connected_components(matched, "gid_a", "gid_b", max_iters).select(
+        F.col("doc_id").alias("gid"), "component"
     )
-    if use_driver:
-        comp = tiles.sparkSession.createDataFrame(
-            _driver_min_label(edges.toPandas()),
-            "gid long, component long",
-        )
-    else:
-        comp = connected_components(edges, "gid_a", "gid_b", max_iters).select(
-            F.col("doc_id").alias("gid"), "component"
-        )
     cross = (
         matched.join(comp.withColumnRenamed("gid", "gid_a"), "gid_a")
         .groupBy("component")
