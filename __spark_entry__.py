@@ -2292,8 +2292,9 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN top-3 via asymmetric distance
     (similarity.pq_topk): deterministic integer-exact codebooks (subspace
     j's 16 centroids = quantized subvectors of corpus ids j*16..j*16+15),
-    native encode (argmin over struct array_min), broadcast per-query m×k
-    distance tables, candidate distance = 8 table lookups on the code —
+    Arrow encode (argmin per subspace), per-query m×k distance tables
+    broadcast into one map-side ADC scan, candidate distance = 8 table
+    lookups on the code —
     the full PQ pipeline (codebooks, encode, table, ADC sum, ranking) is
     integer arithmetic both engines compute bit-identically, so the DuckDB
     mirror is a complete value oracle, not a rows-only check."""

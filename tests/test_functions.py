@@ -463,6 +463,81 @@ def test_ivf_pq_residual_full_probe_sanity(spark):
     assert len({(r["qid"], r["vec_id"]) for r in one} & top_full) >= 4
 
 
+def _adc_brute(q, codes, tabs, k):
+    """Per query, the k smallest (ADC distance, id) over its candidate ids,
+    itself excluded — tabs[i] is query i's (m, k_cb) table list per cell."""
+    out = {}
+    for qi in range(len(q)):
+        scored = sorted(
+            (int(tab[np.arange(len(tab)), codes[i]].sum()), i)
+            for tab, ids in tabs[qi] for i in ids if i != qi
+        )
+        for rank, (_, i) in enumerate(scored[:k], 1):
+            out[(qi, rank)] = i
+    return out
+
+
+def test_fused_adc_scan_matches_numpy_brute_force(spark):
+    """The fused ADC scan behind pq_topk and ivf_pq_residual_probe equals a
+    numpy brute-force ADC: ids 10-12 copy id 0's vector (equal codes, so a
+    distance tie that straddles the k boundary breaks on the smaller id),
+    every query is also a corpus row (the self-pair is dropped), and tiny
+    Arrow batches make the per-batch top-k merge in the final rank."""
+    rng = np.random.default_rng(5)
+    n, dim, m, kc = 40, 8, 2, 4
+    x = rng.uniform(-1.0, 1.0, (n, dim))
+    x[10:13] = x[0]
+    corpus = spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(n)], "vec_id long, embedding array<double>"
+    ).repartition(3)
+    queries = corpus.filter("vec_id < 6").withColumnRenamed("vec_id", "qid")
+    q = np.floor(x * 1000.0 + 0.5).astype(np.int64)
+    sub = dim // m
+
+    def tables(v, books):
+        return np.stack(
+            [((v[j * sub : (j + 1) * sub][None, :] - books[j]) ** 2).sum(axis=1) for j in range(m)]
+        )
+
+    def encode(v, books):
+        return [int(np.argmin(((v[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1))) for j in range(m)]
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        books = similarity.pq_codebooks(corpus, m=m, k=kc)
+        codes = [encode(q[i], books) for i in range(n)]
+        want = _adc_brute(q[:6], codes, [[(tables(q[i], books), range(n))] for i in range(6)], 3)
+        got = {
+            (r["qid"], r["rank"]): r["vec_id"]
+            for r in similarity.pq_topk(queries, corpus, books, k=3).collect()
+        }
+        assert got == want
+        # 10, 11 and 12 tie at ranks 2-4: the k=3 cut keeps the smaller ids
+        assert [got[(0, r)] for r in (2, 3)] == [10, 11]
+
+        cq = similarity.det_coarse_centroids(corpus, 4)
+        rbooks = similarity.pq_residual_codebooks(corpus, cq, m=m, k=kc)
+        cd = ((q[:, None, :] - cq[None, :, :]) ** 2).sum(axis=2)
+        cell = np.argmin(cd, axis=1)
+        rcodes = [encode(q[i] - cq[cell[i]], rbooks) for i in range(n)]
+        probes = np.argsort(cd, axis=1, kind="stable")[:, :2]
+        want = _adc_brute(q[:6], rcodes, [
+            [(tables(q[i] - cq[c], rbooks), np.flatnonzero(cell == c)) for c in probes[i]]
+            for i in range(6)
+        ], 2)
+        index = similarity.with_ivf_pq_residual(
+            corpus.select("vec_id", F.col("embedding").alias("_cv")), rbooks, cq, "_cv"
+        )
+        got = {
+            (r["qid"], r["rank"]): r["vec_id"]
+            for r in similarity.ivf_pq_residual_probe(queries, index, rbooks, cq, k=2, nprobe=2).collect()
+        }
+        assert got == want
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
 def test_connected_components_chain_and_clusters(spark):
     """Transitive chain a-b-c closes into one component; disjoint clusters
     stay separate; survivors = component representatives + unpaired docs."""

@@ -211,6 +211,77 @@ def test_rects_intersect_touch_counts():
     assert got == [True, False, False, True]
 
 
+def _ref_segments_intersect_rects(coords, rects):
+    """Per-edge reference of the slab clip: one segment at a time."""
+    import numpy as np
+
+    l, b, r, t = rects
+    out = np.zeros(len(l), dtype=bool)
+    for i in range(len(coords) - 1):
+        x0, y0 = coords[i]
+        x1, y1 = coords[i + 1]
+        cand = (l <= max(x0, x1)) & (r >= min(x0, x1)) & (b <= max(y0, y1)) & (t >= min(y0, y1))
+        dx, dy = x1 - x0, y1 - y0
+        if dx == 0 and dy == 0:
+            out |= cand & (x0 >= l) & (x0 <= r) & (y0 >= b) & (y0 <= t)
+            continue
+        u0, u1, ok = np.zeros(len(l)), np.ones(len(l)), cand.copy()
+        for p, q in ((-dx, x0 - l), (dx, r - x0), (-dy, y0 - b), (dy, t - y0)):
+            if p == 0:
+                ok &= q >= 0
+            elif p < 0:
+                u0 = np.where(ok, np.maximum(u0, q / p), u0)
+            else:
+                u1 = np.where(ok, np.minimum(u1, q / p), u1)
+        out |= ok & (u0 <= u1)
+    return out
+
+
+def _ref_rect_centres_in_rings(rings, rects):
+    """Per-edge reference of the centre ray-cast: XOR one crossing at a time."""
+    import numpy as np
+
+    l, b, r, t = rects
+    px, py = (l + r) * 0.5, (b + t) * 0.5
+    inside = np.zeros(len(l), dtype=bool)
+    for ring in rings:
+        for j in range(len(ring) - 1):
+            (x0, y0), (x1, y1) = ring[j], ring[j + 1]
+            cond = (y0 > py) != (y1 > py)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
+            inside ^= cond & (px < xint)
+    return inside
+
+
+@pytest.mark.parametrize("n_rects", [7, 3000, 40000])
+def test_rect_kernels_match_per_edge_reference(n_rects):
+    """The blocked (edges x rects) rect kernels equal their per-edge loops
+    bit for bit: coordinates on a coarse lattice make edges touch rect
+    sides and corners exactly, a repeated vertex makes a point segment,
+    and the rect counts span one block, several rect blocks and edge
+    blocks of one edge."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    for trial in range(4):
+        n = 60
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        rad = rng.integers(4, 20, n) / 2.0
+        ring = np.column_stack([np.round(rad * np.cos(ang) * 4) / 4, np.round(rad * np.sin(ang) * 4) / 4])
+        ring[5] = ring[4]  # a point segment
+        ring = geomkernels._close_ring(ring)
+        hole = geomkernels._close_ring(np.array([[0.0, 0.0], [1.5, 0.0], [1.5, 1.5], [0.0, 1.5]]))
+        lo = rng.integers(-48, 48, (2, n_rects)) / 4.0
+        size = rng.integers(0, 12, (2, n_rects)) / 4.0
+        rects = (lo[0], lo[1], lo[0] + size[0], lo[1] + size[1])
+        for coords in (ring, hole):
+            got = geomkernels._segments_intersect_rects(coords, rects)
+            assert np.array_equal(got, _ref_segments_intersect_rects(coords, rects)), trial
+        got = geomkernels._rect_corners_in_polygon([ring, hole], rects)
+        assert np.array_equal(got, _ref_rect_centres_in_rings([ring, hole], rects)), trial
+
+
 def test_rects_intersection_area():
     import numpy as np
 

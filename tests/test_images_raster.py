@@ -1455,6 +1455,23 @@ def test_zonal_poly_stats_rejects_ring_without_area(spark, geodetic, ring, msg):
         raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
 
 
+def test_zonal_poly_stats_rejects_ring_without_area_off_the_tiles(spark, geodetic):
+    """Rings are checked before the canvas join: a collinear ring whose
+    windows (tile (3, 4)) meet no tile in ``tiles`` still raises."""
+    from tilematrix_spark import raster
+
+    tiles = spark.createDataFrame(
+        [(2, 4, 256, 256, bytearray(256 * 256))],
+        "row long, col long, tile_w int, tile_h int, bytes binary",
+    )
+    zones = spark.createDataFrame(
+        [(1, [-157.0, -156.5, -156.0], [70.0, 70.5, 71.0])],
+        "zone_id long, poly_x array<double>, poly_y array<double>",
+    )
+    with pytest.raises(ValueError, match="ring has no area"):
+        raster.zonal_poly_stats(tiles, zones, geodetic, 5).collect()
+
+
 def test_zonal_majority_two_class_and_tie(spark, geodetic):
     """Majority semantics on a controlled canvas: the dominant class wins
     inside the zone window; an exact tie picks the SMALLEST class code;

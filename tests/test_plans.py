@@ -345,12 +345,23 @@ def test_strip_boilerplate_broadcasts_boiler_set(spark):
     assert "SortMergeJoin LeftAnti" not in plan
 
 
-def test_ivf_pq_residual_probe_broadcast_native_adc(spark):
-    """Residual IVFADC probe: the per-(query, probed-cell) table side is
-    BROADCAST onto the cell equi-join (never a corpus-wide sort-merge),
-    and the ADC ranking after the join is pure native element_at adds —
-    the only Python in the pipeline is the two Arrow encode kernels,
-    upstream of the join."""
+def _nodes(plan: str, name: str) -> int:
+    """Number of ``name`` nodes in a formatted plan (its detail headers)."""
+    return sum(
+        1 for line in plan.splitlines() if line.startswith("(") and f") {name}" in line
+    )
+
+
+_JOINS = ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+          "BroadcastNestedLoopJoin", "CartesianProduct")
+
+
+def test_ivf_pq_residual_probe_fused_adc_scan(spark):
+    """Residual IVFADC probe: the per-(query, cell) ADC tables ride a
+    broadcast into ONE map-side scan over the index codes — no join on the
+    index side (a per-query table joined onto candidate rows costs
+    table bytes x candidates), one MapInArrow, and the index encode as the
+    only Arrow UDF."""
     from tilematrix_spark.functions import similarity as simfns
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -359,13 +370,73 @@ def test_ivf_pq_residual_probe_broadcast_native_adc(spark):
     )
     out = simfns.ivf_pq_residual_topk(queries, emb, n_centroids=8, nprobe=2, k=3)
     plan = _plan(out)
-    assert "BroadcastHashJoin" in plan
+    assert not any(_nodes(plan, j) for j in _JOINS), plan
+    assert _nodes(plan, "MapInArrow") == 1
+    assert _nodes(plan, "ArrowEvalPython") <= 1
     assert "SortMergeJoin" not in plan
-    # exactly the two Arrow encode kernels (index-side cell+codes, query-
-    # side per-cell tables) and nothing row-at-a-time: the ADC distance and
-    # ranking above the join are therefore pure JVM expressions
-    assert plan.count("ArrowEvalPython") == 2
     assert "BatchEvalPython" not in plan
+
+
+def test_ivf_pq_residual_probe_prunes_cell_partitions(spark, tmp_path):
+    """On the cell-partitioned index that ``jobs/ann_index_job.py`` commits,
+    the topk probe's literal ``_cell IN (probed cells)`` filter reaches the
+    scan as a partition filter: unprobed cells are never read."""
+    import argparse
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import ann_index_job
+
+    from tilematrix_spark.functions import similarity as simfns
+    from tilematrix_spark.io import TableIO
+
+    out = str(tmp_path / "annidx")
+    args = argparse.Namespace(
+        input="/root/testdata/sf0.001/embeddings.parquet", output=out,
+        id_col="vec_id", vec_col="embedding", m=8, k=16, n_centroids=8,
+        nprobe=2, topk=3, n_queries=4,
+    )
+    ann_index_job.run(spark, args)
+    io = TableIO(spark)
+    cq = simfns.int_centroids_from_rows(io.read(os.path.join(out, "stage=centroids")))
+    books = simfns.codebooks_from_rows(io.read(os.path.join(out, "stage=codebooks")))
+    emb = spark.read.parquet(args.input)
+    queries = emb.filter(F.col("vec_id") < args.n_queries).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    probe = simfns.ivf_pq_residual_probe(
+        queries, io.read(os.path.join(out, "stage=index")), books, cq,
+        k=args.topk, nprobe=args.nprobe,
+    )
+    scan = [
+        line for line in _plan(probe).splitlines()
+        if line.startswith("PartitionFilters:")
+    ]
+    assert len(scan) == 1 and "_cell" in scan[0] and " IN (" in scan[0], scan
+    assert probe.count() == args.n_queries * args.topk
+
+
+def test_simhash_one_md5_per_token(spark):
+    """SimHash: the token hashes are one bound array column, so the plan
+    holds exactly ONE md5 — the 16 bit votes fold over that array instead
+    of re-hashing every token once per bit."""
+    from tilematrix_spark.functions import dedup as dedupfns
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    assert _plan(dedupfns.simhash_buckets(docs)).count("md5(") == 1
+
+
+def test_minhash_refine_without_shingle_join(spark):
+    """MinHash verified pairs: the refine scores candidate pairs by set
+    intersection of their shingle arrays — no join keyed on a shingle."""
+    from tilematrix_spark.functions import dedup as dedupfns
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(dedupfns.minhash_verified_pairs(docs))
+    keys = [line for line in plan.splitlines() if " keys [" in line]
+    assert keys and not any("shingle" in line for line in keys), keys
+    assert "array_intersect(" in plan
 
 
 def test_scrub_pii_pure_projection(spark):

@@ -11,7 +11,7 @@ Scale shapes:
   exploded shingles (no H× shuffles), band hashes = md5 of concatenated
   signature slices, candidate pairs join per band.  All md5-string-based →
   byte-identical in the DuckDB oracle.
-* SimHash: 16-bit portable variant (functions/text.py) — near-dups share
+* SimHash: 16-bit portable variant, one md5 per token — near-dups share
   bucket when Hamming distance ≤ radius via precomputed bit-flip explode.
 * embedding cosine: see functions/similarity.py.
 """
@@ -52,7 +52,8 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
-def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(_id, _sh): each doc's distinct shingle array."""
     # two-step: tokens materialized as a bound column BEFORE the shingle
     # transform — prevents Catalyst from inlining the tokenizer into every
     # element_at (quadratic blowup; see shingles_from_tokens docstring)
@@ -60,8 +61,12 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
         F.col(id_col).alias("_id"),
         textfns.tokens(textfns.normalize(text_col)).alias("_toks"),
     )
-    return toks.select(
-        "_id", F.explode(textfns.shingles_from_tokens(F.col("_toks"), n)).alias("shingle")
+    return toks.select("_id", textfns.shingles_from_tokens(F.col("_toks"), n).alias("_sh"))
+
+
+def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    return _shingle_arrays(df, id_col, text_col, n).select(
+        "_id", F.explode("_sh").alias("shingle")
     )
 
 
@@ -214,12 +219,20 @@ def minhash_verified_pairs(
     blocking, then EXACT Jaccard verification computed only on the candidate
     pairs (filter-refine — the same two-phase discipline as the spatial
     join).  At scale the shingle self-join of ``ngram_jaccard_pairs`` is
-    quadratic in hot shingles; here the exact join touches only
-    |candidates| × doc-shingles rows.  Returns (id_a, id_b, jaccard ≥ τ)."""
+    quadratic in hot shingles; here the refine touches only the candidate
+    pairs.  Returns (id_a, id_b, jaccard ≥ τ).
+
+    The per-doc shingle arrays are checkpointed once; the signature pass
+    explodes them and the refine reads them whole.  Each candidate pair is
+    scored as a set intersection, ``common = size(array_intersect(a, b))``
+    over ``jaccard = common / (size(a) + size(b) - common)`` — the arrays
+    are distinct, so these are exactly the shingle-join counts, without a
+    shingle-level join or a separate per-doc count aggregation."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     rows_per_band = num_hashes // bands
-    sh = _shingle_table(df, id_col, text_col, n).localCheckpoint(eager=False)
+    arrs = _shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
+    sh = arrs.select("_id", F.explode("_sh").alias("shingle"))
     proj, aggs = _minhash_projected(sh, num_hashes)
     sigs = proj.groupBy("_id").agg(*aggs)
     band_cols = []
@@ -240,28 +253,29 @@ def minhash_verified_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # exact refine on candidates only: common-shingle counts via two joins
-    # (the candidate side is the small side — broadcast)
-    sa = sh.select(F.col("_id").alias("id_a"), "shingle")
-    sb = sh.select(F.col("_id").alias("id_b"), "shingle")
-    common = (
+    # exact refine on candidates only (the candidate side is the small
+    # side — broadcast); explode(array(common)) is a Generate barrier, so
+    # the intersection runs once per pair instead of being inlined into
+    # the join condition by the threshold filter
+    sa = arrs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa"))
+    sb = arrs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb"))
+    scored = (
         F.broadcast(cands)
         .join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_common"))
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size("_sa").alias("_na"),
+            F.size("_sb").alias("_nb"),
+            F.explode(F.array(F.size(F.array_intersect("_sa", "_sb")))).alias("_common"),
+        )
     )
-    counts = sh.groupBy("_id").agg(F.count("*").alias("_n_sh"))
-    ca = counts.select(F.col("_id").alias("id_a"), F.col("_n_sh").alias("_na"))
-    cb = counts.select(F.col("_id").alias("id_b"), F.col("_n_sh").alias("_nb"))
     jac = F.col("_common").cast("double") / (
         F.col("_na") + F.col("_nb") - F.col("_common")
     )
-    return (
-        common.join(F.broadcast(ca), "id_a")
-        .join(F.broadcast(cb), "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return scored.filter(jac >= threshold).select(
+        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
     )
 
 
@@ -421,12 +435,40 @@ def dedup_cluster_survivors(
     return df.join(losers, id_col, "left_anti")
 
 
+def _simhash_vote(mask: int):
+    return lambda acc, x: acc + F.when(x.bitwiseAND(F.lit(mask)) > 0, F.lit(1)).otherwise(F.lit(-1))
+
+
 def simhash_buckets(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, simhash16) — group identical 16-bit sketches for near-dup
-    blocking; Hamming-≤1 matching = explode 17 bit-flips and self-join."""
-    return df.select(F.col(id_col), textfns.simhash16(text_col).alias("simhash"))
+    """(id, simhash) — a 16-bit SimHash over the normalized whitespace
+    tokens, for near-dup blocking; Hamming-≤1 matching = explode 17
+    bit-flips and self-join (``simhash_near_pairs``).
+
+    Token t's 16-bit hash is the first 4 hex chars of md5(t); bit b of the
+    sketch (weight ``1 << (15-b)``) is set iff more tokens have that hash
+    bit set than clear — small on purpose so the SQL oracle mirrors the
+    per-bit vote table exactly.  The tokens and their hashes are bound
+    columns in their own projections, so each token is hashed once; md5
+    inside each vote would run 16 times per token (projection collapse).
+    No lambda nests another (the nested-lambda corruption trap)."""
+    toks = df.select(
+        F.col(id_col), textfns.tokens(textfns.normalize(text_col)).alias("_toks")
+    )
+    hashed = toks.select(
+        F.col(id_col),
+        F.transform(
+            "_toks", lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("int")
+        ).alias("_h"),
+    )
+    sketch = None
+    for b in range(16):
+        mask = 1 << (15 - b)
+        votes = F.aggregate("_h", F.lit(0), _simhash_vote(mask))
+        bit = F.when(votes > 0, F.lit(mask)).otherwise(F.lit(0))
+        sketch = bit if sketch is None else sketch + bit
+    return hashed.select(F.col(id_col), sketch.cast("int").alias("simhash"))
 
 
 def simhash_near_pairs(

@@ -15,12 +15,20 @@ Every approximate stack runs on integer-quantized vectors
   cells per query, exact cosine re-rank inside the probed cells.
 * ``pq_codebooks`` / ``with_pq_codes`` / ``pq_topk``: exhaustive product
   quantization (Jégou et al. 2011) — m-byte codes instead of raw vectors,
-  asymmetric distance (ADC) top-k over a broadcast query table.
-* ``ivf_pq_residual_topk``: IVFADC — IVF cells on the same integer coarse
-  quantizer plus PQ codes of the residuals (Jégou et al. 2011 §IV); the
-  committed index layout of ``annstore`` and ``jobs/ann_index_job.py``.
+  asymmetric distance (ADC) top-k.
+* ``ivf_pq_residual_topk`` / ``ivf_pq_residual_probe``: IVFADC — IVF cells
+  on the same integer coarse quantizer plus PQ codes of the residuals
+  (Jégou et al. 2011 §IV); the committed index layout of ``annstore`` and
+  ``jobs/ann_index_job.py``.
 * ``cosine_dup_pairs`` / ``semantic_dedup``: embedding near-dup pairs.
 * ``with_unit_quant`` / ``retrieval_recall``: bit-exact retrieval evaluation.
+
+Both ADC paths share one fused map-side scan (``_adc_scan``): the query
+tables are built on the driver in one numpy pass (the query side must fit
+there), broadcast once, and a single ``mapInArrow`` over the index codes
+keeps each batch's top-k per query; only that ≤ k-row partial per query and
+batch reaches the final rank.  No per-query table is joined onto candidate
+rows.
 """
 
 from __future__ import annotations
@@ -200,6 +208,21 @@ def lsh_topk(
     )
 
 
+def _quantize(mat: np.ndarray) -> np.ndarray:
+    """The portable integer quantization ``floor(v*1000 + 0.5)`` as int64."""
+    return np.floor(mat * PORTABLE_SCALE + 0.5).astype(np.int64)
+
+
+def _first_quantized(corpus: DataFrame, n: int, id_col: str, vec_col: str) -> np.ndarray:
+    """int64 (n, dim): the quantized vectors of the first ``n`` corpus rows
+    in id order — the positional source of every deterministic quantizer
+    and codebook here."""
+    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n).collect()
+    if len(rows) < n:
+        raise ValueError(f"corpus must have >= {n} vectors")
+    return _quantize(np.asarray([r[1] for r in rows], dtype=np.float64))
+
+
 def det_coarse_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -214,11 +237,7 @@ def det_coarse_centroids(
     Lloyd-trained quantizer plugs into the same encode/probe paths —
     quantize its centroids with the same floor rule — at the cost of the
     oracle.)  Returns int64 (n_centroids, dim)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-    if len(rows) < n_centroids:
-        raise ValueError(f"corpus must have >= {n_centroids} vectors")
-    x = np.asarray([r[1] for r in rows], dtype=np.float64)
-    return np.floor(x * PORTABLE_SCALE + 0.5).astype(np.int64)
+    return _first_quantized(corpus, n_centroids, id_col, vec_col)
 
 
 def _int_cell_dists(q: np.ndarray, cents_q: np.ndarray) -> np.ndarray:
@@ -347,19 +366,17 @@ def pq_codebooks(
     bit-exactly and every PQ distance downstream is integer-exact across
     engines.  (A Lloyd-refined codebook plugs into the same encode/ADC
     path at the cost of the value oracle.)  Returns int64 (m, k, dim//m)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(m * k).collect()
-    if len(rows) < m * k:
-        raise ValueError(f"corpus must have >= {m * k} vectors")
-    x = np.asarray([r[1] for r in rows], dtype=np.float64)
-    q = np.floor(x * PORTABLE_SCALE + 0.5).astype(np.int64)
+    return _books(_first_quantized(corpus, m * k, id_col, vec_col), m, k)
+
+
+def _books(q: np.ndarray, m: int, k: int) -> np.ndarray:
+    """(m, k, dim//m): subspace j's centroids are the j-th subvectors of
+    rows ``j*k .. (j+1)*k - 1`` of ``q``."""
     dim = q.shape[1]
     if dim % m:
         raise ValueError("dim must be divisible by m")
     sub = dim // m
-    books = np.empty((m, k, sub), dtype=np.int64)
-    for j in range(m):
-        books[j] = q[j * k : (j + 1) * k, j * sub : (j + 1) * sub]
-    return books
+    return np.stack([q[j * k : (j + 1) * k, j * sub : (j + 1) * sub] for j in range(m)])
 
 
 def _pq_sub_dists(q: np.ndarray, books: np.ndarray, j: int) -> np.ndarray:
@@ -432,12 +449,11 @@ def pq_topk(
     corpus-side scan is over m-byte codes (compression ∝ 4·dim/m),
     per-candidate cost is m integer adds; at cluster scale the probe
     composes with IVF cells over residual codes (``ivf_pq_residual_topk``).
-    The per-query m×k table
-    is one integer matmul per subspace (Arrow kernel) and rides a
-    localCheckpoint barrier — inlined, Catalyst's projection collapse
-    would re-evaluate the table kernel once per CANDIDATE instead of once
-    per query (the CLAUDE.md element_at trap); the ADC sum itself is m
-    native element_at lookups, JVM-side.
+
+    The one-cell case of the fused ADC scan (``_adc_scan``): the query
+    tables are built on the driver in one numpy pass and broadcast, and a
+    single ``mapInArrow`` over the encoded corpus keeps each batch's top-k
+    per query.  The query side must fit on the driver (it is collected).
 
     Integer-exact end to end (deterministic codebooks + quantized inputs),
     so a DuckDB oracle mirrors encode, table, ADC sums, and ranking
@@ -445,51 +461,128 @@ def pq_topk(
     rank)."""
     cb = with_pq_codes(
         corpus.select(F.col(corpus_id), F.col(c_vec).alias("_cv")), books, "_cv"
-    ).select(corpus_id, "codes")
-    qd = pq_query_tables(queries, books, query_id, q_vec)
-    cands = F.broadcast(qd).crossJoin(cb)
-    return _adc_topk(cands, books.shape[0], k, query_id, corpus_id)
+    ).select(corpus_id, "codes", F.lit(0).alias("_cell"))
+    qids, q = _query_side(queries, books, query_id, q_vec)
+    tables = {0: (np.arange(len(q)), _adc_tables(q, books))}
+    return _adc_scan(cb, queries.schema[query_id].dataType, qids, tables, k, query_id, corpus_id)
 
 
-def pq_query_tables(
-    queries: DataFrame,
-    books: np.ndarray,
-    query_id: str = "qid",
-    q_vec: str = "embedding",
+def _adc_tables(q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m, k) int64 ADC tables: row i's exact squared distances of its
+    j-th subvector to subspace j's centroids."""
+    return np.stack([_pq_sub_dists(q, books, j) for j in range(books.shape[0])], axis=1)
+
+
+def _query_side(queries: DataFrame, books: np.ndarray, query_id: str, q_vec: str):
+    """(ids, int64 (n, dim) quantized vectors) of the collected queries."""
+    rows = queries.select(query_id, q_vec).collect()
+    dim = books.shape[0] * books.shape[2]
+    vecs = np.asarray([r[1] for r in rows], dtype=np.float64).reshape(len(rows), dim)
+    return np.asarray([r[0] for r in rows]), _quantize(vecs)
+
+
+#: elements per (rows, queries) distance temporary in the ADC scan — 128 KB
+#: of int64 (the multi-worker mmap/TLB discipline)
+_ADC_ELEMS = 16384
+
+_NO_DIST = np.iinfo(np.int64).max
+
+
+def _adc_scan(
+    index: DataFrame,
+    q_type: T.DataType,
+    qids: np.ndarray,
+    tables: dict,
+    k: int,
+    query_id: str,
+    corpus_id: str,
 ) -> DataFrame:
-    """(_qid, _tab): per-query m×k ADC distance table — one integer matmul
-    per subspace per Arrow batch, pinned by localCheckpoint so the kernel
-    runs once per query, never once per candidate (projection collapse)."""
-    m = books.shape[0]
-    bks = books
+    """The fused map-side ADC scan behind ``pq_topk`` and
+    ``ivf_pq_residual_probe``: (query_id, corpus_id, rank) top-k by
+    (ADC distance, corpus id).
 
-    @F.pandas_udf(T.ArrayType(T.ArrayType(T.LongType())))
-    def table_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        q = np.floor(mat * PORTABLE_SCALE + 0.5).astype(np.int64)
-        tabs = np.stack([_pq_sub_dists(q, bks, j) for j in range(m)], axis=1)
-        return pd.Series(tabs.tolist())  # (n, m, k)
+    ``index`` carries ``corpus_id, codes, _cell``; ``tables`` maps a cell
+    to ``(qpos, tabs)`` — the positions in ``qids`` of the queries probing
+    it and their (len(qpos), m, k) tables.  The tables ride one broadcast, and one
+    ``mapInArrow`` over the index computes ``D = Σ_j tab[:, j, codes[:, j]]``
+    for every probed cell in the batch, drops self-pairs and keeps the
+    batch's top-k per query (ties at the k-th distance kept).  The final
+    ``row_number`` then ranks at most batches·k rows per query.  No
+    per-query table is ever joined onto candidate rows: that join shipped
+    m·k longs per candidate, where this ships the tables once per
+    executor."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return (
-        queries.select(F.col(query_id).alias("_qid"), F.col(q_vec).alias("_qv"))
-        .select("_qid", table_udf(F.col("_qv")).alias("_tab"))
-        .localCheckpoint(eager=False)
+    slim = index.select(corpus_id, "codes", "_cell")
+    # per cell, (m, k, n_q) so each subspace lookup gathers contiguous rows
+    bc = index.sparkSession.sparkContext.broadcast(
+        (qids, {c: (qpos, np.ascontiguousarray(t.transpose(1, 2, 0))) for c, (qpos, t) in tables.items()})
     )
+    out_schema = T.StructType(
+        [
+            T.StructField("_qid", q_type),
+            T.StructField(corpus_id, index.schema[corpus_id].dataType),
+            T.StructField("_dist", T.LongType()),
+        ]
+    )
+    arrow_schema = to_arrow_schema(out_schema)
 
+    def scan(batches):
+        all_qids, by_cell = bc.value
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ids = batch.column(0)
+            idn = ids.to_numpy(zero_copy_only=False)
+            codes = batch.column(1).flatten().to_numpy().reshape(n, -1)
+            cells = batch.column(2).to_numpy()
+            got_q, got_d, got_r = [], [], []
+            for c in np.unique(cells):
+                probe = by_cell.get(int(c))
+                if probe is None:
+                    continue
+                qpos, tabs = probe
+                cq = all_qids[qpos]
+                rows = np.flatnonzero(cells == c)
+                step = max(64, _ADC_ELEMS // len(qpos))
+                for lo in range(0, len(rows), step):
+                    rr = rows[lo : lo + step]
+                    cc = codes[rr]
+                    d = tabs[0][cc[:, 0]]  # (rows, queries)
+                    for j in range(1, len(tabs)):
+                        d += tabs[j][cc[:, j]]
+                    self_pair = idn[rr][:, None] == cq[None, :]
+                    d[self_pair] = _NO_DIST
+                    keep = ~self_pair
+                    if len(rr) > k:
+                        keep &= d <= np.partition(d, k - 1, axis=0)[k - 1][None, :]
+                    ri, qi = np.nonzero(keep)
+                    got_q.append(qpos[qi])
+                    got_d.append(d[ri, qi])
+                    got_r.append(rr[ri])
+            if not got_q:
+                continue
+            qp, dist, row = (np.concatenate(a) for a in (got_q, got_d, got_r))
+            # the batch's top-k per query by (distance, corpus id)
+            order = np.lexsort((np.unique(idn[row], return_inverse=True)[1], dist, qp))
+            qs = qp[order]
+            first = np.r_[True, qs[1:] != qs[:-1]]
+            start = np.maximum.accumulate(np.where(first, np.arange(len(qs)), 0))
+            take = order[np.arange(len(qs)) - start < k]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(all_qids[qp[take]], type=arrow_schema.field(0).type),
+                    ids.take(pa.array(row[take])),
+                    pa.array(dist[take], type=pa.int64()),
+                ],
+                schema=arrow_schema,
+            )
 
-def _adc_topk(cands: DataFrame, m: int, k: int, query_id: str, corpus_id: str) -> DataFrame:
-    """ADC distance (m native element_at lookups) + (distance, id) rank
-    over candidate rows carrying (_qid, _tab, codes, corpus_id)."""
-    dist = None
-    for j in range(m):
-        term = F.element_at(
-            F.element_at(F.col("_tab"), j + 1), F.element_at("codes", j + 1) + 1
-        )
-        dist = term if dist is None else dist + term
     win = Window.partitionBy("_qid").orderBy(F.asc("_dist"), F.col(corpus_id).asc())
     return (
-        cands.filter(F.col("_qid") != F.col(corpus_id))
-        .withColumn("_dist", dist)
+        slim.mapInArrow(scan, schema=out_schema)
         .withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(F.col("_qid").alias(query_id), F.col(corpus_id), "rank")
@@ -513,22 +606,13 @@ def pq_residual_codebooks(
     codes at nprobe < n_centroids.  Integer end to end (quantized inputs,
     integer centroids), positional row selection — SQL-mirrorable.
     Returns int64 (m, k, dim//m)."""
-    rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(m * k).collect()
-    if len(rows) < m * k:
-        raise ValueError(f"corpus must have >= {m * k} vectors")
-    x = np.asarray([r[1] for r in rows], dtype=np.float64)
-    q = np.floor(x * PORTABLE_SCALE + 0.5).astype(np.int64)
-    dim = q.shape[1]
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
+    return _residual_books(_first_quantized(corpus, m * k, id_col, vec_col), cents_q, m, k)
+
+
+def _residual_books(q: np.ndarray, cents_q: np.ndarray, m: int, k: int) -> np.ndarray:
     # stable argmin == (distance, cell-id) tie order, same as the SQL mirror
     cell = np.argmin(_int_cell_dists(q, cents_q), axis=1)
-    r = q - cents_q[cell]
-    sub = dim // m
-    books = np.empty((m, k, sub), dtype=np.int64)
-    for j in range(m):
-        books[j] = r[j * k : (j + 1) * k, j * sub : (j + 1) * sub]
-    return books
+    return _books(q - cents_q[cell], m, k)
 
 
 def with_ivf_pq_residual(
@@ -580,55 +664,6 @@ def with_ivf_pq_residual(
     )
 
 
-def pq_residual_query_tables(
-    queries: DataFrame,
-    books: np.ndarray,
-    cents_q: np.ndarray,
-    nprobe: int,
-    query_id: str = "qid",
-    q_vec: str = "embedding",
-) -> DataFrame:
-    """Query-side IVFADC probe prep: one row per (query, probed cell) with
-    the m×k ADC table of the query's RESIDUAL against that cell — the
-    per-cell table is what makes residual ADC asymmetric-exact on the
-    coarse term.  Probed cells = nprobe nearest integer cells, ties →
-    smaller cell id.  Pinned by localCheckpoint (projection-collapse
-    barrier, the pq_query_tables discipline)."""
-    m, k, sub = books.shape
-    bks, cq = books, cents_q
-
-    @F.pandas_udf(
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("cell", T.IntegerType()),
-                    T.StructField("tab", T.ArrayType(T.ArrayType(T.LongType()))),
-                ]
-            )
-        )
-    )
-    def tables_udf(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        q = np.floor(mat * PORTABLE_SCALE + 0.5).astype(np.int64)
-        order = _nearest_cells(q, cq, nprobe)
-        out = []
-        for i in range(len(q)):
-            per_cell = []
-            for cell in order[i]:
-                r = (q[i] - cq[cell])[None, :]
-                tab = np.stack([_pq_sub_dists(r, bks, j)[0] for j in range(m)])
-                per_cell.append({"cell": int(cell), "tab": tab.tolist()})
-            out.append(per_cell)
-        return pd.Series(out)
-
-    return (
-        queries.select(F.col(query_id).alias("_qid"), F.col(q_vec).alias("_qv"))
-        .select("_qid", F.explode(tables_udf(F.col("_qv"))).alias("_pc"))
-        .select("_qid", F.col("_pc.cell").alias("_cell"), F.col("_pc.tab").alias("_tab"))
-        .localCheckpoint(eager=False)
-    )
-
-
 def ivf_pq_residual_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -655,11 +690,14 @@ def ivf_pq_residual_topk(
     residuals, codebooks, codes, per-cell tables, ADC sums, ranking — is
     integer arithmetic both engines compute bit-identically, so the PRUNED
     regime itself has a full DuckDB value oracle (sql_ivf_pq_residual_topk),
-    not just the full-probe degenerate case.  Scale shape: candidate
-    volume ∝ nprobe/n_centroids, scan touches codes only, per-query work =
-    nprobe small matmuls.  Returns (query_id, corpus_id, rank)."""
-    cents_q = det_coarse_centroids(corpus, n_centroids, corpus_id, c_vec)
-    books = pq_residual_codebooks(corpus, cents_q, m, k_cb, corpus_id, c_vec)
+    not just the full-probe degenerate case.  The centroids and the
+    codebooks come from ONE read of the first ``max(n_centroids, m·k_cb)``
+    rows.  Scale shape: one encode pass over the corpus, then the fused ADC
+    scan of ``ivf_pq_residual_probe`` (the query side must fit on the
+    driver).  Returns (query_id, corpus_id, rank)."""
+    first = _first_quantized(corpus, max(n_centroids, m * k_cb), corpus_id, c_vec)
+    cents_q = first[:n_centroids]
+    books = _residual_books(first[: m * k_cb], cents_q, m, k_cb)
     index = with_ivf_pq_residual(
         corpus.select(F.col(corpus_id), F.col(c_vec).alias("_cv")), books, cents_q, "_cv"
     )
@@ -681,16 +719,28 @@ def ivf_pq_residual_probe(
 ) -> DataFrame:
     """Probe a PREBUILT residual IVFADC index (columns ``corpus_id, _cell,
     codes`` — e.g. the committed output of ``jobs/ann_index_job.py``,
-    plus any ``annstore`` deltas): per probed cell the query carries the
-    ADC table of ITS residual vs that cell, so the join on the cell key
-    delivers table/candidate pairs that are residual-consistent by
-    construction.  The serve-side half of the pipeline — the index is
-    built once, probes touch only matching cell partitions.  No dedup
-    needed: each corpus vector lives in exactly one cell and a query's
-    probe list is distinct, so a pair joins at most once."""
-    qd = pq_residual_query_tables(queries, books, cents_q, nprobe, query_id, q_vec)
-    cands = F.broadcast(qd).join(index, "_cell").drop("_cell")
-    return _adc_topk(cands, books.shape[0], k, query_id, corpus_id)
+    plus any ``annstore`` deltas).  The serve-side half of the pipeline:
+    the index is built once, probes touch only the probed cells.
+
+    The query side is collected to the driver (it must fit there): one
+    numpy pass picks each query's ``nprobe`` nearest integer cells (ties →
+    smaller cell id) and builds the (nprobe, m, k) ADC tables of its
+    RESIDUAL vs each probed cell — the per-cell table is what makes
+    residual ADC asymmetric-exact on the coarse term — grouped by cell.
+    The index is filtered with a literal ``_cell IN (probed cells)``, so
+    a cell-partitioned index prunes partitions, and the fused ADC scan
+    (``_adc_scan``) ranks the codes map-side.  Each corpus vector lives in
+    exactly one cell and a query's probe list is distinct, so a pair is
+    scored at most once."""
+    qids, q = _query_side(queries, books, query_id, q_vec)
+    probes = _nearest_cells(q, cents_q, nprobe)  # (n, nprobe)
+    resid = (q[:, None, :] - cents_q[probes]).reshape(-1, q.shape[1])
+    tabs = _adc_tables(resid, books)  # (n·nprobe, m, k), row-major in probes
+    flat = probes.ravel()
+    qpos = np.repeat(np.arange(len(q)), probes.shape[1])
+    tables = {int(c): (qpos[flat == c], tabs[flat == c]) for c in np.unique(flat)}
+    probed = index.filter(F.col("_cell").isin(sorted(tables)))
+    return _adc_scan(probed, queries.schema[query_id].dataType, qids, tables, k, query_id, corpus_id)
 
 
 def cosine_dup_pairs(

@@ -142,29 +142,6 @@ def shingles(text: ColumnOrName, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(normalize(text)), n)
 
 
-def simhash16(text: ColumnOrName) -> Column:
-    """16-bit SimHash over whitespace tokens using the first 4 hex chars of
-    each token's md5 — small on purpose so the SQL oracle can mirror the
-    per-bit CASE table exactly."""
-    toks = tokens(normalize(text))
-    bits = []
-    for b in range(16):
-        hex_pos = b // 4 + 1  # 1-based md5 hex char
-        bit_in_nibble = 3 - (b % 4)
-        mask = 1 << bit_in_nibble
-
-        def contrib(t, mask=mask, hex_pos=hex_pos):
-            nibble = F.conv(F.substring(F.md5(t), hex_pos, 1), 16, 10).cast("int")
-            return F.when(nibble.bitwiseAND(F.lit(mask)) > 0, F.lit(1)).otherwise(F.lit(-1))
-
-        total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + contrib(t))
-        bits.append(F.when(total > 0, F.lit(1 << (15 - b))).otherwise(F.lit(0)))
-    out = bits[0]
-    for bcol in bits[1:]:
-        out = out + bcol
-    return out.cast("int")
-
-
 def top_terms(
     df,
     id_col: str = "doc_id",

@@ -165,54 +165,58 @@ def _points_in_rects(px: float, py: float, rects: Rects) -> np.ndarray:
     return (px >= l) & (px <= r) & (py >= b) & (py <= t)
 
 
+#: elements per (edges, rects) temporary in the rect kernels — 128 KB of
+#: float64 (the multi-worker mmap/TLB discipline)
+_EDGE_RECT_ELEMS = 16384
+
+
+def _edge_rect_chunks(n_edges: int, n_rects: int):
+    """(edge slice, rect slice) blocks whose products stay within
+    ``_EDGE_RECT_ELEMS``."""
+    rc = max(1, min(n_rects, _EDGE_RECT_ELEMS))
+    ec = max(1, _EDGE_RECT_ELEMS // rc)
+    for r0 in range(0, n_rects, rc):
+        for e0 in range(0, n_edges, ec):
+            yield slice(e0, e0 + ec), slice(r0, r0 + rc)
+
+
 def _segments_intersect_rects(coords: np.ndarray, rects: Rects) -> np.ndarray:
     """True per rect if any polyline segment intersects the (closed) rect.
 
-    Liang-Barsky style slab clipping of each segment against all rects at
-    once — loop over segments (small axis), vectorize over rects (big axis).
+    Liang-Barsky style slab clipping of every segment against every rect,
+    evaluated in (edges, rects) blocks.  A degenerate (point) segment has
+    all four slab coefficients 0, so the clip reduces to the closed
+    point-in-rect test.
     """
     l, b, r, t = rects
     out = np.zeros(len(l), dtype=bool)
-    for i in range(len(coords) - 1):
-        x0, y0 = coords[i]
-        x1, y1 = coords[i + 1]
-        seg_minx, seg_maxx = min(x0, x1), max(x0, x1)
-        seg_miny, seg_maxy = min(y0, y1), max(y0, y1)
-        cand = ~out & (l <= seg_maxx) & (r >= seg_minx) & (b <= seg_maxy) & (t >= seg_miny)
-        if not cand.any():
-            continue
-        dx, dy = x1 - x0, y1 - y0
-        if dx == 0 and dy == 0:
-            out |= cand & _points_in_rects(x0, y0, rects)
-            continue
+    x0, y0 = coords[:-1, 0, None], coords[:-1, 1, None]
+    x1, y1 = coords[1:, 0, None], coords[1:, 1, None]
+    for es, rs in _edge_rect_chunks(len(x0), len(l)):
+        ex0, ey0, ex1, ey1 = x0[es], y0[es], x1[es], y1[es]
+        L, B, R, T = l[None, rs], b[None, rs], r[None, rs], t[None, rs]
+        ok = (
+            (L <= np.maximum(ex0, ex1)) & (R >= np.minimum(ex0, ex1))
+            & (B <= np.maximum(ey0, ey1)) & (T >= np.minimum(ey0, ey1))
+        )
+        dx, dy = ex1 - ex0, ey1 - ey0
         # parametric clip p + u*d, u in [0,1]
-        u0 = np.zeros(len(l))
-        u1 = np.ones(len(l))
-        ok = cand.copy()
-        for p_coef, q0, q1 in (
-            (-dx, x0 - l, None),
-            (dx, None, r - x0),
-            (-dy, y0 - b, None),
-            (dy, None, t - y0),
-        ):
-            if q0 is not None:
-                q = q0
-                p = p_coef
-            else:
-                q = q1
-                p = p_coef
-            if p == 0:
-                ok &= q >= 0
-            elif p < 0:
-                u0 = np.where(ok, np.maximum(u0, q / p), u0)
-            else:
-                u1 = np.where(ok, np.minimum(u1, q / p), u1)
-        out |= ok & (u0 <= u1)
+        u0 = np.zeros(ok.shape)
+        u1 = np.ones(ok.shape)
+        for p, q in ((-dx, ex0 - L), (dx, R - ex0), (-dy, ey0 - B), (dy, T - ey0)):
+            ok &= (p != 0) | (q >= 0)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                u = q / p
+            u0 = np.where(p < 0, np.maximum(u0, u), u0)
+            u1 = np.where(p > 0, np.minimum(u1, u), u1)
+        out[rs] |= (ok & (u0 <= u1)).any(axis=0)
     return out
 
 
 def _rect_corners_in_polygon(rings: Sequence[np.ndarray], rects: Rects) -> np.ndarray:
-    """Even-odd ray-cast of each rect's center point against all rings.
+    """Even-odd ray-cast of each rect's center point against all rings,
+    evaluated in (edges, rects) blocks; the parity of the summed crossings
+    is their XOR.
 
     Only needs to be correct for strictly-interior points: boundary contact
     is already caught by the segment-rect test.
@@ -220,20 +224,17 @@ def _rect_corners_in_polygon(rings: Sequence[np.ndarray], rects: Rects) -> np.nd
     l, b, r, t = rects
     px = (l + r) * 0.5
     py = (b + t) * 0.5
-    inside = np.zeros(len(l), dtype=bool)
+    crossings = np.zeros(len(l), dtype=np.int64)
     for ring in rings:
-        xs = ring[:, 0]
-        ys = ring[:, 1]
-        x0, y0 = xs[:-1], ys[:-1]
-        x1, y1 = xs[1:], ys[1:]
-        for j in range(len(x0)):
-            cond = (y0[j] > py) != (y1[j] > py)
-            if not np.any(cond):
-                continue
-            xint = x0[j] + (py - y0[j]) * (x1[j] - x0[j]) / (y1[j] - y0[j])
-            crossing = cond & (px < xint)
-            inside ^= crossing
-    return inside
+        x0, y0 = ring[:-1, 0, None], ring[:-1, 1, None]
+        x1, y1 = ring[1:, 0, None], ring[1:, 1, None]
+        for es, rs in _edge_rect_chunks(len(x0), len(l)):
+            cx, cy = px[None, rs], py[None, rs]
+            cond = (y0[es] > cy) != (y1[es] > cy)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                xint = x0[es] + (cy - y0[es]) * (x1[es] - x0[es]) / (y1[es] - y0[es])
+            crossings[rs] += (cond & (cx < xint)).sum(axis=0)
+    return (crossings & 1).astype(bool)
 
 
 def _close_ring(ring: Sequence) -> np.ndarray:

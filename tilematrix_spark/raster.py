@@ -738,10 +738,8 @@ def _classes(v: np.ndarray) -> dict:
     return {"class": nz.astype(np.int32), "n_px": bc[nz].astype(np.int64)}
 
 
-def _ring_mask(rx, ry, zid, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
-    """(len(cy), len(cx)) even-odd ray-cast mask of the pixel centres
-    ``cx x cy`` against one ring — ``pip._points_in_prepared``, so any
-    simple ring of either orientation works.  A ring with no area raises."""
+def _check_ring(rx, ry, zid) -> None:
+    """Raise ``ValueError`` unless (rx, ry) is a ring with area."""
     rx = np.asarray(rx, dtype=np.float64)
     ry = np.asarray(ry, dtype=np.float64)
     if len(rx) != len(ry) or len(rx) < 3:
@@ -751,6 +749,13 @@ def _ring_mask(rx, ry, zid, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
         )
     if not abs(np.dot(rx, np.roll(ry, -1)) - np.dot(np.roll(rx, -1), ry)) > 0.0:
         raise ValueError(f"zone {zid}: ring has no area (signed area is 0 or NaN)")
+
+
+def _ring_mask(rx, ry, cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
+    """(len(cy), len(cx)) even-odd ray-cast mask of the pixel centres
+    ``cx x cy`` against one ring (checked by ``_check_ring``) —
+    ``pip._points_in_prepared``, so any simple ring of either orientation
+    works."""
     ring = geomkernels._close_ring(np.column_stack([rx, ry]))
     xs = np.broadcast_to(cx, (len(cy), len(cx))).ravel()
     ys = np.repeat(cy, len(cx))
@@ -828,8 +833,7 @@ def _zonal(
                     # the oracle mirrors
                     cx = pdf["_tl"].iat[i] + (c0 + np.arange(cw, dtype=np.float64) + 0.5) * pxs
                     cy = pdf["_tt"].iat[i] - (r0 + np.arange(rh, dtype=np.float64) + 0.5) * pys
-                    zid = pdf["_zid"].iat[i]
-                    v = v[_ring_mask(pdf["_rx"].iat[i], pdf["_ry"].iat[i], zid, cx, cy)]
+                    v = v[_ring_mask(pdf["_rx"].iat[i], pdf["_ry"].iat[i], cx, cy)]
                     if not v.size:
                         continue
                 part = reduce(v)
@@ -927,14 +931,18 @@ def zonal_poly_stats(
 
     Input ``zones``: (zone_id, poly_x array<double>, poly_y array<double>)
     — any simple ring, concave or convex, of either orientation, with or
-    without a repeated closing vertex.  A ring with no area raises
-    ``ValueError`` in the kernel instead of reading as "no pixels":
-    poly_x/poly_y of unequal length, fewer than 3 vertices, or a signed
-    area that is not > 0 in absolute value (collinear, or NaN).  Output
+    without a repeated closing vertex.  Every ring is checked on the
+    driver before the canvas join (the zones are collected; they are
+    broadcast anyway), so a ring with no area raises ``ValueError`` even
+    where none of its windows meets a tile, instead of reading as "no
+    pixels": poly_x/poly_y of unequal length, fewer than 3 vertices, or a
+    signed area that is not > 0 in absolute value (collinear, or NaN).  Output
     and scale shape are those of zonal_stats: the zone bbox is derived
     natively from the ring and :func:`_zonal` carries the ring with each
     broadcast window; ``n_tiles`` counts the windows with >= 1 pixel
     inside the ring."""
+    for zid, rx, ry in zones.select(zone_id_col, poly_x_col, poly_y_col).collect():
+        _check_ring(rx, ry, zid)
     xs, ys = F.col(poly_x_col), F.col(poly_y_col)
     zb = zones.select(
         zone_id_col,
