@@ -683,11 +683,10 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ring-DOUBLING kNN path made gate-visible: a sparse point set
+    """The wide-radius kNN path made gate-visible: a sparse point set
     (~1 point per 40 z6 tiles) cannot satisfy k=3 inside ring 1, so the
-    disc radius doubles across multiple driver rounds before the
-    k-th-distance guarantee terminates — value-gated against the same
-    brute-force oracle as the dense case."""
+    density-bounded search disc spans many tiles around each query —
+    value-gated against the same brute-force oracle as the dense case."""
     pts = _events(spark, sf_dir).filter(F.col("event_id") % 53 == 0).select(
         F.col("event_id").alias("pid"), "lon", "lat"
     )
@@ -5475,9 +5474,8 @@ GEOM_TILES_MODES = tagged_union("mode", _COVER, [
     ("exact", q_geom_tiles_exact, sql_geom_tiles_exact, _COVER_SRC),
 ])
 
-# O30 kNN, BOTH termination regimes: the dense z4 ring-1 path and the
-# sparse z6 ring-DOUBLING path (disc radius doubles across driver rounds
-# before the k-th-distance guarantee fires).
+# O30 kNN, BOTH search-radius regimes: the dense z4 path (a disc of a few
+# tiles) and the sparse z6 path (a disc spanning many tiles).
 KNN_MODES = tagged_union("mode", [("qid", "long"), ("pid", "long"), ("rank", "int")], [
     ("dense", q_knn, sql_knn, ["qid", "pid", "rank"]),
     ("sparse", q_knn_sparse, sql_knn_sparse, ["qid", "pid", "rank"]),

@@ -1,5 +1,7 @@
 """Point-assignment, salted aggregation, and kNN join vs brute-force oracle."""
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tilematrix_spark.operators import assign, hierarchy, knn
@@ -89,6 +91,26 @@ def test_disc_tiles_matches_k_ring(spark, geodetic):
         assert a == b
 
 
+def test_start_radius_matches_disc_count_loop():
+    # the prefix-sum bisection equals the least radius whose disc, counted
+    # tile by tile (rows clamp, columns wrap on global grids), holds k points
+    rng = np.random.default_rng(5)
+    for (mh, mw), is_global in [((4, 4), True), ((5, 8), True), ((3, 7), False), ((6, 2), False)]:
+        counts = rng.integers(0, 2, (mh, mw)) * rng.integers(0, 3, (mh, mw))
+        for k in (1, 3, int(counts.sum()) + 1):
+            got = knn._start_radius(counts, k, is_global)
+            for r, c in np.ndindex(mh, mw):
+                for rad in range(max(mh, mw)):
+                    rows = range(max(r - rad, 0), min(r + rad, mh - 1) + 1)
+                    if is_global:
+                        cols = {(c + d) % mw for d in range(-rad, rad + 1)}
+                    else:
+                        cols = range(max(c - rad, 0), min(c + rad, mw - 1) + 1)
+                    if sum(counts[i, j] for i in rows for j in cols) >= k:
+                        break
+                assert got[r, c] == rad, (mh, mw, is_global, k, r, c)
+
+
 def test_knn_matches_brute_force(spark, geodetic):
     queries = _points_df(spark, 23, "q").withColumnRenamed("qid", "qid")
     points = _points_df(spark, 400, "p").withColumnRenamed("pid", "pid")
@@ -99,14 +121,29 @@ def test_knn_matches_brute_force(spark, geodetic):
     assert g == o
 
 
-def test_knn_sparse_points(spark, geodetic):
-    # fewer points than k and far away: expansion must terminate and return all
-    queries = _points_df(spark, 3, "q")
-    points = spark.createDataFrame(
-        [(0, 10.0, 10.0), (1, -120.0, 45.0)], "pid long, lon double, lat double"
-    )
-    got = knn.knn_join(queries, points, geodetic, zoom=5, k=5, query_id="qid", point_id="pid")
-    oracle = knn.knn_brute_force(queries, points, geodetic, k=5, query_id="qid", point_id="pid")
+@pytest.mark.parametrize(
+    "grid, zoom, k", [("geodetic", 5, 5), ("mercator", 2, 1), ("mercator", 2, 2)]
+)
+def test_knn_sparse_points(spark, request, grid, zoom, k):
+    tp = request.getfixturevalue(grid)
+    if grid == "geodetic":
+        # fewer points than k and far away: the search must cover the matrix
+        queries = _points_df(spark, 3, "q")
+        rows = [(0, 10.0, 10.0), (1, -120.0, 45.0)]
+    else:
+        # square 4x4 matrix: the nearest point to a row-0 query sits in row
+        # 3, outside a disc that already spans every column (2r+1 >= 4)
+        w, h = tp.tile_x_size(zoom), tp.tile_y_size(zoom)
+        queries = spark.createDataFrame(
+            [(0, tp.left + 0.5 * w, tp.top - h + 1)], "qid long, lon double, lat double"
+        )
+        rows = [
+            (1, tp.left + 2.5 * w, tp.top - 3 * h + 1),
+            (2, tp.left + 0.5 * w, tp.top - 3 * h - 1),
+        ]
+    points = spark.createDataFrame(rows, "pid long, lon double, lat double")
+    got = knn.knn_join(queries, points, tp, zoom=zoom, k=k, query_id="qid", point_id="pid")
+    oracle = knn.knn_brute_force(queries, points, tp, k=k, query_id="qid", point_id="pid")
     g = {(r["qid"], r["rank"]): r["pid"] for r in got.collect()}
     o = {(r["qid"], r["rank"]): r["pid"] for r in oracle.collect()}
     assert g == o

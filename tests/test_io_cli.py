@@ -4,12 +4,15 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from tilematrix_spark.io import PyramidJob, TableIO
 from tilematrix_spark.operators import assign
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_pyramid_job_resume(spark, geodetic, tmp_path):
@@ -61,7 +64,7 @@ def test_write_counted_matches_readback(spark, tmp_path):
 def _tmx(*args):
     return subprocess.run(
         [sys.executable, "-m", "tilematrix_spark.cli", *args],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
 
 
@@ -231,7 +234,7 @@ def test_ann_update_job_incremental_append(spark, tmp_path):
     import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, str(REPO / "jobs"))
     import ann_index_job
 
     from tilematrix_spark import annstore
@@ -302,7 +305,7 @@ def test_ann_compact_concurrent_append_exactly_once(spark, tmp_path, monkeypatch
     import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, str(REPO / "jobs"))
     import ann_index_job
 
     from tilematrix_spark import annstore
@@ -358,7 +361,7 @@ def test_ann_residual_index_build_and_append(spark, tmp_path):
     import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, str(REPO / "jobs"))
     import ann_index_job
 
     from tilematrix_spark import annstore
@@ -428,7 +431,7 @@ def test_ann_gc_and_drift_monitor(spark, tmp_path):
     import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, str(REPO / "jobs"))
     import ann_index_job
 
     from tilematrix_spark import annstore

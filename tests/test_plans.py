@@ -35,29 +35,39 @@ def test_assign_plan_prunes_and_codegens(spark, geodetic):
     assert sum(1 for line in plan.splitlines() if line.startswith("(") and ") Exchange" in line) == 2
 
 
-def test_knn_plan_broadcasts_query_side(spark, geodetic):
+def test_knn_plan_one_density_collect_then_broadcast(spark, geodetic):
+    """Building ``knn_join`` launches no more jobs than its one density
+    collect (a z6 ``groupBy(row, col).count().collect()``), and the returned
+    plan joins the point table against a broadcast ring side, never by a
+    sort-merge shuffle."""
     pts = spark.createDataFrame(
         [(i, float(i % 170 - 85), float(i % 80 - 40)) for i in range(200)],
         "pid long, lon double, lat double",
     )
-    q = pts.limit(5).withColumnRenamed("pid", "qid")
-    out = knn.knn_join(q, pts, geodetic, zoom=3, k=2, query_id="qid", point_id="pid")
-    # the ring side must be broadcast: the point table never shuffles for
-    # the join itself (driver loop already ran; assert on a fresh round)
-    from tilematrix_spark.operators import hierarchy
+    q = pts.filter(F.col("pid") % 40 == 3).withColumnRenamed("pid", "qid")
+    sc = spark.sparkContext
 
-    ring = hierarchy.disc_tiles(
-        assign.with_tile(q.select("qid", "lon", "lat"), geodetic, 3, out_tile_id=None),
-        geodetic, radius=1, zoom=3,
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            return build(), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    _, density_jobs = jobs(
+        "knn_plan_density",
+        lambda: assign.with_tile(pts, geodetic, 6).groupBy("row", "col").count().collect(),
     )
-    p = assign.with_tile(pts, geodetic, 3, out_tile_id=None).withColumnRenamed(
-        "row", "prow"
-    ).withColumnRenamed("col", "pcol")
-    joined = F.broadcast(ring).join(
-        p, (F.col("ring_row") == F.col("prow")) & (F.col("ring_col") == F.col("pcol"))
+    out, build_jobs = jobs(
+        "knn_plan_build",
+        lambda: knn.knn_join(q, pts, geodetic, zoom=6, k=3, query_id="qid", point_id="pid"),
     )
-    assert "BroadcastHashJoin" in _plan(joined)
-    assert out.count() > 0
+    assert 0 < build_jobs <= density_jobs
+    plan = _plan(out)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert out.count() == 3 * q.count()
 
 
 def test_pip_plan_broadcasts_polygon_index(spark, geodetic):

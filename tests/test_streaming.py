@@ -287,8 +287,9 @@ def test_incremental_ann_sink_exactly_once(spark, tmp_path):
     delta; the stream namespace is separate from manual batches."""
     import argparse
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
     import ann_index_job
 
     from tilematrix_spark import annstore

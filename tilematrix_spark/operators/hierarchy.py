@@ -128,7 +128,7 @@ def k_ring(
 def disc_tiles(
     df: DataFrame,
     tp: PyramidConfig,
-    radius: int,
+    radius: Union[int, Column],
     zoom: exprs.ZoomLike = "zoom",
     row: ColumnOrName = "row",
     col: ColumnOrName = "col",
@@ -136,7 +136,8 @@ def disc_tiles(
 ) -> DataFrame:
     """All tiles within Chebyshev distance ``radius`` (center included) via
     ``sequence`` explodes — O(1) plan size regardless of radius, unlike the
-    literal-offset ``k_ring`` (use that for small fixed rings).  Rows clamp
+    literal-offset ``k_ring`` (use that for small fixed rings).  ``radius``
+    may be a per-row Column (kNN's planned search radius).  Rows clamp
     to the matrix; columns wrap on global grids (dedup'd when the disc is
     wider than the matrix)."""
     mh = exprs.matrix_height(tp, zoom)

@@ -1,29 +1,20 @@
-"""kNN lookup via k-ring tile expansion — the north-star join operator.
+"""kNN lookup via a density-bounded tile disc — the north-star join operator.
 
 Generalizes the reference's ``get_neighbors`` ring (``_tile.py:209-272``) to
-an iterative disc expansion: for each query point, candidate partners are the
-rows indexed in tiles within Chebyshev ring radius r; r doubles until the
-k-th nearest candidate is provably closer than any point outside the
-searched disc (d_k ≤ r · min(tile_w, tile_h) — the disc extends at least r
-tile widths beyond the query's own tile edge), or the disc covers the whole
-matrix.
-
-Execution shape per round (all DataFrame-API):
-  pending queries → k_ring explode (native) → equi-join on (row, col)
-  against the tile-indexed point table → windowed top-k per query.
-The ring side (queries × ring tiles) is the small side and is broadcast
-when it fits; the point table never moves — the join is a map-side lookup.
-Dense-tile skew on the point side is pre-broken by the tile index itself at
-sufficient zoom; for hot tiles AQE skew-split is the backstop.
-
-Driver-side loop = the engine's iterate primitive (Spark has none); each
-round is one job over only the still-pending queries (anti-join).
+a disc planned from grid-cell counts (Distributed Stream KNN Join, SIGMOD
+2021).  Per-tile point counts give each query tile r0, the least Chebyshev
+radius whose disc holds k points, so d_k ≤ D, the distance from the query to
+the farthest corner of disc(r0).  Every point outside disc(R), R = floor(D /
+min(tile_w, tile_h)) + 1, is strictly farther than D, so one pass suffices:
+disc(R) explode → broadcast equi-join on (row, col) against the tile-indexed
+point table (which never moves) → windowed top-k per query.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import json
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,6 +30,41 @@ def _dist(tp: PyramidConfig):
     return F.sqrt(dx * dx + dy * dy)
 
 
+def _start_radius(counts: np.ndarray, k: int, is_global: bool) -> np.ndarray:
+    """Per tile, the least Chebyshev radius whose disc holds >= k points of
+    ``counts`` (rows clamp, columns wrap on global grids, as in
+    ``hierarchy.disc_tiles``)."""
+    mh, mw = counts.shape
+    r_max = max(mh, mw) - 1
+    wide = np.hstack([counts, counts]) if is_global else counts
+    pre = np.zeros((mh + 1, wide.shape[1] + 1), np.int64)
+    pre[1:, 1:] = wide.cumsum(0).cumsum(1)
+    rows, cols = np.indices(counts.shape)
+
+    def disc_count(r):
+        r_lo, r_hi = np.maximum(rows - r, 0), np.minimum(rows + r, mh - 1) + 1
+        if is_global:
+            c_lo = (cols - r) % mw
+            c_hi = c_lo + np.minimum(2 * r + 1, mw)
+        else:
+            c_lo, c_hi = np.maximum(cols - r, 0), np.minimum(cols + r, mw - 1) + 1
+        return pre[r_hi, c_hi] - pre[r_lo, c_hi] - pre[r_hi, c_lo] + pre[r_lo, c_lo]
+
+    # bisection on the monotone disc count (r_max, the whole matrix, if none holds k)
+    lo, hi = np.zeros(counts.shape, np.int64), np.full(counts.shape, r_max)
+    for _ in range(r_max.bit_length()):
+        mid = (lo + hi) // 2
+        ok = disc_count(mid) >= k
+        hi, lo = np.where(ok, mid, hi), np.where(ok, lo, mid + 1)
+    return hi
+
+
+def _tile_array(values: np.ndarray, ddl: str):
+    # one JSON string literal, folded by the optimizer into an array constant:
+    # F.lit(ndarray) makes one py4j call per element (~0.6 s at 8192 tiles)
+    return F.from_json(F.lit(json.dumps(values.ravel().tolist())), ddl)
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -51,100 +77,72 @@ def knn_join(
     qy: str = "lat",
     px: str = "lon",
     py: str = "lat",
-    max_radius: Optional[int] = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Return (query_id, point_id, dist, rank) with rank ≤ k per query.
 
-    ``points`` is tile-indexed at ``zoom`` internally; pre-index and persist
-    it for repeated lookups.  Distance is planar Euclidean in CRS units with
-    antimeridian x-wrap on global grids.  Ties break on (dist, point_id) —
-    deterministic.
+    ``points`` is tile-indexed at ``zoom`` internally and read twice (the
+    density collect, then the join): cache it when its source is costly to
+    rescan.  Distance is planar Euclidean in CRS units with antimeridian
+    x-wrap on global grids.  Ties break on (dist, point_id) — deterministic.
+
+    Driver contract: building the result runs one collect, of the non-empty
+    tiles at ``zoom`` with their point counts; their prefix sums form a dense
+    ``matrix_height × matrix_width`` int64 array (64 KB at geodetic z6), and
+    the per-tile counts and start radii ride the plan as two array constants
+    of the same shape.  Everything else runs when the result is consumed.
     """
-    w = tp.tile_x_size(zoom)
-    h = tp.tile_y_size(zoom)
-    guarantee = min(w, h)
+    w, h = tp.tile_x_size(zoom), tp.tile_y_size(zoom)
     mw, mh = tp.matrix_width(zoom), tp.matrix_height(zoom)
-    max_r = max(mw, mh)
-    if max_radius is not None:
-        max_r = min(max_r, max_radius)
+    span = tp.right - tp.left
 
     q = assign.with_tile(
         queries.select(F.col(query_id), F.col(qx).alias("_qx"), F.col(qy).alias("_qy")),
         tp, zoom, "_qx", "_qy", out_tile_id=None,
     )
-    p = (
-        assign.with_tile(
-            points.select(F.col(point_id), F.col(px).alias("_px"), F.col(py).alias("_py")),
-            tp, zoom, "_px", "_py", out_tile_id=None,
-        )
-        .withColumnRenamed("row", "_prow")
-        .withColumnRenamed("col", "_pcol")
-        # probed by every ring round: persist the tile-indexed point table
-        # once instead of rescanning + re-assigning the source per round
-        # (the operator-internal version of the "pre-index and persist"
-        # advice above; MEMORY_AND_DISK default spills safely at scale)
-        .persist()
+    p = assign.with_tile(
+        points.select(F.col(point_id), F.col(px).alias("_px"), F.col(py).alias("_py")),
+        tp, zoom, "_px", "_py", out_row="_prow", out_col="_pcol", out_tile_id=None,
     )
 
-    round_results = []
-    pending = q
-    r = 1
-    while True:
-        ring = hierarchy.disc_tiles(pending, tp, radius=r, zoom=zoom).select(
-            query_id, "_qx", "_qy", "ring_row", "ring_col"
-        )
-        left = F.broadcast(ring) if broadcast_queries else ring
-        joined = left.join(
-            p,
-            (F.col("ring_row") == F.col("_prow")) & (F.col("ring_col") == F.col("_pcol")),
-            "inner",
-        )
-        scored = joined.withColumn("dist", _dist(tp))
-        win = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
-        # persisted: reused by the done-check, the result emit, and the
-        # pending anti-join — otherwise the ring join recomputes 3x per round
-        topk = (
-            scored.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select(query_id, point_id, "dist", "rank")
-        ).persist()
-        # a query is DONE when it has k hits whose k-th distance fits the
-        # guarantee radius, or when the disc already spans the whole matrix
-        whole_matrix = (2 * r + 1) >= max(mw, mh)
-        final_round = whole_matrix or r >= max_r
-        per_q = topk.groupBy(query_id).agg(
-            F.count("*").alias("_hits"), F.max("dist").alias("_dk")
-        )
-        if final_round:
-            done_q = per_q.select(query_id)
-        else:
-            done_q = per_q.filter(
-                (F.col("_hits") >= k) & (F.col("_dk") <= F.lit(float(r) * guarantee))
-            ).select(query_id)
-        # winners are checkpointed eagerly per round (k rows per done query —
-        # small), so this round's cached topk can be released as soon as the
-        # pending set for the next round is materialized: peak storage stays
-        # one round's topk + the point table, independent of round count
-        done_rows = topk.join(F.broadcast(done_q), query_id, "left_semi").localCheckpoint(
-            eager=True
-        )
-        round_results.append(done_rows)
-        if final_round:
-            topk.unpersist()
-            break
-        pending = pending.join(F.broadcast(done_q), query_id, "left_anti").localCheckpoint(
-            eager=True
-        )
-        topk.unpersist()
-        if pending.isEmpty():
-            break
-        r *= 2
-    results = round_results[0]
-    for extra in round_results[1:]:
-        results = results.unionByName(extra)
-    p.unpersist()
-    return results
+    counts = np.zeros((mh, mw), np.int64)
+    for r, c, n in p.groupBy("_prow", "_pcol").count().collect():
+        counts[r, c] = n
+    r0_by_tile = _tile_array(_start_radius(counts, k, tp.is_global), "array<int>")
+    count_by_tile = _tile_array(counts, "array<long>")
+
+    qxc, qyc, row, col = F.col("_qx"), F.col("_qy"), F.col("row"), F.col("col")
+    r0 = F.get(r0_by_tile, (row * mw + col).cast("int"))
+    # D: query to the farthest corner of disc(r0), x distance wrapped
+    dx = F.greatest(qxc - (tp.left + (col - r0) * w), tp.left + (col + r0 + 1) * w - qxc)
+    if tp.is_global:
+        dx = F.least(dx, F.lit(span / 2))
+    r_lo, r_hi = F.greatest(row - r0, F.lit(0)), F.least(row + r0, F.lit(mh - 1))
+    dy = F.greatest(tp.top - r_lo * h - qyc, qyc - (tp.top - (r_hi + 1) * h))
+    q = q.withColumn("_d", F.sqrt(dx * dx + dy * dy))
+    radius = F.floor(F.col("_d") / min(w, h)).cast("long") + 1
+
+    # drop ring tiles that hold no point or whose rect is farther than D
+    rdx = F.abs(qxc - (tp.left + (F.col("ring_col") + 0.5) * w))
+    if tp.is_global:
+        rdx = F.least(rdx, span - rdx)
+    gx = F.greatest(rdx - w / 2, F.lit(0.0))
+    gy = F.greatest(F.abs(qyc - (tp.top - (F.col("ring_row") + 0.5) * h)) - h / 2, F.lit(0.0))
+    ring = (
+        hierarchy.disc_tiles(q, tp, radius=radius, zoom=zoom)
+        .filter(F.get(count_by_tile, (F.col("ring_row") * mw + F.col("ring_col")).cast("int")) > 0)
+        .filter(gx * gx + gy * gy <= F.col("_d") * F.col("_d"))
+        .select(query_id, "_qx", "_qy", "ring_row", "ring_col")
+    )
+    joined = F.broadcast(ring).join(
+        p, (F.col("ring_row") == F.col("_prow")) & (F.col("ring_col") == F.col("_pcol"))
+    )
+    win = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
+    return (
+        joined.withColumn("dist", _dist(tp))
+        .withColumn("rank", F.row_number().over(win))
+        .filter(F.col("rank") <= k)
+        .select(query_id, point_id, "dist", "rank")
+    )
 
 
 def knn_brute_force(
