@@ -190,35 +190,56 @@ def test_compose_tiles_single_image_window_matches_resample(spark):
     assert checked > 50
 
 
-def test_compose_tiles_salted_hot_path_byte_identical(spark):
-    """The salted two-stage (hot) compose path must produce byte-identical
-    canvases and identical n_images to the single-pass (cold) path — integer
-    sum/count planes are associative, so slicing contributors by salt cannot
-    change the integer-mean result."""
+def test_compose_tiles_partition_invariant(spark):
+    """Canvases and n_images do not depend on how contributors are split
+    into partitions or Arrow batches — the map-side partials add integer
+    planes, which is associative — and equal a driver-side single pass of
+    ``_accumulate`` over each tile's collected window rows.  The input has
+    a 300-contributor hot tile, antimeridian straddlers and a scattered
+    tail."""
+    import pandas as pd
+
     from tilematrix_spark import raster
 
-    df = images.images_df(spark, 48, partitions=4)
     tp = _tp()
-    cold = {
-        (r["row"], r["col"]): r
-        for r in raster.compose_tiles(df, tp, 3, hot_threshold=10**9).collect()
-    }
-    hot = {
-        (r["row"], r["col"]): r
-        for r in raster.compose_tiles(
-            df, tp, 3, hot_threshold=0, salt_buckets=4
-        ).collect()
-    }
-    assert set(cold) == set(hot) and cold
-    multi = 0
-    for k, c in cold.items():
-        h = hot[k]
-        assert c["n_images"] == h["n_images"], k
-        assert (c["tile_w"], c["tile_h"]) == (h["tile_w"], h["tile_h"]), k
-        assert bytes(c["bytes"]) == bytes(h["bytes"]), k
-        if c["n_images"] > 1:
-            multi += 1
-    assert multi > 0  # the overlap/mean path was actually exercised
+    z = 4
+    hot = (
+        images.images_df(spark, 300, partitions=4)
+        .withColumn("fp_left", F.lit(8.6)).withColumn("fp_right", F.lit(11.1))
+        .withColumn("fp_bottom", F.lit(39.5)).withColumn("fp_top", F.lit(42.0))
+    )
+    df = hot.unionByName(images.images_df(spark, 220, partitions=4))
+
+    def compose(src):
+        return {
+            (r["row"], r["col"]): (r["n_images"], r["tile_w"], r["tile_h"], bytes(r["bytes"]))
+            for r in raster.compose_tiles(src, tp, z).collect()
+        }
+
+    one = compose(df.repartition(1))
+    seven = compose(df.repartition(7))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        small_batches = compose(df.repartition(7))
+    finally:
+        spark.conf.set(key, prev)
+    assert one == seven == small_batches
+
+    win = raster._nonempty(raster._windows(df, tp, z)).select(
+        *raster._WIN_COLS, *raster._TILE_COLS
+    ).toPandas()
+    assert (win["fp_right"] > 180.0).any()  # straddlers reach the wrapped tiles
+    span = tp.right - tp.left
+    want = {}
+    for (r, c), rows in win.groupby(["row", "col"]):
+        acc, cnt, blended, tw, th = raster._accumulate(
+            pd.DataFrame(rows), tp.pixel_x_size(z), tp.pixel_y_size(z), span
+        )
+        want[(int(r), int(c))] = (blended, tw, th, raster._finalize(acc, cnt))
+    assert one == want
+    assert max(n for n, *_ in want.values()) >= 300
 
 
 def test_compose_tiles_contributor_quarantine(spark):

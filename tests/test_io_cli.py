@@ -162,6 +162,43 @@ def test_pyramid_job_banded_mid_zoom_resume(spark, geodetic, tmp_path):
     assert job2.read_zoom(3).agg(F.sum("n")).collect()[0][0] == 79
 
 
+def test_banded_resume_reads_units_without_a_job(spark, geodetic, tmp_path):
+    """Each committed unit's marker holds its schema, so a resumed job reads
+    its units back without parquet's schema-inference job; a marker written
+    without a schema still reads (by inference)."""
+    def build(s, z):
+        df = s.createDataFrame([(i, float(i % 90), float(i % 45)) for i in range(1, 80)],
+                               "id int, lon double, lat double")
+        return assign.tile_histogram(df, geodetic, z, salt_buckets=2)
+
+    out = str(tmp_path / "pyr_schema")
+    PyramidJob(spark, geodetic, out, build, bands=3, band_col="row").run([3, 2])
+    want = build(spark, 3).schema.simpleString()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read_committed_units", "read_committed_units")
+    try:
+        job = PyramidJob(spark, geodetic, out, build, bands=3, band_col="row")
+        assert job.run([3, 2]) == []
+        got = [job.read_zoom(z).schema.simpleString() for z in (3, 2)]
+        launched = sc.statusTracker().getJobIdsForGroup("read_committed_units")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [want, want]
+    assert launched == []
+
+    lineage = os.path.join(out, "_lineage")
+    for name in os.listdir(lineage):
+        with open(os.path.join(lineage, name)) as f:
+            rec = json.load(f)
+        assert rec["schema"]
+        del rec["schema"]
+        with open(os.path.join(lineage, name), "w") as f:
+            json.dump(rec, f)
+    old = PyramidJob(spark, geodetic, out, build, bands=3, band_col="row").read_zoom(3)
+    assert old.agg(F.sum("n")).collect()[0][0] == 79
+
+
 def test_stage_job_resume_mid_pipeline(spark, tmp_path):
     """StageJob resumes at the first uncommitted stage: a crash in stage 2
     leaves stage 1 committed; the rerun executes only stages 2 and 3,

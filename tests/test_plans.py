@@ -158,10 +158,11 @@ def test_cover_split_plan_no_shuffle_three_generates(spark, geodetic):
 
 
 def test_overview_plan_one_shuffle_bounded_groups(spark, geodetic):
-    """One overview level = exactly one Exchange (the parent groupBy
-    collect_list agg; at most 4 single-tile elements per group — bounded
-    memory at any corpus size) feeding one MapInPandas that downsamples
-    whole Arrow batches of parents (no per-group pandas frames)."""
+    """One overview level = exactly one Exchange (the parent-key
+    repartition feeding the collect_list agg; at most 4 single-tile
+    elements per group — bounded memory at any corpus size) feeding one
+    MapInPandas that downsamples whole Arrow batches of parents (no
+    per-group pandas frames)."""
     from tilematrix_spark import raster
 
     tiles = spark.createDataFrame(
@@ -177,15 +178,17 @@ def test_overview_plan_one_shuffle_bounded_groups(spark, geodetic):
     )
     assert mp == 1, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
-    # the collect_list agg must partial-aggregate map-side (ObjectHashAggregate)
     assert "ObjectHashAggregate" in plan or "SortAggregate" in plan, plan
+    # the parent exchange has an explicit partition count, so AQE cannot
+    # coalesce a well-compressed canvas shuffle into one Python task
+    assert "REPARTITION_BY_NUM" in plan, plan
 
 
-def test_incremental_compose_broadcast_semi_join(spark, geodetic):
-    """The dirty-tile restriction must reach the windows pipeline as a
-    BROADCAST left-semi join (no shuffled join on the bytes-carrying side):
-    at corpus scale the dirty key set is the small side by construction and
-    the contributor bytes must not move for clean tiles."""
+def test_incremental_compose_one_broadcast_semi_join(spark, geodetic):
+    """The dirty-tile restriction reaches the windows pipeline as ONE
+    BROADCAST left-semi join in front of the map-side decode (no shuffled
+    join): at corpus scale the dirty key set is the small side by
+    construction, and clean tiles' contributors are never decoded."""
     from tilematrix_spark import incremental
 
     imgs = images.images_df(spark, 64, partitions=4)
@@ -198,9 +201,8 @@ def test_incremental_compose_broadcast_semi_join(spark, geodetic):
         for line in plan.splitlines()
         if "BroadcastHashJoin" in line and "LeftSemi" in line
     ]
-    # two pipelines are restricted: the slim counts pass and the bytes pass
-    assert len(semi) >= 2, plan
-    assert "SortMergeJoin LeftSemi" not in plan, plan
+    assert len(semi) == 1, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_raster_tile_windows_binds_tile_geometry_once(spark, geodetic):
@@ -213,23 +215,28 @@ def test_raster_tile_windows_binds_tile_geometry_once(spark, geodetic):
     assert _plan(win).count("bround(") <= 2
 
 
-def test_compose_counts_branch_scans_footprints_only(spark, geodetic, tmp_path):
-    """The per-tile counts derive from the same windows DataFrame as the
-    canvases, and column pruning still keeps that branch's parquet scan to
-    the four footprint columns — no image bytes."""
+def test_compose_one_exchange_map_side_partials(spark, geodetic):
+    """compose_tiles decodes in the scan's stage and shuffles only
+    covered-pixel partials: one Exchange (the (row, col) repartition, which
+    AQE does not coalesce) between the two batch MapInPandas kernels
+    (partials, merge), and no per-group pandas.  The one windows pass keeps the optimized plan to 13
+    ``bround(`` at z3 (48 with the old counts/cold/hot split)."""
     from tilematrix_spark import raster
 
-    images.images_df(spark, 64, partitions=4).write.parquet(str(tmp_path / "images"))
-    imgs = spark.read.parquet(str(tmp_path / "images"))
-    plan = _plan(raster.compose_tiles(imgs, geodetic, 4))
-    schemas = [line.strip() for line in plan.splitlines() if "ReadSchema" in line]
-    slim = "ReadSchema: struct<fp_left:double,fp_bottom:double,fp_right:double,fp_top:double>"
-    assert slim in schemas, schemas
+    out = raster.compose_tiles(images.images_df(spark, 64, partitions=4), geodetic, 3)
+    plan = _plan(out)
+    assert _nodes(plan, "Exchange") == 1, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
+    kernels = [line for line in plan.splitlines() if line.startswith("Arguments: ")]
+    assert sum(k.startswith("Arguments: partials(") for k in kernels) == 1, plan
+    assert sum(k.startswith("Arguments: merge(") for k in kernels) == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert str(out._jdf.queryExecution().optimizedPlan()).count("bround(") <= 13
 
 
 def test_compose_builds_one_windows_pass(spark, geodetic, monkeypatch):
     """compose_tiles and incremental_compose each build the windows pass
-    exactly once: counts, dirty keys and canvases all derive from it."""
+    exactly once: dirty keys and canvases both derive from it."""
     from tilematrix_spark import incremental, raster
 
     calls = []

@@ -11,8 +11,9 @@ the update; these operators make maintenance cost ∝ |updates|:
   and value-oracled by the ``incremental_dirty`` driver query.
 - :func:`incremental_compose` — new canvases for ONLY the dirty tiles,
   composed from the full corpus (old ∪ updates) in one windows pass whose
-  update-tagged rows give the dirty keys of a broadcast semi-join:
-  contributor bytes shuffle only for dirty tiles.
+  update-tagged rows give the dirty keys of a broadcast semi-join: only
+  dirty tiles' contributors are decoded, map-side, and no contributor bytes
+  shuffle at all — only covered-pixel partials of the dirty tiles do.
 - :func:`propagate_level` / :func:`incremental_update` — one overview step
   restricted to the dirty parents (clean siblings read from the committed
   level, fresh canvases from the delta), chained base→min zoom.  Each
@@ -116,10 +117,10 @@ def incremental_compose(
     corpus, tagged with a literal ``_upd`` flag per side, yields the dirty
     key set (the ``_upd`` rows' non-empty windows — ``dirty_tiles``
     semantics; the flag filter prunes the old side, so that branch scans
-    only the update batch), the per-tile counts and the canvases.  The
-    dirty keys ride a broadcast semi-join inside the compose, so the
-    corpus' contributor bytes shuffle only where a dirty tile needs them —
-    the counts branch reads 4 footprint doubles per row, not pixels."""
+    only the update batch) and the canvases.  The dirty keys ride a
+    broadcast semi-join in front of the compose's map-side decode, so only
+    a dirty tile's contributors are decoded and only its covered-pixel
+    partials shuffle."""
     corpus = old_images.withColumn("_upd", F.lit(False)).unionByName(
         updates.withColumn("_upd", F.lit(True))
     )

@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
 
 from .grid import PyramidConfig
 
@@ -47,8 +48,13 @@ class TableIO:
             writer = writer.partitionBy(*partition_by)
         writer.format(self.fmt).save(path)
 
-    def read(self, path: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(path)
+    def read(self, path: str, schema: Optional[str] = None) -> DataFrame:
+        """``schema`` (a ``StructType`` JSON string) skips parquet's footer
+        inference, a Spark job per read; iceberg tables carry their own."""
+        reader = self.spark.read.format(self.fmt)
+        if schema and self.fmt == "parquet":
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.load(path)
 
     def write_counted(self, df: DataFrame, path: str, mode: str = "overwrite",
                       partition_by: Optional[List[str]] = None) -> int:
@@ -70,6 +76,9 @@ class LineageRecord:
     wall_s: float
     committed_at: float
     config: Dict
+    #: the unit's ``DataFrame.schema.json()``, so a read-back infers nothing;
+    #: None in markers written before it was recorded (those reads infer)
+    schema: Optional[str] = None
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
@@ -130,7 +139,9 @@ class StageJob:
         self.config = config or {}
 
     def read_stage(self, name: str) -> DataFrame:
-        return self.io.read(os.path.join(self.out, f"stage={name}"))
+        unit = f"stage={name}"
+        schema = self.lineage.committed().get(unit, {}).get("schema")
+        return self.io.read(os.path.join(self.out, unit), schema)
 
     def run(self) -> List[str]:
         done = self.lineage.committed()
@@ -155,6 +166,7 @@ class StageJob:
                     wall_s=round(time.time() - t0, 3),
                     committed_at=time.time(),
                     config=self.config,
+                    schema=df.schema.json(),
                 )
             )
             executed.append(name)
@@ -235,13 +247,21 @@ class PyramidJob:
                         wall_s=round(time.time() - t0, 3),
                         committed_at=time.time(),
                         config=self.tp.to_dict(),
+                        schema=df.schema.json(),
                     )
                 )
                 executed.append(z if band is None else unit)
         return executed
 
     def read_zoom(self, z: int) -> DataFrame:
-        df = self.io.read(os.path.join(self.out, f"zoom={z}"))
+        # every unit of a zoom (each band) commits the same schema
+        unit = f"zoom={z}"
+        schema = next(
+            (r.get("schema") for u, r in self.lineage.committed().items()
+             if u == unit or u.startswith(unit + os.sep)),
+            None,
+        )
+        df = self.io.read(os.path.join(self.out, unit), schema)
         # banded layout: band=i subdirs surface as a partition column
         return df.drop("band") if "band" in df.columns else df
 

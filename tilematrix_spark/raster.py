@@ -143,18 +143,6 @@ _COMPOSE_SCHEMA = T.StructType(
     ]
 )
 
-_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("row", T.LongType()),
-        T.StructField("col", T.LongType()),
-        T.StructField("n_images", T.IntegerType()),
-        T.StructField("tile_w", T.IntegerType()),
-        T.StructField("tile_h", T.IntegerType()),
-        T.StructField("sum_bytes", T.BinaryType()),
-        T.StructField("cnt_bytes", T.BinaryType()),
-    ]
-)
-
 _WIN_COLS = [
     "row", "col", "bytes", "w", "h", "fmt",
     "fp_left", "fp_bottom", "fp_right", "fp_top",
@@ -162,18 +150,16 @@ _WIN_COLS = [
 ]
 
 
-def _accumulate(pdf: pd.DataFrame, span, decoders=None) -> tuple:
-    """Shared compose accumulator: decode every contributor in ``pdf`` (one
-    tile, or one (tile, salt) slice of a hot tile), nearest-neighbor resample
-    into the tile pixel grid, and add into int64 sum/count planes.  Integer
-    sums are associative, so partial planes from disjoint slices merge to the
-    exact same result as one pass (pytest pins byte-identity)."""
+def _accumulate(pdf: pd.DataFrame, pxs: float, pys: float, span, decoders=None) -> tuple:
+    """Shared compose accumulator: decode every contributor in ``pdf`` (rows
+    of one tile), nearest-neighbor resample into the tile pixel grid, and
+    add into int64 sum/count planes.  Integer sums are associative, so
+    planes accumulated over disjoint slices of a tile's contributors merge
+    to the exact same result as one pass (pytest pins byte-identity)."""
     tw = int(pdf["_tw"].iat[0])
     th = int(pdf["_th"].iat[0])
     t_left = float(pdf["_tl"].iat[0])
     t_top = float(pdf["_tt"].iat[0])
-    pxs = float(pdf["_px"].iat[0])
-    pys = float(pdf["_py"].iat[0])
     acc = np.zeros((th, tw, 3), dtype=np.int64)
     cnt = np.zeros((th, tw, 1), dtype=np.int64)
     blended = 0
@@ -215,13 +201,36 @@ def _finalize(acc: np.ndarray, cnt: np.ndarray) -> bytes:
     return np.where(cnt > 0, acc // np.maximum(cnt, 1), 0).astype(np.uint8).tobytes()
 
 
+def _frames(rows, columns, limit: int = 1 << 22) -> Iterator[pd.DataFrame]:
+    """Kernel output rows as DataFrames of at most ~``limit`` binary bytes
+    each, so a kernel holds one bounded frame of output, not a batch's."""
+    buf, size = [], 0
+    for r in rows:
+        buf.append(r)
+        size += sum(len(v) for v in r if isinstance(v, bytes))
+        if size >= limit:
+            yield pd.DataFrame.from_records(buf, columns=columns)
+            buf, size = [], 0
+    if buf:
+        yield pd.DataFrame.from_records(buf, columns=columns)
+
+
+def _by_key(df: DataFrame, *keys) -> DataFrame:
+    """Hash-exchange ``df`` on ``keys`` into ``spark.sql.shuffle.partitions``
+    partitions, for a Python reduce stage behind it.  A groupBy's own
+    exchange is one AQE coalesces by compressed size: 128 canvases shuffle
+    as ~390 KB and land in ONE partition, so the Python stage runs as one
+    task on one core.  A repartition with an explicit count is a
+    REPARTITION_BY_NUM exchange, which AQE does not coalesce."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys)
+
+
 def compose_tiles(
     df: DataFrame,
     tp: PyramidConfig,
     zoom: int,
     max_cover_tiles: Optional[int] = None,
-    hot_threshold: int = 64,
-    salt_buckets: int = 16,
     tiles_filter: Optional[DataFrame] = None,
     max_contributors_per_tile: Optional[int] = None,
 ) -> DataFrame:
@@ -234,47 +243,45 @@ def compose_tiles(
     window-intersecting rows: win_width/height > 0 implies a non-empty
     clipped window).
 
-    Execution shape — skew-split on runtime stats (the scale fix for hot
-    tiles: a popular tile or any low-zoom compose previously concentrated
-    EVERY contributor's bytes in one task):
+    Execution shape — decode where the bytes are scanned, move only
+    partials (Raptor's in-situ raster scan):
 
     1. ONE windows pass (cover explode + window math, native exprs) feeds
-       both branches: contributor counts per tile are a groupBy over it
-       that reads only row/col, so column pruning keeps that branch's
-       parquet scan to the four footprint columns (no bytes);
-    2. cold tiles (count ≤ ``hot_threshold``) join the counts and compose in
-       one ``applyInPandas`` pass — the join shuffle doubles as the groupBy
-       shuffle, so contributor bytes still move exactly once;
-    3. hot tiles hash-salt contributors into ``salt_buckets`` slices, each
-       slice accumulates a partial int32 (sum, count) canvas — per-task bytes
-       bounded by count/S contributors — and a second stage merges ≤S small
-       canvases per tile.  Integer-mean output is bit-identical to the
-       single-pass path (associative sums; pytest pins it).
+       a ``mapInPandas`` in the scan's stage.  Per (Arrow batch, tile) it
+       decodes and resamples that batch's contributors into int64 planes
+       and emits one partial of the COVERED pixels only: flat pixel
+       indices, int32 RGB sums, int32 counts and the blended count.
+       Image bytes never shuffle, and a hot tile's decode work is spread
+       over every scan task that holds its contributors — no skew split.
+    2. ONE ``(row, col)`` exchange (``_by_key``, one task per core at any
+       compressed size), a native ``collect_list`` of each tile's partials,
+       and a batch ``mapInPandas`` that adds them into int64 planes and
+       finalizes the integer mean.  Sums are associative, so the canvas and
+       ``n_images`` do not depend on partitioning or batch size (pytest
+       pins it against a single-pass reference).
 
     ``tiles_filter`` (optional, columns row/col) restricts composition to
-    those tile keys via a BROADCAST semi-join applied before any bytes move
-    — the incremental-maintenance hook (`incremental.py`): contributor bytes
-    shuffle only for the dirty tiles, so update cost is ∝ |dirty cover|,
-    not |corpus|.  The filter set is a tile cover (≤ matrix size at the
+    those tile keys via a BROADCAST semi-join applied before any decode —
+    the incremental-maintenance hook (`incremental.py`): only dirty tiles'
+    contributors are decoded, so update cost is ∝ |dirty cover|, not
+    |corpus|.  The filter set is a tile cover (≤ matrix size at the
     compose zoom), small by construction.
 
-    ``max_contributors_per_tile`` (optional): the salted hot path bounds
-    per-TASK bytes, but a pathological tile (10⁶ contributors) still pays
-    10⁶ decodes spread across its salt slices.  With the cap set, tiles
-    over it blend only a deterministic hash-sample of ~cap contributors
-    (keep-probability cap/count on a seeded xxhash64 of the contributor
-    identity — stable across retries, NO rand()), the rest are counted,
-    not decoded.  The output gains an ``n_quarantined`` column (0 for
-    uncapped tiles); ``n_images`` keeps counting what was actually
-    blended, so ``n_images + n_quarantined`` = the true contributor count.
-    Mirrors ``max_cover_tiles``: an explicit, observable bound instead of
-    a silent runaway.  Default ``None`` = exact blend of everything (and
-    the output schema is unchanged).
+    ``max_contributors_per_tile`` (optional): a pathological tile (10⁶
+    contributors) still pays 10⁶ decodes.  With the cap set, a per-tile
+    count pre-pass runs and tiles over the cap blend only a deterministic
+    hash-sample of ~cap contributors (keep-probability cap/count on a
+    seeded xxhash64 of the contributor identity — stable across retries,
+    NO rand()), the rest are counted, not decoded.  The output gains an
+    ``n_quarantined`` column (0 for uncapped tiles); ``n_images`` keeps
+    counting what was actually blended, so ``n_images + n_quarantined`` =
+    the true contributor count.  Mirrors ``max_cover_tiles``: an explicit,
+    observable bound instead of a silent runaway.  Default ``None`` =
+    exact blend of everything, no pre-pass, and the output schema is
+    unchanged.
     """
     win = _nonempty(_windows(df, tp, zoom, max_cover_tiles=max_cover_tiles))
-    return _compose_windows(
-        win, tp, zoom, hot_threshold, salt_buckets, tiles_filter, max_contributors_per_tile
-    )
+    return _compose_windows(win, tp, zoom, tiles_filter, max_contributors_per_tile)
 
 
 def _nonempty(win: DataFrame) -> DataFrame:
@@ -285,8 +292,6 @@ def _compose_windows(
     win: DataFrame,
     tp: PyramidConfig,
     zoom: int,
-    hot_threshold: int = 64,
-    salt_buckets: int = 16,
     tiles_filter: Optional[DataFrame] = None,
     max_contributors_per_tile: Optional[int] = None,
 ) -> DataFrame:
@@ -294,113 +299,78 @@ def _compose_windows(
     if tiles_filter is not None:
         keys = F.broadcast(tiles_filter.select("row", "col").distinct())
         win = win.join(keys, ["row", "col"], "left_semi")
-    counts = win.groupBy("row", "col").agg(F.count(F.lit(1)).alias("_tile_n"))
-    # hot-path salt: MUST include a per-row unique column (image_id) —
-    # exact-duplicate contributors (the same image re-ingested, a canonical
-    # hot-tile cause) share footprint/dims/fmt and would otherwise collapse
-    # into one salt bucket, degenerating the skew split back to one task.
-    # Deterministic (no rand()): a retried map task must re-emit the same
-    # bucket keys or rows shift buckets mid-shuffle.
-    salt_cols = ["fp_left", "fp_bottom", "fp_right", "fp_top", "w", "h", "fmt"]
-    if "image_id" in win.columns:
-        salt_cols = ["image_id", *salt_cols]
-    salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
-    proj = [
-        *_WIN_COLS,
-        *_TILE_COLS,
-        salt.alias("_salt"),
-        exprs.pixel_x_size(tp, zoom).alias("_px"),
-        exprs.pixel_y_size(tp, zoom).alias("_py"),
-    ]
-    if max_contributors_per_tile is not None:
-        # uniform-in-[0,1) per contributor, seeded apart from the salt hash
-        # so sampling and salting stay uncorrelated; deterministic across
-        # task retries (same discipline as the salt)
-        qh = (
-            F.pmod(F.xxhash64(F.lit("tmx_quarantine"), *salt_cols), F.lit(1 << 30))
-        ).cast("double") / F.lit(float(1 << 30))
-        proj.append(qh.alias("_qh"))
-    win = win.select(*proj).join(counts, on=["row", "col"])
-
     quarantine = None
     if max_contributors_per_tile is not None:
+        # uniform-in-[0,1) per contributor on a seeded hash that MUST
+        # include a per-row unique column (image_id) when there is one, so
+        # exact-duplicate contributors are sampled independently;
+        # deterministic across task retries (no rand())
+        ident = ["fp_left", "fp_bottom", "fp_right", "fp_top", "w", "h", "fmt"]
+        if "image_id" in win.columns:
+            ident = ["image_id", *ident]
+        qh = (
+            F.pmod(F.xxhash64(F.lit("tmx_quarantine"), *ident), F.lit(1 << 30))
+        ).cast("double") / F.lit(float(1 << 30))
+        counts = win.groupBy("row", "col").agg(F.count(F.lit(1)).alias("_tile_n"))
+        win = win.join(counts, on=["row", "col"])
         cap = int(max_contributors_per_tile)
-        keep = (F.col("_tile_n") <= cap) | (
-            F.col("_qh") * F.col("_tile_n") < F.lit(float(cap))
-        )
+        keep = (F.col("_tile_n") <= cap) | (qh * F.col("_tile_n") < F.lit(float(cap)))
         quarantine = (
             win.filter(~keep)
             .groupBy("row", "col")
             .agg(F.count(F.lit(1)).alias("n_quarantined"))
         )
-        win = win.filter(keep).drop("_qh")
+        win = win.filter(keep)
+    win = win.select(*_WIN_COLS, *_TILE_COLS)  # slim the Arrow transfer
 
+    pxs, pys = tp.pixel_x_size(zoom), tp.pixel_y_size(zoom)
     span = (tp.right - tp.left) if tp.is_global else None
-    decoders = snapshot_decoders()  # ships to executors in the kernel closures
-
-    def compose(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc, cnt, blended, tw, th = _accumulate(pdf, span, decoders)
-        return pd.DataFrame(
-            {
-                "row": [int(pdf["row"].iat[0])],
-                "col": [int(pdf["col"].iat[0])],
-                "n_images": [blended],
-                "tile_w": [tw],
-                "tile_h": [th],
-                "bytes": [_finalize(acc, cnt)],
-            }
-        )
-
-    cold = (
-        win.filter(F.col("_tile_n") <= hot_threshold)
-        .drop("_salt")  # keep the cold-path Arrow transfer slim
-        .groupBy("row", "col")
-        .applyInPandas(compose, schema=_COMPOSE_SCHEMA)
+    decoders = snapshot_decoders()  # ships to executors in the kernel closure
+    part_cols = ["row", "col", "tile_w", "tile_h", "n_images", "pix", "sums", "cnt"]
+    part_schema = (
+        "row long, col long, tile_w int, tile_h int, n_images int,"
+        " pix binary, sums binary, cnt binary"
     )
 
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc, cnt, blended, tw, th = _accumulate(pdf, span, decoders)
-        return pd.DataFrame(
-            {
-                "row": [int(pdf["row"].iat[0])],
-                "col": [int(pdf["col"].iat[0])],
-                "n_images": [blended],
-                "tile_w": [tw],
-                "tile_h": [th],
-                # 255·n fits int32 up to 8.4M contributors per slice
-                "sum_bytes": [acc.astype(np.int32).tobytes()],
-                "cnt_bytes": [cnt.astype(np.int32).tobytes()],
-            }
-        )
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def rows():
+            # one tile's dense planes at a time; only covered pixels leave
+            for pdf in batches:
+                for (r, c), tile in pdf.groupby(["row", "col"], sort=False):
+                    acc, cnt, blended, tw, th = _accumulate(tile, pxs, pys, span, decoders)
+                    idx = np.flatnonzero(cnt)
+                    # 255·n fits int32 up to 8.4M contributors per batch
+                    yield (
+                        int(r), int(c), tw, th, blended,
+                        idx.astype(np.int32).tobytes(),
+                        acc.reshape(-1, 3)[idx].astype(np.int32).tobytes(),
+                        cnt.reshape(-1)[idx].astype(np.int32).tobytes(),
+                    )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        tw = int(pdf["tile_w"].iat[0])
-        th = int(pdf["tile_h"].iat[0])
-        acc = np.zeros((th, tw, 3), dtype=np.int64)
-        cnt = np.zeros((th, tw, 1), dtype=np.int64)
-        for rec in pdf.itertuples(index=False):
-            acc += np.frombuffer(rec.sum_bytes, dtype=np.int32).reshape(th, tw, 3)
-            cnt += np.frombuffer(rec.cnt_bytes, dtype=np.int32).reshape(th, tw, 1)
-        return pd.DataFrame(
-            {
-                "row": [int(pdf["row"].iat[0])],
-                "col": [int(pdf["col"].iat[0])],
-                "n_images": [int(pdf["n_images"].sum())],
-                "tile_w": [tw],
-                "tile_h": [th],
-                "bytes": [_finalize(acc, cnt)],
-            }
-        )
+        return _frames(rows(), part_cols)
 
-    hot = (
-        win.filter(F.col("_tile_n") > hot_threshold)
-        .groupBy("row", "col", "_salt")
-        .applyInPandas(partial, schema=_PARTIAL_SCHEMA)
-        .groupBy("row", "col")
-        .applyInPandas(merge, schema=_COMPOSE_SCHEMA)
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def rows():
+            for pdf in batches:
+                for r, c, tw, th, parts in pdf.itertuples(index=False):
+                    acc = np.zeros((th * tw, 3), dtype=np.int64)
+                    cnt = np.zeros((th * tw, 1), dtype=np.int64)
+                    n = 0
+                    for p in parts:
+                        idx = np.frombuffer(p["pix"], dtype=np.int32)
+                        acc[idx] += np.frombuffer(p["sums"], dtype=np.int32).reshape(-1, 3)
+                        cnt[idx, 0] += np.frombuffer(p["cnt"], dtype=np.int32)
+                        n += int(p["n_images"])
+                    yield int(r), int(c), n, int(tw), int(th), _finalize(acc, cnt)
+
+        return _frames(rows(), _COMPOSE_SCHEMA.fieldNames())
+
+    result = (
+        _by_key(win.mapInPandas(partials, schema=part_schema), "row", "col")
+        .groupBy("row", "col", "tile_w", "tile_h")
+        .agg(F.collect_list(F.struct("n_images", "pix", "sums", "cnt")).alias("_parts"))
+        .mapInPandas(merge, schema=_COMPOSE_SCHEMA)
     )
-
-    result = cold.unionByName(hot)
     if quarantine is not None:
         result = result.join(quarantine, ["row", "col"], "left").withColumn(
             "n_quarantined", F.coalesce(F.col("n_quarantined"), F.lit(0))
@@ -430,9 +400,10 @@ def overview_level(tiles: DataFrame) -> DataFrame:
     pyramid builds on the reference's grid addressing (row/col halve per
     zoom on both pyramid axes, ``tilematrix/_tile.py`` get_parent).
 
-    Scale shape: a NATIVE ``collect_list`` agg on the parent key (bounded at
-    4 elements per group — group memory is 4 canvases regardless of corpus
-    size, no skew possible, partial-agg map side), then ``mapInPandas``
+    Scale shape: one parent-key exchange (``_by_key``: one task per core
+    however well the canvases compress), a NATIVE ``collect_list`` agg on
+    the parent key (bounded at 4 elements per group — group memory is 4
+    canvases regardless of corpus size, no skew possible), then ``mapInPandas``
     downsamples THOUSANDS of parents per Arrow batch in one stacked numpy
     pass.  The earlier per-parent ``applyInPandas`` shape paid a pandas
     frame per ≤4-row group (measured 2.6x slower on a z6 full-matrix chain,
@@ -506,8 +477,14 @@ def overview_level(tiles: DataFrame) -> DataFrame:
                 )
 
     grouped = (
-        tiles.select("row", "col", "tile_w", "tile_h", "bytes")
-        .groupBy(F.shiftright("row", 1).alias("_pr"), F.shiftright("col", 1).alias("_pc"))
+        _by_key(
+            tiles.select(
+                F.shiftright("row", 1).alias("_pr"), F.shiftright("col", 1).alias("_pc"),
+                "row", "col", "tile_w", "tile_h", "bytes",
+            ),
+            "_pr", "_pc",
+        )
+        .groupBy("_pr", "_pc")
         .agg(F.collect_list(F.struct("row", "col", "tile_w", "tile_h", "bytes")).alias("_kids"))
     )
     return grouped.mapInPandas(down, schema=_OVERVIEW_SCHEMA)
