@@ -61,20 +61,6 @@ def test_tile_histogram_total(spark, geodetic):
     assert hist.agg(F.sum("n")).collect()[0][0] == 500
 
 
-def test_zoom_rollup(spark, geodetic):
-    df = _points_df(spark, 500)
-    tiled = assign.with_tile(df, geodetic, 6)
-    counts = tiled.groupBy("row", "col").agg(F.count("*").alias("n"))
-    rolled = assign.zoom_rollup(counts, 6, 0)
-    per_zoom = {
-        r["zoom"]: r["total"]
-        for r in rolled.groupBy("zoom").agg(F.sum("n").alias("total")).collect()
-    }
-    assert per_zoom == {z: 500 for z in range(0, 7)}
-    # zoom 0 rows equal the number of distinct zoom-0 tiles touched (<=2)
-    assert rolled.filter("zoom = 0").count() <= 2
-
-
 def test_disc_tiles_matches_k_ring(spark, geodetic):
     df = spark.createDataFrame([(8, 100, 100), (3, 1, 0)], "zoom int, row long, col long")
     for radius in (1, 2):

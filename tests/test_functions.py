@@ -167,21 +167,6 @@ def test_cosine_dup_pairs(spark):
     assert (3, 1000) in {(r["id_a"], r["id_b"]) for r in lsh_pairs.collect()}
 
 
-def test_image_features_and_resize(spark):
-    from tilematrix_spark import images
-
-    df = images.images_df(spark, 30, partitions=2)
-    feats = multimodal.extract_image_features(df)
-    rows = feats.collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert 100 < r["mean_r"] < 155  # uniform noise ≈ 127.5
-    resized = multimodal.resize_images(df, 8, 8)
-    for r in resized.collect():
-        assert (r["w"], r["h"], r["fmt"]) == (8, 8, "raw")
-        assert len(bytes(r["bytes"])) == 8 * 8 * 3
-
-
 def test_phash_dup_pairs(spark):
     from tilematrix_spark import images
 
@@ -244,59 +229,18 @@ def test_pack_sign_bits(spark):
     assert bin(ph2 ^ got[0]).count("1") == 1
 
 
-def test_stub_formats_raise(spark):
+def test_stub_formats_raise():
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"", 1, 1, "jpeg")
-    # compressed video without a registered decoder fails in the kernel
-    vdf = spark.createDataFrame(
-        [("v0", bytearray(b"xx"), 2, 2, "h264")],
-        "video_id string, bytes binary, w int, h int, fmt string",
-    )
-    with pytest.raises(Exception, match="h264"):
-        multimodal.video_frame_sample(vdf).collect()
-
-
-def test_video_frame_sample_rawv(spark):
-    """rawv videos explode into every-n-th raw RGB frames whose bytes equal
-    the original frame slices; output feeds the image operators directly."""
-    rng = np.random.default_rng(11)
-    w, h, n_frames = 4, 3, 10
-    frames = rng.integers(0, 256, size=(n_frames, h, w, 3), dtype=np.uint8)
-    rows = [("v0", bytearray(frames.tobytes()), w, h, "rawv")]
-    df = spark.createDataFrame(
-        rows, "video_id string, bytes binary, w int, h int, fmt string"
-    )
-    out = {r["frame_no"]: r for r in multimodal.video_frame_sample(df, every_n=3).collect()}
-    assert sorted(out) == [0, 3, 6, 9]
-    for i, r in out.items():
-        assert (r["w"], r["h"], r["fmt"]) == (w, h, "raw")
-        assert bytes(r["bytes"]) == frames[i].tobytes()
-    # frames flow straight into the image feature kernel
-    feats = multimodal.extract_image_features(
-        multimodal.video_frame_sample(df, every_n=5).withColumn(
-            "image_id", F.concat(F.col("video_id"), F.lit("#"), F.col("frame_no"))
-        )
-    )
-    assert feats.count() == 2
-    # a runtime-registered codec lights up a foreign fmt end-to-end
-    multimodal.register_video_decoder(
-        "fakecodec",
-        lambda d, ww, hh: np.frombuffer(d, dtype=np.uint8).reshape(-1, hh, ww, 3),
-    )
-    try:
-        df2 = df.withColumn("fmt", F.lit("fakecodec"))
-        assert multimodal.video_frame_sample(df2, every_n=10).count() == 1
-    finally:
-        multimodal._VIDEO_DECODERS.pop("fakecodec", None)
 
 
 def test_decoder_registry_end_to_end(spark):
     """A runtime-registered decoder lights up a stub format end-to-end
     (Arrow kernel over Spark), and kernels built before unregistration keep
     working afterwards — proving closure snapshot, not shared module state."""
-    from tilematrix_spark import images
+    from tilematrix_spark import images, raster
 
-    assert "raw" in multimodal.registered_formats()
+    assert "raw" in multimodal.snapshot_decoders()
 
     # fake 'jpeg': payload is a raw RGB buffer, decoder just reshapes it
     def fake_jpeg(data: bytes, w: int, h: int):
@@ -308,27 +252,16 @@ def test_decoder_registry_end_to_end(spark):
     assert df.count() > 0
     multimodal.register_decoder("jpeg", fake_jpeg)
     try:
-        feats = multimodal.extract_image_features(df)  # snapshots registry here
-        rows = feats.collect()
-        assert rows and all(100 < r["mean_r"] < 155 for r in rows)
+        checked = raster.verify_images(df)  # snapshots registry here
+        rows = checked.collect()
+        assert rows and all(r["ok"] for r in rows)
     finally:
         multimodal.unregister_decoder("jpeg")
     # plan built while registered still decodes after unregistration
-    assert len(feats.collect()) == len(rows)
+    assert sum(r["ok"] for r in checked.collect()) == len(rows)
     # and a fresh plan is back to the stub error
     with pytest.raises(Exception, match="jpeg"):
-        multimodal.extract_image_features(df).collect()
-
-
-def test_audio_features_pcm16(spark):
-    sig = (np.sin(np.linspace(0, 20, 1000)) * 10000).astype(np.int16)
-    df = spark.createDataFrame(
-        [("c1", bytearray(sig.tobytes()), "pcm16")], "clip_id string, bytes binary, fmt string"
-    )
-    r = multimodal.audio_features(df).collect()[0]
-    assert r["n_samples"] == 1000
-    assert 6000 < r["rms"] < 8000
-    assert r["peak"] <= 10000
+        raster.verify_images(df).collect()
 
 
 def test_ivf_topk_full_probe_equals_brute_force(spark):
@@ -672,37 +605,14 @@ def test_top_terms_scoring(spark):
     assert got[(3, 2)] == "date"
 
 
-def test_audio_decoder_registry(spark):
-    """A registered decoder lights up a compressed-audio fmt; unknown fmts
-    still raise; mixed-format batches agree with the pcm16 fast path."""
-    sig = (np.sin(np.linspace(0, 20, 500)) * 8000).astype(np.int16)
-    rows = [
-        ("p", bytearray(sig.tobytes()), "pcm16"),
-        ("c", bytearray(sig.tobytes()), "fakeogg"),
-    ]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary, fmt string").coalesce(1)
-    with pytest.raises(Exception, match="fakeogg"):
-        multimodal.audio_features(df).collect()
-    multimodal.register_audio_decoder(
-        "fakeogg", lambda d: np.frombuffer(d, dtype=np.int16).astype(np.float64)
-    )
-    try:
-        out = {r["clip_id"]: r for r in multimodal.audio_features(df).collect()}
-    finally:
-        multimodal._AUDIO_DECODERS.pop("fakeogg", None)
-    assert out["p"]["n_samples"] == out["c"]["n_samples"] == 500
-    assert abs(out["p"]["rms"] - out["c"]["rms"]) < 1e-9
-    assert out["p"]["peak"] == out["c"]["peak"]
-
-
-def _py_winnow(text: str, n: int = 3, w: int = 4, hash_chars: int = 8):
+def _py_winnow(text: str, n: int = 3, w: int = 4):
     """Pure-Python winnowing mirror (independent implementation)."""
     import hashlib
     import re
 
     toks = [t for t in re.split(r"\s+", text.strip().lower()) if t]
     grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
-    hs = [hashlib.md5(g.encode()).hexdigest()[:hash_chars] for g in grams]
+    hs = [hashlib.md5(g.encode()).hexdigest()[:8] for g in grams]
     if not hs:
         return set()
     if len(hs) < w:
@@ -1438,15 +1348,7 @@ def test_c4_line_stats_mirror(spark):
     assert [got[i]["kept"] for i in range(1, 11)] == [
         True, False, True, False, False, True, True, True, False, True
     ]
-
-
-def test_c4_clean_no_shuffle_and_filters(spark):
-    """c4_clean keeps only surviving pages with line-filtered text, and the
-    whole decision is one narrow projection chain (no Exchange)."""
-    df = spark.createDataFrame(C4_DOCS, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"] for r in text.c4_clean(df).collect()}
-    assert set(out) == {1, 3, 6, 7, 8, 10}
-    assert "javascript" not in out[3].lower()
+    # the whole decision is one narrow projection chain (no Exchange)
     plan = text.c4_line_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

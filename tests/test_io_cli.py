@@ -86,26 +86,32 @@ def test_cli_bbox_wkt():
     assert "-163.125" in r.stdout
 
 
-def test_cli_tile_and_tiles():
-    r = _tmx("tile", "5", "0.5", "0.5")
-    assert r.stdout.strip() == "5 15 32"
-    r = _tmx("tiles", "5", "-163.125", "67.5", "-157.5", "73.125")
-    assert r.stdout.strip() == "5 3 3"
+def _tmx_main(capsys, *args):
+    """Run the CLI in this process against the session fixture."""
+    from tilematrix_spark import cli
+
+    assert cli.main(list(args)) == 0
+    return capsys.readouterr().out
+
+
+def test_cli_tile_and_tiles(spark, capsys):
+    assert _tmx_main(capsys, "tile", "5", "0.5", "0.5").strip() == "5 15 32"
+    assert _tmx_main(capsys, "tiles", "5", "-163.125", "67.5", "-157.5", "73.125").strip() == "5 3 3"
     # antimeridian
-    r = _tmx("tiles", "5", "-183.125", "67.5", "-177.5", "73.125")
-    assert set(r.stdout.strip().splitlines()) == {"5 3 0", "5 3 63"}
+    out = _tmx_main(capsys, "tiles", "5", "-183.125", "67.5", "-177.5", "73.125")
+    assert set(out.strip().splitlines()) == {"5 3 0", "5 3 63"}
+    # the CLI reused the active session and left its SQL conf alone
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
 
-def test_cli_geojson():
-    r = _tmx("-f", "GeoJSON", "tile", "5", "0.5", "0.5")
-    fc = json.loads(r.stdout)
+def test_cli_geojson(spark, capsys):
+    fc = json.loads(_tmx_main(capsys, "-f", "GeoJSON", "tile", "5", "0.5", "0.5"))
     assert fc["type"] == "FeatureCollection"
     assert fc["features"][0]["properties"] == {"zoom": 5, "row": 15, "col": 32}
 
 
-def test_cli_snap_bounds():
-    r = _tmx("snap-bounds", "8", "0", "1", "2", "3")
-    vals = [float(v) for v in r.stdout.split()]
+def test_cli_snap_bounds(spark, capsys):
+    vals = [float(v) for v in _tmx_main(capsys, "snap-bounds", "8", "0", "1", "2", "3").split()]
     assert vals[0] <= 0 and vals[1] <= 1 and vals[2] >= 2 and vals[3] >= 3
 
 

@@ -134,84 +134,6 @@ def test_stream_exact_dedup_stateful(spark, tmp_path):
     assert got2 == {1, 3, 11}  # cumulative sink: batch-2 adds only doc 11
 
 
-def test_stream_sessionize_stateful(spark, tmp_path):
-    """Sessions continue, close, and split ACROSS micro-batches; closed
-    sessions equal the batch operator's output minus each user's open tail."""
-    import datetime as dt
-
-    from tilematrix_spark.functions import windows
-
-    src = str(tmp_path / "sess_in")
-    ckpt = str(tmp_path / "sess_ckpt")
-    out_dir = str(tmp_path / "sess_out")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp"
-        )
-
-    # batch 1: u1 two events 10min apart (open); u2 one event
-    first = mk([(1, 1, t0), (2, 1, t0 + dt.timedelta(minutes=10)), (3, 2, t0)])
-    first.write.parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(first.schema).parquet(src)
-        out = streaming.stream_sessionize(stream, gap_s=1800)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    assert spark.read.parquet(out_dir).count() == 0  # everything still open
-
-    # batch 2: u1 event 20min after its tail (continues, 30min total is NOT
-    # a split: strict >), then one 31min later (closes session 0);
-    # u2 event 40min after its tail (closes session 0, opens session 1)
-    second = mk(
-        [
-            (4, 1, t0 + dt.timedelta(minutes=30)),
-            (5, 1, t0 + dt.timedelta(minutes=61, seconds=1)),
-            (6, 2, t0 + dt.timedelta(minutes=40)),
-        ]
-    ).filter("event_id > 3")
-    second.write.mode("append").parquet(src)
-    run_once()
-
-    got = {
-        (r["user_id"], r["session_idx"]): (r["n_events"], r["start_us"], r["end_us"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # u1 session 0: events 1,2,4 spanning 30min; u2 session 0: single event
-    us0 = int(t0.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    assert got[(1, 0)] == (3, us0, us0 + 30 * 60 * 1_000_000)
-    assert got[(2, 0)] == (1, us0, us0)
-    assert len(got) == 2
-
-    # parity: closed streaming sessions == batch sessionize minus open tails
-    all_events = spark.read.parquet(src).withColumn(
-        "ts", F.col("ts").cast("timestamp_ntz")
-    )
-    batch = windows.sessionize(all_events, gap_s=1800).collect()
-    open_tail = {}
-    for r in batch:
-        k = r["user_id"]
-        if k not in open_tail or r["session_idx"] > open_tail[k]:
-            open_tail[k] = r["session_idx"]
-    closed_batch = {
-        (r["user_id"], r["session_idx"]): (r["n_events"], r["start_us"], r["end_us"])
-        for r in batch
-        if r["session_idx"] != open_tail[r["user_id"]]
-    }
-    assert got == closed_batch
-
-
 def test_incremental_tile_sink_matches_full_compose(spark, geodetic, tmp_path):
     """Streamed micro-batches through the incremental sink produce the SAME
     tile table as one full compose over all images — per-tile canvas bytes
@@ -330,72 +252,3 @@ def test_incremental_ann_sink_exactly_once(spark, tmp_path):
     assert merged.select("vec_id").distinct().count() == 500
     units = [u for u in Lineage(out).committed() if u.startswith("delta=stream_")]
     assert len(units) == 2  # one per non-empty micro-batch
-
-
-def test_incremental_focal_sink_matches_full_stencil(spark, tmp_path):
-    """Streamed replacement-canvas micro-batches through the focal sink
-    produce the SAME focal table as one full focal_stats over the final
-    tile state — canvas bytes included — and a replayed batch changes
-    nothing (key-replace idempotence)."""
-    import numpy as np
-    import pandas as pd
-
-    from tilematrix_spark import raster, streaming
-    from tilematrix_spark.grid import PyramidConfig
-
-    tp = PyramidConfig.create("geodetic", tile_size=8)
-    ts, zoom = 8, 2
-    rng = np.random.RandomState(17)
-
-    def mk(keys, off):
-        return pd.DataFrame(
-            [
-                {"row": r, "col": c, "tile_w": ts, "tile_h": ts,
-                 "bytes": ((rng.permutation(ts * ts) + off) % 256)
-                 .astype(np.uint8).tobytes()}
-                for (r, c) in keys
-            ]
-        )
-
-    # batch a: a 2x3 block; batch b REPLACES one tile and adds a new one
-    a = mk([(1, 2), (1, 3), (1, 4), (2, 2), (2, 3), (2, 4)], 0)
-    b = mk([(1, 3), (2, 5)], 101)
-    src = str(tmp_path / "in")
-    spark.createDataFrame(a).coalesce(1).write.parquet(src + "/a")
-    spark.createDataFrame(b).coalesce(1).write.parquet(src + "/b")
-    tiles = str(tmp_path / "tiles")
-    focal = str(tmp_path / "focal")
-    sink = streaming.incremental_focal_sink(tp, zoom, tiles, focal, radius=1, n_buckets=4)
-    stream = (
-        spark.readStream.schema(spark.createDataFrame(a).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    def canvases(df):
-        return {
-            (r["row"], r["col"]): bytes(r["bytes"])
-            for r in df.select("row", "col", "bytes").collect()
-        }
-
-    final_tiles = spark.read.parquet(tiles).select(
-        "row", "col", "tile_w", "tile_h", "bytes"
-    )
-    assert final_tiles.count() == 7  # 6 + 1 new, 1 replaced in place
-    got = canvases(spark.read.parquet(focal))
-    want = canvases(raster.focal_stats(final_tiles, tp, zoom, radius=1))
-    assert set(got) == set(want) and got == want
-    want_tiles = canvases(final_tiles)
-    # replay the last batch verbatim (crash between writes and checkpoint
-    # commit): key-replace idempotence — both tables unchanged
-    sink(spark.createDataFrame(b), 1)
-    assert canvases(spark.read.parquet(focal)) == want
-    assert canvases(spark.read.parquet(tiles)) == want_tiles

@@ -8,7 +8,8 @@ Execution is Spark-first (the single query row goes through the same Column
 expressions / cover operator the batch engine uses), driven as a
 ``spark-submit`` entry:
     spark-submit --py-files tilematrix_spark.zip -m tilematrix_spark.cli tiles 5 0 0 30 30
-For ad-hoc scalar lookups a local[1] session is created on demand.
+For ad-hoc scalar lookups the active session is reused, or a local[1]
+session is created on demand.
 
 Output formats: "Tile" (ids), "WKT" (tile bbox polygons), "GeoJSON"
 (FeatureCollection) — shapely-style WKT formatting.
@@ -51,6 +52,11 @@ def _geojson_box(left, bottom, right, top, props=None) -> dict:
 
 
 def _spark() -> SparkSession:
+    """The active session when one exists (its SQL conf stays untouched),
+    else a local[1] session created for the lookup."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     spark = (
         SparkSession.builder.master("local[1]")
         .appName("tmx_spark")

@@ -31,7 +31,7 @@ from typing import Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .grid import PyramidConfig
+from .grid import VALID_ON_EDGE_USE, PyramidConfig
 
 ColumnOrName = Union[Column, str]
 ZoomLike = Union[Column, str, int]
@@ -311,7 +311,7 @@ def rowcol_raw(
     """struct(row, col) from truncating division + edge tie-break + wrap,
     WITHOUT bounds guard or validity filter — the raw ``_tile_from_xy``
     arithmetic (``_funcs.py:240-260``) used by cover corner lookups."""
-    if on_edge_use not in ("lb", "rb", "rt", "lt"):
+    if on_edge_use not in VALID_ON_EDGE_USE:
         raise ValueError("on_edge_use must be one of lb, rb, rt or lt")
     xc, yc = _col(x).cast("double"), _col(y).cast("double")
     h = metatile_y_size(tp, zoom)

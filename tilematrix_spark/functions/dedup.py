@@ -502,7 +502,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     n: int = 3,
     w: int = 4,
-    hash_chars: int = 8,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the MOSS
     rolling-hash scheme): hash every POSITIONAL word n-gram, slide a window
@@ -514,7 +513,7 @@ def winnow_fingerprints(
     Execution shape: tokens materialized as a bound column (tokenizer
     inlining trap), positional grams via one explode (a Generate boundary —
     no nested array lambdas, which projection collapse silently corrupts),
-    hex-string md5 prefixes as the rolling hashes (portable: fixed-length
+    8-hex-char md5 prefixes as the rolling hashes (portable: fixed-length
     hex MIN is identical in Spark and the SQL oracle), then the sliding min
     as a NATIVE window aggregation — one shuffle on the doc id, partial
     nothing (window), distinct folds map-side.  Docs shorter than one full
@@ -540,7 +539,7 @@ def winnow_fingerprints(
         "_id",
         "_m",
         "pos",
-        F.substring(F.md5(gram), 1, hash_chars).alias("_h"),
+        F.substring(F.md5(gram), 1, 8).alias("_h"),
     )
     win = Window.partitionBy("_id").orderBy("pos").rowsBetween(0, w - 1)
     return (
@@ -657,7 +656,6 @@ def strip_boilerplate_lines(
     min_df: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_boilerplate: bool = True,
 ) -> DataFrame:
     """Corpus-level boilerplate line removal (the RefinedWeb/CCNet-family
     line-wise dedup, Penedo 2023 §3.2): delete every line whose trimmed
@@ -673,12 +671,10 @@ def strip_boilerplate_lines(
     DISTINCT (fingerprint, id) so partial aggregation absorbs within-doc
     repeats map-side; the boilerplate set (lines with df >= min_df) has
     cardinality <= total_lines / min_df and BROADCASTS into a left-anti
-    join, so the corpus is never shuffled on a text key (pass
-    ``broadcast_boilerplate=False`` to fall back to a shuffle anti-join if
-    a pathological min_df makes the set large); re-assembly is one groupBy
-    on the dense doc id — no skew (each group = one doc's lines).
-    Whitespace-only lines share one fingerprint and are removed as
-    boilerplate as soon as ``min_df`` docs contain any.
+    join, so the corpus is never shuffled on a text key; re-assembly is
+    one groupBy on the dense doc id — no skew (each group = one doc's
+    lines).  Whitespace-only lines share one fingerprint and are removed
+    as boilerplate as soon as ``min_df`` docs contain any.
     """
     base = df.select(F.col(id_col), F.col(text_col))
     fps = base.select(
@@ -692,9 +688,7 @@ def strip_boilerplate_lines(
         .filter(F.col("df_docs") >= min_df)
         .select("fp")
     )
-    if broadcast_boilerplate:
-        boiler = F.broadcast(boiler)
-    kept = fps.join(boiler, "fp", "left_anti")
+    kept = fps.join(F.broadcast(boiler), "fp", "left_anti")
     reasm = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(

@@ -1,25 +1,21 @@
-"""Multimodal column operators: decode / feature-extract / resize /
-frame-sample over opaque ``binary`` payload columns with typed metadata.
+"""Image-payload operators: the codec registry that decodes opaque
+``binary`` image columns, and perceptual-hash near-duplicate pairs.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, UDF signatures,
-partition behavior) is real and tested end-to-end.  Codec dispatch goes
-through per-modality registries: numpy-backed formats (raw/q8 images,
-pcm16 audio, rawv video) always decode; library-backed formats (jpeg/png/
-webp via PIL, compressed audio/video) auto-register when the library
-imports or via ``register_decoder``/``register_video_decoder`` — a real
-cluster lights them up with zero plumbing changes, and this container
-raises a clear ``NotImplementedError`` for them.
+Codec dispatch goes through one registry: numpy-backed formats (raw/q8)
+always decode; PIL-backed formats (jpeg/png/webp) auto-register when PIL
+imports or via ``register_decoder`` — a real cluster lights them up with
+zero plumbing changes, and without a codec library they raise a clear
+``NotImplementedError``.  ``raster`` decodes every canvas through it.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterator, Optional
+from typing import Callable, Dict, Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import images as imglib
 
@@ -55,11 +51,8 @@ def register_decoder(fmt: str, fn: ImageDecoder) -> None:
 
 
 def unregister_decoder(fmt: str) -> None:
+    """Drop the decoder for ``fmt``; plans built earlier keep their snapshot."""
     _DECODERS.pop(fmt, None)
-
-
-def registered_formats() -> set:
-    return set(_DECODERS)
 
 
 def snapshot_decoders() -> Dict[str, ImageDecoder]:
@@ -115,108 +108,15 @@ def decode_image(
     raise ValueError(f"unknown image format: {fmt}")
 
 
-_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("std_gray", T.DoubleType()),
-        T.StructField("phash", T.LongType()),
-    ]
-)
-
-
 def _shape_groups(pdf: pd.DataFrame):
-    """Yield (w, h, fmt, positions) same-shape groups of an Arrow batch —
-    the shared vectorization pattern (raster.verify_images uses it too):
-    per-image decode is unavoidable, but all statistics run once per group
-    over an (n, h, w, 3) stack instead of per row."""
+    """Yield (w, h, fmt, positions) same-shape groups of an Arrow batch
+    (``raster.verify_images``): per-image decode is unavoidable, but all
+    statistics run once per group over an (n, h, w, 3) stack instead of
+    per row."""
     pos = np.arange(len(pdf))
     key = pd.MultiIndex.from_arrays([pdf["w"].values, pdf["h"].values, pdf["fmt"].values])
     for (w, h, fmt), grp in pd.Series(pos).groupby(key, sort=False):
         yield int(w), int(h), str(fmt), grp.to_numpy()
-
-
-def extract_image_features(df: DataFrame) -> DataFrame:
-    """Per-image channel means, gray stddev, and average-hash — Arrow-batched
-    and vectorized per (w, h, fmt) shape group: one stacked mean/std/hash
-    pass per group, no per-row Python statistics."""
-    decoders = snapshot_decoders()  # ships to executors in the closure
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            mean_rgb = np.empty((m, 3), dtype=np.float64)
-            std_gray = np.empty(m, dtype=np.float64)
-            phash = np.empty(m, dtype=np.int64)
-            for w, h, fmt, ii in _shape_groups(pdf):
-                stack = np.stack(
-                    [decode_image(pdf["bytes"].iat[i], w, h, fmt, decoders) for i in ii]
-                ).astype(np.float64)
-                mean_rgb[ii] = stack.mean(axis=(1, 2))
-                std_gray[ii] = stack.mean(axis=3).std(axis=(1, 2))
-                phash[ii] = imglib.average_hash_batch(stack.astype(np.uint8))
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].values,
-                    "mean_r": mean_rgb[:, 0],
-                    "mean_g": mean_rgb[:, 1],
-                    "mean_b": mean_rgb[:, 2],
-                    "std_gray": std_gray,
-                    "phash": phash,
-                }
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, _FEATURES_SCHEMA)
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-    ]
-)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize to (out_w, out_h); output fmt is ``raw``."""
-    decoders = snapshot_decoders()  # ships to executors in the closure
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            data: list = [None] * m
-            for w, h, fmt, ii in _shape_groups(pdf):
-                # index maps are shared by the whole shape group: one fancy
-                # index over the (n, h, w, 3) stack resizes every image
-                stack = np.stack(
-                    [decode_image(pdf["bytes"].iat[i], w, h, fmt, decoders) for i in ii]
-                )
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                resized = np.ascontiguousarray(stack[:, ys][:, :, xs])
-                flat = resized.reshape(len(ii), -1)
-                for j, i in enumerate(ii):
-                    data[i] = flat[j].tobytes()
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"].values,
-                    "bytes": data,
-                    "w": np.full(m, out_w, dtype=np.int32),
-                    "h": np.full(m, out_h, dtype=np.int32),
-                    "fmt": ["raw"] * m,
-                }
-            )
-
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(run, _RESIZE_SCHEMA)
 
 
 def pack_sign_bits(vec_col, bits: int = 63):
@@ -236,11 +136,6 @@ def pack_sign_bits(vec_col, bits: int = 63):
         ).otherwise(F.lit(0).cast("long")),
     )
     return F.aggregate(signs, F.lit(0).cast("long"), lambda a, x: a.bitwiseOR(x))
-
-
-def phash_hamming(a, b):
-    """Hamming distance between two packed-64-bit perceptual hashes (native)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)) if isinstance(a, str) else a.bitwiseXOR(b))
 
 
 def _phash_band_structs(phash_col, n_bands: int):
@@ -489,201 +384,3 @@ def crossmodal_dup_pairs(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "hamming", "jaccard")
     )
-
-
-# ---------------------------------------------------------------------------
-# audio / video plumbing (deterministic fake + stubs)
-# ---------------------------------------------------------------------------
-
-_AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-    ]
-)
-
-
-#: AudioDecoder: (data) -> float64 sample array.  pcm16 is built in (and
-#: bypasses per-clip decode via the concatenated-reduceat fast path);
-#: compressed codecs plug in via register_audio_decoder.
-AudioDecoder = Callable[[bytes], np.ndarray]
-
-_AUDIO_DECODERS: Dict[str, AudioDecoder] = {}
-
-
-def register_audio_decoder(fmt: str, fn: AudioDecoder) -> None:
-    """Register/replace the audio decoder for ``fmt`` (call before building
-    the DataFrame plan — kernels snapshot the registry into their closures)."""
-    _AUDIO_DECODERS[fmt] = fn
-
-
-def audio_features(df: DataFrame, clip_id: str = "clip_id", payload: str = "bytes", fmt: str = "fmt") -> DataFrame:
-    """Audio feature extraction (n_samples, rms, peak).  fmt='pcm16' (raw
-    int16 mono) runs the vectorized fast path; other formats decode through
-    the registry (``register_audio_decoder``), raising a clear error when
-    no decoder is present."""
-    decoders = dict(_AUDIO_DECODERS)  # snapshot: ships to executors
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            fmts = pdf[fmt].to_numpy()
-            if (fmts != "pcm16").any():
-                # registry path: per-clip decode to a sample array, then the
-                # same concatenated-reduceat statistics as pcm16
-                raw = pdf[payload]
-                decoded = []
-                for i in range(m):
-                    f = fmts[i]
-                    if f == "pcm16":
-                        decoded.append(np.frombuffer(raw.iat[i], dtype=np.int16))
-                        continue
-                    fn = decoders.get(f)
-                    if fn is None:
-                        raise NotImplementedError(
-                            f"audio codec '{f}' requires an audio library "
-                            "(register_audio_decoder())"
-                        )
-                    decoded.append(np.asarray(fn(raw.iat[i]), dtype=np.float64))
-                lens = np.fromiter((len(s) for s in decoded), dtype=np.int64, count=m)
-                rms = np.zeros(m, dtype=np.float64)
-                peak = np.zeros(m, dtype=np.float64)
-                nz = np.flatnonzero(lens > 0)
-                for i in nz:
-                    s = decoded[i].astype(np.float64)
-                    rms[i] = np.sqrt((s * s).mean())
-                    peak[i] = np.abs(s).max()
-                yield pd.DataFrame(
-                    {
-                        "clip_id": pdf[clip_id].values,
-                        "n_samples": lens.astype(np.int32),
-                        "rms": rms,
-                        "peak": peak,
-                    }
-                )
-                continue
-            # vectorized over the whole batch: one concatenated sample
-            # buffer, segment sums/maxima via ufunc.reduceat (no per-clip
-            # numpy dispatch).  rms accumulates sequentially (reduceat) —
-            # same value as a per-row mean up to summation-order rounding.
-            bufs = pdf[payload].tolist()
-            odd = [len(b) for b in bufs if len(b) % 2]
-            if odd:
-                # a mis-framed payload would silently shift every LATER
-                # clip's samples by one byte in the concatenated buffer
-                raise ValueError(
-                    f"pcm16 payload has odd byte length {odd[0]} (not a whole number of int16 samples)"
-                )
-            lens = np.fromiter((len(b) // 2 for b in bufs), dtype=np.int64, count=m)
-            starts = np.zeros(m, dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            cat = np.frombuffer(b"".join(bufs), dtype=np.int16).astype(np.float64)
-            rms = np.zeros(m, dtype=np.float64)
-            peak = np.zeros(m, dtype=np.float64)
-            nz = np.flatnonzero(lens > 0)
-            if len(nz):
-                # reduceat over the nonzero segments only: their starts are
-                # strictly increasing and each runs to the next nonzero start
-                rms[nz] = np.sqrt(np.add.reduceat(cat * cat, starts[nz]) / lens[nz])
-                peak[nz] = np.maximum.reduceat(np.abs(cat), starts[nz])
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf[clip_id].values,
-                    "n_samples": lens.astype(np.int32),
-                    "rms": rms,
-                    "peak": peak,
-                }
-            )
-
-    return df.select(clip_id, payload, fmt).mapInPandas(run, _AUDIO_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# video frame sampling (decoder registry, same seam as images)
-#
-# VideoDecoder: (data, w, h) -> uint8 ndarray (n_frames, h, w, 3).
-# 'rawv' (concatenated raw RGB frames) is always registered — the
-# deterministic in-sandbox format; compressed codecs (h264/vp9/...) light
-# up when a real deployment registers an ffmpeg/PyAV-backed decoder.
-# ---------------------------------------------------------------------------
-
-VideoDecoder = Callable[[bytes, int, int], np.ndarray]
-
-_VIDEO_DECODERS: Dict[str, VideoDecoder] = {}
-
-
-def register_video_decoder(fmt: str, fn: VideoDecoder) -> None:
-    """Register/replace the video decoder for ``fmt`` (call before building
-    the DataFrame plan — kernels snapshot the registry into their closures)."""
-    _VIDEO_DECODERS[fmt] = fn
-
-
-def _rawv_decode(data: bytes, w: int, h: int) -> np.ndarray:
-    frame = h * w * 3
-    if len(data) % frame:
-        raise ValueError(
-            f"rawv payload length {len(data)} is not a whole number of {h}x{w} RGB frames"
-        )
-    return np.frombuffer(data, dtype=np.uint8).reshape(-1, h, w, 3)
-
-
-_VIDEO_DECODERS["rawv"] = _rawv_decode
-
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("video_id", T.StringType()),
-        T.StructField("frame_no", T.IntegerType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("fmt", T.StringType()),
-    ]
-)
-
-
-def video_frame_sample(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Explode each video row into frame rows (video_id, frame_no, bytes raw
-    RGB, w, h, fmt='raw'), keeping every ``every_n``-th frame — the
-    frame-sampling stage of a video training-data pipeline.  Arrow-batched
-    ``mapInPandas``; downstream image operators (features / resize / phash)
-    consume the output directly.  Output rows ≈ input bytes / every_n, so
-    the explode SHRINKS data ~every_n-fold — safe at any scale; partition
-    count follows the input scan."""
-    if every_n < 1:
-        raise ValueError("every_n must be >= 1")
-    decoders = dict(_VIDEO_DECODERS)  # snapshot: ships to executors
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fnos, data, ws, hs = [], [], [], [], []
-            for rec in pdf.itertuples(index=False):
-                fn = decoders.get(rec.fmt)
-                if fn is None:
-                    raise NotImplementedError(
-                        f"video codec '{rec.fmt}' requires a video library "
-                        "(register_video_decoder())"
-                    )
-                frames = fn(rec.bytes, int(rec.w), int(rec.h))
-                for i in range(0, frames.shape[0], every_n):
-                    ids.append(rec.video_id)
-                    fnos.append(i)
-                    data.append(frames[i].tobytes())
-                    ws.append(int(rec.w))
-                    hs.append(int(rec.h))
-            yield pd.DataFrame(
-                {
-                    "video_id": ids,
-                    "frame_no": np.asarray(fnos, dtype=np.int32),
-                    "bytes": data,
-                    "w": np.asarray(ws, dtype=np.int32),
-                    "h": np.asarray(hs, dtype=np.int32),
-                    "fmt": ["raw"] * len(ids),
-                }
-            )
-
-    return df.select("video_id", "bytes", "w", "h", "fmt").mapInPandas(run, _FRAME_SCHEMA)

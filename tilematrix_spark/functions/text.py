@@ -53,10 +53,6 @@ def subword_count(text: ColumnOrName) -> Column:
     return F.regexp_count(_col(text), F.lit(_BPE_RE))
 
 
-def char_count(text: ColumnOrName) -> Column:
-    return F.length(_col(text))
-
-
 def punct_ratio(text: ColumnOrName) -> Column:
     n = F.length(_col(text))
     return F.when(n > 0, F.regexp_count(_col(text), F.lit(_PUNCT_RE)).cast("double") / n).otherwise(F.lit(0.0))
@@ -147,7 +143,6 @@ def top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    broadcast_vocab: bool = True,
 ):
     """(id, term, rank): the k most CHARACTERISTIC terms per document,
     scored by df-normalized term frequency ``score = tf / df_term`` (docs
@@ -157,8 +152,7 @@ def top_terms(
     between libm implementations and flip ranks.  Ties break on term text.
 
     Two aggregations (term stats are map-side partial) + one window; the
-    vocabulary side broadcasts when it fits (``broadcast_vocab=False``
-    falls back to a shuffle join for web-scale vocabularies).
+    vocabulary side broadcasts.
     """
     from pyspark.sql import Window
 
@@ -167,9 +161,7 @@ def top_terms(
         F.explode(tokens(normalize(text_col))).alias("term"),
     )
     tf = toks.groupBy("_id", "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    if broadcast_vocab:
-        dfreq = F.broadcast(dfreq)
+    dfreq = F.broadcast(tf.groupBy("term").agg(F.count("*").alias("df")))
     scored = tf.join(dfreq, "term").withColumn(
         "score", F.col("tf").cast("double") / F.col("df").cast("double")
     )
@@ -293,15 +285,6 @@ def c4_line_stats(
         "page_clean",
         (F.col("page_clean") & (n_sent >= min_sentences)).alias("kept"),
         "cleaned",
-    )
-
-
-def c4_clean(df, id_col: str = "doc_id", text_col: str = "text", **kw):
-    """The C4 cleaning pipeline as a corpus transform: surviving pages
-    only, text replaced by the line-filtered ``cleaned`` version."""
-    stats = c4_line_stats(df, id_col=id_col, text_col=text_col, **kw)
-    return stats.filter("kept").select(
-        F.col(id_col), F.col("cleaned").alias(text_col)
     )
 
 

@@ -73,8 +73,8 @@ def with_tile(
     return out
 
 
-def salt_buckets_for_zoom(tp: PyramidConfig, zoom: int, parallelism: int = 256) -> int:
-    """Per-zoom salt width ``S(z) = max(1, P / matrix_cells(z))`` (SURVEY §7.3).
+def salt_buckets_for_zoom(tp: PyramidConfig, zoom: int) -> int:
+    """Per-zoom salt width ``S(z) = max(1, 256 / matrix_cells(z))`` (SURVEY §7.3).
 
     Salting exists to spread a few HOT keys (zoom-0..4 tiles holding most of
     the data) over many reducers.  At high zooms the tile key is already
@@ -83,7 +83,7 @@ def salt_buckets_for_zoom(tp: PyramidConfig, zoom: int, parallelism: int = 256) 
     7× slower at local[32] with salt=32 at z8.
     """
     cells = tp.matrix_width(zoom) * tp.matrix_height(zoom)
-    return max(1, parallelism // max(cells, 1))
+    return max(1, 256 // max(cells, 1))
 
 
 def salted_agg(
@@ -91,15 +91,14 @@ def salted_agg(
     keys: Sequence[str],
     aggs: Dict[str, str],
     salt_buckets: int = 32,
-    salt_on: Optional[ColumnOrName] = None,
 ) -> DataFrame:
     """Two-stage skew-safe aggregation.
 
     ``aggs``: {output_col: "sum:col" | "count:*" | "min:col" | "max:col"}
-    (decomposable aggregates only — they re-combine exactly).
-    ``salt_on``: expression to derive the salt from (default: random spread
-    via a hash of all columns is NOT deterministic, so we hash the first
-    key's value plus ``spark_partition_id`` — cheap and reproducible).
+    (decomposable aggregates only — they re-combine exactly).  The salt
+    hashes ``spark_partition_id()``: a random spread is not deterministic,
+    and the partition id is cheap and reproducible for a given input
+    partitioning.
 
     ``salt_buckets`` must fit the key cardinality: use
     :func:`salt_buckets_for_zoom` for tile keys.  ``salt_buckets <= 1``
@@ -116,10 +115,7 @@ def salted_agg(
             else:
                 raise ValueError(f"unsupported salted agg op: {op}")
         return df.groupBy(*keys).agg(*final_direct)
-    salt_src = (
-        F.col(salt_on) if isinstance(salt_on, str) else salt_on
-    ) if salt_on is not None else F.spark_partition_id()
-    salt = F.pmod(F.hash(salt_src), F.lit(salt_buckets)).alias("_salt")
+    salt = F.pmod(F.hash(F.spark_partition_id()), F.lit(salt_buckets)).alias("_salt")
 
     partial_exprs = []
     final_exprs = []
@@ -160,33 +156,3 @@ def tile_histogram(
     tiled = with_tile(df, tp, zoom, x, y)
     return salted_agg(tiled, ["row", "col"], {"n": "count:*"}, salt_buckets=salt_buckets or 1)
 
-
-def zoom_rollup(
-    tile_counts: DataFrame,
-    from_zoom: int,
-    to_zoom: int,
-    count_col: str = "n",
-) -> DataFrame:
-    """Roll per-tile counts up the pyramid via parent ids
-    (``_tile.py:180-186``): repeated ``groupBy(row//2, col//2)``.
-
-    Input: (row, col, n) at ``from_zoom``; output adds rows for every zoom
-    in [to_zoom, from_zoom] with columns (zoom, row, col, n).
-    """
-    out = tile_counts.withColumn("zoom", F.lit(from_zoom))
-    levels = [out]
-    cur = out
-    for z in range(from_zoom - 1, to_zoom - 1, -1):
-        cur = (
-            cur.groupBy(
-                F.floor(F.col("row") / 2).alias("row"),
-                F.floor(F.col("col") / 2).alias("col"),
-            )
-            .agg(F.sum(count_col).alias(count_col))
-            .withColumn("zoom", F.lit(z))
-        )
-        levels.append(cur)
-    result = levels[0]
-    for lvl in levels[1:]:
-        result = result.unionByName(lvl)
-    return result

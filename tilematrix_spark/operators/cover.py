@@ -21,12 +21,11 @@ equivalent of ``prep(union).intersects(tile.bbox())`` for axis-aligned boxes.
 
 Scale notes
 -----------
-* A continent-sized box at high zoom explodes to a huge tile set.  The
-  row-axis explode happens first; pass ``repartition_after_rows`` to spread
-  row-bands across the cluster before the column explode (explode-cap
-  pattern, SURVEY §4).  With ``max_cover_tiles`` set, oversized covers are
-  by default row-band SPLIT before the explode (complete results, bounded
-  per-step generate size); ``oversize="drop"`` quarantines them instead.
+* A continent-sized box at high zoom explodes to a huge tile set.  With
+  ``max_cover_tiles`` set, oversized covers are by default row-band SPLIT
+  before the explode (explode-cap pattern, SURVEY §4: complete results,
+  bounded per-step generate size); ``oversize="drop"`` quarantines them
+  instead.
 * Row-major ordering (the reference generator's contract) is a physical
   concern: ``.orderBy("row","col")`` at the sink, or
   ``repartitionByRange`` + ``sortWithinPartitions`` for batch-by-row parity.
@@ -169,7 +168,6 @@ def tiles_from_bounds(
     top: ColumnOrName = "top",
     out_row: str = "row",
     out_col: str = "col",
-    repartition_after_rows: Optional[int] = None,
     max_cover_tiles: Optional[int] = None,
     oversize: str = "split",
 ) -> DataFrame:
@@ -181,10 +179,8 @@ def tiles_from_bounds(
 
     * ``"split"`` (default): the row range is pre-split into row bands of at
       most ``ceil(max_cover_tiles / cols)`` rows each (a cheap extra explode
-      BEFORE the big one), so no single generate step blows past the cap and
-      ``repartition_after_rows`` can spread a continent×z20 cover across the
-      cluster band-by-band — results are complete and identical to the
-      uncapped cover.
+      BEFORE the big one), so no single generate step blows past the cap —
+      results are complete and identical to the uncapped cover.
     * ``"drop"``: oversized covers are dropped (quarantine; the caller can
       route them to an error sink by testing ``cover_size`` beforehand).
 
@@ -235,8 +231,6 @@ def tiles_from_bounds(
             )
             .drop("_tmx_band")
         )
-        if repartition_after_rows:
-            df = df.repartition(repartition_after_rows)
         row_seq = F.sequence(F.col("_tmx_row_lo"), F.col("_tmx_row_hi"))
         df = df.withColumn(out_row, F.explode(row_seq)).drop("_tmx_row_lo", "_tmx_row_hi")
     else:
@@ -245,8 +239,6 @@ def tiles_from_bounds(
             F.sequence(F.col("_tmx.row_min"), F.col("_tmx.row_max")),
         ).otherwise(F.array().cast("array<long>"))
         df = df.withColumn(out_row, F.explode(row_seq))
-        if repartition_after_rows:
-            df = df.repartition(repartition_after_rows)
 
     col_seq = F.when(
         F.col("_tmx.col_min") <= F.col("_tmx.col_max"),

@@ -21,13 +21,12 @@ translate offset, ``_funcs.py:52-54``), gated on the geometry bbox actually
 overflowing that side — set-equivalent to testing against the shifted parts.
 
 At 100 TB: candidate generation is the skew risk (continent × z20).  Use
-``max_cover_tiles`` + ``repartition_after_rows`` from the cover operator via
-the passthrough kwargs; the refine stage is embarrassingly parallel.
+``max_cover_tiles`` from the cover operator via the passthrough kwargs; the
+refine stage is embarrassingly parallel.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Iterator, Optional, Union
 
 import numpy as np
@@ -117,7 +116,6 @@ def tiles_from_geom(
     out_row: str = "row",
     out_col: str = "col",
     max_cover_tiles: Optional[int] = None,
-    repartition_after_rows: Optional[int] = None,
     oversize: str = "split",
 ) -> DataFrame:
     """All tiles intersecting each row's geometry (GeoJSON string column).
@@ -168,7 +166,6 @@ def tiles_from_geom(
         out_row=out_row,
         out_col=out_col,
         max_cover_tiles=max_cover_tiles,
-        repartition_after_rows=repartition_after_rows,
         oversize=oversize,
     )
     cand = cand.withColumn("_minx", F.col("_gi.minx")).withColumn("_maxx", F.col("_gi.maxx"))

@@ -158,7 +158,7 @@ def knn_brute_force(
     py: str = "lat",
 ) -> DataFrame:
     """Oracle-grade brute force: broadcast cross join + windowed top-k.
-    O(|Q|·|P|) — for verification and small query sets only."""
+    O(|Q|·|P|); kept as the test reference that pins ``knn_join``."""
     q = queries.select(F.col(query_id), F.col(qx).alias("_qx"), F.col(qy).alias("_qy"))
     p = points.select(F.col(point_id), F.col(px).alias("_px"), F.col(py).alias("_py"))
     joined = F.broadcast(q).crossJoin(p)

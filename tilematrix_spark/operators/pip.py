@@ -41,15 +41,10 @@ from . import assign
 from .geometry import tiles_from_geom
 
 
-def _points_in_polygon(geom: dict, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    """Even-odd ray-cast of many points against one (multi)polygon.
-    Interior semantics; boundary points follow ray-cast parity (documented)."""
-    return _points_in_prepared(_prepare_parts(geom), xs, ys)
-
-
 def _prepare_parts(geom: dict) -> List[List[np.ndarray]]:
-    """Closed-ring vertex arrays per polygon part — the 'prepared geometry':
-    parse + ring-close once, reuse across every refine batch."""
+    """Closed-ring vertex arrays per polygon part, the input of the full
+    ray-cast ``_points_in_prepared``.  Kept as the test reference that pins
+    the grid-accelerated ``_prepare_parts_grid`` path bit-for-bit."""
     parts: List[List[np.ndarray]] = []
     for kind, coords in geomkernels._iter_parts(geom):
         if kind != "polygon":

@@ -4,8 +4,10 @@ The reference is a pure batch library (no streaming surface); the engine adds
 the standard streaming shape for the tile workload: a stream of point events
 → stateless tile assignment (the same native ``exprs.tile_from_xy``
 projection — works unchanged on streams) → watermarked, windowed per-tile
-counts.  Late data beyond the watermark is dropped by Spark's state store;
-checkpointing gives exactly-once sink semantics.
+counts, plus exact stream dedup and replay-safe ``foreachBatch`` sinks for
+the composed tile table and the IVF-PQ index.  Late data beyond the
+watermark is dropped by Spark's state store; checkpointing gives
+exactly-once sink semantics.
 
 Usage:
     stream = spark.readStream.schema(schema).parquet(in_dir)
@@ -108,113 +110,6 @@ def stream_tile_counts(
     return (
         tiled.groupBy(F.window(F.col(ts_col), window_duration), "row", "col")
         .agg(F.count("*").alias("n"))
-    )
-
-
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_idx", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("duration_us", T.LongType()),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("session_idx", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-
-def stream_sessionize(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    gap_s: int = 1800,
-) -> DataFrame:
-    """Streaming counterpart of ``functions/windows.sessionize``: per-user
-    sessions split at gaps > ``gap_s``, maintained ACROSS micro-batches with
-    ``applyInPandasWithState``.
-
-    GroupState holds only the OPEN session (idx, start, last, count); a
-    batch closes sessions when its events gap past the stored tail or past
-    each other, and emits exactly the CLOSED sessions (append mode) — the
-    open tail stays in state for the next micro-batch.  Same µs precision
-    and (ts, order_col) tie order as the batch operator; at scale pair with
-    a state TTL for abandoned users.
-    """
-    import numpy as np
-
-    gap_us = gap_s * 1_000_000
-
-    def fn(key, pdfs, state):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        order = np.lexsort((pdf["_oid"].to_numpy(), pdf["_us"].to_numpy()))
-        us = pdf["_us"].to_numpy()[order]
-        have_state = state.exists
-        if have_state:
-            idx0, start0, last0, n0 = state.get
-        else:
-            idx0, start0, last0, n0 = 0, 0, 0, 0
-        prev = np.empty_like(us)
-        prev[1:] = us[:-1]
-        prev[0] = last0 if have_state else us[0]
-        new_flag = (us - prev) > gap_us
-        sid = idx0 + np.cumsum(new_flag)
-        first_pos = np.flatnonzero(np.r_[True, sid[1:] != sid[:-1]])
-        counts = np.diff(np.r_[first_pos, len(sid)]).astype(np.int64)
-        starts = us[first_pos].copy()
-        ends = us[np.r_[first_pos[1:], len(us)] - 1]
-        closed_rows = []
-        if have_state and new_flag[0]:
-            # the stored open session closed before this batch's first event
-            closed_rows.append((idx0, n0, start0, last0))
-        elif have_state:
-            counts[0] += n0
-            starts[0] = start0
-        for g in range(len(first_pos) - 1):  # all but the still-open tail
-            closed_rows.append(
-                (int(sid[first_pos[g]]), int(counts[g]), int(starts[g]), int(ends[g]))
-            )
-        state.update((int(sid[-1]), int(starts[-1]), int(ends[-1]), int(counts[-1])))
-        if closed_rows:
-            uid = key[0]
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(closed_rows),
-                    "session_idx": [r[0] for r in closed_rows],
-                    "n_events": [r[1] for r in closed_rows],
-                    "start_us": [r[2] for r in closed_rows],
-                    "end_us": [r[3] for r in closed_rows],
-                    "duration_us": [r[3] - r[2] for r in closed_rows],
-                }
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = stream.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.expr(
-            f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00',"
-            f" CAST({ts_col} AS TIMESTAMP_NTZ))"
-        ).alias("_us"),
-        F.col(order_col).cast("long").alias("_oid"),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=_SESSION_OUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -381,60 +276,5 @@ def incremental_ann_sink(
             batch_df.sparkSession, index_path, batch_df, int(batch_id),
             id_col=id_col, vec_col=vec_col, namespace="stream",
         )
-
-    return process
-
-
-def incremental_focal_sink(
-    tp: PyramidConfig,
-    zoom: int,
-    tiles_path: str,
-    focal_path: str,
-    radius: int = 1,
-    n_buckets: int = 64,
-    **focal_kwargs,
-):
-    """foreachBatch sink maintaining a FOCAL-OUTPUT table incrementally from
-    a stream of replacement tile canvases: per micro-batch, recompute the
-    stencil for only the batch's tiles + their neighbor ring
-    (``incremental.incremental_focal``) and rewrite only the parquet
-    buckets that hold them — streaming stencil maintenance.
-
-    Both tables are partitioned by ``pb = pmod(hash(row, col), n_buckets)``
-    so each upsert reads and dynamically overwrites ONLY affected buckets.
-
-    Exactly-once WITHOUT a batch_id token: a replacement batch is a
-    key-replace, which is naturally idempotent — replaying it against a
-    tiles table that already absorbed it anti-joins the same keys out and
-    unions identical rows back, so the recomputed focal delta (and both
-    bucket overwrites) are byte-identical no matter where between the two
-    writes and the checkpoint commit the crash landed.  Order between the
-    two writes is therefore free; read errors other than path-not-found
-    propagate and fail the batch (the checkpoint retries).
-
-    Usage::
-
-        q = (stream.writeStream.foreachBatch(
-                 incremental_focal_sink(tp, 6, tiles, focal))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-    """
-    from . import incremental as incr
-
-    cols = ["row", "col", "tile_w", "tile_h", "bytes"]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # two consumers (focal input + tiles upsert): materialize once
-        batch = batch_df.select(*cols).localCheckpoint(eager=True)
-        if _hadoop_path_exists(spark, tiles_path):
-            base = spark.read.parquet(tiles_path).select(*cols)
-        else:
-            base = spark.createDataFrame([], batch.schema)
-        delta = incr.incremental_focal(
-            base, batch, tp, zoom, radius=radius, emit="canvas", **focal_kwargs
-        )
-        _upsert_buckets(delta, focal_path, n_buckets)
-        _upsert_buckets(batch, tiles_path, n_buckets)
 
     return process
