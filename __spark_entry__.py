@@ -3533,6 +3533,198 @@ def sql_rasterize_bins() -> str:
     """
 
 
+# ---------------------------------------------------------------------------
+# raster fixtures: each canvas formula declared once, for both engines
+# ---------------------------------------------------------------------------
+
+#: the names a band or ``keep`` template may use, each bound to itself
+_PIXEL_NAMES = {n: n for n in ("i", "j", "row", "col", "gy", "gx")}
+_CANVAS_SCHEMA = "row long, col long, tile_w int, tile_h int, bytes binary"
+
+
+def _sql_grid(rows: range, cols: range) -> str:
+    """Every (trow, tcol) of a rectangular tile grid."""
+    return f"""SELECT trow, tcol
+        FROM (SELECT unnest(generate_series({rows.start}, {rows.stop - 1})) AS trow)
+        CROSS JOIN (SELECT unnest(generate_series({cols.start}, {cols.stop - 1})) AS tcol)"""
+
+
+class CanvasFixture(NamedTuple):
+    """Formula-declared ``tile_px``-square uint8 canvases over the tile grid
+    ``rows`` x ``cols``, one interleaved band per ``bands`` template.  A
+    template is an integer expression over ``{i} {j}`` (pixel in tile),
+    ``{row} {col}`` (tile) and ``{gy} {gx}`` (global pixel, row * tile_px +
+    i) that numpy and DuckDB evaluate alike; ``keep`` is a predicate over
+    ``{row} {col}`` in the SQL both Spark and DuckDB parse.  ``df`` builds
+    the Spark canvases and the ``sql_*`` fragments the oracles select from,
+    so no oracle re-types a formula."""
+
+    rows: range
+    cols: range
+    tile_px: int
+    bands: list[str]
+    keep: str | None
+
+    def df(self, spark: SparkSession) -> DataFrame:
+        """The kept tiles' canvases as ``row, col, tile_w, tile_h, bytes``;
+        a band value outside [0, 255] raises."""
+        grid = (
+            spark.range(self.rows.start, self.rows.stop)
+            .select(F.col("id").alias("row"))
+            .crossJoin(spark.range(self.cols.start, self.cols.stop).select(F.col("id").alias("col")))
+        )
+        if self.keep:
+            grid = grid.filter(F.expr(self.keep.format(row="row", col="col")))
+        n = self.tile_px
+        formulas = [t.format(**_PIXEL_NAMES) for t in self.bands]
+
+        def gen(batches):
+            import numpy as np
+            import pandas as pd
+
+            i = np.arange(n, dtype=np.int64)[:, None]
+            j = np.arange(n, dtype=np.int64)[None, :]
+            codes = [compile(f, "<band>", "eval") for f in formulas]
+
+            def canvas(row, col):
+                env = {"i": i, "j": j, "row": row, "col": col, "gy": row * n + i, "gx": col * n + j}
+                v = np.stack([np.broadcast_to(eval(c, {"__builtins__": {}}, env), (n, n)) for c in codes], axis=-1)
+                if v.min() < 0 or v.max() > 255:
+                    raise ValueError(f"tile ({row}, {col}): band values outside [0, 255]")
+                return v.astype(np.uint8).tobytes()
+
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                rows, cols = pdf["row"].to_numpy(), pdf["col"].to_numpy()
+                side = np.full(len(pdf), n, dtype=np.int32)
+                yield pd.DataFrame({
+                    "row": rows, "col": cols, "tile_w": side, "tile_h": side,
+                    "bytes": [canvas(int(r), int(c)) for r, c in zip(rows, cols)],
+                })
+
+        return grid.mapInPandas(gen, _CANVAS_SCHEMA)
+
+    def sql_tiles(self) -> str:
+        """The kept tiles as ``SELECT trow, tcol``."""
+        keep = f"\n        WHERE {self.keep.format(row='trow', col='tcol')}" if self.keep else ""
+        return _sql_grid(self.rows, self.cols) + keep
+
+    def sql_keep(self, gy: str, gx: str) -> str:
+        """Whether global pixel (``gy``, ``gx``) lies in a kept tile."""
+        n = self.tile_px
+        return f"({self.keep.format(row=f'({gy} // {n})', col=f'({gx} // {n})')})"
+
+    def sql_inside(self, gy: str, gx: str, margin: int = 0) -> str:
+        """Whether global pixel (``gy``, ``gx``) lies in the grid, ``margin``
+        pixels in from its edge."""
+        n, m = self.tile_px, margin
+        return (f"{gy} >= {self.rows.start * n + m} AND {gy} < {self.rows.stop * n - m}"
+                f" AND {gx} >= {self.cols.start * n + m} AND {gx} < {self.cols.stop * n - m}")
+
+    def sql_value(self, band: int | str = 0, i: str = "i", j: str = "j",
+                  row: str = "trow", col: str = "tcol") -> str:
+        """A band's value at tile-local pixel (``i``, ``j``) of tile
+        (``row``, ``col``); ``band`` is a band index or a band column."""
+        n = self.tile_px
+        return self._band(band, i=i, j=j, row=row, col=col,
+                          gy=f"({row} * {n} + {i})", gx=f"({col} * {n} + {j})")
+
+    def sql_gvalue(self, gy: str, gx: str, band: int | str = 0) -> str:
+        """A band's value at global pixel (``gy``, ``gx``)."""
+        n = self.tile_px
+        return self._band(band, i=f"({gy} % {n})", j=f"({gx} % {n})",
+                          row=f"({gy} // {n})", col=f"({gx} // {n})", gy=gy, gx=gx)
+
+    def _band(self, band: int | str, **names: str) -> str:
+        if isinstance(band, int):
+            return f"({self.bands[band].format(**names)})"
+        whens = " ".join(f"WHEN {b} THEN {t.format(**names)}" for b, t in enumerate(self.bands))
+        return f"(CASE {band} {whens} END)"
+
+    def sql_pixels(self) -> str:
+        """One row per pixel and band of every kept tile: ``trow, tcol, i, j,
+        gy, gx, b, v``."""
+        n, nb = self.tile_px, len(self.bands)
+        return f"""
+      SELECT trow, tcol, i, j, trow * {n} + i AS gy, tcol * {n} + j AS gx, b,
+             {self.sql_value("b" if nb > 1 else 0)} AS v
+      FROM ({self.sql_tiles()}),
+           (SELECT unnest(generate_series(0, {n - 1})) AS i),
+           (SELECT unnest(generate_series(0, {n - 1})) AS j),
+           (SELECT unnest(generate_series(0, {nb - 1})) AS b)"""
+
+    def overview_bands(self) -> list[str]:
+        """Each band's 2x2 integer box filter, as templates one zoom up:
+        parent pixel (gy, gx) averages child pixels (2gy + dy, 2gx + dx)."""
+        out = []
+        for b in range(len(self.bands)):
+            terms = [self.sql_gvalue(f"(2 * {{gy}} + {dy})", f"(2 * {{gx}} + {dx})", b)
+                     for dy in (0, 1) for dx in (0, 1)]
+            out.append(f"(({' + '.join(terms)}) // 4)")
+        return out
+
+
+def canvas_fixture(rows: range, cols: range, tile_px: int, bands: list,
+                   keep: str | None = None) -> CanvasFixture:
+    """Declare a raster fixture.  A band is ``(a, b, c, d, e, m)`` for
+    ``(a*i + b*j + c*row + d*col + e) % m`` or a template string (see
+    CanvasFixture); every term must stay non-negative, where ``//`` and
+    ``%`` agree across numpy and DuckDB.  A bad declaration fails at
+    import, not mid-query."""
+    if tile_px < 1 or not rows or not cols or min(rows.start, cols.start) < 0 \
+            or (rows.step, cols.step) != (1, 1):
+        raise ValueError(f"bad grid {rows} x {cols} at {tile_px} px")
+    templates = []
+    for band in bands:
+        if isinstance(band, tuple):
+            if len(band) != 6 or not all(isinstance(k, int) and k >= 0 for k in band) \
+                    or not 1 <= band[5] <= 256:
+                raise ValueError(f"band {band}: want 6 non-negative ints, modulus 1..256")
+            a, b, c, d, e, m = band
+            band = f"({a} * {{i}} + {b} * {{j}} + {c} * {{row}} + {d} * {{col}} + {e}) % {m}"
+        compile(band.format(**_PIXEL_NAMES), "<band>", "eval")
+        templates.append(band)
+    if not templates:
+        raise ValueError("a canvas needs at least one band")
+    if keep is not None:
+        keep.format(row="row", col="col")
+    return CanvasFixture(rows, cols, tile_px, templates, keep)
+
+
+#: the 72-tile z5 region (lon [-90, -22.5], lat [11.25, 45]) every zonal,
+#: focal, histogram, stretch, diff and audit query reads
+_REGION = (range(8, 14), range(16, 28))
+ZONAL_CANVAS = canvas_fixture(*_REGION, 256, [(3, 7, 11, 13, 0, 251)])
+#: raster_diff's second epoch: a second formula on every tile of the region
+EPOCH_B_CANVAS = canvas_fixture(*_REGION, 256, [(5, 3, 11, 13, 17, 251)])
+#: incremental_focal's update batch: the second formula on (row+col)%5==2
+FOCAL_UPDATE_CANVAS = canvas_fixture(*_REGION, 256, EPOCH_B_CANVAS.bands, keep="({row} + {col}) % 5 = 2")
+#: the pyramid audit's 288 three-band z6 children of the region
+AUDIT_CHILDREN = canvas_fixture(
+    range(16, 28), range(32, 56), 64, [(3, 7, 11, 13, 89 * b, 251) for b in range(3)]
+)
+#: claimed z5 parents planted correct: the true overview of the children
+AUDIT_PLANTED = canvas_fixture(*_REGION, 64, AUDIT_CHILDREN.overview_bands(), keep="({row} + {col}) % 3 = 0")
+#: the other claimed parents: the children's formula read at z5, stale
+AUDIT_STALE = canvas_fixture(*_REGION, 64, AUDIT_CHILDREN.bands, keep="({row} + {col}) % 3 <> 0")
+#: label_components' 6x8 grid of 16 px tiles: 200 on 4x4 blocks where
+#: (23*(gy//4) + 41*(gx//4)) % 7 < 2 (~2/7, below site percolation, so
+#: components stay small) except ~9% holes where (3*gy + 5*gx) % 11 == 0,
+#: else 10.  Block edges align with tile edges, so every cross-tile merge
+#: exercises the border-strip equivalence join.
+CC_CANVAS = canvas_fixture(range(0, 6), range(0, 8), 16, [
+    "10 + 190 * ((6 - (23 * ({gy} // 4) + 41 * ({gx} // 4)) % 7) // 5)"
+    " * (((3 * {gy} + 5 * {gx}) % 11 + 10) // 11)"
+])
+
+
+def _tile_keyed(df: DataFrame, *cols) -> DataFrame:
+    """``df``'s ``row``/``col`` as the oracles' ``tile_row``/``tile_col``,
+    then ``cols``."""
+    return df.select(F.col("row").alias("tile_row"), F.col("col").alias("tile_col"), *cols)
+
+
 def _zonal_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone bboxes for the zonal-stats gate: one per sampled event, scattered
     deterministically into the tile region rows 8-13 x cols 16-27 at z5
@@ -3554,97 +3746,6 @@ def _zonal_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zonal_tiles(spark: SparkSession) -> DataFrame:
-    """Single-band 256x256 canvases for every tile in the zonal gate region,
-    pixel value (3*i + 7*j + 11*row + 13*col) % 251 — an integer formula the
-    DuckDB oracle mirrors exactly, so zonal SUMS over real canvas bytes are
-    value-gated (unlike compose, whose decode is pinned by pytest only)."""
-    grid = (
-        spark.range(8, 14)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(16, 28).select(F.col("id").alias("col")))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(256, dtype=np.int64)[:, None]
-        j = np.arange(256, dtype=np.int64)[None, :]
-        base = 3 * i + 7 * j
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = [
-                ((base + 11 * int(r) + 13 * int(c)) % 251).astype(np.uint8).tobytes()
-                for r, c in zip(rows, cols)
-            ]
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 256, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 256, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
-    )
-
-
-def _cc_tiles(spark: SparkSession) -> DataFrame:
-    """Single-band 16x16 canvases for the connected-components gate, a
-    6x8 tile grid: pixel value 200 where ((23*(gy//4) + 41*(gx//4)) % 7 < 2)
-    AND ((3*gy + 5*gx) % 11 != 0) else 10 — 4x4 on-blocks at ~2/7 density
-    (below site percolation, so components stay small) punched with ~9%
-    pixel holes; block edges align with tile edges, so every cross-tile
-    merge exercises the border-strip equivalence join.  The integer formula
-    is re-derived per pixel by the DuckDB oracle."""
-    grid = (
-        spark.range(0, 6)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(0, 8).select(F.col("id").alias("col")))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(16, dtype=np.int64)[:, None]
-        j = np.arange(16, dtype=np.int64)[None, :]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = []
-            for r, c in zip(rows, cols):
-                gy = int(r) * 16 + i
-                gx = int(c) * 16 + j
-                on = ((23 * (gy // 4) + 41 * (gx // 4)) % 7) < 2
-                hole = ((3 * gy + 5 * gx) % 11) == 0
-                bufs.append(
-                    np.where(on & ~hole, 200, 10).astype(np.uint8).tobytes()
-                )
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 16, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 16, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
-    )
-
-
 def q_label_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-tile connected-component labeling (raster.label_components):
     per-tile numpy CCL -> border-strip equivalence joins -> global label
@@ -3655,22 +3756,15 @@ def q_label_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact."""
     from tilematrix_spark import raster
 
-    return raster.label_components(_cc_tiles(spark), threshold=128)
+    return raster.label_components(CC_CANVAS.df(spark), threshold=128)
 
 
 def sql_label_components() -> str:
-    return """
-      WITH RECURSIVE g AS (
-        SELECT r.r * 16 + i.i AS gy, c.c * 16 + j.j AS gx
-        FROM (SELECT unnest(generate_series(0, 5)) AS r) r,
-             (SELECT unnest(generate_series(0, 7)) AS c) c,
-             (SELECT unnest(generate_series(0, 15)) AS i) i,
-             (SELECT unnest(generate_series(0, 15)) AS j) j
-      ),
-      fg AS (
-        SELECT gy, gx, gy * 4294967296 + gx AS id FROM g
-        WHERE ((23 * (gy // 4) + 41 * (gx // 4)) % 7) < 2
-          AND ((3 * gy + 5 * gx) % 11) <> 0
+    return f"""
+      WITH RECURSIVE fg AS (
+        SELECT gy, gx, gy * 4294967296 + gx AS id
+        FROM ({CC_CANVAS.sql_pixels()})
+        WHERE v >= 128
       ),
       e1 AS (
         SELECT a.id AS src, b.id AS dst
@@ -3700,7 +3794,7 @@ def sql_label_components() -> str:
         min(gx) AS min_gx,
         max(gy) AS max_gy,
         max(gx) AS max_gx,
-        CAST(count(DISTINCT (gy // 16) * 1000 + (gx // 16)) AS BIGINT)
+        CAST(count(DISTINCT (gy // {CC_CANVAS.tile_px}) * 1000 + (gx // {CC_CANVAS.tile_px})) AS BIGINT)
           AS n_tiles,
         CAST(4 * count(*) - 2 * coalesce(min(a.n_adj), 0) AS BIGINT)
           AS perimeter
@@ -3718,7 +3812,7 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums: canvases carry an integer formula DuckDB re-derives per pixel."""
     from tilematrix_spark import raster
 
-    return raster.zonal_stats(_zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5)
+    return raster.zonal_stats(ZONAL_CANVAS.df(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5)
 
 
 #: the ``_zonal_zones`` bboxes as CTE ``z(zone_id, zl, zb, zr, zt)``
@@ -3787,8 +3881,8 @@ def _sql_zone_pixels(zones_cte: str, carry_cols: tuple = ()) -> str:
       )"""
 
 
-#: the ``_zonal_tiles`` canvas value of a ``pix`` row
-_SQL_ZONAL_VAL = "(3 * pi + 7 * pj + 11 * trow + 13 * tcol) % 251"
+#: the ``ZONAL_CANVAS`` value of a ``pix`` row
+_SQL_ZONAL_VAL = ZONAL_CANVAS.sql_value(i="pi", j="pj")
 
 
 def sql_zonal_stats() -> str:
@@ -3829,7 +3923,7 @@ def q_zonal_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(cx + w, cx, cx - w, cx).alias("poly_x"),
         F.array(cy, cy + hh, cy, cy - hh).alias("poly_y"),
     )
-    return raster.zonal_poly_stats(_zonal_tiles(spark), zones, GEODETIC, 5)
+    return raster.zonal_poly_stats(ZONAL_CANVAS.df(spark), zones, GEODETIC, 5)
 
 
 def sql_zonal_poly() -> str:
@@ -3883,7 +3977,7 @@ def q_zonal_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     return raster.zonal_class_counts(
-        _zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
+        ZONAL_CANVAS.df(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
     )
 
 
@@ -3908,7 +4002,7 @@ def q_zonal_majority(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     return raster.zonal_majority(
-        _zonal_tiles(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
+        ZONAL_CANVAS.df(spark), _zonal_zones(spark, sf_dir), GEODETIC, 5
     )
 
 
@@ -3943,7 +4037,7 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     out = raster.focal_stats(
-        _zonal_tiles(spark),
+        ZONAL_CANVAS.df(spark),
         GEODETIC,
         5,
         radius=2,
@@ -3952,50 +4046,39 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=577,
         sample_off=11,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "n_nbr",
-        "sum_nbr",
-        "min_nbr",
-        "max_nbr",
-        "mean_nbr",
-    )
+    return _tile_keyed(out, "py", "px", "n_nbr", "sum_nbr", "min_nbr", "max_nbr", "mean_nbr")
 
 
-def sql_focal_stats() -> str:
-    """Focal mirror in global pixel space: the materialized raster is the
-    rectangle rows 8-13 x cols 16-27 (gy in [2048, 3584), gx in [4096,
-    7168)); each sampled pixel's 5x5 window clips to that extent and every
-    window pixel value re-derives from the zonal canvas formula
-    (3*i + 7*j + 11*row + 13*col) % 251 via gy/gx div-mod 256."""
-    return """
-      WITH tiles AS (
-        SELECT trow, tcol
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
-      ctr AS (
-        SELECT trow, tcol, s // 256 AS py, s % 256 AS px,
-               trow * 256 + s // 256 AS gy, tcol * 256 + s % 256 AS gx
-        FROM (SELECT trow, tcol, unnest(generate_series(11, 65535, 577)) AS s
-              FROM tiles)
-      ),
-      win AS (
-        SELECT trow, tcol, py, px, gy + dy AS gy2, gx + dx AS gx2
-        FROM (SELECT *, unnest(generate_series(-2, 2)) AS dy FROM ctr),
-             (SELECT unnest(generate_series(-2, 2)) AS dx)
-        WHERE gy + dy >= 2048 AND gy + dy < 3584
-          AND gx + dx >= 4096 AND gx + dx < 7168
-      ),
-      v AS (
-        SELECT trow, tcol, py, px,
-               (3 * (gy2 % 256) + 7 * (gx2 % 256)
-                + 11 * (gy2 // 256) + 13 * (gx2 // 256)) % 251 AS val
-        FROM win
-      )
+def _sql_centers(tiles: str, off: int, mod: int) -> str:
+    """The sampled pixels (every ``mod``-th from ``off``, the kernels'
+    ``sample_mod``/``sample_off`` rule) of each (trow, tcol) of ``tiles``,
+    zonal-region-sized: trow, tcol, py, px and the global gy, gx."""
+    n = ZONAL_CANVAS.tile_px
+    return f"""
+        SELECT trow, tcol, s // {n} AS py, s % {n} AS px,
+               trow * {n} + s // {n} AS gy, tcol * {n} + s % {n} AS gx
+        FROM (SELECT trow, tcol, unnest(generate_series({off}, {n * n - 1}, {mod})) AS s
+              FROM {tiles})"""
+
+
+def _sql_window(radius: int) -> str:
+    """Each ``ctr`` center's (2r+1)^2 window: offsets dy, dx and global
+    pixel gy2, gx2."""
+    return f"""
+        SELECT trow, tcol, py, px, dy, dx, gy + dy AS gy2, gx + dx AS gx2
+        FROM (SELECT *, unnest(generate_series(-{radius}, {radius})) AS dy FROM ctr),
+             (SELECT unnest(generate_series(-{radius}, {radius})) AS dx)"""
+
+
+def _sql_focal(tiles: str, off: int, mod: int, radius: int, val: str) -> str:
+    """Focal n/sum/min/max/trunc-mean in global pixel space: each sampled
+    center of ``tiles`` aggregates ``val`` (the value at gy2, gx2) over its
+    window clipped to the materialized zonal region."""
+    return f"""
+      WITH ctr AS ({_sql_centers(tiles, off, mod)}),
+      win AS ({_sql_window(radius)}
+        WHERE {ZONAL_CANVAS.sql_inside("gy + dy", "gx + dx")}),
+      v AS (SELECT trow, tcol, py, px, {val} AS val FROM win)
       SELECT trow AS tile_row, tcol AS tile_col,
              CAST(py AS INTEGER) AS py, CAST(px AS INTEGER) AS px,
              count(*) AS n_nbr,
@@ -4007,46 +4090,10 @@ def sql_focal_stats() -> str:
     """
 
 
-def _focal_update_tiles(spark: SparkSession) -> DataFrame:
-    """Replacement canvases for the zonal-region tiles with
-    (row+col) % 5 == 2 — a SECOND integer formula
-    (5*i + 3*j + 11*row + 13*col + 17) % 251, so the incremental-focal
-    oracle can re-derive the MIXED corpus per pixel."""
-    grid = (
-        spark.range(8, 14)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(16, 28).select(F.col("id").alias("col")))
-        .filter((F.col("row") + F.col("col")) % 5 == 2)
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(256, dtype=np.int64)[:, None]
-        j = np.arange(256, dtype=np.int64)[None, :]
-        base = 5 * i + 3 * j + 17
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = [
-                ((base + 11 * int(r) + 13 * int(c)) % 251).astype(np.uint8).tobytes()
-                for r, c in zip(rows, cols)
-            ]
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 256, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 256, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
+def sql_focal_stats() -> str:
+    """Every sampled pixel's 5x5 window clips to the zonal region."""
+    return _sql_focal(
+        f"({ZONAL_CANVAS.sql_tiles()})", 11, 577, 2, ZONAL_CANVAS.sql_gvalue("gy2", "gx2")
     )
 
 
@@ -4063,8 +4110,8 @@ def q_incremental_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import incremental
 
     out = incremental.incremental_focal(
-        _zonal_tiles(spark),
-        _focal_update_tiles(spark),
+        ZONAL_CANVAS.df(spark),
+        FOCAL_UPDATE_CANVAS.df(spark),
         GEODETIC,
         5,
         radius=1,
@@ -4072,63 +4119,23 @@ def q_incremental_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=277,
         sample_off=3,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "n_nbr",
-        "sum_nbr",
-        "min_nbr",
-        "max_nbr",
-        "mean_nbr",
-    )
+    return _tile_keyed(out, "py", "px", "n_nbr", "sum_nbr", "min_nbr", "max_nbr", "mean_nbr")
 
 
 def sql_incremental_focal() -> str:
-    return """
-      WITH tiles AS (
-        SELECT trow, tcol
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
-      dirty AS (SELECT trow, tcol FROM tiles WHERE (trow + tcol) % 5 = 2),
-      keys AS (
-        SELECT DISTINCT t.trow, t.tcol FROM tiles t JOIN dirty d
-        ON abs(t.trow - d.trow) <= 1 AND abs(t.tcol - d.tcol) <= 1
-      ),
-      ctr AS (
-        SELECT trow, tcol, s // 256 AS py, s % 256 AS px,
-               trow * 256 + s // 256 AS gy, tcol * 256 + s % 256 AS gx
-        FROM (SELECT trow, tcol, unnest(generate_series(3, 65535, 277)) AS s
-              FROM keys)
-      ),
-      win AS (
-        SELECT trow, tcol, py, px, gy + dy AS gy2, gx + dx AS gx2
-        FROM (SELECT *, unnest(generate_series(-1, 1)) AS dy FROM ctr),
-             (SELECT unnest(generate_series(-1, 1)) AS dx)
-        WHERE gy + dy >= 2048 AND gy + dy < 3584
-          AND gx + dx >= 4096 AND gx + dx < 7168
-      ),
-      v AS (
-        SELECT trow, tcol, py, px,
-               CASE WHEN ((gy2 // 256) + (gx2 // 256)) % 5 = 2
-                 THEN (5 * (gy2 % 256) + 3 * (gx2 % 256)
-                       + 11 * (gy2 // 256) + 13 * (gx2 // 256) + 17) % 251
-                 ELSE (3 * (gy2 % 256) + 7 * (gx2 % 256)
-                       + 11 * (gy2 // 256) + 13 * (gx2 // 256)) % 251
-               END AS val
-        FROM win
-      )
-      SELECT trow AS tile_row, tcol AS tile_col,
-             CAST(py AS INTEGER) AS py, CAST(px AS INTEGER) AS px,
-             count(*) AS n_nbr,
-             CAST(sum(val) AS BIGINT) AS sum_nbr,
-             CAST(min(val) AS INTEGER) AS min_nbr,
-             CAST(max(val) AS INTEGER) AS max_nbr,
-             CAST(sum(val) AS BIGINT) // count(*) AS mean_nbr
-      FROM v GROUP BY 1, 2, 3, 4
-    """
+    """Output keys are ring(dirty) within the region; each window pixel
+    reads the update formula inside a dirty tile, the base one elsewhere."""
+    keys = f"""(
+          SELECT DISTINCT t.trow, t.tcol
+          FROM ({ZONAL_CANVAS.sql_tiles()}) t
+          JOIN ({FOCAL_UPDATE_CANVAS.sql_tiles()}) d
+          ON abs(t.trow - d.trow) <= 1 AND abs(t.tcol - d.tcol) <= 1)"""
+    val = (
+        f"CASE WHEN {FOCAL_UPDATE_CANVAS.sql_keep('gy2', 'gx2')}"
+        f" THEN {FOCAL_UPDATE_CANVAS.sql_gvalue('gy2', 'gx2')}"
+        f" ELSE {ZONAL_CANVAS.sql_gvalue('gy2', 'gx2')} END"
+    )
+    return _sql_focal(keys, 3, 277, 1, val)
 
 
 def q_focal_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4141,7 +4148,7 @@ def q_focal_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     out = raster.focal_gradient(
-        _zonal_tiles(spark),
+        ZONAL_CANVAS.df(spark),
         GEODETIC,
         5,
         band=0,
@@ -4149,44 +4156,22 @@ def q_focal_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=311,
         sample_off=5,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "gx_num",
-        "gy_num",
-        "mag2",
-    )
+    return _tile_keyed(out, "py", "px", "gx_num", "gy_num", "mag2")
 
 
-def sql_focal_gradient() -> str:
-    """Sobel over the zonal formula canvases in global pixel space: center
-    pixels restricted to full in-extent 3x3 windows (gy in [2049, 3582],
-    gx in [4097, 7166]); wx = dx*(2 if dy=0 else 1), wy symmetric."""
-    return """
-      WITH tiles AS (
-        SELECT trow, tcol
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
+def _sql_sobel(off: int, mod: int) -> str:
+    """CTEs ending in ``g``: integer Sobel numerators gx_num/gy_num (wx =
+    dx*(2 if dy=0 else 1), wy symmetric) of the sampled zonal-region
+    centers whose full 3x3 window lies inside the region."""
+    return f"""
       ctr AS (
-        SELECT trow, tcol, s // 256 AS py, s % 256 AS px,
-               trow * 256 + s // 256 AS gy, tcol * 256 + s % 256 AS gx
-        FROM (SELECT trow, tcol, unnest(generate_series(5, 65535, 311)) AS s
-              FROM tiles)
-        WHERE trow * 256 + s // 256 >= 2049 AND trow * 256 + s // 256 <= 3582
-          AND tcol * 256 + s % 256 >= 4097 AND tcol * 256 + s % 256 <= 7166
+        SELECT * FROM ({_sql_centers(f"({ZONAL_CANVAS.sql_tiles()})", off, mod)})
+        WHERE {ZONAL_CANVAS.sql_inside("gy", "gx", margin=1)}
       ),
-      win AS (
-        SELECT trow, tcol, py, px, dy, dx, gy + dy AS gy2, gx + dx AS gx2
-        FROM (SELECT *, unnest(generate_series(-1, 1)) AS dy FROM ctr),
-             (SELECT unnest(generate_series(-1, 1)) AS dx)
-      ),
+      win AS ({_sql_window(1)}),
       v AS (
         SELECT trow, tcol, py, px, dy, dx,
-               (3 * (gy2 % 256) + 7 * (gx2 % 256)
-                + 11 * (gy2 // 256) + 13 * (gx2 // 256)) % 251 AS val
+               {ZONAL_CANVAS.sql_gvalue("gy2", "gx2")} AS val
         FROM win
       ),
       g AS (
@@ -4196,7 +4181,12 @@ def sql_focal_gradient() -> str:
                CAST(sum(val * dy * (CASE WHEN dx = 0 THEN 2 ELSE 1 END))
                  AS BIGINT) AS gy_num
         FROM v GROUP BY 1, 2, 3, 4
-      )
+      )"""
+
+
+def sql_focal_gradient() -> str:
+    return f"""
+      WITH {_sql_sobel(5, 311)}
       SELECT trow AS tile_row, tcol AS tile_col,
              CAST(py AS INTEGER) AS py, CAST(px AS INTEGER) AS px,
              gx_num, gy_num, gx_num * gx_num + gy_num * gy_num AS mag2
@@ -4216,7 +4206,7 @@ def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     out = raster.hillshade(
-        _zonal_tiles(spark),
+        ZONAL_CANVAS.df(spark),
         GEODETIC,
         5,
         band=0,
@@ -4226,55 +4216,16 @@ def q_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=349,
         sample_off=13,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "dot",
-        "den2",
-        "hs",
-    )
+    return _tile_keyed(out, "py", "px", "dot", "den2", "hs")
 
 
 def sql_hillshade() -> str:
-    """Hillshade mirror in global pixel space: Sobel numerators exactly as
-    sql_focal_gradient, then dot = 5*gx + 5*gy + 7*512 (L=(-5,-5,7),
-    nz=512), den2 = 99*(gx^2 + gy^2 + 512^2), hs = dot/sqrt(den2) — both
-    operands exact integers, so the double result is bit-identical."""
-    return """
-      WITH tiles AS (
-        SELECT trow, tcol
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
-      ctr AS (
-        SELECT trow, tcol, s // 256 AS py, s % 256 AS px,
-               trow * 256 + s // 256 AS gy, tcol * 256 + s % 256 AS gx
-        FROM (SELECT trow, tcol, unnest(generate_series(13, 65535, 349)) AS s
-              FROM tiles)
-        WHERE trow * 256 + s // 256 >= 2049 AND trow * 256 + s // 256 <= 3582
-          AND tcol * 256 + s % 256 >= 4097 AND tcol * 256 + s % 256 <= 7166
-      ),
-      win AS (
-        SELECT trow, tcol, py, px, dy, dx, gy + dy AS gy2, gx + dx AS gx2
-        FROM (SELECT *, unnest(generate_series(-1, 1)) AS dy FROM ctr),
-             (SELECT unnest(generate_series(-1, 1)) AS dx)
-      ),
-      v AS (
-        SELECT trow, tcol, py, px, dy, dx,
-               (3 * (gy2 % 256) + 7 * (gx2 % 256)
-                + 11 * (gy2 // 256) + 13 * (gx2 // 256)) % 251 AS val
-        FROM win
-      ),
-      g AS (
-        SELECT trow, tcol, py, px,
-               CAST(sum(val * dx * (CASE WHEN dy = 0 THEN 2 ELSE 1 END))
-                 AS BIGINT) AS gx_num,
-               CAST(sum(val * dy * (CASE WHEN dx = 0 THEN 2 ELSE 1 END))
-                 AS BIGINT) AS gy_num
-        FROM v GROUP BY 1, 2, 3, 4
-      ),
+    """Sobel numerators as sql_focal_gradient, then dot = 5*gx + 5*gy +
+    7*512 (L=(-5,-5,7), nz=512), den2 = 99*(gx^2 + gy^2 + 512^2), hs =
+    dot/sqrt(den2) — both operands exact integers, so the double result is
+    bit-identical."""
+    return f"""
+      WITH {_sql_sobel(13, 349)},
       hsq AS (
         SELECT trow, tcol, py, px,
                5 * gx_num + 5 * gy_num + 7 * 512 AS dot,
@@ -4302,7 +4253,7 @@ def q_upsample_children(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     out = raster.upsample_children(
-        _zonal_tiles(spark),
+        ZONAL_CANVAS.df(spark),
         GEODETIC,
         5,
         band=0,
@@ -4310,105 +4261,48 @@ def q_upsample_children(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=2311,
         sample_off=7,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "num",
-        "val",
-    )
+    return _tile_keyed(out, "py", "px", "num", "val")
 
 
 def sql_upsample_children() -> str:
-    """2x bilinear mirror in global CHILD pixel space: child tiles rows
-    16-27 x cols 32-55 at z6; each child pixel cy maps to parent rows
-    (cy//2 - 1, cy//2) with weights (1, 3) when cy is even and
-    (cy//2, cy//2 + 1) with (3, 1) when odd (same for cx), parent coords
-    clamped per-axis to the materialized extent gy in [2048, 3584) x gx in
-    [4096, 7168), values re-derived from the zonal canvas formula."""
-    return """
-      WITH ctiles AS (
-        SELECT crow, ccol
-        FROM (SELECT unnest(generate_series(16, 27)) AS crow)
-        CROSS JOIN (SELECT unnest(generate_series(32, 55)) AS ccol)
-      ),
-      ctr AS (
-        SELECT crow, ccol, s // 256 AS py, s % 256 AS px,
-               crow * 256 + s // 256 AS cy, ccol * 256 + s % 256 AS cx
-        FROM (SELECT crow, ccol, unnest(generate_series(7, 65535, 2311)) AS s
-              FROM ctiles)
-      ),
+    """2x bilinear mirror in global CHILD pixel space over the z6 children
+    of the zonal region: child pixel gy maps to parent rows (gy//2 - 1,
+    gy//2) with weights (1, 3) when gy is even and (gy//2, gy//2 + 1) with
+    (3, 1) when odd (same for gx), parent coords clamped per-axis to the
+    materialized region."""
+    fx = ZONAL_CANVAS
+    n = fx.tile_px
+    children = _sql_grid(range(2 * fx.rows.start, 2 * fx.rows.stop),
+                         range(2 * fx.cols.start, 2 * fx.cols.stop))
+    return f"""
+      WITH ctr AS ({_sql_centers(f"({children})", 7, 2311)}),
       w AS (
-        SELECT crow, ccol, py, px,
-          CASE WHEN cy % 2 = 0 THEN cy // 2 - 1 ELSE cy // 2 END AS ky0,
-          CASE WHEN cy % 2 = 0 THEN 1 ELSE 3 END AS wy0,
-          CASE WHEN cx % 2 = 0 THEN cx // 2 - 1 ELSE cx // 2 END AS kx0,
-          CASE WHEN cx % 2 = 0 THEN 1 ELSE 3 END AS wx0
+        SELECT trow, tcol, py, px,
+          CASE WHEN gy % 2 = 0 THEN gy // 2 - 1 ELSE gy // 2 END AS ky0,
+          CASE WHEN gy % 2 = 0 THEN 1 ELSE 3 END AS wy0,
+          CASE WHEN gx % 2 = 0 THEN gx // 2 - 1 ELSE gx // 2 END AS kx0,
+          CASE WHEN gx % 2 = 0 THEN 1 ELSE 3 END AS wx0
         FROM ctr
       ),
       corners AS (
-        SELECT crow, ccol, py, px,
-          greatest(2048, least(ky0 + iy, 3583)) AS gy,
-          greatest(4096, least(kx0 + ix, 7167)) AS gx,
+        SELECT trow, tcol, py, px,
+          greatest({fx.rows.start * n}, least(ky0 + iy, {fx.rows.stop * n - 1})) AS ky,
+          greatest({fx.cols.start * n}, least(kx0 + ix, {fx.cols.stop * n - 1})) AS kx,
           (CASE WHEN iy = 0 THEN wy0 ELSE 4 - wy0 END)
             * (CASE WHEN ix = 0 THEN wx0 ELSE 4 - wx0 END) AS wt
         FROM (SELECT *, unnest(generate_series(0, 1)) AS iy FROM w),
              (SELECT unnest(generate_series(0, 1)) AS ix)
       ),
       v AS (
-        SELECT crow, ccol, py, px,
-          wt * ((3 * (gy % 256) + 7 * (gx % 256)
-                 + 11 * (gy // 256) + 13 * (gx // 256)) % 251) AS term
+        SELECT trow, tcol, py, px, wt * {fx.sql_gvalue("ky", "kx")} AS term
         FROM corners
       )
-      SELECT crow AS tile_row, ccol AS tile_col,
+      SELECT trow AS tile_row, tcol AS tile_col,
              CAST(py AS INTEGER) AS py, CAST(px AS INTEGER) AS px,
              CAST(sum(term) AS BIGINT) AS num,
              CAST((CAST(sum(term) AS BIGINT) + 8) // 16 AS INTEGER) AS val
       FROM v GROUP BY 1, 2, 3, 4
     """
-
-
-def _zonal_tiles_b(spark: SparkSession) -> DataFrame:
-    """Second-epoch canvases for the zonal region: the incremental-focal
-    update formula (5*i + 3*j + 11*row + 13*col + 17) % 251 on EVERY tile,
-    so raster_diff's oracle can re-derive both epochs per pixel."""
-    grid = (
-        spark.range(8, 14)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(16, 28).select(F.col("id").alias("col")))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(256, dtype=np.int64)[:, None]
-        j = np.arange(256, dtype=np.int64)[None, :]
-        base = 5 * i + 3 * j + 17
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = [
-                ((base + 11 * int(r) + 13 * int(c)) % 251).astype(np.uint8).tobytes()
-                for r, c in zip(rows, cols)
-            ]
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 256, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 256, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
-    )
 
 
 def q_raster_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4420,35 +4314,18 @@ def q_raster_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs and the stats are value-exact."""
     from tilematrix_spark import raster
 
-    out = raster.diff_tiles(_zonal_tiles(spark), _zonal_tiles_b(spark), band=0)
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "n_px",
-        "n_diff",
-        "sum_abs",
-        "max_abs",
-    )
+    out = raster.diff_tiles(ZONAL_CANVAS.df(spark), EPOCH_B_CANVAS.df(spark), band=0)
+    return _tile_keyed(out, "n_px", "n_diff", "sum_abs", "max_abs")
 
 
 def sql_raster_diff() -> str:
-    """Per-pixel mirror of both epoch formulas over the full 72x65536-pixel
-    region; n_diff via FILTER (no HUGEINT), sums cast to BIGINT."""
-    return """
-      WITH tiles AS (
-        SELECT trow, tcol
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
-      p0 AS (SELECT trow, tcol, unnest(generate_series(0, 255)) AS i
-             FROM tiles),
-      p AS (SELECT trow, tcol, i, unnest(generate_series(0, 255)) AS j
-            FROM p0),
-      v AS (
-        SELECT trow, tcol,
-          abs((3 * i + 7 * j + 11 * trow + 13 * tcol) % 251
-              - (5 * i + 3 * j + 11 * trow + 13 * tcol + 17) % 251) AS d
-        FROM p
+    """Both epochs per pixel over the full 72x65536-pixel region (epoch B
+    read at epoch A's pixels: the two share the grid); n_diff via FILTER
+    (no HUGEINT), sums cast to BIGINT."""
+    return f"""
+      WITH v AS (
+        SELECT trow, tcol, abs(v - {EPOCH_B_CANVAS.sql_value()}) AS d
+        FROM ({ZONAL_CANVAS.sql_pixels()})
       )
       SELECT trow AS tile_row, tcol AS tile_col,
              count(*) AS n_px,
@@ -4457,112 +4334,6 @@ def sql_raster_diff() -> str:
              CAST(max(d) AS INTEGER) AS max_abs
       FROM v GROUP BY 1, 2
     """
-
-
-def _audit_children(spark: SparkSession) -> DataFrame:
-    """288 three-band 64px canvases at z6 (rows 16-27 x cols 32-55), pixel
-    value per band b: (3*i + 7*j + 11*row + 13*col + 89*b) % 251 — the
-    integer formula the pyramid-audit oracle re-derives per child pixel."""
-    grid = (
-        spark.range(16, 28)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(32, 56).select(F.col("id").alias("col")))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(64, dtype=np.int64)[:, None, None]
-        j = np.arange(64, dtype=np.int64)[None, :, None]
-        b = np.arange(3, dtype=np.int64)[None, None, :]
-        base = 3 * i + 7 * j + 89 * b
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = [
-                ((base + 11 * int(r) + 13 * int(c)) % 251).astype(np.uint8).tobytes()
-                for r, c in zip(rows, cols)
-            ]
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 64, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 64, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
-    )
-
-
-def _audit_parents(spark: SparkSession) -> DataFrame:
-    """The claimed z5 overview tiles for the audit region: parents with
-    (row + col) % 3 == 0 are PLANTED CORRECT (the true 2x2 integer box
-    filter of their four _audit_children canvases, computed in numpy);
-    the rest carry a stale formula canvas the audit must flag."""
-    grid = (
-        spark.range(8, 14)
-        .select(F.col("id").alias("row"))
-        .crossJoin(spark.range(16, 28).select(F.col("id").alias("col")))
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        i = np.arange(64, dtype=np.int64)[:, None, None]
-        j = np.arange(64, dtype=np.int64)[None, :, None]
-        b = np.arange(3, dtype=np.int64)[None, None, :]
-        base = 3 * i + 7 * j + 89 * b
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = pdf["row"].to_numpy()
-            cols = pdf["col"].to_numpy()
-            bufs = []
-            for pr, pc in zip(rows, cols):
-                pr, pc = int(pr), int(pc)
-                if (pr + pc) % 3 == 0:
-                    canvas = np.zeros((64, 64, 3), dtype=np.uint8)
-                    for qr in (0, 1):
-                        for qc in (0, 1):
-                            child = (
-                                base + 11 * (2 * pr + qr) + 13 * (2 * pc + qc)
-                            ) % 251
-                            ds = (
-                                child.reshape(32, 2, 32, 2, 3)
-                                .sum(axis=(1, 3))
-                                // 4
-                            ).astype(np.uint8)
-                            canvas[
-                                qr * 32 : (qr + 1) * 32, qc * 32 : (qc + 1) * 32
-                            ] = ds
-                    bufs.append(canvas.tobytes())
-                else:
-                    bufs.append(
-                        ((base + 11 * pr + 13 * pc) % 251)
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-            yield pd.DataFrame(
-                {
-                    "row": rows,
-                    "col": cols,
-                    "tile_w": np.full(len(pdf), 64, dtype=np.int32),
-                    "tile_h": np.full(len(pdf), 64, dtype=np.int32),
-                    "bytes": bufs,
-                }
-            )
-
-    return grid.mapInPandas(
-        gen, "row long, col long, tile_w int, tile_h int, bytes binary"
-    )
 
 
 def q_pyramid_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4576,61 +4347,25 @@ def q_pyramid_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     including the coincidental matches inside stale tiles."""
     from tilematrix_spark import raster
 
-    ov = raster.overview_level(_audit_children(spark))
-    out = raster.diff_tiles(_audit_parents(spark), ov, band=None)
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "n_px",
-        "n_diff",
-        "sum_abs",
-        "max_abs",
-        (F.col("n_diff") == 0).cast("int").alias("ok"),
+    ov = raster.overview_level(AUDIT_CHILDREN.df(spark))
+    parents = AUDIT_PLANTED.df(spark).unionByName(AUDIT_STALE.df(spark))
+    out = raster.diff_tiles(parents, ov, band=None)
+    return _tile_keyed(
+        out, "n_px", "n_diff", "sum_abs", "max_abs", (F.col("n_diff") == 0).cast("int").alias("ok")
     )
 
 
 def sql_pyramid_audit() -> str:
-    """Per-pixel-band mirror: parent (pi, pj, b) reads child
-    (2*pr + pi//32, 2*pc + pj//32) at half-res position (pi%32, pj%32);
-    the true value is the truncated mean of the child formula over the
-    2x2 block; planted parents carry that mean, stale ones the parent
-    formula."""
-    return """
-      WITH parents AS (
-        SELECT pr, pc
-        FROM (SELECT unnest(generate_series(8, 13)) AS pr)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS pc)
-      ),
-      px0 AS (SELECT pr, pc, unnest(generate_series(0, 63)) AS pi
-              FROM parents),
-      px1 AS (SELECT pr, pc, pi, unnest(generate_series(0, 63)) AS pj
-              FROM px0),
-      px AS (SELECT pr, pc, pi, pj, unnest(generate_series(0, 2)) AS b
-             FROM px1),
-      v AS (
-        SELECT pr, pc,
-          ((3 * (2 * (pi % 32)) + 7 * (2 * (pj % 32))
-            + 11 * (2 * pr + pi // 32) + 13 * (2 * pc + pj // 32)
-            + 89 * b) % 251
-           + (3 * (2 * (pi % 32)) + 7 * (2 * (pj % 32) + 1)
-            + 11 * (2 * pr + pi // 32) + 13 * (2 * pc + pj // 32)
-            + 89 * b) % 251
-           + (3 * (2 * (pi % 32) + 1) + 7 * (2 * (pj % 32))
-            + 11 * (2 * pr + pi // 32) + 13 * (2 * pc + pj // 32)
-            + 89 * b) % 251
-           + (3 * (2 * (pi % 32) + 1) + 7 * (2 * (pj % 32) + 1)
-            + 11 * (2 * pr + pi // 32) + 13 * (2 * pc + pj // 32)
-            + 89 * b) % 251) // 4 AS mean_v,
-          (3 * pi + 7 * pj + 11 * pr + 13 * pc + 89 * b) % 251 AS stale_v
-        FROM px
-      ),
-      d AS (
-        SELECT pr, pc,
-          abs(CASE WHEN (pr + pc) % 3 = 0 THEN mean_v ELSE stale_v END
-              - mean_v) AS dv
-        FROM v
+    """Per-pixel-band mirror: every claimed parent pixel (planted or stale)
+    against the true overview of the children, which is the planted
+    fixture's formula read at that pixel."""
+    return f"""
+      WITH d AS (
+        SELECT trow, tcol, abs(v - {AUDIT_PLANTED.sql_value("b")}) AS dv
+        FROM ({AUDIT_PLANTED.sql_pixels()}
+              UNION ALL {AUDIT_STALE.sql_pixels()})
       )
-      SELECT pr AS tile_row, pc AS tile_col,
+      SELECT trow AS tile_row, tcol AS tile_col,
              count(*) AS n_px,
              count(*) FILTER (WHERE dv <> 0) AS n_diff,
              CAST(sum(dv) AS BIGINT) AS sum_abs,
@@ -4646,30 +4381,17 @@ def q_raster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     zonal canvas region — pass 1 of the contrast stretch.  Map-side combine
     is explicit (one numpy bincount per Arrow batch, <= 256 rows emitted per
     partition), so the shuffle is O(256 x partitions) regardless of canvas
-    bytes.  The oracle counts the formula residues by factored modular
-    arithmetic: g(d) = #{(i,j): (3i+7j) % 251 = d} once, then one join over
-    the 72 per-tile offsets — no per-pixel unnest."""
+    bytes.  The oracle counts every pixel of the fixture's SQL pixels."""
     from tilematrix_spark import raster
 
-    out = raster.global_histogram(_zonal_tiles(spark), band=0)
+    out = raster.global_histogram(ZONAL_CANVAS.df(spark), band=0)
     return out.select(F.col("val"), F.col("n_px"))
 
 
-_HIST_SQL = """
-      ij AS (
-        SELECT (3 * i + 7 * j) % 251 AS d
-        FROM (SELECT unnest(generate_series(0, 255)) AS i),
-             (SELECT unnest(generate_series(0, 255)) AS j)
-      ),
-      g AS (SELECT d, count(*) AS n FROM ij GROUP BY 1),
-      offs AS (
-        SELECT (11 * trow + 13 * tcol) % 251 AS c
-        FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-        CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol)
-      ),
+_HIST_SQL = f"""
       hist AS (
-        SELECT (d + c) % 251 AS val, CAST(sum(n) AS BIGINT) AS n_px
-        FROM g CROSS JOIN offs GROUP BY 1
+        SELECT v AS val, count(*) AS n_px
+        FROM ({ZONAL_CANVAS.sql_pixels()}) GROUP BY 1
       )
 """
 
@@ -4691,7 +4413,7 @@ def q_contrast_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilematrix_spark import raster
 
     out = raster.contrast_stretch(
-        _zonal_tiles(spark),
+        ZONAL_CANVAS.df(spark),
         band=0,
         lo_pct=2,
         hi_pct=98,
@@ -4699,21 +4421,14 @@ def q_contrast_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_mod=577,
         sample_off=101,
     )
-    return out.select(
-        F.col("row").alias("tile_row"),
-        F.col("col").alias("tile_col"),
-        "py",
-        "px",
-        "v_in",
-        "v_out",
-    )
+    return _tile_keyed(out, "py", "px", "v_in", "v_out")
 
 
 def sql_contrast_stretch() -> str:
-    """Stretch mirror: histogram by factored modular counting, cut points
-    as the smallest value whose cumulative count reaches ceil(q*total/100)
-    (integer ceil via -((-q*t)//100)), remap with DuckDB's floor `//`
-    (matches numpy/Python floor division; negatives clamp to 0 anyway)."""
+    """Stretch mirror: cut points as the smallest value whose cumulative
+    count reaches ceil(q*total/100) (integer ceil via -((-q*t)//100)),
+    remap with DuckDB's floor `//` (matches numpy/Python floor division;
+    negatives clamp to 0 anyway)."""
     return f"""
       WITH {_HIST_SQL},
       cum AS (
@@ -4728,12 +4443,8 @@ def sql_contrast_stretch() -> str:
             AS p_hi
       ),
       ctr AS (
-        SELECT trow, tcol, s // 256 AS py, s % 256 AS px,
-               (3 * (s // 256) + 7 * (s % 256) + 11 * trow + 13 * tcol) % 251
-                 AS v_in
-        FROM (SELECT trow, tcol, unnest(generate_series(101, 65535, 577)) AS s
-              FROM (SELECT unnest(generate_series(8, 13)) AS trow)
-              CROSS JOIN (SELECT unnest(generate_series(16, 27)) AS tcol))
+        SELECT trow, tcol, py, px, {ZONAL_CANVAS.sql_value(i="py", j="px")} AS v_in
+        FROM ({_sql_centers(f"({ZONAL_CANVAS.sql_tiles()})", 101, 577)})
       )
       SELECT trow AS tile_row, tcol AS tile_col,
              CAST(py AS INTEGER) AS py, CAST(px AS INTEGER) AS px,
@@ -5523,6 +5234,21 @@ RASTER_ANALYTICS_MODES = tagged_union(
     ],
 )
 
+# Both halo-exchange focal-statistics paths over the zonal region: the full
+# 5x5 stencil and the incremental 3x3 recompute of an update batch's
+# dirty ring (mixed-corpus values, ring-restricted keys).  One output shape,
+# so one gate slot.
+_FOCAL_COLS = ["tile_row", "tile_col", "py", "px", "n_nbr", "sum_nbr", "min_nbr", "max_nbr", "mean_nbr"]
+FOCAL_MODES = tagged_union(
+    "mode",
+    [*_TILE, ("py", "int"), ("px", "int"), ("n_nbr", "long"), ("sum_nbr", "long"),
+     ("min_nbr", "int"), ("max_nbr", "int"), ("mean_nbr", "long")],
+    [
+        ("stats", q_focal_stats, sql_focal_stats, _FOCAL_COLS),
+        ("incremental", q_incremental_focal, sql_incremental_focal, _FOCAL_COLS),
+    ],
+)
+
 # Both incremental-pyramid planner surfaces: the dirty-tile work estimate
 # (new vs total contributors per dirtied z6 tile) and one real propagate
 # step (dirty z5 parents with merged-coverage child counts).
@@ -5653,7 +5379,7 @@ QUERIES: list[tuple[str, Callable[[SparkSession, str], DataFrame], Callable[[], 
     ("raster_analytics_modes", RASTER_ANALYTICS_MODES.q, RASTER_ANALYTICS_MODES.sql),
     ("focal_gradient", q_focal_gradient, sql_focal_gradient),
     ("incremental_modes", INCREMENTAL_MODES.q, INCREMENTAL_MODES.sql),
-    ("incremental_focal", q_incremental_focal, sql_incremental_focal),
+    ("focal_modes", FOCAL_MODES.q, FOCAL_MODES.sql),
     ("verify_images", q_verify_images, sql_verify_images),
     ("phash_near_dup", q_phash_near_dup, sql_phash_near_dup),
     ("spatial_phash_pairs", q_spatial_phash_pairs, sql_spatial_phash_pairs),
@@ -5676,8 +5402,8 @@ QUERIES: list[tuple[str, Callable[[SparkSession, str], DataFrame], Callable[[], 
     ("c4_page_filter", q_c4_page_filter, sql_c4_page_filter),
     ("dedup_clusters", q_dedup_clusters, sql_dedup_clusters),
     ("source_quota", q_source_quota, sql_source_quota),
-    # --- cross-tile halo-exchange focal statistics ---
-    ("focal_stats", q_focal_stats, sql_focal_stats),
+    # --- cross-tile connected components ---
+    ("label_components", q_label_components, sql_label_components),
     # --- Z-order sink write/read roundtrip ---
     ("zorder_scan", q_zorder_scan, sql_zorder_scan),
     # ---- tail (positions 51+): redundant-kernel variants; each shares
@@ -5729,7 +5455,8 @@ QUERIES: list[tuple[str, Callable[[SparkSession, str], DataFrame], Callable[[], 
     ("compose_tiles", q_compose_tiles, sql_compose_tiles),
     ("overview_coverage", q_overview_coverage, sql_overview_coverage),
     ("zonal_stats", q_zonal_stats, sql_zonal_stats),
-    ("label_components", q_label_components, sql_label_components),
+    ("focal_stats", q_focal_stats, sql_focal_stats),
+    ("incremental_focal", q_incremental_focal, sql_incremental_focal),
     ("zonal_classes", q_zonal_classes, sql_zonal_classes),
     ("zonal_poly", q_zonal_poly, sql_zonal_poly),
     ("zonal_majority", q_zonal_majority, sql_zonal_majority),

@@ -393,63 +393,6 @@ def test_build_overviews_chain_coverage(spark):
             assert covered.max() == 200  # interior survives undiluted
 
 
-def test_rasterize_points_matches_numpy_mirror(spark, geodetic):
-    """Vector->raster: per-tile density canvases equal a pure-Python mirror
-    of tile assignment + pixel binning + clip-255 burn."""
-    import math
-
-    phi1, phi2 = 0.7548776662466927, 0.5698402909980532
-    n, zoom, ts = 4000, 2, 256
-    pts = [
-        (-180.0 + ((i * phi1) % 1.0) * 360.0, -90.0 + ((i * phi2) % 1.0) * 180.0)
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    got = {
-        (r["row"], r["col"]): (r["n_points"], bytes(r["bytes"]))
-        for r in raster.rasterize_points(df, geodetic, zoom).collect()
-    }
-
-    hx = 360.0 / (2 * 2 ** zoom)  # geodetic tile x size
-    hy = 180.0 / (2 ** zoom)
-    pxs, pys = hx / ts, hy / ts
-    canvases = {}
-    counts = {}
-    for lon, lat in pts:
-        if lat == -90.0:
-            continue  # bottom edge: 'rb' on-edge rule -> next row down -> invalid, dropped
-        row = math.trunc((90.0 - lat) / hy)
-        col = math.trunc((lon - -180.0) / hx)
-        col = col % (2 * 2 ** zoom)
-        t_left, t_top = -180.0 + col * hx, 90.0 - row * hy
-        px = min(max(math.trunc((lon - t_left) / pxs), 0), ts - 1)
-        py = min(max(math.trunc((t_top - lat) / pys), 0), ts - 1)
-        key = (row, col)
-        canvases.setdefault(key, {})
-        canvases[key][(py, px)] = canvases[key].get((py, px), 0) + 1
-        counts[key] = counts.get(key, 0) + 1
-    want = {}
-    for key, bins in canvases.items():
-        canvas = np.zeros((ts, ts, 3), dtype=np.uint8)
-        for (py, px), c in bins.items():
-            canvas[py, px, :] = min(c, 255)
-        want[key] = (counts[key], canvas.tobytes())
-    assert got == want
-
-
-def test_rasterize_chains_into_overview(spark, geodetic):
-    """The density canvases feed overview_level unchanged (RGB, uniform
-    dims): the heat pyramid is rasterize -> overview chain."""
-    df = spark.createDataFrame(
-        [(float(i % 300 - 150), float(i % 120 - 60)) for i in range(500)],
-        "lon double, lat double",
-    )
-    tiles = raster.rasterize_points(df, geodetic, 3)
-    up = raster.overview_level(tiles)
-    rows = up.collect()
-    assert rows and all(len(bytes(r["bytes"])) == 256 * 256 * 3 for r in rows)
-
-
 def test_zonal_stats_matches_numpy_mirror(spark, geodetic):
     """zonal_stats kernel vs a pure-numpy mirror on random 3-band canvases:
     window math rides raster_tile_windows (golden-tested on its own), so

@@ -44,18 +44,14 @@ def pyramids(spark, geodetic):
             raster.compose_tiles(total, geodetic, BASE_Z), BASE_Z, MIN_Z
         ).items()
     }
-    # materialize=persist: the z-1 delta reads the z delta twice (merge +
-    # dirty keys); unpersisted, that recursion recomputes the whole chain
-    # per action (the job materializes by committing levels to parquet)
-    deltas = incremental.incremental_update(
-        lambda z: old_levels[z],
-        old,
-        upd,
-        geodetic,
-        BASE_Z,
-        MIN_Z,
-        materialize=lambda df, _z: df.persist(),
-    )
+    # the level chain jobs/incremental_job.py commits: compose the base
+    # delta, then per zoom merge the committed level with the child delta
+    # and propagate the dirty parents.  persist stands in for the commit:
+    # the z-1 delta reads the z delta twice (merge + dirty keys)
+    deltas = {BASE_Z: incremental.incremental_compose(old, upd, geodetic, BASE_Z).persist()}
+    for z in range(BASE_Z - 1, MIN_Z - 1, -1):
+        current = incremental.merged_level(old_levels[z + 1], deltas[z + 1])
+        deltas[z] = incremental.propagate_level(current, deltas[z + 1].select("row", "col")).persist()
     yield old_levels, full_levels, deltas, upd
     for dfs in (old_levels, full_levels, deltas):
         for df in dfs.values():

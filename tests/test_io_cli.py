@@ -588,14 +588,14 @@ def test_driver_gate_window_holds_kernel_queries():
         "pip_join_regions", "crossmodal_dups", "decontaminate", "pack_sequences",
         "raster_windows", "rasterize_bins", "mosaic_modes",
         "raster_analytics_modes", "focal_gradient", "incremental_modes",
-        "incremental_focal", "verify_images", "phash_near_dup",
+        "focal_modes", "verify_images", "phash_near_dup",
         "spatial_phash_pairs", "ann_modes", "ivf_pq_residual_topk", "cosine_topk",
         "stream_tile_counts", "windows_modes", "dedup_exact", "bloom_dedup",
         "text_stats_modes", "neardup_pair_modes", "winnow_fingerprints",
         "repetition_stats", "scrub_pii", "semantic_dedup", "c4_page_filter",
-        "dedup_clusters", "source_quota", "focal_stats", "zorder_scan",
+        "dedup_clusters", "source_quota", "label_components", "zorder_scan",
     ]
-    assert len(q) == 108
+    assert len(q) == 109
     # every query has an oracle
     o = m.oracle_sql()
     assert [n for n in q if n not in o] == []
@@ -629,7 +629,7 @@ def test_tagged_union_schemas_match_declarations(spark):
     spark_types = {"int": T.IntegerType(), "long": T.LongType(),
                    "double": T.DoubleType(), "string": T.StringType()}
     unions = [v for v in vars(m).values() if isinstance(v, m.TaggedUnion)]
-    assert len(unions) == 12
+    assert len(unions) == 13
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -650,3 +650,40 @@ def test_tagged_union_schemas_match_declarations(spark):
         tags = [tag for tag, *_ in u.members]
         got = {r[0] for r in con.execute(f"SELECT DISTINCT {u.tag_col} FROM ({sql})").fetchall()}
         assert got == set(tags) and len(tags) == len(set(tags))
+
+
+def test_canvas_fixtures_spark_equals_sql(spark):
+    """Every canvas_fixture declaration, both halves: the Spark canvases of
+    the first kept tile and one interior kept tile equal, pixel by pixel
+    and band by band, what DuckDB computes from the same declaration's SQL
+    fragments over an empty database; the kept tile sets agree too."""
+    import duckdb
+    import numpy as np
+
+    import __spark_entry__ as m
+
+    fixtures = {k: v for k, v in vars(m).items() if isinstance(v, m.CanvasFixture)}
+    assert len(fixtures) == 7
+    con = duckdb.connect()
+    for name, fx in fixtures.items():
+        kept = sorted(con.execute(fx.sql_tiles()).fetchall())
+        interior = [
+            (r, c) for r, c in kept
+            if fx.rows.start < r < fx.rows.stop - 1 and fx.cols.start < c < fx.cols.stop - 1
+        ]
+        picks = {kept[0], interior[len(interior) // 2]}
+        canvases = {
+            (t["row"], t["col"]): t for t in fx.df(spark).collect()
+        }
+        assert sorted(canvases) == kept, name
+        n, nb = fx.tile_px, len(fx.bands)
+        for r, c in picks:
+            t = canvases[(r, c)]
+            assert (t["tile_w"], t["tile_h"]) == (n, n), name
+            got = np.frombuffer(bytes(t["bytes"]), dtype=np.uint8).reshape(n, n, nb)
+            want = np.full((n, n, nb), -1, dtype=np.int64)
+            for i, j, b, v in con.execute(
+                f"SELECT i, j, b, v FROM ({fx.sql_pixels()}) WHERE trow = {r} AND tcol = {c}"
+            ).fetchall():
+                want[i, j, b] = v
+            assert np.array_equal(got.astype(np.int64), want), (name, r, c)

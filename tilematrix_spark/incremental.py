@@ -14,11 +14,12 @@ the update; these operators make maintenance cost ∝ |updates|:
   update-tagged rows give the dirty keys of a broadcast semi-join: only
   dirty tiles' contributors are decoded, map-side, and no contributor bytes
   shuffle at all — only covered-pixel partials of the dirty tiles do.
-- :func:`propagate_level` / :func:`incremental_update` — one overview step
-  restricted to the dirty parents (clean siblings read from the committed
-  level, fresh canvases from the delta), chained base→min zoom.  Each
-  level's delta is ≤ 4× smaller than the last, so total propagation work is
-  ≤ 4/3 of the base delta (geometric series).
+- :func:`propagate_level` — one overview step restricted to the dirty
+  parents (clean siblings read from the committed level, fresh canvases
+  from the delta).  Callers chain it base→min zoom over
+  ``merged_level(committed, child_delta)``, as ``jobs/incremental_job.py``
+  does.  Each level's delta is ≤ 4× smaller than the last, so total
+  propagation work is ≤ 4/3 of the base delta (geometric series).
 
 The outputs are per-zoom DELTAS — exactly the dirty keys' new rows.  Sinks
 apply them with a key-replace (``merged_level``) or, on a partitioned
@@ -35,7 +36,7 @@ filter are deterministic, so incremental == batch exactly, not approximately.
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,7 +49,6 @@ __all__ = [
     "dirty_tile_stats",
     "incremental_compose",
     "propagate_level",
-    "incremental_update",
     "merged_level",
 ]
 
@@ -161,42 +161,6 @@ def propagate_level(current_level: DataFrame, dirty_keys: DataFrame) -> DataFram
         "left_semi",
     )
     return raster.overview_level(kids)
-
-
-def incremental_update(
-    read_level: Callable[[int], DataFrame],
-    old_images: DataFrame,
-    updates: DataFrame,
-    tp: PyramidConfig,
-    base_zoom: int,
-    min_zoom: int,
-    materialize: Optional[Callable[[DataFrame, int], DataFrame]] = None,
-    **compose_kwargs,
-) -> Dict[int, DataFrame]:
-    """Apply an update batch to a committed pyramid: returns {zoom: delta}
-    for every zoom in [min_zoom, base_zoom].  ``read_level(z)`` must return
-    the COMMITTED (pre-update) tiles at z — e.g. ``PyramidJob.read_zoom``.
-
-    The base delta is ``incremental_compose``; each overview delta reads the
-    committed level once, swaps in the child delta, and downsamples only the
-    dirty parents.  All DataFrames are lazy — callers commit level-by-level
-    (see ``jobs/incremental_job.py``) so zoom z's scan of z+1 reads the
-    committed parquet, not a recompute.  ``materialize(df, z) -> df`` (e.g.
-    persist, or write+read-back) breaks the recursion between levels —
-    without it each zoom's delta lazily re-derives every level above it on
-    every action."""
-    if min_zoom >= base_zoom:
-        raise ValueError("min_zoom must be below base_zoom")
-    mat = materialize or (lambda df, _z: df)
-    deltas: Dict[int, DataFrame] = {}
-    delta = incremental_compose(old_images, updates, tp, base_zoom, **compose_kwargs)
-    deltas[base_zoom] = mat(delta, base_zoom)
-    for z in range(base_zoom - 1, min_zoom - 1, -1):
-        current = merged_level(read_level(z + 1), deltas[z + 1])
-        deltas[z] = mat(
-            propagate_level(current, deltas[z + 1].select("row", "col")), z
-        )
-    return deltas
 
 
 def focal_dirty_ring(

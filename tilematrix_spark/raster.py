@@ -577,11 +577,11 @@ def rasterize_bins(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """The native binning core of ``rasterize_points``: one row per
-    NON-EMPTY pixel bin — (row, col, py, px, n).  Pure Column math (tile
-    assignment + trunc((coord - tile_origin)/pixel_size) clamped to the
-    tile grid) into a two-level hash agg; the shuffle carries bins, not
-    points.  Fully SQL-expressible — this is the value-oracled surface."""
+    """Vector→raster point binning: one row per NON-EMPTY pixel bin —
+    (row, col, py, px, n).  Pure Column math (tile assignment +
+    trunc((coord - tile_origin)/pixel_size) clamped to the tile grid) into
+    a two-level hash agg; the shuffle carries bins, not points.  Fully
+    SQL-expressible — value-oracled by the ``rasterize_bins`` query."""
     ts = int(tp.tile_size)
     if tp.metatiling != 1:
         raise ValueError("rasterize requires an mt=1 grid")
@@ -605,80 +605,6 @@ def rasterize_bins(
         .groupBy("row", "col", "py", "px")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-_RASTERIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("row", T.LongType()),
-        T.StructField("col", T.LongType()),
-        T.StructField("n_points", T.LongType()),
-        T.StructField("tile_w", T.IntegerType()),
-        T.StructField("tile_h", T.IntegerType()),
-        T.StructField("bytes", T.BinaryType()),
-    ]
-)
-
-
-def rasterize_points(
-    df: DataFrame,
-    tp: PyramidConfig,
-    zoom: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Vector→raster rasterization: burn point density into per-tile RGB
-    canvases (the inverse direction of ``raster_tile_windows``).  Each
-    point lands in the pixel bin of its tile (same tile_from_xy edge rules,
-    then trunc((x - tile_left)/pixel_size) clamped to the tile grid); the
-    canvas is gray = min(count, 255) replicated to 3 channels so the heat
-    tile chains straight into ``overview_level`` for a full density
-    pyramid.  mt=1 grids (uniform tile dims), like the overview chain.
-
-    Scale shape: the pixel binning is a NATIVE two-level aggregation —
-    groupBy(tile, pixel) partial-aggregates map-side (the shuffle carries
-    one row per NON-EMPTY pixel bin, not per point), then the per-tile
-    canvas assembly is a bounded ``collect_list`` (≤ tile_w·tile_h bins)
-    + ``mapInPandas`` scatter, the overview pattern.  No skew: a hot tile
-    is at most tile_w·tile_h rows after the first agg regardless of point
-    count.  The bin surface (row, col, px_row, px_col, n) is fully
-    SQL-expressible — value-oracled by the ``rasterize_bins`` driver query;
-    canvas bytes are pinned by the numpy-mirror pytest.
-    """
-    ts = int(tp.tile_size)
-    bins = rasterize_bins(df, tp, zoom, lon_col, lat_col)
-
-    def burn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            out_bytes = []
-            n_points = []
-            for kids in pdf["_bins"]:
-                canvas = np.zeros((ts, ts), dtype=np.uint8)
-                pys = np.array([k["py"] for k in kids], dtype=np.int64)
-                pxs = np.array([k["px"] for k in kids], dtype=np.int64)
-                ns = np.array([k["n"] for k in kids], dtype=np.int64)
-                canvas[pys, pxs] = np.minimum(ns, 255).astype(np.uint8)
-                out_bytes.append(
-                    np.repeat(canvas[:, :, None], 3, axis=2).tobytes()
-                )
-                n_points.append(int(ns.sum()))
-            yield pd.DataFrame(
-                {
-                    "row": pdf["_r"],
-                    "col": pdf["_c"],
-                    "n_points": n_points,
-                    "tile_w": np.full(n, ts, dtype=np.int32),
-                    "tile_h": np.full(n, ts, dtype=np.int32),
-                    "bytes": out_bytes,
-                }
-            )
-
-    grouped = bins.groupBy(
-        F.col("row").alias("_r"), F.col("col").alias("_c")
-    ).agg(F.collect_list(F.struct("py", "px", "n")).alias("_bins"))
-    return grouped.mapInPandas(burn, schema=_RASTERIZE_SCHEMA)
 
 
 def _band_plane(buf: bytes, h: int, w: int, band: Optional[int]) -> np.ndarray:

@@ -5,11 +5,16 @@ shape, an order-insensitive value multiset, AND Arrow-level column types
 hash-mismatches even when Python-level values are identical — see
 VERDICT r3 item 1 / the incremental_dirty red row).
 
+Every OK line ends with ``sha1=``: the hash of the Spark side's column
+names, Arrow types and sorted rows, so diffing two checkouts' OK lines
+shows whether a change kept every query's values.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 from pathlib import Path
@@ -138,7 +143,8 @@ def main():
             print(f"FAIL {name}: values differ; spark-only={diff_s} oracle-only={diff_o}")
             failures.append(name)
             continue
-        print(f"OK   {name}: {len(srows)} rows ({dt:.1f}s)")
+        digest = hashlib.sha1(repr((scols, [str(f.type) for f in stab.schema], s_sorted)).encode())
+        print(f"OK   {name}: {len(srows)} rows ({dt:.1f}s) sha1={digest.hexdigest()}")
     print()
     if failures:
         print(f"{len(failures)} FAILURES: {failures}")
